@@ -210,6 +210,9 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     timings_min: dict[str, float] = {}
+    # cells that could not run, with the reason (kept in the output so
+    # a dropped cell is visible, not just a stderr line)
+    skipped: dict[str, str] = {}
     all_ts: dict[str, list] = {}  # raw reps per graded metric
     second_pass_info = None
     # Warm the JVM (codegen, parquet+csv readers, writer pools) on the
@@ -652,6 +655,8 @@ def main() -> None:
 
         ex = "/root/reference/lightning/mydump/examples"
         mi_dump = os.path.join(TMP, "multi_index_dump")
+        if not os.path.isdir(mi_dump) and not os.path.isdir(ex):
+            raise FileNotFoundError(f"example dumps not found at {ex}")
         if not os.path.isdir(mi_dump):
             os.makedirs(mi_dump)
             for f in (
@@ -680,6 +685,7 @@ def main() -> None:
         timings["restore_multi_index_kv"] = _med(ts)
         timings_min["restore_multi_index_kv"] = round(min(ts), 3)
     except Exception as e:
+        skipped["restore_multi_index_kv"] = str(e)
         print(f"# multi-index kv bench skipped: {e}", file=sys.stderr)
 
     # the ANN family gets the 5-rep treatment too: r6 recorded
@@ -799,6 +805,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "queries_min": timings_min,
+        "skipped": skipped,
         "reps": REPS,
         # reps for the two GRADED lineitem configs only; all
         # other ingest metrics use "reps" (auto-raised by 2 when the
@@ -862,7 +869,7 @@ def main() -> None:
     line_fields = {
         k: detail[k]
         for k in (
-            "metric", "value", "unit", "queries", "sf",
+            "metric", "value", "unit", "queries", "skipped", "sf",
             "ingest_mib_per_sec", "ingest_mib_per_sec_median",
             "ingest_4x_mib_per_sec",
             "ingest_writephase_mib_per_sec",

@@ -27,6 +27,8 @@ GOLDEN = (10548517777231854655, 1212905, 30000)
 
 @pytest.fixture(scope="module")
 def restored(spark):
+    if not os.path.isdir(EXAMPLES):
+        pytest.skip(reason=f"reference example dumps not found at {EXAMPLES}")
     shutil.rmtree(ROOT, ignore_errors=True)
     d = os.path.join(ROOT, "dump")
     os.makedirs(d)

@@ -147,11 +147,7 @@ def test_engine_grain_resume(spark):
 
 
 def test_plan_engines_batching():
-    class F_:
-        def __init__(self, p, s):
-            self.path, self.size = p, s
-
-    fs = [F_(f"f{i}", 10) for i in range(5)]
+    fs = [(f"f{i}", 0, 10) for i in range(5)]
     assert [len(e) for e in plan_engines(fs, 1)] == [1, 1, 1, 1, 1]
     assert [len(e) for e in plan_engines(fs, 20)] == [2, 2, 1]
     assert [len(e) for e in plan_engines(fs, 10_000)] == [5]
@@ -228,7 +224,7 @@ def test_sql_store_engine_state_roundtrip():
         os.remove(db_path)
     cp = _sqlite_store(db_path)
     cp.set_engine_state("db.t", 2, {"rows": 7, "crc_xor": 123, "max_id": 9})
-    cp.mark_chunks("db.t", ["/a", "/b"], Status.ALL_WRITTEN)
+    cp.mark_chunks("db.t", [("/a", 0), ("/b", 0)], Status.ALL_WRITTEN)
     cp.set_alloc_base("db.t", 10)
     cp2 = _sqlite_store(db_path)
     assert cp2.engine_state("db.t", 2)["rows"] == 7

@@ -22,6 +22,8 @@ ROOT = "/root/repo/.tmp/vt_fixture_test"
 
 @pytest.fixture(scope="module")
 def restored(spark):
+    if not os.path.isdir(VT):
+        pytest.skip(reason=f"reference various_types fixtures not found at {VT}")
     shutil.rmtree(ROOT, ignore_errors=True)
     d = os.path.join(ROOT, "dump")
     os.makedirs(d)

@@ -138,7 +138,9 @@ class CheckpointStore:
     def alloc_base(self, table: str) -> int:
         return self.state["tables"].get(table, {}).get("alloc_base", 0)
 
-    # -- chunk-level (file grain; offset kept for parity) ------------------
+    # -- chunk-level: (path, offset) keys, checkpoints.go:92-99 ------------
+    # A whole-file chunk is (path, 0); a byte-range block carries its
+    # start offset, so mid-file resume prunes on the same keys.
     def chunk_key(self, table: str, path: str, offset: int = 0) -> str:
         return f"{table}|{path}|{offset}"
 
@@ -148,31 +150,16 @@ class CheckpointStore:
     def mark_chunk(
         self, table: str, path: str, status: int, offset: int = 0
     ) -> None:
-        if not self.enabled:
-            return
-        with self._lock:
-            self.state["chunks"][self.chunk_key(table, path, offset)] = int(status)
-            self._save()
+        self.mark_chunks(table, [(path, offset)], status)
 
-    def mark_chunks(self, table: str, paths: list[str], status: int) -> None:
-        """Bulk mark (one persisted write for a whole engine batch)."""
-        if not self.enabled:
-            return
-        with self._lock:
-            for p in paths:
-                self.state["chunks"][self.chunk_key(table, p)] = int(status)
-            self._save()
-
-    def mark_block_chunks(
-        self, table: str, pairs: list[tuple[str, int]], status: int
+    def mark_chunks(
+        self, table: str, chunks: list[tuple[str, int]], status: int
     ) -> None:
-        """Bulk mark at BLOCK grain: one (path, byte-offset) chunk key
-        per delivered block (the reference's chunk checkpoint key,
-        checkpoints.go:92-99) — mid-file resume prunes on these."""
+        """Bulk mark (one persisted write for a whole engine)."""
         if not self.enabled:
             return
         with self._lock:
-            for p, off in pairs:
+            for p, off in chunks:
                 self.state["chunks"][
                     self.chunk_key(table, p, int(off))
                 ] = int(status)
@@ -294,9 +281,10 @@ class CheckpointStore:
             t.get("engines", {}).items(), key=lambda kv: int(kv[0])
         ):
             if rec.get("chunks"):
-                # block-grain engine: explicit (path, offset) chunks
                 keys = [f"{p}|{int(o)}" for p, o in rec["chunks"]]
             else:
+                # whole-file engine records written before engines
+                # carried their (path, offset) chunks
                 keys = [f"{p}|0" for p in rec.get("files", [])]
             claimed.update(keys)
             eng: dict = {
@@ -435,35 +423,15 @@ class SQLCheckpointStore(CheckpointStore):
             t["alloc_base"] = max(t.get("alloc_base", 0), base)
             self._upsert_table_row(table)
 
-    def mark_chunk(
-        self, table: str, path: str, status: int, offset: int = 0
-    ) -> None:
-        self.mark_chunks(table, [path], status)
-
-    def mark_chunks(self, table: str, paths: list[str], status: int) -> None:
-        if not self.enabled:
-            return
-        p = self._ph
-        with self._lock:
-            rows = []
-            for pa in paths:
-                key = self.chunk_key(table, pa)
-                self.state["chunks"][key] = int(status)
-                rows.append((key, int(status)))
-            self._exec(
-                f"REPLACE INTO cp_chunk_v1 (ck, status) VALUES ({p}, {p})",
-                rows,
-            )
-
-    def mark_block_chunks(
-        self, table: str, pairs: list[tuple[str, int]], status: int
+    def mark_chunks(
+        self, table: str, chunks: list[tuple[str, int]], status: int
     ) -> None:
         if not self.enabled:
             return
         p = self._ph
         with self._lock:
             rows = []
-            for pa, off in pairs:
+            for pa, off in chunks:
                 key = self.chunk_key(table, pa, int(off))
                 self.state["chunks"][key] = int(status)
                 rows.append((key, int(status)))

@@ -140,17 +140,20 @@ class RunSummary:
         return "\n".join(lines)
 
 
-def plan_engines(files, batch_size: int) -> list[list]:
-    """S7: group a table's data files into engine batches of
-    ~``batch_size`` cumulative bytes (region.go:64-133; the dynamic
-    batch ramp is dropped per SURVEY §2.1 S7). Each engine is the
-    unit of idempotent delivery and file-grain checkpoint resume."""
-    engines: list[list] = []
-    cur: list = []
+def plan_engines(
+    chunks: list[tuple[str, int, int]], batch_size: int
+) -> list[list[tuple[str, int, int]]]:
+    """S7: group a table's (path, offset, length) chunks into engines
+    of ~``batch_size`` cumulative bytes (region.go:64-133; the dynamic
+    batch ramp is dropped per SURVEY §2.1 S7). A chunk is a whole file
+    ``(path, 0, size)`` or a byte-range block; each engine is the unit
+    of idempotent delivery and checkpoint resume."""
+    engines: list[list[tuple[str, int, int]]] = []
+    cur: list[tuple[str, int, int]] = []
     size = 0
-    for f in files:
-        cur.append(f)
-        size += f.size
+    for c in chunks:
+        cur.append(c)
+        size += c[2]
         if size >= batch_size:
             engines.append(cur)
             cur, size = [], 0
@@ -159,11 +162,27 @@ def plan_engines(files, batch_size: int) -> list[list]:
     return engines
 
 
+@dataclass
+class EnginePlan:
+    """How pass 1 delivers one table: engines of (path, offset,
+    length) chunks (restore.go:736-852).
+
+    ``grain`` is "table" (one ``sink.write`` job, table-grain resume),
+    "file" (one ``write_engine`` job per batch of whole files) or
+    "block" (one ``write_engine`` job per batch of byte-range blocks
+    of a strict-format CSV/JSONL table, split at ``split_bytes``).
+    ``reason`` names the gate that chose the grain."""
+
+    grain: str
+    engines: list[list[tuple[str, int, int]]]
+    reason: str
+    split_bytes: int | None = None
+
+
 class _ProgressTicker:
     """O7: periodic progress logging — restored bytes / total, speed
     and ETA on a daemon timer (the reference's logProgress ticker,
-    restore.go:443-501). ``add`` is called per delivered engine batch
-    (file grain) or per restored table (single-shot grain)."""
+    restore.go:443-501). ``add`` is called per delivered engine."""
 
     def __init__(self, total_bytes: int, interval: float):
         self.total = max(int(total_bytes), 1)
@@ -564,7 +583,7 @@ class RestoreController:
             if jl_strict_blocks:
                 jl_split = _split_bytes  # same geometry as the planner
                 frames.append(
-                    self._jsonl_block_frame(
+                    self._block_frame(
                         meta,
                         schema,
                         plan_file_blocks(
@@ -591,7 +610,6 @@ class RestoreController:
                 read_jsonl,
                 resolve_field_names,
             )
-            from ..sources.sql_dump_source import MISSING_FIELD
 
             # case-insensitive key match via a driver-side head probe
             # of EVERY part (Spark's JSON parser matches schema names
@@ -636,36 +654,9 @@ class RestoreController:
             jdf = jdfs[0]
             for other in jdfs[1:]:
                 jdf = jdf.unionByName(other)
-            jdf = assign_rowid_mono(jdf, start=JSONL_LANE)
-            # JSON cannot distinguish an absent key from an explicit
-            # null; for NOT NULL columns a null is invalid anyway, so
-            # it maps to the missing sentinel and takes the column
-            # DEFAULT (the absent-trailing-field CSV semantics);
-            # nullable columns keep real NULLs
-            jdf = jdf.select(
-                *[
-                    (
-                        F.coalesce(
-                            F.col(c.name), F.lit(MISSING_FIELD)
-                        ).alias(c.name)
-                        if not c.nullable
-                        else F.col(c.name)
-                    )
-                    for c in schema.columns
-                ],
-                F.col("_row_id"),
-            )
             frames.append(
-                apply_permutation(
-                    jdf,
-                    schema,
-                    [c.name for c in schema.columns],
-                    rowid=F.col("_row_id"),
-                    job_timestamp=self.job_timestamp,
-                    strict=strict,
-                    keep=["_row_id"],
-                    charset=self.cfg.mydumper.character_set,
-                    missing_sentinel=MISSING_FIELD,
+                self._permute_jsonl(
+                    assign_rowid_mono(jdf, start=JSONL_LANE), schema
                 )
             )
         has_gz = any(f.path.lower().endswith(".csv.gz") for f in csv_files)
@@ -1084,133 +1075,221 @@ class RestoreController:
         if sc and os.path.exists(sc):
             os.remove(sc)
 
-    def _restore_single(
-        self, name: str, meta: MDTableMeta, schema: TableSchema, cols: list[str]
-    ):
-        """Whole-table single write job (table-grain resume)."""
-        df = self.read_table(meta, schema)
-        self.cp.set_table_status(name, Status.LOADED)
-        if getattr(self.sink, "observes_write_action", True):
-            df, obs = self._observe_write(
-                df, name, cols, schema, self.cfg.checksum
-            )
-            res = self.sink.write(df, name)
-            m = obs.get
-        else:
-            m = self._eager_write_metrics(
-                df, cols, schema, self.cfg.checksum
-            )
-            res = self.sink.write(df, name)
-        local = (
-            Checksum(
-                m["crc_xor"] or 0,
-                m["total_bytes"],
-                m["total_kvs"] * self._kv_mult(schema),
-            )
-            if self.cfg.checksum
-            else None
-        )
-        rows = res.rows if res.rows >= 0 else m.get("total_kvs", -1)
-        self.cp.mark_chunks(
-            name, [f.path for f in meta.data_files], Status.ALL_WRITTEN
-        )
-        if self._ticker:
-            self._ticker.add(meta.total_size)
-        if self.progress:
-            self.progress.table_written(name, meta.total_size)
-        return local, rows, m.get("max_id")
+    def _dedup_may_drop(self, schema: TableSchema) -> bool:
+        """Keyed replace/ignore dedup and incremental merges change the
+        delivered row set, so rows and alloc_base must come from the
+        read-back aggregate and the table is rewritten as a whole."""
+        return (
+            bool(schema.primary_key)
+            and self.cfg.on_duplicate in ("replace", "ignore")
+        ) or self.cfg.incremental
 
-    def _restore_engines(
+    def _plan_delivery(
+        self, name: str, meta: MDTableMeta, schema: TableSchema
+    ) -> EnginePlan:
+        """Choose the table's delivery grain: block, then file, else one
+        table-grain engine. Runs no Spark job.
+
+        Engine grains need a checkpoint store to record progress in, a
+        sink with idempotent engine delivery, and a table that is not
+        rewritten as a whole: replace/ignore dedup and incremental
+        merges cross engines (dup=error is verified post-hoc instead),
+        a bucketed write repartitions everything, and the strict
+        parser reads the table in one pass."""
+        whole = [(f.path, 0, f.size) for f in meta.data_files]
+        csv_cfg = self.cfg.mydumper.csv
+        for blocked, reason in (
+            (not self.cp.enabled, "checkpoints off"),
+            (self._dedup_may_drop(schema), "whole-table dedup or merge"),
+            (self.cfg.bucket_buckets, "bucketed layout"),
+            (csv_cfg.strict_parser, "strict parser"),
+            (
+                type(self.sink).write_engine is Sink.write_engine,
+                "sink has no engine delivery",
+            ),
+        ):
+            if blocked:
+                return EnginePlan("table", [whole], reason)
+        paths = [f.path.lower() for f in meta.data_files]
+        # BLOCK grain: a strict-format table larger than batch_size
+        # splits into byte-range engines, so a mid-FILE crash resumes
+        # from the last delivered block range instead of re-running
+        # whole files (checkpoints.go chunk keys; restore.go:1265-1266).
+        # Plain .csv or plain .jsonl only (the byte-range reader seeks
+        # uncompressed files; JSONL is line-delimited, hence splittable
+        # under the same Hadoop line geometry; block row-id bases are
+        # one scheme per table), and no header (a header row is
+        # file-scoped state a block can't see).
+        if (
+            csv_cfg.strict_format
+            and not csv_cfg.header
+            and paths
+            and (
+                all(p.endswith(".csv") for p in paths)
+                or all(p.endswith(".jsonl") for p in paths)
+            )
+        ):
+            from ..operators.rowid import split_bytes_lower_bound
+            from ..sources.csv_blocks import (
+                files_use_supported_terminators,
+                plan_file_blocks,
+            )
+
+            # BOTH geometry inputs are pinned in the checkpoint: a
+            # resume MUST re-plan the exact block geometry, id bases,
+            # AND engine grouping of the first run even if the session
+            # conf or config changed in between — otherwise delivered
+            # chunk keys would not match, row-id bases would shift,
+            # and (for batch_size) old engine records would be merged
+            # onto engines now holding DIFFERENT blocks, duplicating or
+            # losing rows
+            skey, bkey = f"split_bytes:{name}", f"block_batch_size:{name}"
+            pinned_split = self.cp.task_meta(skey)
+            pinned_batch = self.cp.task_meta(bkey)
+            split = int(pinned_split or split_bytes_lower_bound(self.spark))
+            batch = int(pinned_batch or self.cfg.mydumper.batch_size)
+            sizes = [(f.path, f.size) for f in meta.data_files]
+            engines = plan_engines(plan_file_blocks(sizes, split), batch)
+            if len(engines) > 1:
+                if files_use_supported_terminators(sizes):
+                    if not pinned_split:
+                        self.cp.set_task_meta(skey, str(split))
+                    if not pinned_batch:
+                        self.cp.set_task_meta(bkey, str(batch))
+                    return EnginePlan(
+                        "block", engines, "strict-format byte ranges", split
+                    )
+                # lone-\r line endings: the block reader's line
+                # geometry would diverge from the native splittable
+                # scan — fall through to file grain
+                log.warning(
+                    "table %s: CR line terminators detected; "
+                    "block-grain resume disabled for this table",
+                    name,
+                )
+        # parquet/gzip/jsonl sources have no plan-time per-file id
+        # bases (byte estimates are unsafe for compressed or columnar
+        # files), so their capacity-scheme ids are only unique within
+        # ONE read — engine-split reads would collide
+        if any(
+            p.endswith((".parquet", ".csv.gz", ".jsonl", ".jsonl.gz"))
+            for p in paths
+        ):
+            return EnginePlan("table", [whole], "capacity-scheme row ids")
+        engines = plan_engines(whole, self.cfg.mydumper.batch_size)
+        if len(engines) < 2:
+            return EnginePlan("table", [whole], "single engine")
+        return EnginePlan("file", engines, "whole-file batches")
+
+    def _deliver(
         self,
         name: str,
         meta: MDTableMeta,
         schema: TableSchema,
         cols: list[str],
-        engines: list[list],
+        plan: EnginePlan,
     ):
-        """File-grain checkpoint resume (O5): one idempotent
-        write-engine job per batch, each batch's files marked
-        ALL_WRITTEN with the engine's checksum-so-far persisted
-        (checkpoints.go:92-130); a resumed run skips delivered
-        engines without re-reading their data (restore.go:861-870),
-        rebuilding the table's local checksum from the stored
-        triples."""
+        """Pass 1: one write job per engine of ``plan`` (the reference's
+        deliver loop, restore.go:1557-1803), the checksum triple, row
+        count and max alloc-id observed inside each write.
+
+        Engine grains persist an engine record (rows, max id,
+        checksum-so-far, chunks) and then mark the engine's (path,
+        offset) chunks ALL_WRITTEN (checkpoints.go:92-130); a resumed
+        run skips delivered engines without re-reading their data
+        (restore.go:861-870), rebuilding the table's local checksum
+        from the stored triples. Table grain writes no engine record
+        (table-grain resume)."""
         want_cs = self.cfg.checksum
+        engine_grain = plan.grain != "table"
         total: Checksum | None = None
         rows = 0
         max_id: int | None = None
         loaded = False
-        for eid, files in enumerate(engines):
-            self._gate()  # park between deliver batches (cancellable)
-            paths = [f.path for f in files]
-            saved = self.cp.engine_state(name, eid)
-            delivered = saved is not None and all(
-                self.cp.chunk_status(name, p) >= Status.ALL_WRITTEN
-                for p in paths
-            )
-            if delivered:
-                if want_cs and saved.get("crc_xor") is not None:
-                    total = self._merge_ck(
-                        total,
-                        Checksum(
-                            saved["crc_xor"],
-                            saved["total_bytes"],
-                            saved["total_kvs"],
-                        ),
-                    )
-                rows += int(saved.get("rows") or 0)
-                if saved.get("max_id") is not None:
-                    max_id = max(max_id or 0, int(saved["max_id"]))
+        for eid, chunks in enumerate(plan.engines):
+            self._gate()  # park between engines (cancellable)
+            rec = self.cp.engine_state(name, eid) if engine_grain else None
+            if rec is not None and all(
+                self.cp.chunk_status(name, p, off) >= Status.ALL_WRITTEN
+                for p, off, _ in chunks
+            ):
                 log.info(
                     "[table: %s] engine %d already delivered, skipping "
-                    "%d file(s)", name, eid, len(paths)
+                    "%d chunk(s)", name, eid, len(chunks)
                 )
-                continue
-            df = self.read_table(meta, schema, only=set(paths))
-            if not loaded:
-                self.cp.set_table_status(name, Status.LOADED)
-                loaded = True
-            df, obs = self._observe_write(
-                df, name, cols, schema, want_cs, tag=f":e{eid}"
-            )
-            self.sink.write_engine(df, name, eid)
-            m = obs.get
-            rec = {
-                "rows": int(m["total_kvs"]),
-                "max_id": int(m["max_id"]) if m.get("max_id") is not None else None,
-                # engine -> chunk mapping for the /progress/table
-                # marshal (the reference's TableCheckpoint.Engines)
-                "files": paths,
-            }
-            if want_cs:
-                ck = Checksum(
-                    int(m["crc_xor"] or 0),
-                    int(m["total_bytes"]),
-                    int(m["total_kvs"]) * self._kv_mult(schema),
+            else:
+                if plan.grain == "table":
+                    df = self.read_table(meta, schema)
+                elif plan.grain == "file":
+                    df = self.read_table(
+                        meta, schema, only={p for p, _, _ in chunks}
+                    )
+                else:
+                    df = self._block_frame(
+                        meta, schema, chunks, plan.split_bytes
+                    )
+                if not loaded:
+                    self.cp.set_table_status(name, Status.LOADED)
+                    loaded = True
+                obs = None
+                if self.sink.observes_write_action:
+                    df, obs = self._observe_write(
+                        df, name, cols, schema, want_cs,
+                        tag=f":{plan.grain}{eid}" if engine_grain else "",
+                    )
+                else:
+                    m = self._eager_write_metrics(df, cols, schema, want_cs)
+                if engine_grain:
+                    res = self.sink.write_engine(df, name, eid)
+                else:
+                    res = self.sink.write(df, name)
+                if obs is not None:
+                    m = obs.get
+                rec = {
+                    "rows": (
+                        res.rows if res.rows >= 0 else m.get("total_kvs", -1)
+                    ),
+                    "max_id": m.get("max_id"),
+                    # engine -> chunk mapping for the /progress/table
+                    # marshal (the reference's TableCheckpoint.Engines)
+                    "chunks": [[p, off] for p, off, _ in chunks],
+                }
+                if want_cs:
+                    rec.update(
+                        crc_xor=m["crc_xor"] or 0,
+                        total_bytes=m["total_bytes"],
+                        total_kvs=m["total_kvs"] * self._kv_mult(schema),
+                    )
+                if engine_grain:
+                    # write THEN record, like the reference's deliver
+                    # loop (restore.go:1601-1634): a crash in between
+                    # re-runs the engine, whose directory-replace
+                    # delivery is idempotent
+                    self.cp.set_engine_state(name, eid, rec)
+                self.cp.mark_chunks(
+                    name,
+                    [(p, off) for p, off, _ in chunks],
+                    Status.ALL_WRITTEN,
                 )
-                rec.update(
-                    crc_xor=ck.crc_xor,
-                    total_bytes=ck.total_bytes,
-                    total_kvs=ck.total_kvs,
+                nbytes = sum(ln for _, _, ln in chunks)
+                if self._ticker:
+                    self._ticker.add(nbytes)
+                if self.progress:
+                    self.progress.table_written(name, nbytes)
+            if want_cs and rec.get("crc_xor") is not None:
+                total = self._merge_ck(
+                    total,
+                    Checksum(
+                        rec["crc_xor"], rec["total_bytes"], rec["total_kvs"]
+                    ),
                 )
-                total = self._merge_ck(total, ck)
-            rows += int(m["total_kvs"])
-            if rec["max_id"] is not None:
-                max_id = max(max_id or 0, rec["max_id"])
-            # write THEN record, like the reference's deliver loop
-            # (restore.go:1601-1634): a crash in between re-runs the
-            # engine, whose directory-replace delivery is idempotent
-            self.cp.set_engine_state(name, eid, rec)
-            self.cp.mark_chunks(name, paths, Status.ALL_WRITTEN)
-            if self._ticker:
-                self._ticker.add(sum(f.size for f in files))
-            if self.progress:
-                self.progress.table_written(
-                    name, sum(f.size for f in files)
-                )
+            rows += int(rec.get("rows") or 0)
+            if rec.get("max_id") is not None:
+                v = int(rec["max_id"])
+                max_id = v if max_id is None else max(max_id, v)
         return total, rows, max_id
 
-    def _csv_block_frame(
+    def _block_frame(
         self,
         meta: MDTableMeta,
         schema: TableSchema,
@@ -1218,102 +1297,83 @@ class RestoreController:
         split_bytes: int,
     ) -> DataFrame:
         """The read->permute->cast ladder over an explicit byte-range
-        block list (csv_blocks.read_csv_blocks): same all-string
-        shape, same SplitLargeFile row-id formula, same cast ladder
-        as the whole-file strict-format path — so an engine produces
-        identical rows whether it ran in the first attempt or in a
-        mid-file resume."""
+        block list of a plain .csv or plain .jsonl table
+        (csv_blocks.read_csv_blocks / read_jsonl_blocks): the same
+        all-string shape, SplitLargeFile row-id formula and cast
+        ladder as the whole-file strict-format lanes — so an engine
+        produces identical rows whether it ran in the first attempt
+        or in a mid-file resume. JSONL keeps the batch lane's per-file
+        key-casing groups and takes the JSONL minimum-line divisor."""
         from ..operators.rowid import file_row_bases_split
-        from ..sources.csv_blocks import read_csv_blocks
+        from ..sources.csv_blocks import (
+            JSONL_MIN_LINE_BYTES,
+            read_csv_blocks,
+            read_jsonl_blocks,
+        )
+        from ..sources.jsonl_source import resolve_field_names
 
-        csv_cfg = self.cfg.mydumper.csv
-        ncols = len(schema.columns)
-        strict = strict_sql_mode(self.cfg.tidb.sql_mode)
+        names = [c.name for c in schema.columns]
+        jsonl = meta.data_files[0].path.lower().endswith(".jsonl")
         # bases over the FULL file list: a block's ids must not
         # depend on which blocks ride along (resume-renumber parity,
         # as read_table's `only` contract)
         bases = file_row_bases_split(
             [(f.path, f.size) for f in meta.data_files],
-            ncols,
+            len(names),
             split_bytes,
+            divisor=JSONL_MIN_LINE_BYTES if jsonl else None,
         )
-        df = read_csv_blocks(
-            self.spark, blocks, csv_cfg, ncols, bases, split_bytes
-        )
-        file_cols = [c.name for c in schema.columns]
-        df = df.toDF(*(["_row_id"] + file_cols))
-        return apply_permutation(
-            df,
-            schema,
-            file_cols,
-            rowid=F.col("_row_id"),
-            job_timestamp=self.job_timestamp,
-            strict=strict,
-            keep=["_row_id"],
-            source_latin1=True,
-            charset=self.cfg.mydumper.character_set,
-        )
-
-    def _jsonl_block_frame(
-        self,
-        meta: MDTableMeta,
-        schema: TableSchema,
-        blocks: list[tuple[str, int, int]],
-        split_bytes: int,
-    ) -> DataFrame:
-        """The JSONL analog of _csv_block_frame: read an explicit
-        byte-range block list (csv_blocks.read_jsonl_blocks) into the
-        batch JSONL lane's all-string DDL-named shape — same per-file
-        key-casing groups, same NOT NULL missing-sentinel coalesce,
-        same cast ladder — plus SplitLargeFile row-ids with the JSONL
-        minimum-line divisor. Resumed and fresh engines produce
-        identical rows."""
-        from ..operators.rowid import file_row_bases_split
-        from ..sources.csv_blocks import (
-            JSONL_MIN_LINE_BYTES,
-            read_jsonl_blocks,
-        )
-        from ..sources.jsonl_source import resolve_field_names
-        from ..sources.sql_dump_source import MISSING_FIELD
-
-        strict = strict_sql_mode(self.cfg.tidb.sql_mode)
-        ddl_names = [c.name for c in schema.columns]
-        # bases over the FULL file list (resume-renumber parity)
-        bases = file_row_bases_split(
-            [(f.path, f.size) for f in meta.data_files],
-            len(schema.columns),
-            split_bytes,
-            divisor=JSONL_MIN_LINE_BYTES,
-        )
+        if not jsonl:
+            df = read_csv_blocks(
+                self.spark,
+                blocks,
+                self.cfg.mydumper.csv,
+                len(names),
+                bases,
+                split_bytes,
+            ).toDF("_row_id", *names)
+            return apply_permutation(
+                df,
+                schema,
+                names,
+                rowid=F.col("_row_id"),
+                job_timestamp=self.job_timestamp,
+                strict=strict_sql_mode(self.cfg.tidb.sql_mode),
+                keep=["_row_id"],
+                source_latin1=True,
+                charset=self.cfg.mydumper.character_set,
+            )
         # per-file key casing, grouped exactly like the batch lane
         # (a differently-cased later part must not read all-NULL)
-        fmap_by_path = {
-            f.path: resolve_field_names(
-                ddl_names, f.path, require_match=True
-            )
+        casing = {
+            f.path: resolve_field_names(names, f.path, require_match=True)
             for f in meta.data_files
         }
         groups: dict[tuple, list[tuple[str, int, int]]] = {}
         for b in blocks:
-            key = tuple(fmap_by_path[b[0]][n] for n in ddl_names)
+            key = tuple(casing[b[0]][n] for n in names)
             groups.setdefault(key, []).append(b)
-        jdfs = []
-        for key in sorted(groups):
-            jdfs.append(
-                read_jsonl_blocks(
-                    self.spark,
-                    groups[key],
-                    ddl_names,
-                    list(key),
-                    bases,
-                    split_bytes,
-                )
+        jdfs = [
+            read_jsonl_blocks(
+                self.spark, groups[key], names, list(key), bases, split_bytes
             )
+            for key in sorted(groups)
+        ]
         jdf = jdfs[0]
         for other in jdfs[1:]:
             jdf = jdf.unionByName(other)
-        # JSON null vs absent-key: same sentinel rule as the batch
-        # lane — NOT NULL columns take the column DEFAULT
+        return self._permute_jsonl(jdf, schema)
+
+    def _permute_jsonl(self, jdf: DataFrame, schema: TableSchema) -> DataFrame:
+        """The JSONL cast ladder over an all-string, DDL-named frame
+        plus ``_row_id``, shared by the batch and block lanes. JSON
+        cannot distinguish an absent key from an explicit null; for
+        NOT NULL columns a null is invalid anyway, so it maps to the
+        missing sentinel and takes the column DEFAULT (the
+        absent-trailing-field CSV semantics); nullable columns keep
+        real NULLs."""
+        from ..sources.sql_dump_source import MISSING_FIELD
+
         jdf = jdf.select(
             *[
                 (
@@ -1330,115 +1390,14 @@ class RestoreController:
         return apply_permutation(
             jdf,
             schema,
-            ddl_names,
+            [c.name for c in schema.columns],
             rowid=F.col("_row_id"),
             job_timestamp=self.job_timestamp,
-            strict=strict,
+            strict=strict_sql_mode(self.cfg.tidb.sql_mode),
             keep=["_row_id"],
             charset=self.cfg.mydumper.character_set,
             missing_sentinel=MISSING_FIELD,
         )
-
-    def _restore_engines_blocks(
-        self,
-        name: str,
-        meta: MDTableMeta,
-        schema: TableSchema,
-        cols: list[str],
-        engines: list[list[tuple[str, int, int]]],
-        split_bytes: int,
-    ):
-        """BLOCK-grain checkpoint resume (O5 at the reference's chunk
-        key grain, checkpoints.go:92-130): one idempotent write-engine
-        job per contiguous block range of a strict-format CSV, each
-        delivered block marked under its (path, byte-offset) chunk key
-        with the engine's checksum-so-far persisted. A mid-FILE crash
-        then loses at most one engine of work — the resume plans only
-        the pending byte ranges and never re-reads delivered blocks
-        (restore.go:1265-1266 resumes a chunk from its offset the
-        same way)."""
-        want_cs = self.cfg.checksum
-        total: Checksum | None = None
-        rows = 0
-        max_id: int | None = None
-        loaded = False
-        for eid, blocks in enumerate(engines):
-            self._gate()
-            saved = self.cp.engine_state(name, eid)
-            delivered = saved is not None and all(
-                self.cp.chunk_status(name, p, off) >= Status.ALL_WRITTEN
-                for p, off, _ in blocks
-            )
-            if delivered:
-                if want_cs and saved.get("crc_xor") is not None:
-                    total = self._merge_ck(
-                        total,
-                        Checksum(
-                            saved["crc_xor"],
-                            saved["total_bytes"],
-                            saved["total_kvs"],
-                        ),
-                    )
-                rows += int(saved.get("rows") or 0)
-                if saved.get("max_id") is not None:
-                    max_id = max(max_id or 0, int(saved["max_id"]))
-                log.info(
-                    "[table: %s] block engine %d already delivered, "
-                    "skipping %d block(s)", name, eid, len(blocks)
-                )
-                continue
-            if meta.data_files and meta.data_files[0].path.lower().endswith(
-                ".jsonl"
-            ):
-                df = self._jsonl_block_frame(
-                    meta, schema, blocks, split_bytes
-                )
-            else:
-                df = self._csv_block_frame(
-                    meta, schema, blocks, split_bytes
-                )
-            if not loaded:
-                self.cp.set_table_status(name, Status.LOADED)
-                loaded = True
-            df, obs = self._observe_write(
-                df, name, cols, schema, want_cs, tag=f":be{eid}"
-            )
-            self.sink.write_engine(df, name, eid)
-            m = obs.get
-            rec = {
-                "rows": int(m["total_kvs"]),
-                "max_id": (
-                    int(m["max_id"]) if m.get("max_id") is not None else None
-                ),
-                "chunks": [[p, int(off)] for p, off, _ in blocks],
-            }
-            if want_cs:
-                ck = Checksum(
-                    int(m["crc_xor"] or 0),
-                    int(m["total_bytes"]),
-                    int(m["total_kvs"]) * self._kv_mult(schema),
-                )
-                rec.update(
-                    crc_xor=ck.crc_xor,
-                    total_bytes=ck.total_bytes,
-                    total_kvs=ck.total_kvs,
-                )
-                total = self._merge_ck(total, ck)
-            rows += int(m["total_kvs"])
-            if rec["max_id"] is not None:
-                max_id = max(max_id or 0, rec["max_id"])
-            self.cp.set_engine_state(name, eid, rec)
-            self.cp.mark_block_chunks(
-                name,
-                [(p, off) for p, off, _ in blocks],
-                Status.ALL_WRITTEN,
-            )
-            nbytes = sum(ln for _, _, ln in blocks)
-            if self._ticker:
-                self._ticker.add(nbytes)
-            if self.progress:
-                self.progress.table_written(name, nbytes)
-        return total, rows, max_id
 
     def restore_table(
         self, name: str, meta: MDTableMeta, schema: TableSchema
@@ -1500,13 +1459,7 @@ class RestoreController:
                         schema.partition_col,
                         schema.partition_count,
                     )
-            dedup_may_drop = (
-                bool(keys)
-                and self.cfg.on_duplicate in ("replace", "ignore")
-            ) or self.cfg.incremental
-            # incremental merges change the delivered row set, so rows
-            # and alloc_base must come from the read-back aggregate
-            # (same path replace/ignore dedup already uses)
+            dedup_may_drop = self._dedup_may_drop(schema)
             prior_ck = None
             if self.cfg.incremental and self.cfg.checksum:
                 # the sidecar must be read BEFORE the sink rewrites
@@ -1514,144 +1467,17 @@ class RestoreController:
                 # all)
                 prior_ck = self._load_prior_checksum(name)
 
-            engines = plan_engines(
-                meta.data_files, self.cfg.mydumper.batch_size
+            plan = self._plan_delivery(name, meta, schema)
+            log.info("table %s: %s grain (%s)", name, plan.grain, plan.reason)
+            local, rows, obs_max_id = self._deliver(
+                name, meta, schema, cols, plan
             )
-            # engine grain needs: >1 batch, a checkpoint store to
-            # record progress in, a sink with idempotent engine
-            # delivery, and no cross-engine keyed dedup (replace/
-            # ignore rewrite rows across the whole table -> those
-            # stay single-shot; dup=error is verified post-hoc below)
-            engine_grain = (
-                len(engines) > 1
-                and self.cp.enabled
-                and not dedup_may_drop
-                # bucket layout is a whole-table invariant: the
-                # bucketed write repartitions everything anyway, so an
-                # engine split would just be overwritten; incremental
-                # merges are likewise single-shot per run
-                and not self.cfg.bucket_buckets
-                and not self.cfg.incremental
-                and not self.cfg.mydumper.csv.strict_parser
-                and type(self.sink).write_engine is not Sink.write_engine
-                # parquet/gzip sources have no plan-time per-file id
-                # bases (byte estimates are unsafe for compressed or
-                # columnar files), so their capacity-scheme ids are
-                # only unique within ONE read — engine-split reads
-                # would collide: single-shot
-                and not any(
-                    f.path.lower().endswith(
-                        (".parquet", ".csv.gz", ".jsonl", ".jsonl.gz")
-                    )
-                    for f in meta.data_files
-                )
-            )
-            # BLOCK-grain engines: a strict-format CSV table larger
-            # than batch_size splits into byte-range engines, so a
-            # mid-FILE crash resumes from the last delivered block
-            # range instead of re-running whole files (checkpoints.go
-            # chunk keys; restore.go:1265-1266). Same gating as
-            # engine_grain plus: strict-format, plain .csv only (the
-            # byte-range reader seeks uncompressed files), no header
-            # (a header row is file-scoped state a block can't see).
-            block_engines = None
-            block_split = None
-            if (
-                self.cfg.mydumper.csv.strict_format
-                and self.cp.enabled
-                and not dedup_may_drop
-                and not self.cfg.bucket_buckets
-                and not self.cfg.incremental
-                and not self.cfg.mydumper.csv.strict_parser
-                and not self.cfg.mydumper.csv.header
-                and type(self.sink).write_engine is not Sink.write_engine
-                and meta.data_files
-                and (
-                    all(
-                        f.path.lower().endswith(".csv")
-                        for f in meta.data_files
-                    )
-                    # JSONL is line-delimited, hence byte-range
-                    # splittable under the same Hadoop line geometry;
-                    # uncompressed .jsonl only (the reader seeks), and
-                    # never mixed with other formats in one table
-                    # (block row-id bases are one scheme per table)
-                    or all(
-                        f.path.lower().endswith(".jsonl")
-                        for f in meta.data_files
-                    )
-                )
-            ):
-                from ..operators.rowid import split_bytes_lower_bound
-                from ..sources.csv_blocks import (
-                    files_use_supported_terminators,
-                    group_blocks_into_engines,
-                    plan_file_blocks,
-                )
-
-                # BOTH geometry inputs are pinned in the checkpoint:
-                # a resume MUST re-plan the exact block geometry, id
-                # bases, AND engine grouping of the first run even if
-                # the session conf or config changed in between —
-                # otherwise delivered chunk keys would not match, row-
-                # id bases would shift, and (for batch_size) old
-                # engine_state records would be merged onto engines
-                # now holding DIFFERENT blocks, duplicating or losing
-                # rows
-                skey = f"split_bytes:{name}"
-                persisted = self.cp.task_meta(skey)
-                if persisted:
-                    bsplit = int(persisted)
-                else:
-                    bsplit = split_bytes_lower_bound(self.spark)
-                bkey = f"block_batch_size:{name}"
-                persisted_bs = self.cp.task_meta(bkey)
-                if persisted_bs:
-                    bsize = int(persisted_bs)
-                else:
-                    bsize = self.cfg.mydumper.batch_size
-                file_sizes = [(f.path, f.size) for f in meta.data_files]
-                blocks = plan_file_blocks(file_sizes, bsplit)
-                bengines = group_blocks_into_engines(blocks, bsize)
-                if len(bengines) > 1 and not files_use_supported_terminators(
-                    file_sizes
-                ):
-                    # lone-\r line endings: the block reader's line
-                    # geometry would diverge from the native
-                    # splittable scan — stay on the engine-grain path
-                    log.warning(
-                        "table %s: CR line terminators detected; "
-                        "block-grain resume disabled for this table",
-                        name,
-                    )
-                    bengines = []
-                if len(bengines) > 1:
-                    if not persisted:
-                        self.cp.set_task_meta(skey, str(bsplit))
-                    if not persisted_bs:
-                        self.cp.set_task_meta(bkey, str(bsize))
-                    block_engines = bengines
-                    block_split = bsplit
-
-            if block_engines is not None:
-                engine_grain = True  # post-hoc dup check applies
-                local, rows, obs_max_id = self._restore_engines_blocks(
-                    name, meta, schema, cols, block_engines, block_split
-                )
-            elif engine_grain:
-                local, rows, obs_max_id = self._restore_engines(
-                    name, meta, schema, cols, engines
-                )
-            else:
-                local, rows, obs_max_id = self._restore_single(
-                    name, meta, schema, cols
-                )
             self.cp.set_table_status(name, Status.IMPORTED)
             attempt = Status.CHECKSUMMED
 
             # pass 2 (only when something must be read back)
             need_remote = self.cfg.checksum and local is not None
-            post_dup_check = engine_grain and bool(keys) and (
+            post_dup_check = plan.grain != "table" and bool(keys) and (
                 self.cfg.on_duplicate == "error"
             )
             base = 1
@@ -1772,7 +1598,7 @@ class RestoreController:
             # pass over the table — size-only NOSCAN stats suffice
             # and cost zero jobs.
             noscan = (
-                getattr(self.cfg, "analyze_mode", "auto") == "auto"
+                self.cfg.analyze_mode == "auto"
                 and rows >= 0
             )
             if self.cfg.analyze and self.sink.analyze(
@@ -1868,7 +1694,7 @@ class RestoreController:
         and index engines (ClassifyAndAppend updates both checksums,
         sql2kv.go:218-239), while the pipeline's count(*) aggregate
         counts rows — this is the bridge."""
-        algo = getattr(self.cfg, "checksum_algo", "xxdirect")
+        algo = self.cfg.checksum_algo
         if algo in ("kv_crc64", "kv_crc64_v2"):
             return 1 + len(self._kv_index_specs(schema))
         return 1
@@ -1901,7 +1727,7 @@ class RestoreController:
           (sql2kv.go:218-239). The slow-exact path (per-row Python
           encode over Arrow batches).
         """
-        algo = getattr(self.cfg, "checksum_algo", "xxdirect")
+        algo = self.cfg.checksum_algo
         if algo in ("kv_crc64", "kv_crc64_v2"):
             from ..functions.kv_codec import kv_hash_columns
             from ..operators.permutation import ROWID_COL
@@ -1951,7 +1777,7 @@ class RestoreController:
             # be supplied via cfg.kv_table_ids, defaulting to 1
             tid = 1
             if schema is not None:
-                ids = getattr(self.cfg, "kv_table_ids", {}) or {}
+                ids = self.cfg.kv_table_ids or {}
                 # keys may be bare table names or db-qualified
                 tid = ids.get(schema.name) or next(
                     (
@@ -2096,13 +1922,13 @@ class RestoreController:
             self.progress.start_task(
                 {name: meta.total_size for name, (meta, _s) in ordered}
             )
-        interval = float(getattr(self.cfg, "progress_interval", 0) or 0)
+        interval = float(self.cfg.progress_interval or 0)
         if interval > 0 and ordered:
             self._ticker = _ProgressTicker(
                 sum(meta.total_size for _, (meta, _s) in ordered), interval
             ).start()
         try:
-            conc = max(int(getattr(self.cfg, "table_concurrency", 1)), 1)
+            conc = max(int(self.cfg.table_concurrency), 1)
             if conc == 1 or len(ordered) <= 1:
                 for name, (meta, schema) in ordered:
                     summary.tables[name] = self.restore_table(

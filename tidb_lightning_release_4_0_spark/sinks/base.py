@@ -31,6 +31,12 @@ class Sink(ABC):
     #: ignore | error
     on_duplicate: str = "replace"
 
+    #: True when ``write`` is a DataFrame action, so an Observation
+    #: attached to its input fires; sinks delivering through RDD
+    #: actions (JDBC foreachPartition) report False and the pipeline
+    #: aggregates their write metrics eagerly instead
+    observes_write_action: bool = True
+
     @abstractmethod
     def write(self, df: DataFrame, table: str) -> SinkResult:
         """Deliver rows; must be idempotent per chunk for resume."""

@@ -67,25 +67,6 @@ def plan_file_blocks(
     return out
 
 
-def group_blocks_into_engines(
-    blocks: list[tuple[str, int, int]], batch_size: int
-) -> list[list[tuple[str, int, int]]]:
-    """Contiguous blocks batched into ~batch_size engines — the
-    block-grain analog of rowid.plan_engines (region.go:64-133)."""
-    engines: list[list[tuple[str, int, int]]] = []
-    cur: list[tuple[str, int, int]] = []
-    size = 0
-    for b in blocks:
-        cur.append(b)
-        size += b[2]
-        if size >= batch_size:
-            engines.append(cur)
-            cur, size = [], 0
-    if cur:
-        engines.append(cur)
-    return engines
-
-
 def files_use_supported_terminators(
     files: list[tuple[str, int]], probe_bytes: int = 64 * 1024
 ) -> bool:
@@ -93,7 +74,7 @@ def files_use_supported_terminators(
     Hadoop's LineRecordReader also ends a line at a LONE ``\\r``,
     which _extract_lines deliberately does not implement — so a file
     using classic-Mac endings must NOT take the block path (it falls
-    back to engine-grain, which reads through the native splittable
+    back to file grain, which reads through the native splittable
     scan). Probes the head of every file; a ``\\r`` not followed by
     ``\\n`` (including one ending the probe window — ambiguous,
     treated conservatively) disqualifies the whole table."""
