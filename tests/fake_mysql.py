@@ -333,7 +333,9 @@ class FakeCursor:
         low = sql.lower()
         if low.startswith("create database"):
             return
-        from ..sources.schema_reader import parse_create_table
+        from tidb_lightning_release_4_0_spark.sources.schema_reader import (
+            parse_create_table,
+        )
 
         schema = parse_create_table(sql)
         cols = [c.name for c in schema.columns]

@@ -114,6 +114,28 @@ target-table = "t"
     assert cfg.table_concurrency == 2
 
 
+@pytest.mark.parametrize("algo", ["hash60", "crc64", "xxhash64", "kv-crc64"])
+def test_checksum_algo_typo_rejected(tmp_path, algo):
+    """A checksum-algo outside xxdirect / kv_crc64 / kv_crc64_v2 fails
+    the preflight adjust() instead of silently running another
+    checksum."""
+    p = _write(
+        tmp_path,
+        f"""
+[mydumper]
+data-source-dir = "/data/dump"
+
+[post-restore]
+checksum-algo = "{algo}"
+""",
+    )
+    cfg = load_toml(p)
+    cfg.target_dir = "/data/out"
+    with pytest.raises(ValueError, match="checksum-algo") as ei:
+        cfg.adjust()
+    assert "xxdirect, kv_crc64, kv_crc64_v2" in str(ei.value)
+
+
 def test_physical_only_keys_accepted(tmp_path):
     """TiKV-physical knobs load without error (they configure the
     backend this engine maps to Spark)."""

@@ -1,7 +1,7 @@
 """K3 SQL-sink DELIVERY (not just rendering): the JDBC sink executes
 its rendered REPLACE INTO / INSERT IGNORE / INSERT INTO statements
 through foreachPartition against a fake MySQL-protocol endpoint that
-parses and applies the SQL text (sinks/fake_mysql.py) — reproducing
+parses and applies the SQL text (tests/fake_mysql.py) — reproducing
 the reference's tidb-backend write path (tidb.go:271-316), the retry
 classifier (common/util.go:186-218) and the tests/tidb_duplicate_data
 golden semantics through the sink interface.
@@ -14,7 +14,7 @@ import shutil
 
 import pytest
 
-from tidb_lightning_release_4_0_spark.sinks.fake_mysql import (
+from tests.fake_mysql import (
     FakeMySQL,
     IntegrityError,
     OperationalError,

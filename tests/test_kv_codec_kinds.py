@@ -11,11 +11,11 @@ the reference's own coverage of these columns.
 
 Layers pinned here: datum-level golden bytes (hand-derived from the
 public layouts), the binary-JSON encode/decode roundtrip, the
-MySQL-kind coercion helpers, scalar-vs-numpy kernel agreement on a
-various_types-shaped DataFrame (both row formats), and the NaN-double
-agreement fix (a genuine NaN double must encode as a FLOAT datum in
-BOTH kernels — previously the numpy path's na_value=0.0 silently
-rewrote it).
+MySQL-kind coercion helpers, numpy-kernel-vs-scalar-oracle agreement
+on a various_types-shaped DataFrame (both row formats), and the
+NaN-double agreement fix (a genuine NaN double must encode as a FLOAT
+datum in the kernel exactly as in the scalar encoder — previously the
+numpy path's na_value=0.0 silently rewrote it).
 """
 
 from __future__ import annotations
@@ -196,7 +196,7 @@ def test_json_datum_from_text_int_float_distinction():
 
 
 # ---------------------------------------------------------------------------
-# kernel agreement on a various_types-shaped table
+# kernel vs scalar oracle on a various_types-shaped table
 # ---------------------------------------------------------------------------
 
 _ENUM = ["g00", "g01", "g02", "g03"]
@@ -238,39 +238,30 @@ _KINDS = {
 
 @pytest.mark.parametrize("rfv", [1, 2])
 def test_kernels_agree_on_mysql_kinds(spark, rfv):
-    from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
-    )
+    from tests.kv_oracle import scalar_kv_hashes, spark_kv_hashes
 
     df = _vt_df(spark)
     cols = ["e", "s", "b", "js", "t", "d"]
-    indexes = [(1, ["e"], True), (2, ["s", "b"], False)]
-    out = {}
-    for kernel in ("python", "numpy"):
-        pair = kv_hash_columns(
-            df, cols, "pk", table_id=7, row_format_version=rfv,
-            indexes=indexes, kernel=kernel, mysql_kinds=_KINDS,
-        )
-        rows = (
-            df.select("pk", pair.alias("p"))
-            .orderBy("pk")
-            .collect()
-        )
-        out[kernel] = [(r["pk"], r["p"]["h"], r["p"]["n"]) for r in rows]
-    assert out["python"] == out["numpy"]
+    kw = dict(
+        table_id=7, row_format_version=rfv,
+        indexes=[(1, ["e"], True), (2, ["s", "b"], False)],
+        mysql_kinds=_KINDS,
+    )
+    want = scalar_kv_hashes(df, cols, "pk", **kw)
+    assert spark_kv_hashes(df, cols, "pk", **kw) == want
     # every row produced a nonzero pair set (3 KVs each: data + 2 idx)
-    assert all(n > 0 for _, _, n in out["python"])
+    assert sorted(want) == [1, 2, 3, 4, 5]
+    assert all(n > 0 for _, n in want.values())
 
 
 @pytest.mark.parametrize("rfv", [1, 2])
 def test_kernels_agree_on_nan_double(spark, rfv):
     """A genuine (non-NULL) NaN double and a NULL double in the same
-    column must encode differently, and identically across kernels."""
+    column must encode differently, and identically in the kernel and
+    the scalar oracle."""
     from pyspark.sql import types as T
 
-    from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
-    )
+    from tests.kv_oracle import scalar_kv_hashes, spark_kv_hashes
 
     schema = T.StructType(
         [
@@ -281,15 +272,9 @@ def test_kernels_agree_on_nan_double(spark, rfv):
     df = spark.createDataFrame(
         [(1, float("nan")), (2, None), (3, 0.0)], schema
     )
-    got = {}
-    for kernel in ("python", "numpy"):
-        pair = kv_hash_columns(
-            df, ["d"], "pk", row_format_version=rfv, kernel=kernel,
-        )
-        rows = df.select("pk", pair.alias("p")).orderBy("pk").collect()
-        got[kernel] = [(r["pk"], r["p"]["h"], r["p"]["n"]) for r in rows]
-    assert got["python"] == got["numpy"]
-    h = {pk: hv for pk, hv, _ in got["python"]}
+    want = scalar_kv_hashes(df, ["d"], "pk", row_format_version=rfv)
+    assert spark_kv_hashes(df, ["d"], "pk", row_format_version=rfv) == want
+    h = {pk: hv for pk, (hv, _) in want.items()}
     assert h[1] != h[2], "NaN must not hash like NULL"
     assert h[1] != h[3], "NaN must not hash like 0.0"
 

@@ -1,7 +1,8 @@
 """The vectorized KV kernel (kv_codec_np) must be byte-identical with
-the scalar oracle (kv_codec): identical per-row (crc, nbytes) on a
-type matrix covering every vectorized family plus the object
-fallbacks, with NULLs, extreme magnitudes, unicode, and index KVs.
+the scalar oracle (kv_codec, run driver-side by tests/kv_oracle.py):
+identical per-row (crc, nbytes) on a type matrix covering every
+vectorized family plus the object fallbacks, with NULLs, extreme
+magnitudes, unicode, and index KVs.
 """
 
 import datetime as dt
@@ -9,11 +10,8 @@ from decimal import Decimal
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-    kv_hash_columns,
-)
+from tests.kv_oracle import scalar_kv_hashes, spark_kv_hashes
 
 
 def _rows():
@@ -43,20 +41,21 @@ IDX = [
 ]
 
 
-def _collect(df, pair):
-    return {
-        r["h"]: (r["ph"], r["pn"])
-        for r in df.withColumn("_p", pair)
-        .select("h", F.col("_p.h").alias("ph"), F.col("_p.n").alias("pn"))
-        .collect()
-    }
+def _input_rows(shape):
+    """The type matrix as-is, as a zero-row frame (the empty-batch
+    boundary), or with every value column NULL (all-NULL batches in
+    every vectorized family)."""
+    if shape == "empty":
+        return []
+    if shape == "all_null":
+        return [(r[0],) + (None,) * len(COLS) for r in _rows()]
+    return _rows()
 
 
 @pytest.mark.parametrize("version", [1, 2])
 @pytest.mark.parametrize("indexes", [None, IDX])
 @pytest.mark.parametrize("dnull", [None, frozenset({2, 4})])
 def test_numpy_kernel_matches_scalar_oracle(spark, version, indexes, dnull):
-    df = spark.createDataFrame(_rows(), SCHEMA)
     kw = dict(
         col_ids=[2, 3, 4, 5, 6, 7],
         table_id=9,
@@ -64,13 +63,12 @@ def test_numpy_kernel_matches_scalar_oracle(spark, version, indexes, dnull):
         indexes=indexes,
         row_format_version=version,
     )
-    got_py = _collect(
-        df, kv_hash_columns(df, COLS, "h", kernel="python", **kw)
-    )
-    got_np = _collect(
-        df, kv_hash_columns(df, COLS, "h", kernel="numpy", **kw)
-    )
-    assert got_np == got_py
+    for shape in ("mixed", "empty", "all_null"):
+        rows = _input_rows(shape)
+        df = spark.createDataFrame(rows, SCHEMA)
+        got = spark_kv_hashes(df, COLS, "h", **kw)
+        assert got == scalar_kv_hashes(df, COLS, "h", **kw), shape
+        assert len(got) == len(rows), shape
 
 
 @pytest.mark.parametrize("version", [1, 2])
@@ -87,13 +85,10 @@ def test_numpy_kernel_v2_big_layout_rows(spark, version):
     df = spark.createDataFrame(rows, "h BIGINT, s STRING, v BIGINT")
     for ids in ([2, 3], [300, 301]):
         kw = dict(col_ids=ids, row_format_version=version)
-        got_py = _collect(
-            df, kv_hash_columns(df, ["s", "v"], "h", kernel="python", **kw)
+        got = spark_kv_hashes(df, ["s", "v"], "h", **kw)
+        assert got == scalar_kv_hashes(df, ["s", "v"], "h", **kw), (
+            version, ids,
         )
-        got_np = _collect(
-            df, kv_hash_columns(df, ["s", "v"], "h", kernel="numpy", **kw)
-        )
-        assert got_np == got_py, (version, ids)
 
 
 @pytest.mark.parametrize("version", [1, 2])
@@ -131,15 +126,10 @@ def test_numpy_kernel_randomized(spark, version):
     ).repartition(4)
     cols = ["big", "f", "s", "ts"]
     idx = [(1, ["s", "big"], True), (2, ["ts"], False)]
-    got_py = _collect(
-        df, kv_hash_columns(df, cols, "h", kernel="python", indexes=idx,
-                            row_format_version=version)
+    kw = dict(indexes=idx, row_format_version=version)
+    assert spark_kv_hashes(df, cols, "h", **kw) == scalar_kv_hashes(
+        df, cols, "h", **kw
     )
-    got_np = _collect(
-        df, kv_hash_columns(df, cols, "h", kernel="numpy", indexes=idx,
-                            row_format_version=version)
-    )
-    assert got_np == got_py
 
 
 def test_float32_columns_widen_exactly(spark):
@@ -147,15 +137,10 @@ def test_float32_columns_widen_exactly(spark):
     (lightning/backend/sql2kv.go:59) but the TiDB codec stores every
     float as the 8-byte comparable double — a float32 must widen
     EXACTLY (value-preserving) before the bit twiddle. Pin the numpy
-    and python kernels to identical checksums on a FloatType column,
-    including values with no short decimal representation."""
+    kernel to the scalar oracle on a FloatType column, including
+    values with no short decimal representation."""
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
-    )
 
     rows = [
         Row(h=1, f=0.1),  # 0.1f widens to 0.10000000149011612
@@ -169,18 +154,10 @@ def test_float32_columns_widen_exactly(spark):
         T.StructField("f", T.FloatType()),
     ])
     df = spark.createDataFrame(rows, schema)
-    out = {}
-    for kernel in ("numpy", "python"):
-        pair = kv_hash_columns(
-            df, ["f"], "h", col_ids=[2], table_id=21,
-            indexes=[(1, ["f"], False)], kernel=kernel,
-        )
-        r = df.withColumn("_p", pair).agg(
-            F.bit_xor(F.col("_p.h")).alias("x"),
-            F.sum(F.col("_p.n")).alias("n"),
-        ).first()
-        out[kernel] = (r["x"], r["n"])
-    assert out["numpy"] == out["python"]
+    kw = dict(col_ids=[2], table_id=21, indexes=[(1, ["f"], False)])
+    assert spark_kv_hashes(df, ["f"], "h", **kw) == scalar_kv_hashes(
+        df, ["f"], "h", **kw
+    )
 
     # the widened bytes equal the scalar encode of the exact
     # float64 value of each float32
@@ -200,19 +177,15 @@ def test_float32_columns_widen_exactly(spark):
 def test_decimal_vectorized_path_matches_python_kernel(spark):
     """DECIMAL columns ship vectorized at EVERY precision: <= 18 as
     the unscaled int64, wider as a fixed-width sign+digits string —
-    pin the vectorized kernel to the scalar kernel on extreme values
+    pin the vectorized kernel to the scalar oracle on extreme values
     (max/min of DECIMAL(18,4), negatives, NULLs, scale 0, scale =
     precision, and DECIMAL(38,38)'s '0.' placeholder edge), in BOTH
     row formats, value and key positions."""
     from decimal import Decimal as D
 
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
-    )
     from tidb_lightning_release_4_0_spark.functions.kv_codec_np import (
         decimal_ships_scaled,
     )
@@ -245,24 +218,17 @@ def test_decimal_vectorized_path_matches_python_kernel(spark):
         T.StructField("x", T.DecimalType(38, 38)),
     ])
     df = spark.createDataFrame(rows, schema)
+    cols = ["a", "b", "c", "w", "x"]
     for ver in (1, 2):
-        out = {}
-        for kernel in ("numpy", "python"):
-            pair = kv_hash_columns(
-                df, ["a", "b", "c", "w", "x"], "h",
-                col_ids=[2, 3, 4, 5, 6],
-                table_id=22, row_format_version=ver,
-                default_null_ids=frozenset({2, 4, 6}),
-                indexes=[(1, ["a", "c"], False), (2, ["b"], True),
-                         (3, ["w", "x"], False)],
-                kernel=kernel,
-            )
-            r = df.withColumn("_p", pair).agg(
-                F.bit_xor(F.col("_p.h")).alias("x"),
-                F.sum(F.col("_p.n")).alias("n"),
-            ).first()
-            out[kernel] = (r["x"], r["n"])
-        assert out["numpy"] == out["python"], (ver, out)
+        kw = dict(
+            col_ids=[2, 3, 4, 5, 6],
+            table_id=22, row_format_version=ver,
+            default_null_ids=frozenset({2, 4, 6}),
+            indexes=[(1, ["a", "c"], False), (2, ["b"], True),
+                     (3, ["w", "x"], False)],
+        )
+        got = spark_kv_hashes(df, cols, "h", **kw)
+        assert got == scalar_kv_hashes(df, cols, "h", **kw), ver
 
 
 def test_wide_decimal_digits_packer_property_matrix():
@@ -327,19 +293,14 @@ def test_wide_decimal_digits_packer_property_matrix():
 
 def test_date_columns_vectorized_match_python_kernel(spark):
     """DATE columns ship days-since-epoch and pack as their midnight
-    datetime in pure numpy — pin both kernels to identical checksums
+    datetime in pure numpy — pin the kernel to the scalar oracle
     across the MySQL DATE range (0001..9999, pre-1970 negatives,
     NULLs), both row formats, value and key positions. Years past
     2262 specifically exercise the no-pandas-Timestamp path."""
     import datetime as dt
 
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
-    )
 
     rows = [
         Row(h=1, d=dt.date(1996, 2, 29)),
@@ -356,36 +317,23 @@ def test_date_columns_vectorized_match_python_kernel(spark):
     ])
     df = spark.createDataFrame(rows, schema)
     for ver in (1, 2):
-        out = {}
-        for kernel in ("numpy", "python"):
-            pair = kv_hash_columns(
-                df, ["d"], "h", col_ids=[2], table_id=24,
-                row_format_version=ver,
-                indexes=[(1, ["d"], False), (2, ["d", "h"], True)],
-                kernel=kernel,
-            )
-            r = df.withColumn("_p", pair).agg(
-                F.bit_xor(F.col("_p.h")).alias("x"),
-                F.sum(F.col("_p.n")).alias("n"),
-            ).first()
-            out[kernel] = (r["x"], r["n"])
-        assert out["numpy"] == out["python"], (ver, out)
+        kw = dict(
+            col_ids=[2], table_id=24, row_format_version=ver,
+            indexes=[(1, ["d"], False), (2, ["d", "h"], True)],
+        )
+        got = spark_kv_hashes(df, ["d"], "h", **kw)
+        assert got == scalar_kv_hashes(df, ["d"], "h", **kw), ver
 
 
 def test_enum_bit_vectorized_match_python_kernel(spark):
     """ENUM ordinals and integer BIT values now pre-resolve JVM-side
-    and ride the kernel's vectorized uint64 branch — pin both kernels
-    identical on exact / case-insensitive / empty / numeric-ordinal /
-    NULL enum forms (both row formats), and keep the STRICT contract:
-    an unknown member raises in both kernels."""
-    import pytest
+    and ride the kernel's vectorized uint64 branch — pin the kernel to
+    the scalar oracle on exact / case-insensitive / empty /
+    numeric-ordinal / NULL enum forms (both row formats), and keep the
+    STRICT contract: an unknown member raises in the kernel (inside
+    Spark) and in the oracle (in the Spark driver)."""
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
-    )
 
     schema = T.StructType([
         T.StructField("h", T.LongType()),
@@ -402,42 +350,29 @@ def test_enum_bit_vectorized_match_python_kernel(spark):
     df = spark.createDataFrame(rows, schema)
     mk = {"e": ("enum", ("click", "error", "purchase")), "b": ("bit",)}
     for ver in (1, 2):
-        out = {}
-        for kernel in ("numpy", "python"):
-            pair = kv_hash_columns(
-                df, ["e", "b"], "h", col_ids=[2, 3], table_id=25,
-                mysql_kinds=mk, indexes=[(1, ["e", "b"], True)],
-                row_format_version=ver, kernel=kernel,
-            )
-            r = df.withColumn("_p", pair).agg(
-                F.bit_xor("_p.h"), F.sum("_p.n")
-            ).first()
-            out[kernel] = tuple(r)
-        assert out["numpy"] == out["python"], (ver, out)
+        kw = dict(
+            col_ids=[2, 3], table_id=25, mysql_kinds=mk,
+            indexes=[(1, ["e", "b"], True)], row_format_version=ver,
+        )
+        got = spark_kv_hashes(df, ["e", "b"], "h", **kw)
+        assert got == scalar_kv_hashes(df, ["e", "b"], "h", **kw), ver
 
     bad = spark.createDataFrame([Row(h=1, e="nope", b=1)], schema)
-    for kernel in ("numpy", "python"):
-        pair = kv_hash_columns(
-            bad, ["e", "b"], "h", col_ids=[2, 3], table_id=25,
-            mysql_kinds=mk, kernel=kernel,
-        )
-        with pytest.raises(Exception, match="enum value"):
-            bad.withColumn("_p", pair).collect()
+    kw = dict(col_ids=[2, 3], table_id=25, mysql_kinds=mk)
+    with pytest.raises(ValueError, match="enum value"):
+        scalar_kv_hashes(bad, ["e", "b"], "h", **kw)
+    with pytest.raises(Exception, match="enum value"):
+        spark_kv_hashes(bad, ["e", "b"], "h", **kw)
 
 
 def test_set_vectorized_match_python_kernel(spark):
     """SET bitmasks now resolve JVM-side (per-part CASE inside a
-    bitwise-OR aggregate, strict raise preserved) — pin both kernels
-    identical on single/multi/empty/NULL/ci/duplicate-member forms in
-    both row formats, and keep the raise on a genuine member miss."""
-    import pytest
+    bitwise-OR aggregate, strict raise preserved) — pin the kernel to
+    the scalar oracle on single/multi/empty/NULL/ci/duplicate-member
+    forms in both row formats, and keep the raise on a genuine member
+    miss in both."""
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
-    )
 
     schema = T.StructType([
         T.StructField("h", T.LongType()),
@@ -454,27 +389,19 @@ def test_set_vectorized_match_python_kernel(spark):
     df = spark.createDataFrame(rows, schema)
     mk = {"s": ("set", ("x", "y", "z"))}
     for ver in (1, 2):
-        out = {}
-        for kernel in ("numpy", "python"):
-            pair = kv_hash_columns(
-                df, ["s"], "h", col_ids=[2], table_id=27,
-                mysql_kinds=mk, indexes=[(1, ["s"], False)],
-                row_format_version=ver, kernel=kernel,
-            )
-            r = df.withColumn("_p", pair).agg(
-                F.bit_xor("_p.h"), F.sum("_p.n")
-            ).first()
-            out[kernel] = tuple(r)
-        assert out["numpy"] == out["python"], (ver, out)
+        kw = dict(
+            col_ids=[2], table_id=27, mysql_kinds=mk,
+            indexes=[(1, ["s"], False)], row_format_version=ver,
+        )
+        got = spark_kv_hashes(df, ["s"], "h", **kw)
+        assert got == scalar_kv_hashes(df, ["s"], "h", **kw), ver
 
     bad = spark.createDataFrame([Row(h=1, s="x,nope")], schema)
-    for kernel in ("numpy", "python"):
-        pair = kv_hash_columns(
-            bad, ["s"], "h", col_ids=[2], table_id=27,
-            mysql_kinds=mk, kernel=kernel,
-        )
-        with pytest.raises(Exception, match="nope"):
-            bad.withColumn("_p", pair).collect()
+    kw = dict(col_ids=[2], table_id=27, mysql_kinds=mk)
+    with pytest.raises(ValueError, match="nope"):
+        scalar_kv_hashes(bad, ["s"], "h", **kw)
+    with pytest.raises(Exception, match="nope"):
+        spark_kv_hashes(bad, ["s"], "h", **kw)
 
 
 def test_set_64_members_bit63(spark):
@@ -483,13 +410,12 @@ def test_set_64_members_bit63(spark):
     kernel's uint64 view restores the bit pattern. This is the exact
     shape of the reference's various_types enum-set fixture (64
     'xNN' members), which errored at F.lit(1 << 63) before the fix —
-    pin both kernels identical including the top-bit member."""
+    pin the kernel to the scalar oracle including the top-bit
+    member."""
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
         set_bitmask,
     )
 
@@ -508,15 +434,9 @@ def test_set_64_members_bit63(spark):
     df = spark.createDataFrame(rows, schema)
     mk = {"s": ("set", members)}
     for ver in (1, 2):
-        out = {}
-        for kernel in ("numpy", "python"):
-            pair = kv_hash_columns(
-                df, ["s"], "h", col_ids=[2], table_id=28,
-                mysql_kinds=mk, indexes=[(1, ["s"], True)],
-                row_format_version=ver, kernel=kernel,
-            )
-            r = df.withColumn("_p", pair).agg(
-                F.bit_xor("_p.h"), F.sum("_p.n")
-            ).first()
-            out[kernel] = tuple(r)
-        assert out["numpy"] == out["python"], (ver, out)
+        kw = dict(
+            col_ids=[2], table_id=28, mysql_kinds=mk,
+            indexes=[(1, ["s"], True)], row_format_version=ver,
+        )
+        got = spark_kv_hashes(df, ["s"], "h", **kw)
+        assert got == scalar_kv_hashes(df, ["s"], "h", **kw), ver

@@ -107,14 +107,13 @@ def test_bmp_header_parse_rejects_nonstandard_headers(spark):
 
 def test_time_two_field_is_hours_minutes(spark):
     """ADVICE r9 #1: '11:12' is HH:MM (MySQL/TiDB ParseDuration), in
-    BOTH kernels of the graded vectorized KV path — the twins must
+    the vectorized KV kernel and the scalar oracle — the twins must
     move together."""
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from tests.kv_oracle import scalar_kv_hashes, spark_kv_hashes
     from tidb_lightning_release_4_0_spark.functions.kv_codec import (
-        kv_hash_columns,
         parse_duration_ns,
     )
 
@@ -129,17 +128,10 @@ def test_time_two_field_is_hours_minutes(spark):
         ("two", "11:12"), ("three", "11:12:00"), ("mmss", "00:11:12")
     ):
         df = spark.createDataFrame([Row(h=1, t=text)], schema)
-        out = {}
-        for kernel in ("numpy", "python"):
-            p = kv_hash_columns(
-                df, ["t"], "h", col_ids=[2], table_id=29,
-                mysql_kinds={"t": ("time",)}, kernel=kernel,
-            )
-            out[kernel] = tuple(
-                df.withColumn("_p", p).select("_p.h", "_p.n").first()
-            )
-        assert out["numpy"] == out["python"], (tag, out)
-        pairs[tag] = out["numpy"]
+        kw = dict(col_ids=[2], table_id=29, mysql_kinds={"t": ("time",)})
+        got = spark_kv_hashes(df, ["t"], "h", **kw)
+        assert got == scalar_kv_hashes(df, ["t"], "h", **kw), tag
+        pairs[tag] = got[1]
     assert pairs["two"] == pairs["three"]
     assert pairs["two"] != pairs["mmss"]
 

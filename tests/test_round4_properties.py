@@ -15,7 +15,7 @@ import datetime as dt
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tidb_lightning_release_4_0_spark.sinks.fake_mysql import _parse_dml
+from tests.fake_mysql import _parse_dml
 from tidb_lightning_release_4_0_spark.sinks.jdbc_sink import (
     render_insert,
 )

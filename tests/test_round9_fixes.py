@@ -1,13 +1,14 @@
 """Round-9 fixes, pinned:
 
 - TIME columns vectorize (JVM parse to signed nanoseconds + the
-  kernel's new duration branch) — both kernels byte-identical across
-  every MySQL TIME text form, both row formats, key+value positions.
+  kernel's new duration branch) — byte-identical with the scalar
+  oracle across every MySQL TIME text form, both row formats,
+  key+value positions.
 - The r8 ADVICE items: the wide-decimal digit packer raises loudly on
   a broken '<sign><p digits>' contract instead of clip-masking it;
   the scalar enum parser rejects Unicode digits (matching the JVM
   twin) and a numeric '0' ordinal (types.ParseEnumValue parity) in
-  BOTH kernels.
+  the kernel and the scalar encoder.
 - JSON columns route through the batch-amortized memoizing encoder —
   bytes unchanged vs the scalar oracle (incl. repeated values, which
   now hit the cache).
@@ -16,12 +17,11 @@
 import numpy as np
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tests.kv_oracle import scalar_kv_hashes, spark_kv_hashes
 from tidb_lightning_release_4_0_spark.functions.kv_codec import (
     enum_ordinal,
-    kv_hash_columns,
     parse_duration_ns,
 )
 
@@ -30,7 +30,7 @@ def test_time_vectorized_match_python_kernel(spark):
     """TIME pre-parses JVM-side to signed nanoseconds and rides the
     kernel's vectorized duration branch (durationFlag + comparable
     int64 in v1 values AND index keys, smallest-LE signed int in v2
-    cells) — pin both kernels identical across the MySQL TIME text
+    cells) — pin the kernel to the scalar oracle across the MySQL TIME text
     forms: full HH:MM:SS, fractional seconds (ragged digits), sign,
     hours past 23 (MySQL TIME reaches 838:59:59), MM:SS and
     seconds-only shorthand, zero, and NULL."""
@@ -54,29 +54,22 @@ def test_time_vectorized_match_python_kernel(spark):
     df = spark.createDataFrame(rows, schema)
     mk = {"t": ("time",)}
     for ver in (1, 2):
-        out = {}
-        for kernel in ("numpy", "python"):
-            pair = kv_hash_columns(
-                df, ["t"], "h", col_ids=[2], table_id=29,
-                mysql_kinds=mk, indexes=[(1, ["t"], True)],
-                row_format_version=ver, kernel=kernel,
-            )
-            r = df.withColumn("_p", pair).agg(
-                F.bit_xor("_p.h"), F.sum("_p.n")
-            ).first()
-            out[kernel] = tuple(r)
-        assert out["numpy"] == out["python"], (ver, out)
+        kw = dict(
+            col_ids=[2], table_id=29, mysql_kinds=mk,
+            indexes=[(1, ["t"], True)], row_format_version=ver,
+        )
+        got = spark_kv_hashes(df, ["t"], "h", **kw)
+        assert got == scalar_kv_hashes(df, ["t"], "h", **kw), ver
 
     # strict contract survives the vectorization: garbage raises in
-    # both kernels (the JVM cast nulls feed a raise_error)
+    # the kernel (the JVM cast nulls feed a raise_error) and in the
+    # scalar oracle
     bad = spark.createDataFrame([Row(h=1, t="not a time")], schema)
-    for kernel in ("numpy", "python"):
-        pair = kv_hash_columns(
-            bad, ["t"], "h", col_ids=[2], table_id=29,
-            mysql_kinds=mk, kernel=kernel,
-        )
-        with pytest.raises(Exception):
-            bad.withColumn("_p", pair).collect()
+    kw = dict(col_ids=[2], table_id=29, mysql_kinds=mk)
+    with pytest.raises(ValueError):
+        scalar_kv_hashes(bad, ["t"], "h", **kw)
+    with pytest.raises(Exception):
+        spark_kv_hashes(bad, ["t"], "h", **kw)
 
 
 def test_duration_ns_scalar_forms():
@@ -97,7 +90,7 @@ def test_enum_rejects_unicode_digits_and_zero():
     """ADVICE r8: the scalar kernel accepted Unicode digits (str.
     isdigit) and numeric '0' where the JVM twin / TiDB's
     ParseEnumValue reject both — pinned to the strict behavior in
-    BOTH kernels now."""
+    the kernel and the scalar encoder now."""
     members = ("red", "green", "blue")
     assert enum_ordinal("2", members) == 2
     with pytest.raises(ValueError):
@@ -115,15 +108,19 @@ def test_enum_zero_and_unicode_raise_in_both_kernels(spark):
         T.StructField("e", T.StringType()),
     ])
     mk = {"e": ("enum", ("red", "green", "blue"))}
-    for val in ("0", "２"):
-        bad = spark.createDataFrame([Row(h=1, e=val)], schema)
-        for kernel in ("numpy", "python"):
-            pair = kv_hash_columns(
-                bad, ["e"], "h", col_ids=[2], table_id=30,
-                mysql_kinds=mk, kernel=kernel,
-            )
-            with pytest.raises(Exception, match="enum value"):
-                bad.withColumn("_p", pair).collect()
+    kw = dict(col_ids=[2], table_id=30, mysql_kinds=mk)
+    bads = [
+        spark.createDataFrame([Row(h=1, e=val)], schema)
+        for val in ("0", "２")
+    ]
+    # driver-side checks first: a job right after a failed Spark job
+    # can meet a torn-down Python worker
+    for bad in bads:
+        with pytest.raises(ValueError, match="enum value"):
+            scalar_kv_hashes(bad, ["e"], "h", **kw)
+    for bad in bads:
+        with pytest.raises(Exception, match="enum value"):
+            spark_kv_hashes(bad, ["e"], "h", **kw)
 
 
 def test_wide_decimal_contract_violation_raises():
@@ -184,18 +181,12 @@ def test_json_batch_encoder_matches_scalar_and_caches(spark):
     df = spark.createDataFrame(rows, schema)
     mk = {"j": ("json",)}
     for ver in (1, 2):
-        out = {}
-        for kernel in ("numpy", "python"):
-            pair = kv_hash_columns(
-                df, ["j"], "h", col_ids=[2], table_id=31,
-                mysql_kinds=mk, indexes=[(1, ["j"], False)],
-                row_format_version=ver, kernel=kernel,
-            )
-            r = df.withColumn("_p", pair).agg(
-                F.bit_xor("_p.h"), F.sum("_p.n")
-            ).first()
-            out[kernel] = tuple(r)
-        assert out["numpy"] == out["python"], (ver, out)
+        kw = dict(
+            col_ids=[2], table_id=31, mysql_kinds=mk,
+            indexes=[(1, ["j"], False)], row_format_version=ver,
+        )
+        got = spark_kv_hashes(df, ["j"], "h", **kw)
+        assert got == scalar_kv_hashes(df, ["j"], "h", **kw), ver
 
 
 def test_minhash_family_wraps_and_estimates_honestly(spark):
@@ -262,10 +253,8 @@ def test_time_four_fields_raises_in_both_kernels(spark):
         T.StructField("t", T.StringType()),
     ])
     bad = spark.createDataFrame([Row(h=1, t="1:2:3:4")], schema)
-    for kernel in ("numpy", "python"):
-        pair = kv_hash_columns(
-            bad, ["t"], "h", col_ids=[2], table_id=29,
-            mysql_kinds={"t": ("time",)}, kernel=kernel,
-        )
-        with pytest.raises(Exception):
-            bad.withColumn("_p", pair).collect()
+    kw = dict(col_ids=[2], table_id=29, mysql_kinds={"t": ("time",)})
+    with pytest.raises(ValueError):
+        scalar_kv_hashes(bad, ["t"], "h", **kw)
+    with pytest.raises(Exception):
+        spark_kv_hashes(bad, ["t"], "h", **kw)

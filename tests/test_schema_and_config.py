@@ -120,6 +120,22 @@ def test_config_adjust():
         ).adjust()
 
 
+@pytest.mark.parametrize("algo", ["hash60", "crc64", "xxhash64", "kv-crc64"])
+def test_config_adjust_rejects_unknown_checksum_algo(algo):
+    cfg = Config(
+        mydumper=MydumperConfig(source_dir="/x"),
+        backend="memory",
+        checksum_algo=algo,
+    )
+    with pytest.raises(ValueError, match="checksum-algo") as ei:
+        cfg.adjust()
+    for ok in ("xxdirect", "kv_crc64", "kv_crc64_v2"):
+        assert ok in str(ei.value)
+    for ok in ("xxdirect", "kv_crc64", "kv_crc64_v2"):
+        cfg.checksum_algo = ok
+        cfg.adjust()
+
+
 def test_strict_sql_mode():
     assert strict_sql_mode("STRICT_TRANS_TABLES,NO_ENGINE_SUBSTITUTION")
     assert strict_sql_mode("strict_all_tables")

@@ -18,6 +18,9 @@ SYSTEM_DBS = frozenset(
     {"mysql", "information_schema", "performance_schema", "sys"}
 )
 
+# accepted Config.checksum_algo values (post-restore checksum-algo)
+CHECKSUM_ALGOS = ("xxdirect", "kv_crc64", "kv_crc64_v2")
+
 
 @dataclass
 class CSVConfig:
@@ -171,16 +174,14 @@ class Config:
     checkpoint_path: str = ""
     # post-restore (config.go:110-115)
     checksum: bool = True
-    # hash for the in-pipeline checksum: xxdirect (xxhash64 over typed
-    # columns, no canonicalization — fastest), xxhash64/hash60 over the
-    # canonical serialization (hash60 = ANSI-oracle-portable), crc64
-    # (bit-compatible with the reference's crc64-ecma, Arrow kernel),
-    # or kv_crc64 / kv_crc64_v2 — FULL reference parity: rows encoded
-    # into the exact TiKV record KV bytes (row format v1/v2 with the
-    # tables.CanSkip NULL-default rule, functions/kv_codec.py,
-    # golden-tested against the reference's sql2kv fixtures) then
-    # crc64-ECMA per pair, XOR-merged, exactly
-    # verification/checksum.go:47-75. Slow-exact path.
+    # hash for the in-pipeline checksum, one of CHECKSUM_ALGOS:
+    # xxdirect (xxhash64 over the typed columns, no canonicalization —
+    # fastest), or kv_crc64 / kv_crc64_v2 — FULL reference parity:
+    # rows encoded into the exact TiKV record + index KV bytes (row
+    # format v1/v2 with the tables.CanSkip NULL-default rule,
+    # functions/kv_codec.py, golden-tested against the reference's
+    # sql2kv fixtures) then crc64-ECMA per pair, XOR-merged, exactly
+    # verification/checksum.go:47-75.
     checksum_algo: str = "xxdirect"
     # kv_crc64 modes: per-table TiKV table ids for the record/index
     # keys (the reference reads them from the target cluster's
@@ -261,6 +262,11 @@ class Config:
         cs = self.mydumper.character_set.lower()
         if cs not in ("auto", "utf8mb4", "utf8", "gb18030", "binary"):
             raise ValueError(f"invalid character-set {cs!r}")
+        if self.checksum_algo not in CHECKSUM_ALGOS:
+            raise ValueError(
+                f"invalid checksum-algo {self.checksum_algo!r}; "
+                f"allowed: {', '.join(CHECKSUM_ALGOS)}"
+            )
         if self.bucket_buckets < 0:
             raise ValueError("bucket-buckets must be >= 0")
         if isinstance(self.sorted_output, str) and self.sorted_output not in (

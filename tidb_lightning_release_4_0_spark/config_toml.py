@@ -55,8 +55,8 @@ _KNOWN: dict[str, set[str]] = {
     "checkpoint": {"enable", "schema", "driver", "dsn", "keep-after-success"},
     # analyze-mode and checksum-algo are beyond-reference extensions
     # (auto = skip the ANALYZE row-count scan when the run already
-    # verified the count; checksum-algo selects xxdirect/hash60/
-    # crc64/kv_crc64[_v2] — the reference's checksum algorithm is
+    # verified the count; checksum-algo selects xxdirect or
+    # kv_crc64[_v2] — the reference's checksum algorithm is
     # fixed crc64 over TiKV KV bytes, which kv_crc64 reproduces)
     "post-restore": {
         "checksum", "compact", "level-1-compact", "analyze",

@@ -56,7 +56,7 @@ from __future__ import annotations
 import datetime as _dt
 import struct
 
-try:  # pandas is only needed by the Spark kernel at the bottom
+try:  # pandas is only needed by kv_hash_columns' pandas UDF
     import pandas as pd
 except Exception:  # pragma: no cover - pandas is baked into the env
     pd = None
@@ -932,7 +932,6 @@ def kv_hash_columns(
     row_format_version: int = 1,
     default_null_ids=None,
     indexes=None,
-    kernel: str = "auto",
     uint64_cols=None,
     mysql_kinds=None,
 ):
@@ -940,9 +939,8 @@ def kv_hash_columns(
     row, the XOR of crc64-ECMA over every reference-parity KV pair
     the row produces (the data-row KV and, when ``indexes`` is
     given, one KV per secondary index) and their total byte length —
-    C1 with TRUE kv-level parity instead of the canonical-string
-    twin, covering the same pairs the reference's data+index engines
-    checksum. Column ids are DDL position + 1, the ids TiDB assigns
+    C1 with TRUE kv-level parity, covering the same pairs the
+    reference's data+index engines checksum. Column ids are DDL position + 1, the ids TiDB assigns
     a freshly created table; the handle is the single-int PK or
     ``_tidb_rowid``, exactly PKIsHandle semantics.
     ``default_null_ids`` threads the DDL default info for the
@@ -962,17 +960,15 @@ def kv_hash_columns(
     (lightning/backend/tidb.go:152-188's kind cases; the kv path
     encodes the same kinds through codec.EncodeValue).
 
-    ``kernel`` picks the encode implementation: ``"numpy"``
-    (= ``"auto"``, the default) is the per-column vectorized kernel
-    (kv_codec_np — byte-identical for both row formats,
-    property-tested against the scalar oracle), ``"python"`` the
-    per-row scalar encode. Scale-shape: embarrassingly parallel
-    Arrow-batched map, no shuffle, no collect."""
+    Encoded by the per-column vectorized kernel (kv_codec_np),
+    property-tested against the scalar encoder. Scale-shape:
+    embarrassingly parallel Arrow-batched map, no shuffle, no
+    collect."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    from .hashing import crc64_bytes
+    from . import kv_codec_np as KNP
 
     if col_ids is None:
         col_ids = list(range(1, len(cols) + 1))
@@ -980,430 +976,290 @@ def kv_hash_columns(
         default_null_ids = frozenset(default_null_ids)
     uint64_cols = frozenset(uint64_cols or ())
     mysql_kinds = dict(mysql_kinds or {})
-    wraps = [
+    dtypes = [df.schema[c].dataType for c in cols]
+    # ENUM ordinals and (integer-typed) BIT values pre-resolve
+    # JVM-side to int64 — EnumDatum/BitDatum encode exactly like
+    # Uint64Datum, so the kernel's vectorized uint64 branch takes
+    # over and the per-row wrapper drops. The strict parse
+    # contract survives: an enum member miss raises in the JVM
+    # expression exactly where the scalar wrapper would.
+    wraps_np = [
         mysql_kind_wrapper(mysql_kinds[c]) if c in mysql_kinds else None
         for c in cols
     ]
-    if kernel == "auto":
-        kernel = "numpy"
+    u64_np = [c in uint64_cols for c in cols]
+    dur_np = [False] * len(cols)
 
-    if kernel == "numpy":
-        from . import kv_codec_np as KNP
+    def _enum_ordinal_expr(c, members):
+        col = F.col(c)
+        expr = F.when(col.isNull(), F.lit(0))
+        for i, m in enumerate(members):  # exact scan first
+            expr = expr.when(col == F.lit(m), F.lit(i + 1))
+        low = F.lower(col)
+        for i, m in enumerate(members):  # then ci scan, in order
+            expr = expr.when(low == F.lit(m.lower()), F.lit(i + 1))
+        expr = expr.when(col == F.lit(""), F.lit(0))
+        # ASCII-digit string = the ordinal itself (types.ParseEnum);
+        # >= 1 like ParseEnumValue — a numeric '0' is out of range
+        # ('' is the only ordinal-0 spelling), matching the scalar
+        # enum_ordinal
+        expr = expr.when(
+            col.rlike("^[0-9]+$")
+            & (col.cast("long") >= F.lit(1))
+            & (col.cast("long") <= F.lit(len(members))),
+            col.cast("long"),
+        )
+        return expr.otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("enum value "), col,
+                    F.lit(f" not in {list(members)[:8]}"),
+                )
+            ).cast("long")
+        ).cast("long")
 
-        dtypes = [df.schema[c].dataType for c in cols]
-        u64_flags = [c in uint64_cols for c in cols]
-        # ENUM ordinals and (integer-typed) BIT values pre-resolve
-        # JVM-side to int64 — EnumDatum/BitDatum encode exactly like
-        # Uint64Datum, so the kernel's vectorized uint64 branch takes
-        # over and the per-row wrapper drops. The strict parse
-        # contract survives: an enum member miss raises in the JVM
-        # expression exactly where the Python wrapper would.
-        wraps_np = list(wraps)
-        u64_np = list(u64_flags)
-        dur_np = [False] * len(cols)
+    def _set_bitmask_expr(c, members):
+        col = F.col(c)
 
-        def _enum_ordinal_expr(c, members):
-            col = F.col(c)
-            expr = F.when(col.isNull(), F.lit(0))
-            for i, m in enumerate(members):  # exact scan first
-                expr = expr.when(col == F.lit(m), F.lit(i + 1))
-            low = F.lower(col)
-            for i, m in enumerate(members):  # then ci scan, in order
-                expr = expr.when(low == F.lit(m.lower()), F.lit(i + 1))
-            expr = expr.when(col == F.lit(""), F.lit(0))
-            # ASCII-digit string = the ordinal itself (types.ParseEnum);
-            # >= 1 like ParseEnumValue — a numeric '0' is out of range
-            # ('' is the only ordinal-0 spelling), matching the scalar
-            # kernel
-            expr = expr.when(
-                col.rlike("^[0-9]+$")
-                & (col.cast("long") >= F.lit(1))
-                & (col.cast("long") <= F.lit(len(members))),
-                col.cast("long"),
-            )
+        # one CASE per split part: exact member scan, then the
+        # ci scan, else raise — mirroring set_bitmask's |= loop
+        # (bitwise OR also collapses a repeated member to one bit)
+        def bit_of(p):
+            # MySQL SET holds up to 64 members; bit 63 exceeds
+            # Java's signed long, so it ships as its two's
+            # complement (the kernel's uint64 view restores the
+            # bit pattern; long bitwiseOR is bit-exact either way)
+            def bit(i):
+                return F.lit((1 << i) if i < 63 else -(1 << 63))
+
+            expr = None
+            for i, m in enumerate(members):
+                cond = p == F.lit(m)
+                expr = (
+                    F.when(cond, bit(i))
+                    if expr is None
+                    else expr.when(cond, bit(i))
+                )
+            lp = F.lower(p)
+            for i, m in enumerate(members):
+                expr = expr.when(lp == F.lit(m.lower()), bit(i))
             return expr.otherwise(
                 F.raise_error(
                     F.concat(
-                        F.lit("enum value "), col,
+                        F.lit("set member "), p,
                         F.lit(f" not in {list(members)[:8]}"),
                     )
                 ).cast("long")
-            ).cast("long")
+            )
 
-        def _set_bitmask_expr(c, members):
-            col = F.col(c)
+        mask = F.aggregate(
+            F.split(col, ","),
+            F.lit(0).cast("long"),
+            lambda acc, p: acc.bitwiseOR(bit_of(p)),
+        )
+        return (
+            F.when(col.isNull() | (col == F.lit("")), F.lit(0))
+            .otherwise(mask)
+            .cast("long")
+        )
 
-            # one CASE per split part: exact member scan, then the
-            # ci scan, else raise — mirroring set_bitmask's |= loop
-            # (bitwise OR also collapses a repeated member to one bit)
-            def bit_of(p):
-                # MySQL SET holds up to 64 members; bit 63 exceeds
-                # Java's signed long, so it ships as its two's
-                # complement (the kernel's uint64 view restores the
-                # bit pattern; long bitwiseOR is bit-exact either way)
-                def bit(i):
-                    return F.lit((1 << i) if i < 63 else -(1 << 63))
-
-                expr = None
-                for i, m in enumerate(members):
-                    cond = p == F.lit(m)
-                    expr = (
-                        F.when(cond, bit(i))
-                        if expr is None
-                        else expr.when(cond, bit(i))
-                    )
-                lp = F.lower(p)
-                for i, m in enumerate(members):
-                    expr = expr.when(lp == F.lit(m.lower()), bit(i))
-                return expr.otherwise(
+    def _duration_ns_expr(c):
+        # MySQL TIME text ([-]HH:MM:SS[.fffffffff], hours may
+        # exceed 23, seconds-only and HH:MM forms allowed) ->
+        # signed nanoseconds, JVM-side (parse_duration_ns twin:
+        # colon fields fill from the LEFT per MySQL/TiDB
+        # ParseDuration — '11:12' is HH:MM; a single bare field
+        # is seconds). Non-numeric garbage casts to NULL, which
+        # the trailing raise turns into the same hard error the
+        # scalar parser throws.
+        col = F.col(c)
+        t = F.trim(col.cast("string"))
+        neg = t.startswith("-")
+        body = F.regexp_replace(t, "^-", "")
+        ip = F.substring_index(body, ".", 1)
+        fs = F.when(
+            body.contains("."), F.substring_index(body, ".", -1)
+        ).otherwise(F.lit("0"))
+        frac = F.substring(F.rpad(fs, 9, "0"), 1, 9).cast("long")
+        parts = F.split(ip, ":")
+        np_ = F.size(parts)
+        # > 3 colon-separated fields raises in the scalar parser
+        # (tuple unpack) — keep the JVM twin divergence-free by
+        # poisoning sec (the raise below fires on the NULL)
+        sec = (
+            F.when(np_ == 3, F.element_at(parts, 3).cast("long"))
+            .when(np_ == 1, F.element_at(parts, 1).cast("long"))
+            .when(np_ == 2, F.lit(0).cast("long"))
+            .otherwise(F.lit(None).cast("long"))
+        )
+        mins = F.when(
+            np_ >= 2, F.element_at(parts, 2).cast("long")
+        ).otherwise(F.lit(0))
+        hrs = F.when(
+            np_ >= 2, F.element_at(parts, 1).cast("long")
+        ).otherwise(F.lit(0))
+        ns = (
+            (hrs * F.lit(3600) + mins * F.lit(60) + sec)
+            * F.lit(1_000_000_000)
+            + frac
+        )
+        signed = F.when(neg, -ns).otherwise(ns)
+        return (
+            F.when(col.isNull(), F.lit(0))
+            .otherwise(
+                F.coalesce(
+                    signed,
                     F.raise_error(
                         F.concat(
-                            F.lit("set member "), p,
-                            F.lit(f" not in {list(members)[:8]}"),
+                            F.lit("bad TIME literal "), t
                         )
-                    ).cast("long")
+                    ).cast("long"),
                 )
-
-            mask = F.aggregate(
-                F.split(col, ","),
-                F.lit(0).cast("long"),
-                lambda acc, p: acc.bitwiseOR(bit_of(p)),
             )
-            return (
-                F.when(col.isNull() | (col == F.lit("")), F.lit(0))
-                .otherwise(mask)
-                .cast("long")
-            )
-
-        def _duration_ns_expr(c):
-            # MySQL TIME text ([-]HH:MM:SS[.fffffffff], hours may
-            # exceed 23, seconds-only and HH:MM forms allowed) ->
-            # signed nanoseconds, JVM-side (parse_duration_ns twin:
-            # colon fields fill from the LEFT per MySQL/TiDB
-            # ParseDuration — '11:12' is HH:MM; a single bare field
-            # is seconds). Non-numeric garbage casts to NULL, which
-            # the trailing raise turns into the same hard error the
-            # scalar parser throws.
-            col = F.col(c)
-            t = F.trim(col.cast("string"))
-            neg = t.startswith("-")
-            body = F.regexp_replace(t, "^-", "")
-            ip = F.substring_index(body, ".", 1)
-            fs = F.when(
-                body.contains("."), F.substring_index(body, ".", -1)
-            ).otherwise(F.lit("0"))
-            frac = F.substring(F.rpad(fs, 9, "0"), 1, 9).cast("long")
-            parts = F.split(ip, ":")
-            np_ = F.size(parts)
-            # > 3 colon-separated fields raises in the scalar parser
-            # (tuple unpack) — keep the kernels divergence-free by
-            # poisoning sec (the raise below fires on the NULL)
-            sec = (
-                F.when(np_ == 3, F.element_at(parts, 3).cast("long"))
-                .when(np_ == 1, F.element_at(parts, 1).cast("long"))
-                .when(np_ == 2, F.lit(0).cast("long"))
-                .otherwise(F.lit(None).cast("long"))
-            )
-            mins = F.when(
-                np_ >= 2, F.element_at(parts, 2).cast("long")
-            ).otherwise(F.lit(0))
-            hrs = F.when(
-                np_ >= 2, F.element_at(parts, 1).cast("long")
-            ).otherwise(F.lit(0))
-            ns = (
-                (hrs * F.lit(3600) + mins * F.lit(60) + sec)
-                * F.lit(1_000_000_000)
-                + frac
-            )
-            signed = F.when(neg, -ns).otherwise(ns)
-            return (
-                F.when(col.isNull(), F.lit(0))
-                .otherwise(
-                    F.coalesce(
-                        signed,
-                        F.raise_error(
-                            F.concat(
-                                F.lit("bad TIME literal "), t
-                            )
-                        ).cast("long"),
-                    )
-                )
-                .cast("long")
-            )
-        out_type = T.StructType(
-            [
-                T.StructField("h", T.LongType()),
-                T.StructField("n", T.LongType()),
-            ]
+            .cast("long")
         )
-        # the kernel addresses the handle by its struct field name;
-        # entries normalize to (name, prefix_len) pairs
-        idx_specs_named = []
-        for iid, icols, u in indexes or ():
-            ents = []
-            for c in icols:
-                plen = None
-                if isinstance(c, tuple):
-                    c, plen = c
-                ents.append(
-                    ("__h" if c == handle_col else c, plen)
-                )
-            idx_specs_named.append((iid, ents, bool(u)))
-
-        def _placeholder(dt):
-            name = dt.typeName()
-            if name in ("byte", "short", "integer", "long"):
-                return F.lit(0).cast(dt)
-            if name in ("float", "double"):
-                return F.lit(0.0).cast(dt)
-            if name == "boolean":
-                return F.lit(False)
-            return None  # object-dtype columns keep their Nones
-
-        fields = [F.col(handle_col).alias("__h")]
-        for i, c in enumerate(cols):
-            sdt = df.schema[c].dataType
-            spec = mysql_kinds.get(c)
-            if spec is not None and spec[0] == "enum":
-                v = _enum_ordinal_expr(c, tuple(spec[1]))
-                u64_np[i], wraps_np[i] = True, None
-                fields.append(v.alias(f"__v_{i}"))
-                fields.append(F.col(c).isNull().alias(f"__null_{i}"))
-                continue
-            if spec is not None and spec[0] == "set":
-                v = _set_bitmask_expr(c, tuple(spec[1]))
-                u64_np[i], wraps_np[i] = True, None
-                fields.append(v.alias(f"__v_{i}"))
-                fields.append(F.col(c).isNull().alias(f"__null_{i}"))
-                continue
-            if (
-                spec is not None
-                and spec[0] == "bit"
-                and sdt.typeName()
-                in ("byte", "short", "integer", "long", "boolean")
-            ):
-                v = F.coalesce(F.col(c).cast("long"), F.lit(0))
-                u64_np[i], wraps_np[i] = True, None
-                fields.append(v.alias(f"__v_{i}"))
-                fields.append(F.col(c).isNull().alias(f"__null_{i}"))
-                continue
-            if spec is not None and spec[0] == "time":
-                # TIME pre-parses to signed nanoseconds JVM-side;
-                # the kernel's vectorized duration branch (flag 0x07
-                # + comparable int64 / smallest-LE v2 cell) takes
-                # over and the per-row wrapper drops
-                v = _duration_ns_expr(c)
-                dur_np[i], wraps_np[i] = True, None
-                fields.append(v.alias(f"__v_{i}"))
-                fields.append(F.col(c).isNull().alias(f"__null_{i}"))
-                continue
-            if sdt.typeName() in ("timestamp", "timestamp_ntz"):
-                # wall-clock micros as BIGINT (session tz is UTC):
-                # pandas' ns-range Timestamp cannot carry years past
-                # 2262, and the int64 stays exact at every magnitude
-                v = F.coalesce(
-                    F.unix_micros(F.col(c).cast("timestamp")), F.lit(0)
-                )
-            elif sdt.typeName() == "date":
-                # days-since-epoch as BIGINT: the kernel rebuilds the
-                # packed midnight datetime with the same civil-date
-                # arithmetic the timestamp path uses (pandas datetime
-                # conversion would hit the ns-range wall at year 2262)
-                v = F.coalesce(
-                    F.datediff(F.col(c), F.lit("1970-01-01")).cast(
-                        "long"
-                    ),
-                    F.lit(0),
-                )
-            elif (
-                sdt.typeName() == "decimal"
-                and c not in uint64_cols
-                and wraps[i] is None
-            ):
-                if KNP.decimal_ships_scaled(sdt):
-                    # the UNSCALED int64 (value * 10^scale — exact
-                    # decimal arithmetic JVM-side, fits int64 for
-                    # precision <= 18): the kernel packs the myDecimal
-                    # digit groups from it with pure numpy
-                    v = F.coalesce(
-                        (F.col(c) * F.lit(10**sdt.scale)).cast("long"),
-                        F.lit(0),
-                    )
-                else:
-                    # precision > 18: a fixed-width '<sign><p digits>'
-                    # string, derived ONLY from the exact decimal ->
-                    # string rendering with string ops. abs() and
-                    # `col < 0` are both precision-LOSING on wide
-                    # decimals (they promote past 38 digits and
-                    # round: abs(…349159) -> …350000, and -1e-38 < 0
-                    # is false), so the sign comes from the rendered
-                    # '-' and the digits from dropping sign/dot and
-                    # leading zeros (a pure-fraction DECIMAL(p,p)
-                    # prints a placeholder '0.' whose extra char
-                    # would otherwise make lpad truncate the LAST
-                    # digit), then left-zero-pad to precision; the
-                    # kernel digit-matrixes it in one C pass
-                    p = sdt.precision
-                    s0 = F.col(c).cast("string")
-                    v = F.coalesce(
-                        F.concat(
-                            F.when(s0.startswith("-"), F.lit("-"))
-                            .otherwise(F.lit("+")),
-                            F.lpad(
-                                F.regexp_replace(
-                                    F.regexp_replace(s0, r"[-.]", ""),
-                                    r"^0+", "",
-                                ),
-                                p, "0",
-                            ),
-                        ),
-                        F.lit("+" + "0" * p),
-                    )
-            else:
-                ph = _placeholder(sdt)
-                v = F.coalesce(F.col(c), ph) if ph is not None else F.col(c)
-            fields.append(v.alias(f"__v_{i}"))
-            fields.append(F.col(c).isNull().alias(f"__null_{i}"))
-
-        @pandas_udf(out_type)
-        def _np_kernel(batch: pd.Series) -> pd.Series:
-            h, nb = KNP.kv_pairs_crc_np(
-                batch, list(cols), dtypes, "__h", list(col_ids),
-                table_id, default_null_ids, idx_specs_named,
-                row_format_version, u64_np, wraps_np, dur_np,
-            )
-            return pd.DataFrame({"h": h, "n": nb})
-
-        return _np_kernel(F.struct(*fields))
-
-    # resolve index column names to positions once: -1 = the handle;
-    # (name, prefix_len) entries carry the truncation through
-    pos_of = {c: i for i, c in enumerate(cols)}
-    idx_specs = []
-    for iid, icols, unique in indexes or ():
-        poss = []
-        for c in icols:
-            plen = None
-            if isinstance(c, tuple):
-                c, plen = c
-            p = -1 if c == handle_col else pos_of[c]
-            poss.append((p, plen) if plen is not None else p)
-        idx_specs.append((iid, poss, bool(unique)))
-
-    # Integer columns travel as STRINGS through the Arrow batch:
-    # Arrow -> pandas widens a nullable int64 column to float64, and
-    # any value >= 2**53 in a batch that contains a NULL would be
-    # silently rounded by that float64 trip — wrong KV bytes with no
-    # error. A decimal-string parse is lossless at every magnitude
-    # (this is the deliberate slow-exact path; the vectorized kernel
-    # reads the Arrow buffers directly instead).
-    def _proj(c):
-        name = df.schema[c].dataType.typeName()
-        if name in ("byte", "short", "integer", "long"):
-            return F.col(c).cast("string")
-        if name in ("timestamp", "timestamp_ntz"):
-            # wall-clock micros (session tz is UTC), as a string for
-            # the same losslessness reason as ints — and because
-            # pandas' ns-range Timestamp cannot carry MySQL's full
-            # DATETIME range (years past 2262)
-            return F.unix_micros(F.col(c).cast("timestamp")).cast("string")
-        return F.col(c)
-
-    # coerce by the SPARK column type, not the pandas dtype (the
-    # string cast above makes int columns exact; the rest are
-    # type-tagged so a float64-widened batch can't change semantics)
-    def _coercer(dt):
-        name = dt.typeName()
-        if name in ("byte", "short", "integer", "long"):
-            return lambda v: int(v)
-        if name in ("float", "double"):
-            return lambda v: float(v)
-        if name == "string":
-            return lambda v: str(v)
-        if name in ("timestamp", "timestamp_ntz"):
-            # the projection shipped unix-micros; rebuild the wall
-            # clock with exact integer arithmetic
-            return lambda v: _dt.datetime(1970, 1, 1) + _dt.timedelta(
-                microseconds=int(v)
-            )
-        if name == "date":
-            return lambda v: v
-        if name == "boolean":
-            return lambda v: int(bool(v))
-        if name == "binary":
-            return lambda v: bytes(v)
-        if name == "decimal":
-            p, s = dt.precision, dt.scale
-            return lambda v: DecimalDatum(v, p, s)
-        raise NotImplementedError(
-            f"kv_crc64 checksum: unsupported Spark type {name}"
-        )
-
-    coercers = [
-        (
-            wraps[i]
-            if wraps[i] is not None
-            else Uint64Datum
-            if c in uint64_cols
-            else _coercer(df.schema[c].dataType)
-        )
-        for i, c in enumerate(cols)
-    ]
-
-    # NULLness comes from an EXPLICIT Spark isNull flag shipped next
-    # to each value — pandas-level NaN sniffing would conflate a
-    # genuine NaN double with NULL (the numpy kernel keys off the
-    # same flag, so both kernels encode NaN as a FLOAT datum)
-    def _py(v, isnull, coerce):
-        if isnull or v is None or v is pd.NaT:
-            return None
-        if hasattr(v, "item") and not isinstance(v, pd.Timestamp):
-            v = v.item()
-        return coerce(v)
-
     out_type = T.StructType(
         [
             T.StructField("h", T.LongType()),
             T.StructField("n", T.LongType()),
         ]
     )
+    # the kernel addresses the handle by its struct field name;
+    # entries normalize to (name, prefix_len) pairs
+    idx_specs_named = []
+    for iid, icols, u in indexes or ():
+        ents = []
+        for c in icols:
+            plen = None
+            if isinstance(c, tuple):
+                c, plen = c
+            ents.append(
+                ("__h" if c == handle_col else c, plen)
+            )
+        idx_specs_named.append((iid, ents, bool(u)))
 
-    # hints say Series (the signature PySpark's inference accepts);
-    # a StructType argument actually ARRIVES as a pandas DataFrame
-    # and a StructType result is RETURNED as one
+    def _placeholder(dt):
+        name = dt.typeName()
+        if name in ("byte", "short", "integer", "long"):
+            return F.lit(0).cast(dt)
+        if name in ("float", "double"):
+            return F.lit(0.0).cast(dt)
+        if name == "boolean":
+            return F.lit(False)
+        return None  # object-dtype columns keep their Nones
+
+    fields = [F.col(handle_col).alias("__h")]
+    for i, c in enumerate(cols):
+        sdt = df.schema[c].dataType
+        spec = mysql_kinds.get(c)
+        if spec is not None and spec[0] == "enum":
+            v = _enum_ordinal_expr(c, tuple(spec[1]))
+            u64_np[i], wraps_np[i] = True, None
+            fields.append(v.alias(f"__v_{i}"))
+            fields.append(F.col(c).isNull().alias(f"__null_{i}"))
+            continue
+        if spec is not None and spec[0] == "set":
+            v = _set_bitmask_expr(c, tuple(spec[1]))
+            u64_np[i], wraps_np[i] = True, None
+            fields.append(v.alias(f"__v_{i}"))
+            fields.append(F.col(c).isNull().alias(f"__null_{i}"))
+            continue
+        if (
+            spec is not None
+            and spec[0] == "bit"
+            and sdt.typeName()
+            in ("byte", "short", "integer", "long", "boolean")
+        ):
+            v = F.coalesce(F.col(c).cast("long"), F.lit(0))
+            u64_np[i], wraps_np[i] = True, None
+            fields.append(v.alias(f"__v_{i}"))
+            fields.append(F.col(c).isNull().alias(f"__null_{i}"))
+            continue
+        if spec is not None and spec[0] == "time":
+            # TIME pre-parses to signed nanoseconds JVM-side;
+            # the kernel's vectorized duration branch (flag 0x07
+            # + comparable int64 / smallest-LE v2 cell) takes
+            # over and the per-row wrapper drops
+            v = _duration_ns_expr(c)
+            dur_np[i], wraps_np[i] = True, None
+            fields.append(v.alias(f"__v_{i}"))
+            fields.append(F.col(c).isNull().alias(f"__null_{i}"))
+            continue
+        if sdt.typeName() in ("timestamp", "timestamp_ntz"):
+            # wall-clock micros as BIGINT (session tz is UTC):
+            # pandas' ns-range Timestamp cannot carry years past
+            # 2262, and the int64 stays exact at every magnitude
+            v = F.coalesce(
+                F.unix_micros(F.col(c).cast("timestamp")), F.lit(0)
+            )
+        elif sdt.typeName() == "date":
+            # days-since-epoch as BIGINT: the kernel rebuilds the
+            # packed midnight datetime with the same civil-date
+            # arithmetic the timestamp path uses (pandas datetime
+            # conversion would hit the ns-range wall at year 2262)
+            v = F.coalesce(
+                F.datediff(F.col(c), F.lit("1970-01-01")).cast(
+                    "long"
+                ),
+                F.lit(0),
+            )
+        elif (
+            sdt.typeName() == "decimal"
+            and c not in uint64_cols
+            and wraps_np[i] is None
+        ):
+            if KNP.decimal_ships_scaled(sdt):
+                # the UNSCALED int64 (value * 10^scale — exact
+                # decimal arithmetic JVM-side, fits int64 for
+                # precision <= 18): the kernel packs the myDecimal
+                # digit groups from it with pure numpy
+                v = F.coalesce(
+                    (F.col(c) * F.lit(10**sdt.scale)).cast("long"),
+                    F.lit(0),
+                )
+            else:
+                # precision > 18: a fixed-width '<sign><p digits>'
+                # string, derived ONLY from the exact decimal ->
+                # string rendering with string ops. abs() and
+                # `col < 0` are both precision-LOSING on wide
+                # decimals (they promote past 38 digits and
+                # round: abs(…349159) -> …350000, and -1e-38 < 0
+                # is false), so the sign comes from the rendered
+                # '-' and the digits from dropping sign/dot and
+                # leading zeros (a pure-fraction DECIMAL(p,p)
+                # prints a placeholder '0.' whose extra char
+                # would otherwise make lpad truncate the LAST
+                # digit), then left-zero-pad to precision; the
+                # kernel digit-matrixes it in one C pass
+                p = sdt.precision
+                s0 = F.col(c).cast("string")
+                v = F.coalesce(
+                    F.concat(
+                        F.when(s0.startswith("-"), F.lit("-"))
+                        .otherwise(F.lit("+")),
+                        F.lpad(
+                            F.regexp_replace(
+                                F.regexp_replace(s0, r"[-.]", ""),
+                                r"^0+", "",
+                            ),
+                            p, "0",
+                        ),
+                    ),
+                    F.lit("+" + "0" * p),
+                )
+        else:
+            ph = _placeholder(sdt)
+            v = F.coalesce(F.col(c), ph) if ph is not None else F.col(c)
+        fields.append(v.alias(f"__v_{i}"))
+        fields.append(F.col(c).isNull().alias(f"__null_{i}"))
+
     @pandas_udf(out_type)
-    def _kernel(batch: pd.Series) -> pd.Series:
-        hs, ns = [], []
-        ncols = len(coercers)
-        for row in batch.itertuples(index=False, name=None):
-            handle = int(row[0])
-            vals = [
-                _py(row[1 + i], bool(row[1 + ncols + i]), coercers[i])
-                for i in range(ncols)
-            ]
-            crc, n = 0, 0
-            for k, v in encode_table_kvs(
-                table_id, handle, col_ids, vals, row_format_version,
-                default_null_ids, idx_specs,
-            ):
-                crc ^= crc64_bytes(k + v)
-                n += len(k) + len(v)
-            # reinterpret the uint64 as int64 for Spark's LongType
-            hs.append(crc - (1 << 64) if crc >= (1 << 63) else crc)
-            ns.append(n)
-        return pd.DataFrame({"h": hs, "n": ns})
-
-    # one struct Column; the caller materializes it ONCE and projects
-    # the two fields (field-extracting the UDF expression twice could
-    # evaluate the kernel twice). The handle stays typed (a PK/rowid
-    # is never NULL, so its int64 batch never widens to float64).
-    return _kernel(
-        F.struct(
-            F.col(handle_col),
-            *[_proj(c).alias(f"__pv_{i}") for i, c in enumerate(cols)],
-            *[
-                F.col(c).isNull().alias(f"__pn_{i}")
-                for i, c in enumerate(cols)
-            ],
+    def _np_kernel(batch: pd.Series) -> pd.Series:
+        h, nb = KNP.kv_pairs_crc_np(
+            batch, list(cols), dtypes, "__h", list(col_ids),
+            table_id, default_null_ids, idx_specs_named,
+            row_format_version, u64_np, wraps_np, dur_np,
         )
-    )
+        return pd.DataFrame({"h": h, "n": nb})
+
+    return _np_kernel(F.struct(*fields))

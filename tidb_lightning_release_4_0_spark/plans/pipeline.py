@@ -921,7 +921,7 @@ class RestoreController:
         metrics = []
         if want_checksum:
             # row hash projected ONCE into _h (+_len for the
-            # canonical modes); the aggregates only touch those
+            # kv_crc64 modes); the aggregates only touch those
             # columns, so hashing runs once per row
             df = self._with_row_hash(df, cols, schema)
             metrics += [
@@ -1513,32 +1513,21 @@ class RestoreController:
                     if inc_verifiable
                     else local
                 )
-                aggs = []
-                proj = back
-                if need_remote and (not dedup_may_drop or inc_verifiable):
-                    proj = self._with_row_hash(back, cols, schema)
-                    aggs += [
-                        F.bit_xor(F.col("_h")).alias("crc_xor"),
-                        (
-                            F.sum("_len").cast("long")
-                            if "_len" in proj.columns
-                            else F.lit(-1).cast("long")
-                        ).alias("total_bytes"),
-                        F.count(F.lit(1)).alias("total_kvs"),
-                    ]
-                if id_col:
-                    aggs.append(
-                        F.max(F.col(id_col).cast("long")).alias("max_id")
+                want_remote = need_remote and (
+                    not dedup_may_drop or inc_verifiable
+                )
+                if want_remote or id_col or dedup_may_drop:
+                    # the same checksum/count/max-id aggregates pass 1
+                    # observed, as one job over the read-back
+                    proj, aggs = self._write_metric_exprs(
+                        back, cols, schema, want_remote
                     )
-                if dedup_may_drop:
-                    # observation counted pre-dedup rows; report the
-                    # sink's actual row count instead
-                    aggs.append(F.count(F.lit(1)).alias("sink_rows"))
-                if aggs:
                     row = proj.agg(*aggs).collect()[0]
-                    if "sink_rows" in row.__fields__:
-                        rows = row["sink_rows"]
-                    if "crc_xor" in row.__fields__:
+                    if dedup_may_drop or rows < 0:
+                        # observation counted pre-dedup rows (or none);
+                        # report the sink's actual row count instead
+                        rows = row["total_kvs"]
+                    if want_remote:
                         remote = Checksum(
                             row["crc_xor"] or 0,
                             row["total_bytes"],
@@ -1556,8 +1545,6 @@ class RestoreController:
                             )
                     if id_col:
                         base = (row["max_id"] or 0) + 1
-                    if rows < 0 and "total_kvs" in row.__fields__:
-                        rows = row["total_kvs"]
             elif obs_max_id is not None:
                 # no read-back needed: nothing was dropped, so the
                 # write job's observed max id IS the alloc base (C4
@@ -1703,7 +1690,7 @@ class RestoreController:
         self, df: DataFrame, cols: list[str], schema: TableSchema | None = None
     ) -> DataFrame:
         """Project the per-row checksum hash `_h` (+ `_len` for the
-        canonical-serialization modes) — C1's map side.
+        kv_crc64 modes) — C1's map side.
 
         Modes (cfg.checksum_algo):
         - ``xxdirect`` (default, the 100 TB path): xxhash64 straight
@@ -1711,10 +1698,6 @@ class RestoreController:
           byte accounting not tracked (total_bytes = -1). Valid
           because both sides of the compare (observe vs read-back)
           use the identical function.
-        - ``xxhash64`` / ``hash60`` / ``crc64``: canonical-string
-          serialization then hash; hash60 is ANSI-oracle-portable,
-          crc64 is bit-compatible with the reference
-          (verification/checksum.go:37).
         - ``kv_crc64`` / ``kv_crc64_v2``: FULL reference parity — the
           row is encoded into the exact TiKV KV bytes: the record KV
           (row format v1 / v2 with the tables.CanSkip NULL-default
@@ -1724,8 +1707,8 @@ class RestoreController:
           values), each pair hashed with crc64-ECMA like
           verification/checksum.go:47-75 — the same pair set the
           reference's data+index engines checksum
-          (sql2kv.go:218-239). The slow-exact path (per-row Python
-          encode over Arrow batches).
+          (sql2kv.go:218-239), encoded by the vectorized kernel
+          behind kv_hash_columns.
         """
         algo = self.cfg.checksum_algo
         if algo in ("kv_crc64", "kv_crc64_v2"):
@@ -1844,22 +1827,7 @@ class RestoreController:
                 .withColumn("_len", F.col("_kvp.n").cast("long"))
                 .drop("_kvp")
             )
-        if algo == "xxdirect":
-            return df.withColumn(
-                "_h", F.xxhash64(*[F.col(c) for c in cols])
-            )
-        from ..functions.checksum import canonical_row
-
-        if algo == "hash60":
-            from ..functions.hashing import hash60 as fn
-        elif algo == "crc64":
-            from ..functions.hashing import crc64 as fn
-        else:
-            fn = F.xxhash64
-        canon = canonical_row(df, cols)
-        return df.withColumn("_h", fn(canon)).withColumn(
-            "_len", F.length(canon)
-        )
+        return df.withColumn("_h", F.xxhash64(*[F.col(c) for c in cols]))
 
     @staticmethod
     def _alloc_id_column(df: DataFrame, schema: TableSchema) -> str | None:

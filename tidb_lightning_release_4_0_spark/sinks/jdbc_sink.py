@@ -15,7 +15,7 @@ transient-only retry classifier (common/util.go:186-218). The full
 delivery path — rendering (tidb.go:96-132 escaping), execution,
 dup semantics, batch split, retries, read-back verification — is
 exercised end-to-end against the fake MySQL-protocol endpoint in
-``fake_mysql.py`` (tests/test_jdbc_delivery.py); a live TiDB/MySQL
+``tests/fake_mysql.py`` (tests/test_jdbc_delivery.py); a live TiDB/MySQL
 takes the same factory (e.g. a pymysql lambda).
 """
 
