@@ -357,7 +357,7 @@ def test_enum_bit_vectorized_match_python_kernel(spark):
         got = spark_kv_hashes(df, ["e", "b"], "h", **kw)
         assert got == scalar_kv_hashes(df, ["e", "b"], "h", **kw), ver
 
-    bad = spark.createDataFrame([Row(h=1, e="nope", b=1)], schema)
+    bad = spark.createDataFrame([Row(h=1, e="nope", b=1)], schema).coalesce(1)
     kw = dict(col_ids=[2, 3], table_id=25, mysql_kinds=mk)
     with pytest.raises(ValueError, match="enum value"):
         scalar_kv_hashes(bad, ["e", "b"], "h", **kw)
@@ -396,7 +396,7 @@ def test_set_vectorized_match_python_kernel(spark):
         got = spark_kv_hashes(df, ["s"], "h", **kw)
         assert got == scalar_kv_hashes(df, ["s"], "h", **kw), ver
 
-    bad = spark.createDataFrame([Row(h=1, s="x,nope")], schema)
+    bad = spark.createDataFrame([Row(h=1, s="x,nope")], schema).coalesce(1)
     kw = dict(col_ids=[2], table_id=27, mysql_kinds=mk)
     with pytest.raises(ValueError, match="nope"):
         scalar_kv_hashes(bad, ["s"], "h", **kw)

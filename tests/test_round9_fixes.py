@@ -64,7 +64,7 @@ def test_time_vectorized_match_python_kernel(spark):
     # strict contract survives the vectorization: garbage raises in
     # the kernel (the JVM cast nulls feed a raise_error) and in the
     # scalar oracle
-    bad = spark.createDataFrame([Row(h=1, t="not a time")], schema)
+    bad = spark.createDataFrame([Row(h=1, t="not a time")], schema).coalesce(1)
     kw = dict(col_ids=[2], table_id=29, mysql_kinds=mk)
     with pytest.raises(ValueError):
         scalar_kv_hashes(bad, ["t"], "h", **kw)
@@ -109,12 +109,14 @@ def test_enum_zero_and_unicode_raise_in_both_kernels(spark):
     ])
     mk = {"e": ("enum", ("red", "green", "blue"))}
     kw = dict(col_ids=[2], table_id=30, mysql_kinds=mk)
+    # one partition per bad frame, so a failing job has no sibling
+    # tasks to kill (a job started right after one whose tasks were
+    # killed can meet a torn-down reused Python worker); the
+    # Spark-driver checks run first for the same reason
     bads = [
-        spark.createDataFrame([Row(h=1, e=val)], schema)
+        spark.createDataFrame([Row(h=1, e=val)], schema).coalesce(1)
         for val in ("0", "２")
     ]
-    # driver-side checks first: a job right after a failed Spark job
-    # can meet a torn-down Python worker
     for bad in bads:
         with pytest.raises(ValueError, match="enum value"):
             scalar_kv_hashes(bad, ["e"], "h", **kw)
@@ -252,7 +254,7 @@ def test_time_four_fields_raises_in_both_kernels(spark):
         T.StructField("h", T.LongType()),
         T.StructField("t", T.StringType()),
     ])
-    bad = spark.createDataFrame([Row(h=1, t="1:2:3:4")], schema)
+    bad = spark.createDataFrame([Row(h=1, t="1:2:3:4")], schema).coalesce(1)
     kw = dict(col_ids=[2], table_id=29, mysql_kinds={"t": ("time",)})
     with pytest.raises(ValueError):
         scalar_kv_hashes(bad, ["t"], "h", **kw)
