@@ -52,19 +52,6 @@ class CSVConfig:
     # the reference's per-chunk byte-offset bases
     # (rowid.assign_rowid_by_file_split).
     strict_format: bool = False
-    # typed fast path (csv_source.read_csv_native): clean rows parse
-    # natively in the vectorized JVM reader, malformed rows fall back
-    # to the MySQL cast layer via the corrupt-record column. Auto-
-    # disabled for header files, not-null mode and an empty-string
-    # null sentinel. Under strict sql_mode, float/double columns drop
-    # to the string path (Double.parseDouble accepts NaN/Infinity/
-    # hex-float literals strict MySQL must reject); ints/dates stay
-    # native because every rejected token errors through the strict
-    # cast fallback. Documented deviation (both modes): an unquoted
-    # empty token reads as NULL — identical to the string path, where
-    # univocity substitutes the null sentinel for empty unquoted
-    # fields (MySQL LOAD DATA: 0 with warning / strict error).
-    native_typed: bool = True
 
     def validate(self) -> None:
         # config.go:381-392: separator must be 1 byte and differ from

@@ -53,6 +53,7 @@ from ..functions.exprs import let
 from ..functions.hashing import hash60, hash60_duckdb
 from .dedup import word_shingles, word_shingles_sql_duckdb
 from .partitioning import spread_small_input as _spread
+from .rowid import metadata_df
 from .text import (
     punct_ratio,
     punct_ratio_sql_duckdb,
@@ -97,21 +98,10 @@ def _labels_frame(spark, rows: list[tuple], schema) -> DataFrame:
     guide §6 "Arrow for driver transfers"): createDataFrame from a
     Python list pickles row-by-row through the JVM — profiled at
     0.4-0.6 s of dedup_cluster's ~2 s for a few thousand label
-    tuples — while the pandas route rides one Arrow batch. Values
-    and row order are unchanged (Arrow coerces to the same explicit
-    schema); falls back to the list path for anything pandas/Arrow
-    cannot represent."""
-    if rows:
-        try:
-            import pandas as pd
-
-            pdf = pd.DataFrame.from_records(
-                rows, columns=[f.name for f in schema.fields]
-            )
-            return spark.createDataFrame(pdf, schema=schema)
-        except Exception:
-            pass
-    return spark.createDataFrame(rows, schema=schema)
+    tuples — while the pandas route rides one Arrow batch
+    (rowid.metadata_df, which keeps the list path for rows pandas
+    cannot carry exactly)."""
+    return metadata_df(spark, rows, schema)
 
 
 def _star_components(

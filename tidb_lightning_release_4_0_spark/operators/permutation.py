@@ -25,45 +25,20 @@ from .cast import mysql_cast
 
 ROWID_COL = "_tidb_rowid"
 
-# Built cast expression trees cached per SparkSession. Unresolved
-# Column trees are plan-independent — the same tree selects against
-# any DataFrame carrying the referenced column names — and mysql_cast
-# builds hundreds of expression nodes per column, each a py4j
-# roundtrip (~0.7 s per 11-column plan build, measured). Without the
-# memo the identical tree is rebuilt for EVERY engine batch of every
-# restore; with it, plan construction is paid once per (schema,
-# sql-mode, charset) per session.
-_CAST_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _memo_cache(df: DataFrame) -> dict | None:
-    try:
-        return _CAST_MEMO.setdefault(df.sparkSession, {})
-    except TypeError:  # session not weak-referenceable (mocks)
-        return None
+# Per-session store of finished plan fragments: apply_permutation's
+# projection memo and rowid's per-file bases frames.
+_PLAN_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def session_plan_cache(spark) -> dict | None:
-    """Session-lifetime plan/expression memo (the same store the
-    cast memo uses): callers key finished plan fragments — Column
-    trees or whole DataFrames — on every input that shapes them.
-    DataFrames are immutable plan handles, so reuse is safe; a key
-    must cover file lists WITH sizes/mtimes because a cached scan
-    pins its file-listing snapshot."""
+    """The session-lifetime plan memo: callers key finished plan
+    fragments (Column trees or small DataFrames) on every input that
+    shapes them. Both are immutable plan handles, so reuse is safe.
+    None when the session is not weak-referenceable (mocks)."""
     try:
-        return _CAST_MEMO.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable (mocks)
+        return _PLAN_MEMO.setdefault(spark, {})
+    except TypeError:
         return None
-
-
-def _memo_cast(df: DataFrame, key: tuple, builder) -> Column:
-    cache = _memo_cache(df)
-    if cache is None:
-        return builder()
-    col = cache.get(key)
-    if col is None:
-        col = cache[key] = builder()
-    return col
 
 
 def column_permutation(
@@ -135,68 +110,60 @@ def apply_permutation(
     branch.
 
     The WHOLE projection (out + extra Column lists) is memoized per
-    session: unresolved Columns are plan-independent, and even with
-    the per-column mysql_cast memo the surrounding when/default/
-    auto-inc scaffolding plus select-list assembly cost ~0.2s of
-    py4j round trips per call — paid once per distinct (schema,
-    flags, rowid-tree) instead of once per engine batch per run.
-    Every input that shapes the projection is in the key; the rowid
-    and native-frame inputs enter via their SQL reprs/fingerprints.
+    session (session_plan_cache): unresolved Columns are
+    plan-independent, and building the mysql_cast trees plus the
+    when/default/auto-inc scaffolding costs hundreds of py4j round
+    trips per call — paid once per distinct (schema, flags,
+    rowid-tree) instead of once per engine batch per run. Every input
+    that shapes the projection is in the key; the rowid and
+    native-frame inputs enter via their SQL reprs/fingerprints.
     """
-    memo_key = None
-    try:
-        ts_key = (
+    cache = session_plan_cache(df.sparkSession)
+    nf_key = (
+        (
+            native_frame.corrupt_col,
+            native_frame.parsed_col,
+            frozenset(native_frame.native_cols),
+            native_frame.fallback_schema_ddl,
+            tuple(sorted(native_frame.fallback_options.items())),
+        )
+        if native_frame is not None
+        else None
+    )
+    memo_key = (
+        "projection",
+        tuple(repr(c) for c in schema.columns),
+        schema.has_int_pk,
+        tuple(schema.primary_key or ()),
+        (
+            tuple(file_columns)
+            if file_columns is not None
+            else ("<dfcols>", *df.columns)
+        ),
+        strict,
+        cast,
+        source_latin1,
+        charset,
+        missing_sentinel,
+        repr(rowid) if rowid is not None else None,
+        nf_key,
+        (
             job_timestamp
             if any(c.default_current_ts for c in schema.columns)
             else None
-        )
-        nf_key = (
-            (
-                native_frame.corrupt_col,
-                native_frame.parsed_col,
-                frozenset(native_frame.native_cols),
-                native_frame.fallback_schema_ddl,
-                tuple(sorted(native_frame.fallback_options.items())),
-            )
-            if native_frame is not None
-            else None
-        )
-        memo_key = (
-            "projection",
-            tuple(repr(c) for c in schema.columns),
-            schema.has_int_pk,
-            tuple(schema.primary_key or ()),
-            (
-                tuple(file_columns)
-                if file_columns is not None
-                else ("<dfcols>", *df.columns)
-            ),
-            strict,
-            cast,
-            source_latin1,
-            charset,
-            missing_sentinel,
-            repr(rowid) if rowid is not None else None,
-            nf_key,
-            ts_key,
-            tuple(keep or ()),
-        )
-        cache = _memo_cache(df)
-        cached = cache.get(memo_key) if cache is not None else None
-        if cached is not None:
-            out, extra = cached
-            try:
-                return df.select(*out, *extra)
-            except Exception:
-                # a caller passed plan-BOUND columns (df["x"]) whose
-                # cached attributes can't resolve against this frame:
-                # evict and rebuild (callers on the hot path pass
-                # unbound F.col references, which always resolve)
-                cache.pop(memo_key, None)
-        if cache is None:
-            memo_key = None
-    except Exception:
-        memo_key = None
+        ),
+        tuple(keep or ()),
+    )
+    cached = cache.get(memo_key) if cache is not None else None
+    if cached is not None:
+        try:
+            return df.select(*cached[0], *cached[1])
+        except Exception:
+            # a caller passed plan-BOUND columns (df["x"]) whose
+            # cached attributes can't resolve against this frame:
+            # rebuild (callers on the hot path pass unbound F.col
+            # references, which always resolve)
+            pass
 
     perm = column_permutation(file_columns, schema)
     # names of the df columns holding file fields, in file order
@@ -216,17 +183,13 @@ def apply_permutation(
             if native_frame is not None and fname in native_frame.native_cols:
                 # typed by the JVM reader; mysql_cast only on rows the
                 # native parse rejected (re-parsed from the raw record)
-                fb = _memo_cast(
-                    df,
-                    ("fb", fname, repr(spec), strict, source_latin1, charset),
-                    lambda: mysql_cast(
-                        native_frame.raw_field(fname),
-                        spec,
-                        strict,
-                        source_latin1,
-                        charset,
-                    ).cast(spec.spark_type),
-                )
+                fb = mysql_cast(
+                    native_frame.raw_field(fname),
+                    spec,
+                    strict,
+                    source_latin1,
+                    charset,
+                ).cast(spec.spark_type)
                 expr = F.when(corrupt.isNull(), src.cast(spec.spark_type)).otherwise(fb)
                 # auto-inc NULL check must see the *raw* token on corrupt
                 # rows: a value MySQL would parse ('5.0', ' 5') reads as
@@ -247,28 +210,14 @@ def apply_permutation(
                     native_frame.raw_field(fname)
                 )
                 expr = (
-                    _memo_cast(
-                        df,
-                        ("rawsrc", fname, repr(spec), strict,
-                         source_latin1, charset),
-                        lambda: mysql_cast(
-                            raw_src, spec, strict, source_latin1, charset
-                        ),
-                    )
+                    mysql_cast(raw_src, spec, strict, source_latin1, charset)
                     if cast
                     else raw_src
                 )
                 src = raw_src  # for the auto-inc NULL check below
             else:
                 expr = (
-                    _memo_cast(
-                        df,
-                        ("plain", fname, repr(spec), strict,
-                         source_latin1, charset),
-                        lambda: mysql_cast(
-                            src, spec, strict, source_latin1, charset
-                        ),
-                    )
+                    mysql_cast(src, spec, strict, source_latin1, charset)
                     if cast
                     else src
                 )
@@ -310,10 +259,8 @@ def apply_permutation(
             extra.append(rowid.cast("long").alias(ROWID_COL))
     for k in keep or []:
         extra.append(F.col(k))
-    if memo_key is not None:
-        cache = _memo_cache(df)
-        if cache is not None:
-            cache[memo_key] = (out, extra)
+    if cache is not None:
+        cache[memo_key] = (out, extra)
     return df.select(*out, *extra)
 
 

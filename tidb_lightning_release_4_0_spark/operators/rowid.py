@@ -7,11 +7,10 @@ Ranges are *estimates* (file_size / column-width divisor), so ids are
 unique and monotonic but may have gaps between chunks — exactly the
 semantics we reproduce:
 
-- ``assign_rowid``: one pass, zero shuffles. Each partition is a
-  "chunk"; base = partition_id * capacity; local index via an
-  Arrow-batched cumulative counter (mapInPandas). Unique +
-  deterministic for a deterministic input plan, gaps allowed. This is
-  the 100 TB path.
+- ``assign_rowid_by_file`` / ``assign_rowid_by_file_split``: the
+  plan-time per-file (per-block) base plus the in-file row index, with
+  zero extra jobs on one-file-per-task reads. Unique + deterministic,
+  gaps allowed between files. This is the 100 TB path.
 
 - ``assign_rowid_dense``: exact dense 1..N ids given a total order
   key — two passes (per-partition counts, then offsets), mirroring
@@ -25,20 +24,18 @@ non-contiguous semantics are underdocumented) nor a global
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Iterator
 
 import pandas as pd
+from pyarrow import ArrowException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-ROWID = "_row_id"
+from .permutation import session_plan_cache
 
-#: per-session memo of the tiny per-file bases frames (see
-#: _file_base_rowids) — keyed by the expanded bases mapping
-_BMAP_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+ROWID = "_row_id"
 
 
 def metadata_df(spark, rows: list, schema, slices: int = 1) -> DataFrame:
@@ -55,20 +52,31 @@ def metadata_df(spark, rows: list, schema, slices: int = 1) -> DataFrame:
     so materializing the broadcast costs ~half the wall of the
     1-task RDD scan (measured 0.52 -> 0.24 s per build at 32 rows;
     one build per table per restore). The explicit-slices path keeps
-    the RDD layout — its callers map one TASK per row."""
-    if slices == 1 and rows:
-        try:
-            import pandas as pd
+    the RDD layout — its callers map one TASK per row.
 
+    pandas stores an integer column holding a None as float64, which
+    rounds every value above 2^53: such rows take the RDD path, which
+    keeps them exact."""
+    if slices == 1 and rows and not _int_nulls(rows, schema):
+        try:
             names = [f.name for f in schema.fields]
             return spark.createDataFrame(
                 pd.DataFrame(rows, columns=names), schema
             )
-        except Exception:
+        except (ArrowException, TypeError, ValueError, OverflowError):
             pass  # arrow/pandas conversion edge: RDD path below
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, max(slices, 1)), schema
     )
+
+
+def _int_nulls(rows: list, schema) -> bool:
+    """Whether any integral column of ``schema`` holds a None."""
+    idx = [
+        i for i, f in enumerate(schema.fields)
+        if isinstance(f.dataType, T.IntegralType)
+    ]
+    return any(r[i] is None for r in rows for i in idx)
 
 
 # 2^33 rows per partition capacity: 8.5B rows/chunk never overflows
@@ -98,17 +106,6 @@ def _with_local_index(df: DataFrame) -> DataFrame:
         list(d.schema.fields) + [T.StructField("_local_idx", T.LongType(), False)]
     )
     return d.mapInPandas(_local_index_mapper(out_schema), schema=out_schema)
-
-
-def assign_rowid(df: DataFrame, start: int = 1) -> DataFrame:
-    """Single-pass unique row-ids with reserved per-partition ranges."""
-    d = _with_local_index(df)
-    return d.withColumn(
-        ROWID,
-        (F.col("_pid").cast("long") * F.lit(_PARTITION_CAPACITY))
-        + F.col("_local_idx")
-        + F.lit(start),
-    ).drop("_pid", "_local_idx")
 
 
 def assign_rowid_mono(df: DataFrame, start: int = 1) -> DataFrame:
@@ -262,14 +259,11 @@ def _file_base_rowids(
     if not expanded:
         return df.withColumn(ROWID, in_file_index + F.lit(1))
     spark = df.sparkSession
-    # the tiny bases frame is memoized per (session, bases): the
+    # the tiny bases frame is memoized in the session plan memo: the
     # createDataFrame round trips (~70ms at 32 files) would otherwise
     # repeat for every engine batch of every run of the same dump
-    key = tuple(sorted(expanded.items()))
-    try:
-        cache = _BMAP_MEMO.setdefault(spark, {})
-    except TypeError:  # pragma: no cover - mock sessions
-        cache = None
+    cache = session_plan_cache(spark)
+    key = ("bases", tuple(sorted(expanded.items())))
     bmap = cache.get(key) if cache is not None else None
     if bmap is None:
         bmap_schema = T.StructType(

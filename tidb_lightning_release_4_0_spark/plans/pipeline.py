@@ -21,6 +21,7 @@ per-table error summary (O12, restore.go:89-129).
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import logging
 import os
@@ -374,50 +375,6 @@ class RestoreController:
         over the FULL file list — a file's ids must not depend on
         which other files ride along, or checkpoint resume would
         renumber rows (restore.go:861-870 parity)."""
-        # Whole-plan memo (session lifetime): repeated loads of the
-        # same files rebuild an identical plan through several
-        # hundred py4j round trips (~0.2-0.3 s/table measured at
-        # steady state). DataFrames are immutable plan handles, so
-        # the finished read plan is cached keyed on EVERYTHING that
-        # shapes it: file list with sizes+mtimes (a cached scan pins
-        # its listing snapshot), the engine-batch subset, the DDL
-        # schema, csv/charset/sql-mode config, the file-split confs
-        # (row-id bases depend on them at plan time), and the job
-        # timestamp when a column default-fills CURRENT_TIMESTAMP.
-        from ..operators.permutation import session_plan_cache
-
-        _plan_key = None
-        try:
-            _files_key = tuple(
-                (f.path, f.size, os.stat(f.path).st_mtime_ns)
-                for f in meta.data_files
-            )
-            _ts_key = (
-                self.job_timestamp
-                if any(c.default_current_ts for c in schema.columns)
-                else None
-            )
-            _plan_key = (
-                "read_table",
-                _files_key,
-                frozenset(only) if only is not None else None,
-                tuple(repr(c) for c in schema.columns),
-                tuple(schema.primary_key or ()),
-                schema.has_int_pk,
-                repr(self.cfg.mydumper.csv),
-                self.cfg.mydumper.character_set,
-                self.cfg.tidb.sql_mode,
-                self.spark.conf.get("spark.sql.files.maxPartitionBytes"),
-                self.spark.conf.get("spark.sql.files.openCostInBytes"),
-                _ts_key,
-            )
-            _plan_cache = session_plan_cache(self.spark)
-            if _plan_cache is not None:
-                _hit = _plan_cache.get(_plan_key)
-                if _hit is not None:
-                    return _hit
-        except Exception:
-            _plan_key = _plan_cache = None
         all_csv = [
             f
             for f in meta.data_files
@@ -606,54 +563,29 @@ class RestoreController:
             # named-record files have no per-file dump order to
             # preserve; documented like the parquet lane).
             from ..operators.rowid import assign_rowid_mono
-            from ..sources.jsonl_source import (
-                read_jsonl,
-                resolve_field_names,
-            )
+            from ..sources.jsonl_source import read_jsonl
 
-            # case-insensitive key match via a driver-side head probe
-            # of EVERY part (Spark's JSON parser matches schema names
-            # EXACTLY; the parquet path is case-insensitive — so is
-            # this one). Probing only part 0 would silently read a
-            # differently-cased later part as all-NULL rows; instead
-            # parts are grouped by their resolved casing and each
-            # group gets its own exact-name reader schema. A part
-            # whose keys match NO target column raises (require_match).
-            ddl_names = [c.name for c in schema.columns]
-            groups: dict = {}
-            for f in jsonl_files:
-                fmap_f = resolve_field_names(
-                    ddl_names, f.path, require_match=True
-                )
-                key = tuple(fmap_f[n] for n in ddl_names)
-                groups.setdefault(key, []).append(f)
             # read_jsonl = FAILFAST: a malformed line ERRORS the table
             # restore (surfacing in the O12 summary) instead of
             # materializing as an all-null row that the default-fill
             # ladder would silently fabricate into real data
-            jdfs = []
-            for key in sorted(groups):
-                jname_schema = T.StructType(
-                    [
-                        T.StructField(k, T.StringType(), True)
-                        for k in key
+            def _read_group(key: tuple, files: list) -> DataFrame:
+                return read_jsonl(
+                    self.spark,
+                    [f.path for f in files],
+                    T.StructType(
+                        [T.StructField(k, T.StringType(), True) for k in key]
+                    ),
+                ).select(
+                    *[
+                        F.col(k).alias(c.name)
+                        for k, c in zip(key, schema.columns)
                     ]
                 )
-                jdfs.append(
-                    read_jsonl(
-                        self.spark,
-                        [f.path for f in groups[key]],
-                        jname_schema,
-                    ).select(
-                        *[
-                            F.col(k).alias(n)
-                            for k, n in zip(key, ddl_names)
-                        ]
-                    )
-                )
-            jdf = jdfs[0]
-            for other in jdfs[1:]:
-                jdf = jdf.unionByName(other)
+
+            jdf = self._jsonl_by_casing(
+                schema, jsonl_files, lambda f: f.path, _read_group
+            )
             frames.append(
                 self._permute_jsonl(
                     assign_rowid_mono(jdf, start=JSONL_LANE), schema
@@ -684,16 +616,11 @@ class RestoreController:
             # project_fields marks short rows with the sentinel:
             # LOAD DATA fills defaults for missing trailing fields
             frames.append(
-                apply_permutation(
+                self._permute(
                     df,
                     schema,
                     file_columns,
-                    rowid=F.col("_row_id"),
-                    job_timestamp=self.job_timestamp,
-                    strict=strict,
-                    keep=["_row_id"],
                     source_latin1=True,
-                    charset=self.cfg.mydumper.character_set,
                     missing_sentinel=MISSING_FIELD,
                 )
             )
@@ -745,16 +672,20 @@ class RestoreController:
                 return assign_rowid_by_file(
                     df, bases, one_file_per_partition=True
                 )
-            # strict sql_mode keeps the fast path for ints/dates
-            # (every natively-rejected token re-parses through
-            # mysql_cast(strict=True), which raises exactly like the
-            # string path) but float/double columns drop to the
-            # string path: Double.parseDouble accepts NaN/Infinity/
-            # hex-float literals strict MySQL must reject — see
-            # native_read_type
+            # typed fast path for headerless files whose null sentinel
+            # is not the empty string (not-null mode has none). Strict
+            # sql_mode keeps it for ints/dates (every natively-rejected
+            # token re-parses through mysql_cast(strict=True), which
+            # raises exactly like the string path) but float/double
+            # columns drop to the string path: Double.parseDouble
+            # accepts NaN/Infinity/hex-float literals strict MySQL must
+            # reject — see native_read_type. Documented deviation (both
+            # lanes): an unquoted empty token reads as NULL, as
+            # univocity substitutes the null sentinel for it on the
+            # string path (MySQL LOAD DATA: 0 with warning / strict
+            # error).
             native_ok = (
-                csv_cfg.native_typed
-                and not csv_cfg.header
+                not csv_cfg.header
                 and not csv_cfg.not_null
                 and csv_cfg.null != ""
             )
@@ -775,49 +706,35 @@ class RestoreController:
                 # one file per task, so row-ids need no extra job
                 df = _rowids(nf.df)
                 frames.append(
-                    apply_permutation(
+                    self._permute(
                         df,
                         schema,
                         [c.name for c in schema.columns],
-                        rowid=F.col("_row_id"),
-                        job_timestamp=self.job_timestamp,
-                        strict=strict,
-                        keep=["_row_id"],
                         source_latin1=True,
-                        charset=self.cfg.mydumper.character_set,
                         native_frame=nf,
                     )
                 )
             else:
-                file_cols = (
-                    None  # header row names columns; read by reader
-                    if csv_cfg.header
-                    else [c.name for c in schema.columns]
-                )
-                df = read_csv(
-                    self.spark,
-                    [f.path for f in csv_files],
-                    csv_cfg,
-                    column_names=file_cols,
-                    num_columns=None if file_cols else ncols,
-                )
-                df = _rowids(df)
-                file_columns = (
-                    [c for c in df.columns if c != "_row_id"]
-                    if csv_cfg.header
-                    else file_cols
+                # a header row names (and orders) the file columns;
+                # without one the fields come in table order
+                df = _rowids(
+                    read_csv(
+                        self.spark,
+                        [f.path for f in csv_files],
+                        csv_cfg,
+                        column_names=(
+                            None
+                            if csv_cfg.header
+                            else [c.name for c in schema.columns]
+                        ),
+                    )
                 )
                 frames.append(
-                    apply_permutation(
+                    self._permute(
                         df,
                         schema,
-                        [c for c in file_columns if c != "_row_id"],
-                        rowid=F.col("_row_id"),
-                        job_timestamp=self.job_timestamp,
-                        strict=strict,
-                        keep=["_row_id"],
+                        [c for c in df.columns if c != "_row_id"],
                         source_latin1=True,
-                        charset=self.cfg.mydumper.character_set,
                     )
                 )
         if sql_files:
@@ -839,15 +756,8 @@ class RestoreController:
             from ..sources.sql_dump_source import MISSING_FIELD
 
             frames.append(
-                apply_permutation(
-                    df,
-                    schema,
-                    file_columns,
-                    rowid=F.col("_row_id"),
-                    job_timestamp=self.job_timestamp,
-                    strict=strict,
-                    keep=["_row_id"],
-                    missing_sentinel=MISSING_FIELD,
+                self._permute(
+                    df, schema, file_columns, missing_sentinel=MISSING_FIELD
                 )
             )
         if not frames:
@@ -868,19 +778,6 @@ class RestoreController:
         df = frames[0]
         for f in frames[1:]:
             df = df.unionByName(f)
-        if _plan_key is not None and _plan_cache is not None:
-            _plan_cache[_plan_key] = df
-            # cap retained read plans: each pins a FileIndex listing
-            # snapshot, and a long-lived task server would otherwise
-            # accumulate one per dump it ever loaded (FIFO eviction;
-            # dicts iterate in insertion order)
-            rt_keys = [
-                k
-                for k in _plan_cache
-                if isinstance(k, tuple) and k and k[0] == "read_table"
-            ]
-            for k in rt_keys[: max(len(rt_keys) - 64, 0)]:
-                _plan_cache.pop(k, None)
         return df
 
     def _observe_write(
@@ -1310,7 +1207,6 @@ class RestoreController:
             read_csv_blocks,
             read_jsonl_blocks,
         )
-        from ..sources.jsonl_source import resolve_field_names
 
         names = [c.name for c in schema.columns]
         jsonl = meta.data_files[0].path.lower().endswith(".jsonl")
@@ -1332,37 +1228,64 @@ class RestoreController:
                 bases,
                 split_bytes,
             ).toDF("_row_id", *names)
-            return apply_permutation(
-                df,
-                schema,
-                names,
-                rowid=F.col("_row_id"),
-                job_timestamp=self.job_timestamp,
-                strict=strict_sql_mode(self.cfg.tidb.sql_mode),
-                keep=["_row_id"],
-                source_latin1=True,
-                charset=self.cfg.mydumper.character_set,
-            )
-        # per-file key casing, grouped exactly like the batch lane
-        # (a differently-cased later part must not read all-NULL)
-        casing = {
-            f.path: resolve_field_names(names, f.path, require_match=True)
-            for f in meta.data_files
-        }
-        groups: dict[tuple, list[tuple[str, int, int]]] = {}
-        for b in blocks:
-            key = tuple(casing[b[0]][n] for n in names)
-            groups.setdefault(key, []).append(b)
-        jdfs = [
-            read_jsonl_blocks(
-                self.spark, groups[key], names, list(key), bases, split_bytes
-            )
-            for key in sorted(groups)
-        ]
-        jdf = jdfs[0]
-        for other in jdfs[1:]:
-            jdf = jdf.unionByName(other)
+            return self._permute(df, schema, names, source_latin1=True)
+        jdf = self._jsonl_by_casing(
+            schema,
+            blocks,
+            lambda b: b[0],
+            lambda key, group: read_jsonl_blocks(
+                self.spark, group, names, list(key), bases, split_bytes
+            ),
+        )
         return self._permute_jsonl(jdf, schema)
+
+    @staticmethod
+    def _jsonl_by_casing(schema: TableSchema, items: list, path_of, read):
+        """One frame over JSONL ``items`` (files or byte-range blocks
+        of them), shared by the batch and block lanes. Spark's JSON
+        parser matches schema names EXACTLY (the parquet path is
+        case-insensitive — so is this one): each item's file head is
+        probed driver-side, items are grouped by their file's resolved
+        key casing, ``read(key, group)`` reads one group with that
+        exact-name reader schema into DDL-named string columns, and the
+        groups are unioned. Probing only part 0 would silently read a
+        differently-cased later part as all-NULL rows; a part whose
+        keys match NO target column raises (require_match)."""
+        from ..sources.jsonl_source import resolve_field_names
+
+        names = [c.name for c in schema.columns]
+        casing: dict[str, tuple] = {}
+        groups: dict[tuple, list] = {}
+        for it in items:
+            path = path_of(it)
+            if path not in casing:
+                fmap = resolve_field_names(names, path, require_match=True)
+                casing[path] = tuple(fmap[n] for n in names)
+            groups.setdefault(casing[path], []).append(it)
+        return functools.reduce(
+            DataFrame.unionByName,
+            [read(key, groups[key]) for key in sorted(groups)],
+        )
+
+    def _permute(
+        self, df: DataFrame, schema: TableSchema, file_columns, **lane
+    ) -> DataFrame:
+        """The one apply_permutation call of every read lane: this
+        task's ``_row_id`` column, job timestamp, sql_mode and charset.
+        ``lane`` carries the per-lane flags only (source_latin1,
+        missing_sentinel, native_frame); charset is read by mysql_cast
+        only under source_latin1."""
+        return apply_permutation(
+            df,
+            schema,
+            file_columns,
+            rowid=F.col("_row_id"),
+            job_timestamp=self.job_timestamp,
+            strict=strict_sql_mode(self.cfg.tidb.sql_mode),
+            keep=["_row_id"],
+            charset=self.cfg.mydumper.character_set,
+            **lane,
+        )
 
     def _permute_jsonl(self, jdf: DataFrame, schema: TableSchema) -> DataFrame:
         """The JSONL cast ladder over an all-string, DDL-named frame
@@ -1387,15 +1310,10 @@ class RestoreController:
             ],
             F.col("_row_id"),
         )
-        return apply_permutation(
+        return self._permute(
             jdf,
             schema,
             [c.name for c in schema.columns],
-            rowid=F.col("_row_id"),
-            job_timestamp=self.job_timestamp,
-            strict=strict_sql_mode(self.cfg.tidb.sql_mode),
-            keep=["_row_id"],
-            charset=self.cfg.mydumper.character_set,
             missing_sentinel=MISSING_FIELD,
         )
 

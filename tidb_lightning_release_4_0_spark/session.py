@@ -18,6 +18,10 @@ from pyspark.sql import SparkSession
 # come from the cluster manager).
 _DEF_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# spark.sql.codegen.hugeMethodLimit: HotSpot's JIT limit (see get_spark;
+# the 8000-vs-65535 A/B is in docs/HML_AB_r12.md)
+HUGE_METHOD_LIMIT = "8000"
+
 
 def get_spark(
     app_name: str = "tidb-lightning-spark",
@@ -63,10 +67,7 @@ def get_spark(
         # expression code splits into small JIT-friendly methods:
         # measured 2-5x on the ingest scan->cast stage at sf0.1, and
         # the same reasoning holds on any executor JVM at 100 TB.
-        .config(
-            "spark.sql.codegen.hugeMethodLimit",
-            os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
-        )
+        .config("spark.sql.codegen.hugeMethodLimit", HUGE_METHOD_LIMIT)
         # one FILE per partition for unsplittable (whole-file) reads:
         # a huge per-file open cost stops FilePartition bin-packing, so
         # multiLine CSV / .sql dump tasks each own exactly one file and
@@ -93,10 +94,7 @@ def get_spark(
     # canonicalization needs UTC)
     spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 40))
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(
-        "spark.sql.codegen.hugeMethodLimit",
-        os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
-    )
+    spark.conf.set("spark.sql.codegen.hugeMethodLimit", HUGE_METHOD_LIMIT)
     return spark
 
 
