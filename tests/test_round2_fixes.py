@@ -225,25 +225,29 @@ def test_rowid_fast_path_dense_many_small_files(spark, tmp_path):
     )
 
     nfiles, rows_per = 200, 20
-    for i in range(nfiles):
-        with open(tmp_path / f"p{i:03d}.csv", "w") as f:
-            for j in range(rows_per):
-                f.write(f"{i},{j}\n")
-    files = sorted(
-        (str(tmp_path / n), os.path.getsize(tmp_path / n))
-        for n in os.listdir(tmp_path)
-    )
-    bases = file_row_bases(files, num_columns=2, is_sql=False)
-    cfg = CSVConfig(separator=",", header=False)
-    df = read_csv(spark, [p for p, _ in files], cfg, num_columns=2)
+    # input_file_name() percent-encodes a space, '%' and '#': the base
+    # join must still match every file in such a directory
+    for sub in ("plain", "sp ace%25x#q"):
+        d = tmp_path / sub
+        d.mkdir()
+        for i in range(nfiles):
+            with open(d / f"p{i:03d}.csv", "w") as f:
+                for j in range(rows_per):
+                    f.write(f"{i},{j}\n")
+        files = sorted(
+            (str(d / n), os.path.getsize(d / n)) for n in os.listdir(d)
+        )
+        bases = file_row_bases(files, num_columns=2, is_sql=False)
+        cfg = CSVConfig(separator=",", header=False)
+        df = read_csv(spark, [p for p, _ in files], cfg, num_columns=2)
 
-    fast = assign_rowid_by_file(df, bases, one_file_per_partition=True)
-    slow = assign_rowid_by_file(df, bases)
-    a = {(r["_c0"], r["_c1"]): r["_row_id"] for r in fast.collect()}
-    b = {(r["_c0"], r["_c1"]): r["_row_id"] for r in slow.collect()}
-    assert a == b
-    assert len(a) == nfiles * rows_per
-    assert len(set(a.values())) == nfiles * rows_per  # globally unique
+        fast = assign_rowid_by_file(df, bases, one_file_per_partition=True)
+        slow = assign_rowid_by_file(df, bases)
+        a = {(r["_c0"], r["_c1"]): r["_row_id"] for r in fast.collect()}
+        b = {(r["_c0"], r["_c1"]): r["_row_id"] for r in slow.collect()}
+        assert a == b, sub
+        assert len(a) == nfiles * rows_per, sub
+        assert len(set(a.values())) == nfiles * rows_per, sub  # unique
 
 
 def test_rowid_fast_path_broadcast_join_branch(spark, tmp_path):
@@ -262,3 +266,36 @@ def test_rowid_fast_path_broadcast_join_branch(spark, tmp_path):
     out = assign_rowid_by_file(df, bases, one_file_per_partition=True)
     ids = sorted(r["_row_id"] for r in out.collect())
     assert ids == [101, 102, 103]
+
+
+def test_rowids_unique_under_percent_encoded_dump_dir(spark, tmp_path):
+    """A PK-less table restored from a directory whose name Spark
+    percent-encodes in input_file_name(): every file must still get
+    its own row-id base, so the hidden _tidb_rowid stays unique."""
+    from tidb_lightning_release_4_0_spark.config import Config, MydumperConfig
+    from tidb_lightning_release_4_0_spark.plans.pipeline import (
+        RestoreController,
+    )
+
+    d = tmp_path / "sp ace"
+    d.mkdir()
+    (d / "db-schema-create.sql").write_text("CREATE DATABASE db;")
+    (d / "db.t-schema.sql").write_text("CREATE TABLE t (v INT)")
+    for part in range(3):
+        (d / f"db.t.{part:04d}.csv").write_text(
+            "".join(f"{part * 5 + i}\n" for i in range(5))
+        )
+    tgt = str(tmp_path / "sink")
+    run = RestoreController(
+        spark,
+        Config(
+            mydumper=MydumperConfig(source_dir=str(d)),
+            backend="parquet",
+            target_dir=tgt,
+            checkpoint_enable=False,
+        ),
+    ).run()
+    assert run.ok, run.report()
+    got = spark.read.parquet(tgt + "/db.t")
+    assert got.count() == 15
+    assert got.select("_tidb_rowid").distinct().count() == 15

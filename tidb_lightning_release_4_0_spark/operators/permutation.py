@@ -86,7 +86,6 @@ def apply_permutation(
     rowid: Column | None = None,
     job_timestamp: _dt.datetime | None = None,
     strict: bool = False,
-    cast: bool = True,
     keep: list[str] | None = None,
     source_latin1: bool = False,
     charset: str = "utf8mb4",
@@ -141,7 +140,6 @@ def apply_permutation(
             else ("<dfcols>", *df.columns)
         ),
         strict,
-        cast,
         source_latin1,
         charset,
         missing_sentinel,
@@ -209,18 +207,12 @@ def apply_permutation(
                 raw_src = F.when(corrupt.isNull(), src).otherwise(
                     native_frame.raw_field(fname)
                 )
-                expr = (
-                    mysql_cast(raw_src, spec, strict, source_latin1, charset)
-                    if cast
-                    else raw_src
+                expr = mysql_cast(
+                    raw_src, spec, strict, source_latin1, charset
                 )
                 src = raw_src  # for the auto-inc NULL check below
             else:
-                expr = (
-                    mysql_cast(src, spec, strict, source_latin1, charset)
-                    if cast
-                    else src
-                )
+                expr = mysql_cast(src, spec, strict, source_latin1, charset)
             if missing_sentinel is not None:
                 # a SHORT VALUES tuple marks absent positions with the
                 # sentinel: fill the column default, exactly as if the

@@ -28,7 +28,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyarrow import ArrowException
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -195,16 +195,17 @@ def assign_rowid_by_file(
         )
         return _file_base_rowids(df, bases, local)
 
-    d = df.withColumn(
-        "_fname", F.regexp_replace(F.input_file_name(), "^file:/*", "/")
-    ).withColumn("_mono", F.monotonically_increasing_id())
+    d = df.withColumn("_fname", F.input_file_name()).withColumn(
+        "_mono", F.monotonically_increasing_id()
+    )
 
     mins = (
         d.groupBy("_fname").agg(F.min("_mono").alias("_mn")).collect()
     )  # O(#files) rows on the driver
     spark = df.sparkSession
+    keyed = _file_aliases(spark, bases)
     base_rows = [
-        (r["_fname"], int(r["_mn"]), bases.get(r["_fname"], 0)) for r in mins
+        (r["_fname"], int(r["_mn"]), keyed.get(r["_fname"], 0)) for r in mins
     ]
     # explicit schema: zero-row input (valid empty table) yields no
     # rows to infer from, and createDataFrame([], [names]) raises
@@ -229,41 +230,51 @@ def assign_rowid_by_file(
     )
 
 
+def _file_aliases(spark, bases: dict[str, int]) -> dict[str, int]:
+    """``bases`` keyed by every name a row's file can carry: the raw
+    path (a caller-materialized ``_fname``) and input_file_name()'s
+    URI. Spark reports a local file as Hadoop's ``Path.toUri()``
+    string, so the alias is built by that same conversion: a space,
+    '%', '#' or non-ASCII character is encoded exactly as the scan
+    encodes it (a hand-built "file://" + path would match no row of
+    such a file and give it base 0)."""
+    to_path = spark._jvm.org.apache.hadoop.fs.Path
+    out: dict[str, int] = {}
+    for k, v in bases.items():
+        out[k] = int(v)
+        if "://" not in k:
+            out["file://" + to_path(k).toUri().toString()] = int(v)
+    return out
+
+
 def _file_base_rowids(
     df: DataFrame,
     bases: dict[str, int],
-    in_file_index: "Column",
+    in_file_index: Column,
 ) -> DataFrame:
     """rowid = plan-time per-file base + ``in_file_index`` + 1, with
-    the base broadcast-joined on ``input_file_name()``.
+    the base broadcast-joined on ``_fname``: input_file_name(), or the
+    raw path a caller materialized itself (the block reader, the
+    split-path window fallback).
 
-    Shared by the whole-file scheme (index = mono low bits) and the
-    chunk-split scheme (index = chunk byte-offset base + mono low
-    bits). Map keys are normalized to input_file_name()'s URI aliases
-    at PLAN time ("file:///x" / raw path) so no per-row regexp runs —
-    the rowid expression gets inlined into multiple downstream
-    projections (CollapseProject duplicates it), so per-row cost
-    matters doubly. The base table is a broadcast join, not a literal
-    create_map: codegen rebuilds a literal map PER ROW (measurably
-    slower even at 32 files), while the hash probe is O(1) — and
-    still zero data-plane aggregation jobs."""
-
-    def _keyed(k: str) -> list[str]:
-        if "://" in k:
-            return [k]
-        return [f"file://{k}", k]
-
-    expanded = {
-        alias: int(v) for k, v in bases.items() for alias in _keyed(k)
-    }
-    if not expanded:
+    Shared by the whole-file scheme (index = mono low bits), the
+    chunk-split scheme and the block reader (index = split_chunk_base
+    + in-block row index). Map keys are normalized to both aliases at
+    PLAN time (_file_aliases) so no per-row regexp runs — the rowid
+    expression gets inlined into multiple downstream projections
+    (CollapseProject duplicates it), so per-row cost matters doubly.
+    The base table is a broadcast join, not a literal create_map:
+    codegen rebuilds a literal map PER ROW (measurably slower even at
+    32 files), while the hash probe is O(1) — and still zero
+    data-plane aggregation jobs."""
+    if not bases:
         return df.withColumn(ROWID, in_file_index + F.lit(1))
     spark = df.sparkSession
     # the tiny bases frame is memoized in the session plan memo: the
     # createDataFrame round trips (~70ms at 32 files) would otherwise
     # repeat for every engine batch of every run of the same dump
     cache = session_plan_cache(spark)
-    key = ("bases", tuple(sorted(expanded.items())))
+    key = ("bases", tuple(sorted(bases.items())))
     bmap = cache.get(key) if cache is not None else None
     if bmap is None:
         bmap_schema = T.StructType(
@@ -273,14 +284,14 @@ def _file_base_rowids(
             ]
         )
         bmap = metadata_df(
-            spark, [(k, int(v)) for k, v in expanded.items()], bmap_schema
+            spark, list(_file_aliases(spark, bases).items()), bmap_schema
         )
         if cache is not None:
             cache[key] = bmap
-    # a caller that already materialized _fname at SCAN time (the
-    # split-path window fallback — input_file_name() is only defined
-    # inside the file-scan stage, not above the window's shuffle)
-    # keeps its column; otherwise evaluate it here, in the scan stage
+    # a caller that already materialized _fname keeps its column (the
+    # split-path window fallback must: input_file_name() is only
+    # defined inside the file-scan stage, not above the window's
+    # shuffle); otherwise evaluate it here, in the scan stage
     d = df if "_fname" in df.columns else df.withColumn(
         "_fname", F.input_file_name()
     )
@@ -352,6 +363,18 @@ def file_row_bases_split(
     return bases
 
 
+def split_chunk_base(offset: Column, divisor: int, split_bytes: int) -> Column:
+    """The row-id base of the byte-range block at ``offset`` within
+    its file, ``floor(off / divisor) + floor(off / S)``: the
+    SplitLargeFile rule (see assign_rowid_by_file_split). Every
+    byte-range reader takes its offset term from here, so a block's
+    ids do not depend on which reader produced them."""
+    return (
+        F.floor(offset / F.lit(max(int(divisor), 1)))
+        + F.floor(offset / F.lit(max(int(split_bytes), 1)))
+    ).cast("long")
+
+
 def assign_rowid_by_file_split(
     df: DataFrame,
     bases: dict[str, int],
@@ -393,28 +416,17 @@ def assign_rowid_by_file_split(
     ordered by the mono id, which is exact under ANY packing. That
     fallback costs one shuffle of (ids + projected columns); the
     zero-shuffle fast path stays the default under tlr4s.session."""
-    spark = df.sparkSession
-    try:
-        oc = spark.conf.get("spark.sql.files.openCostInBytes")
-        mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    except Exception:  # pragma: no cover - conf always readable
-        oc = mpb = None
-    one_block_per_task = not (
-        oc is not None
-        and mpb is not None
-        and _conf_bytes(oc) < _conf_bytes(mpb)
-    )
-    if one_block_per_task:
+    conf = df.sparkSession.conf
+    oc = _conf_bytes(conf.get("spark.sql.files.openCostInBytes"))
+    if oc >= _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes")):
         # fast path: each byte-range block is its own task, so the low
         # bits of the mono id ARE the in-block row index — no shuffle.
         local = F.monotonically_increasing_id().bitwiseAND(
             F.lit(_PARTITION_CAPACITY - 1)
         )
-        block_off = F.expr("input_file_block_start()")
-        chunk_base = (
-            F.floor(block_off / F.lit(max(int(divisor), 1)))
-            + F.floor(block_off / F.lit(max(int(split_bytes), 1)))
-        ).cast("long")
+        chunk_base = split_chunk_base(
+            F.expr("input_file_block_start()"), divisor, split_bytes
+        )
         return _file_base_rowids(df, bases, chunk_base + local)
     # portability fallback: blocks are packed into shared tasks;
     # derive an EXACT per-block index by windowing on the block
@@ -435,10 +447,7 @@ def assign_rowid_by_file_split(
         )
         - F.lit(1)
     ).cast("long")
-    chunk_base = (
-        F.floor(F.col("_boff") / F.lit(max(int(divisor), 1)))
-        + F.floor(F.col("_boff") / F.lit(max(int(split_bytes), 1)))
-    ).cast("long")
+    chunk_base = split_chunk_base(F.col("_boff"), divisor, split_bytes)
     return _file_base_rowids(d, bases, chunk_base + local).drop(
         "_boff", "_mono"
     )

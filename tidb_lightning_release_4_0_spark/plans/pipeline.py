@@ -43,8 +43,8 @@ from ..sources.csv_source import read_csv
 from ..sources.mydump_loader import MDTableMeta, discover_cfg
 from ..sources.schema_reader import TableSchema, load_table_schema
 from ..sources.sql_dump_source import (
+    MISSING_FIELD,
     probe_insert_columns,
-    project_fields,
     read_sql_dump,
 )
 from .checkpoints import CheckpointStore, Status, invalid, metric_name
@@ -609,15 +609,12 @@ class RestoreController:
                 ncols,
             )
             file_columns = header_cols or [c.name for c in schema.columns]
-            df = project_fields(raw, len(file_columns))
-            df = df.toDF(*(["_row_id"] + file_columns))
-            from ..sources.sql_dump_source import MISSING_FIELD
 
-            # project_fields marks short rows with the sentinel:
+            # read_csv_strict marks short rows with the sentinel:
             # LOAD DATA fills defaults for missing trailing fields
             frames.append(
                 self._permute(
-                    df,
+                    raw.toDF("_row_id", *file_columns),
                     schema,
                     file_columns,
                     source_latin1=True,
@@ -753,7 +750,6 @@ class RestoreController:
                 all_files=[(f.path, f.size) for f in all_sql],
             )
             df = df.toDF(*(["_row_id"] + file_columns))
-            from ..sources.sql_dump_source import MISSING_FIELD
 
             frames.append(
                 self._permute(
@@ -1195,21 +1191,20 @@ class RestoreController:
     ) -> DataFrame:
         """The read->permute->cast ladder over an explicit byte-range
         block list of a plain .csv or plain .jsonl table
-        (csv_blocks.read_csv_blocks / read_jsonl_blocks): the same
-        all-string shape, SplitLargeFile row-id formula and cast
-        ladder as the whole-file strict-format lanes — so an engine
-        produces identical rows whether it ran in the first attempt
-        or in a mid-file resume. JSONL keeps the batch lane's per-file
-        key-casing groups and takes the JSONL minimum-line divisor."""
+        (csv_blocks.read_blocks): the same all-string shape,
+        SplitLargeFile row-id formula and cast ladder as the whole-file
+        strict-format lanes — so an engine produces identical rows
+        whether it ran in the first attempt or in a mid-file resume.
+        JSONL keeps the batch lane's per-file key-casing groups and
+        takes the JSONL minimum-line divisor."""
         from ..operators.rowid import file_row_bases_split
-        from ..sources.csv_blocks import (
-            JSONL_MIN_LINE_BYTES,
-            read_csv_blocks,
-            read_jsonl_blocks,
-        )
+        from ..sources.csv_blocks import JSONL_MIN_LINE_BYTES, read_blocks
 
         names = [c.name for c in schema.columns]
         jsonl = meta.data_files[0].path.lower().endswith(".jsonl")
+        # the one divisor of both row-id terms: the file bases here
+        # and the block offsets in read_blocks
+        divisor = JSONL_MIN_LINE_BYTES if jsonl else max(len(names), 1)
         # bases over the FULL file list: a block's ids must not
         # depend on which blocks ride along (resume-renumber parity,
         # as read_table's `only` contract)
@@ -1217,25 +1212,20 @@ class RestoreController:
             [(f.path, f.size) for f in meta.data_files],
             len(names),
             split_bytes,
-            divisor=JSONL_MIN_LINE_BYTES if jsonl else None,
+            divisor=divisor,
+        )
+        read = functools.partial(
+            read_blocks, self.spark, names=names, bases=bases,
+            divisor=divisor, split_bytes=split_bytes,
         )
         if not jsonl:
-            df = read_csv_blocks(
-                self.spark,
-                blocks,
-                self.cfg.mydumper.csv,
-                len(names),
-                bases,
-                split_bytes,
-            ).toDF("_row_id", *names)
+            df = read(blocks, csv=self.cfg.mydumper.csv)
             return self._permute(df, schema, names, source_latin1=True)
         jdf = self._jsonl_by_casing(
             schema,
             blocks,
             lambda b: b[0],
-            lambda key, group: read_jsonl_blocks(
-                self.spark, group, names, list(key), bases, split_bytes
-            ),
+            lambda key, group: read(group, json_keys=list(key)),
         )
         return self._permute_jsonl(jdf, schema)
 
@@ -1295,8 +1285,6 @@ class RestoreController:
         missing sentinel and takes the column DEFAULT (the
         absent-trailing-field CSV semantics); nullable columns keep
         real NULLs."""
-        from ..sources.sql_dump_source import MISSING_FIELD
-
         jdf = jdf.select(
             *[
                 (

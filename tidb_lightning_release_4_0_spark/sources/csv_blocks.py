@@ -1,10 +1,10 @@
-"""Byte-range block reader for strict-format CSV — the read side of
-block-grain (mid-file) checkpoint resume.
+"""Byte-range block reader for strict-format CSV and JSON Lines — the
+read side of block-grain (mid-file) checkpoint resume.
 
 Why this exists: Spark's job commit is atomic, so a crashed write job
 delivers NOTHING — the only way to make MID-FILE progress durable is
 to split one file's restore into several smaller jobs. Each job then
-needs to read just its byte ranges; the DataFrame CSV reader has no
+needs to read just its byte ranges; the DataFrame readers have no
 range API, so blocks are distributed as a tiny plan-time list and
 each task seeks into the file itself (the reference resumes a chunk
 from (path, offset) the same way: checkpoints.go:92-130,
@@ -19,14 +19,19 @@ produce byte-identical rows):
   reads its straddling line), and a block keeps reading lines while
   the line START is <= block end — which is also how a line ending
   exactly on the boundary hands the NEXT line to the earlier block.
-- Bytes decode latin-1 (byte-faithful, as the batch reader's
-  ISO-8859-1 trick) and empty lines are skipped (univocity's
-  skipEmptyLines, which the native reader applies).
-- Field parsing is ``F.from_csv`` with the SAME option map as
+- One extraction stage serves both formats (read_blocks): CSV bytes
+  decode latin-1 (byte-faithful, as the batch reader's ISO-8859-1
+  trick) and empty lines are skipped (univocity's skipEmptyLines,
+  which the native reader applies); JSONL decodes utf-8 and skips
+  whitespace-only lines, as Spark's JSON text source does.
+- CSV fields parse with ``F.from_csv`` and the SAME option map as
   ``spark.read.csv`` — the same Univocity parser, so separators,
-  quotes, escapes and null sentinels behave identically.
-- Row-ids use the same SplitLargeFile formula as
-  ``rowid.assign_rowid_by_file_split``; the in-block row index is
+  quotes, escapes and null sentinels behave identically. JSONL
+  parses with ``F.from_json`` FAILFAST, as read_jsonl.
+- Row-ids take the SplitLargeFile offset term from
+  ``rowid.split_chunk_base`` and the file base from
+  ``rowid._file_base_rowids``, the two pieces
+  ``assign_rowid_by_file_split`` uses; the in-block row index is
   explicit here (the reader emits it), so ids are identical to what
   the whole-file splittable read would have assigned.
 
@@ -45,6 +50,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CSVConfig
+from ..operators.rowid import (
+    ROWID,
+    _file_base_rowids,
+    metadata_df,
+    split_chunk_base,
+)
 
 _TAIL_CHUNK = 64 * 1024
 
@@ -140,9 +151,23 @@ def _extract_lines(
                 cursor = 0
 
 
-_RAW_SCHEMA = T.StructType(
+# A valid JSON-Lines row is at least "{}" plus its newline — 3 bytes
+# — so byte-capacity row-id reservations for JSONL blocks divide by 3
+# (the CSV path divides by the column count for the same reason:
+# every delimited row occupies >= #columns bytes).
+JSONL_MIN_LINE_BYTES = 3
+
+_PLAN_SCHEMA = T.StructType(
     [
-        T.StructField("_bpath", T.StringType(), False),
+        T.StructField("path", T.StringType(), False),
+        T.StructField("off", T.LongType(), False),
+        T.StructField("len", T.LongType(), False),
+    ]
+)
+
+_LINES_SCHEMA = T.StructType(
+    [
+        T.StructField("_fname", T.StringType(), False),
         T.StructField("_boffset", T.LongType(), False),
         T.StructField("_bline", T.LongType(), False),
         T.StructField("_raw", T.StringType(), True),
@@ -150,174 +175,102 @@ _RAW_SCHEMA = T.StructType(
 )
 
 
-def read_csv_blocks(
+def _block_lines(
+    spark: SparkSession, blocks: list[tuple[str, int, int]], jsonl: bool
+) -> DataFrame:
+    """The line-extraction stage of both formats: one task per block
+    (the plan list is laid out by metadata_df, so no shuffle), one row
+    per kept line as (_fname, _boffset, _bline, _raw), ``_bline``
+    counting kept lines only. CSV decodes latin-1 and skips empty
+    lines (univocity's skipEmptyLines); JSONL decodes utf-8 and skips
+    whitespace-only lines (Spark's JSON text source drops them)."""
+    encoding = "utf-8" if jsonl else "latin-1"
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for path, off, ln in zip(pdf["path"], pdf["off"], pdf["len"]):
+                off = int(off)
+                lines = [
+                    line
+                    for line in _extract_lines(path, off, int(ln), encoding)
+                    if (line.strip() if jsonl else line)
+                ]
+                if lines:
+                    yield pd.DataFrame(
+                        {
+                            "_fname": path,
+                            "_boffset": off,
+                            "_bline": pd.Series(
+                                range(len(lines)), dtype="int64"
+                            ),
+                            "_raw": lines,
+                        }
+                    )
+
+    plan = metadata_df(
+        spark,
+        [(p, int(o), int(ln)) for p, o, ln in blocks],
+        _PLAN_SCHEMA,
+        slices=len(blocks),
+    )
+    return plan.mapInPandas(extract, schema=_LINES_SCHEMA)
+
+
+def read_blocks(
     spark: SparkSession,
     blocks: list[tuple[str, int, int]],
-    cfg: CSVConfig,
-    num_columns: int,
+    names: list[str],
     bases: dict[str, int],
+    divisor: int,
     split_bytes: int,
+    csv: CSVConfig | None = None,
+    json_keys: list[str] | None = None,
 ) -> DataFrame:
-    """Read ONLY the given byte-range blocks into the same all-string
-    shape ``csv_source.read_csv`` produces (``_c0.._cN``), plus
-    ``_row_id`` per the SplitLargeFile scheme. One task per block."""
-    cfg.validate()
-    if cfg.header:
-        raise ValueError(
-            "block-split reads do not support header files; "
-            "the caller must gate on csv.header"
+    """Read ONLY the given byte-range blocks into all-string columns
+    named ``names`` plus ``_row_id``. One task per block.
+
+    ``json_keys`` reads JSON Lines: one resolved key-casing group
+    (jsonl_source.resolve_field_names output aligned with ``names``);
+    the caller groups blocks by their file's casing and unions the
+    groups, as the batch lane does. A malformed line FAILS the job
+    (from_json FAILFAST, the read_jsonl contract: a bad line must
+    never materialize as an all-null row that default-fill would
+    fabricate into data). Otherwise ``csv`` reads headerless CSV
+    through from_csv with the same option map as spark.read.csv.
+
+    ``bases`` and ``divisor`` must be the ones file_row_bases_split
+    was given: ``_row_id`` is the file base + split_chunk_base +
+    in-block line index + 1."""
+    jsonl = json_keys is not None
+    if jsonl:
+        parse = F.from_json(
+            F.col("_raw"),
+            T.StructType(
+                [T.StructField(k, T.StringType(), True) for k in json_keys]
+            ),
+            {"mode": "FAILFAST"},
         )
-    plan = spark.createDataFrame(
-        [(p, int(o), int(ln)) for p, o, ln in blocks],
-        "path string, off long, len long",
-    ).repartition(max(len(blocks), 1))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, off, ln in zip(pdf["path"], pdf["off"], pdf["len"]):
-                lines, idx = [], []
-                i = 0
-                for line in _extract_lines(path, int(off), int(ln)):
-                    if not line:
-                        continue  # univocity skipEmptyLines
-                    lines.append(line)
-                    idx.append(i)
-                    i += 1
-                if lines:
-                    yield pd.DataFrame(
-                        {
-                            "_bpath": path,
-                            "_boffset": int(off),
-                            "_bline": pd.Series(idx, dtype="int64"),
-                            "_raw": lines,
-                        }
-                    )
-
-    raw = plan.mapInPandas(extract, schema=_RAW_SCHEMA)
-
-    # same option map as spark.read.csv (csv_source.read_csv) minus
-    # reader-only keys — from_csv runs the same Univocity parser
-    opts = cfg.spark_options()
-    for k in ("multiLine", "header", "inferSchema"):
-        opts.pop(k, None)
-    extra = cfg.trim_last_sep
-    n = num_columns + (1 if extra else 0)
-    fschema = ", ".join(f"_c{i} string" for i in range(n))
-    parsed = raw.select(
-        F.from_csv(F.col("_raw"), fschema, opts).alias("_r"),
-        "_bpath",
-        "_boffset",
-        "_bline",
-    )
-    div = max(num_columns, 1)
-    s = max(int(split_bytes), 1)
-    # rowid = file_base + off/divisor + off/split + in-block index + 1
-    # (identical to assign_rowid_by_file_split's formula; the join on
-    # the tiny bases map is broadcast)
-    bases_df = spark.createDataFrame(
-        [(p, int(b)) for p, b in bases.items()],
-        "_bpath string, _fbase long",
-    )
-    out = parsed.join(F.broadcast(bases_df), "_bpath", "left").select(
-        (
-            F.coalesce(F.col("_fbase"), F.lit(0))
-            + F.floor(F.col("_boffset") / F.lit(div))
-            + F.floor(F.col("_boffset") / F.lit(s))
-            + F.col("_bline")
-            + F.lit(1)
-        ).alias("_row_id"),
-        *[F.col("_r").getField(f"_c{i}").alias(f"_c{i}") for i in range(num_columns)],
-    )
-    return out
-
-
-# A valid JSON-Lines row is at least "{}" plus its newline — 3 bytes
-# — so byte-capacity row-id reservations for JSONL blocks divide by 3
-# (the CSV path divides by the column count for the same reason:
-# every delimited row occupies >= #columns bytes).
-JSONL_MIN_LINE_BYTES = 3
-
-
-def read_jsonl_blocks(
-    spark: SparkSession,
-    blocks: list[tuple[str, int, int]],
-    ddl_names: list[str],
-    src_keys: list[str],
-    bases: dict[str, int],
-    split_bytes: int,
-) -> DataFrame:
-    """Read ONLY the given byte-range blocks of JSON-Lines files into
-    the same all-string DDL-named shape the batch JSONL lane produces
-    (pipeline read_table), plus ``_row_id`` per the SplitLargeFile
-    scheme with divisor JSONL_MIN_LINE_BYTES. One task per block.
-
-    ``src_keys`` is ONE resolved key-casing group (jsonl_source.
-    resolve_field_names output aligned with ``ddl_names``); the caller
-    groups blocks by their file's casing and unions the groups —
-    the same contract as the batch lane's per-group reader schemas.
-
-    Parity contract with the batch lane: utf-8 decode (real UTF-8 —
-    no latin1 re-decode), whitespace-only lines skipped (Spark's
-    text-based JSON reader drops blank lines), malformed lines FAIL
-    the job (from_json mode=FAILFAST — the read_jsonl contract: a bad
-    line must never materialize as an all-null row that default-fill
-    would fabricate into data)."""
-    plan = spark.createDataFrame(
-        [(p, int(o), int(ln)) for p, o, ln in blocks],
-        "path string, off long, len long",
-    ).repartition(max(len(blocks), 1))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, off, ln in zip(pdf["path"], pdf["off"], pdf["len"]):
-                lines, idx = [], []
-                i = 0
-                for line in _extract_lines(
-                    path, int(off), int(ln), encoding="utf-8"
-                ):
-                    if not line.strip():
-                        continue  # Spark's JSON text source drops blanks
-                    lines.append(line)
-                    idx.append(i)
-                    i += 1
-                if lines:
-                    yield pd.DataFrame(
-                        {
-                            "_bpath": path,
-                            "_boffset": int(off),
-                            "_bline": pd.Series(idx, dtype="int64"),
-                            "_raw": lines,
-                        }
-                    )
-
-    raw = plan.mapInPandas(extract, schema=_RAW_SCHEMA)
-    jschema = T.StructType(
-        [T.StructField(k, T.StringType(), True) for k in src_keys]
-    )
-    parsed = raw.select(
-        F.from_json(
-            F.col("_raw"), jschema, {"mode": "FAILFAST"}
-        ).alias("_r"),
-        "_bpath",
-        "_boffset",
-        "_bline",
-    )
-    div = JSONL_MIN_LINE_BYTES
-    s = max(int(split_bytes), 1)
-    bases_df = spark.createDataFrame(
-        [(p, int(b)) for p, b in bases.items()],
-        "_bpath string, _fbase long",
-    )
-    return parsed.join(F.broadcast(bases_df), "_bpath", "left").select(
-        (
-            F.coalesce(F.col("_fbase"), F.lit(0))
-            + F.floor(F.col("_boffset") / F.lit(div))
-            + F.floor(F.col("_boffset") / F.lit(s))
-            + F.col("_bline")
-            + F.lit(1)
-        ).alias("_row_id"),
-        *[
-            F.col("_r").getField(k).alias(n)
-            for k, n in zip(src_keys, ddl_names)
-        ],
+        fields = json_keys
+    else:
+        csv.validate()
+        if csv.header:
+            raise ValueError(
+                "block-split reads do not support header files; "
+                "the caller must gate on csv.header"
+            )
+        # same option map as spark.read.csv (csv_source.read_csv) minus
+        # reader-only keys — from_csv runs the same Univocity parser
+        opts = csv.spark_options()
+        for k in ("multiLine", "header", "inferSchema"):
+            opts.pop(k, None)
+        n = len(names) + (1 if csv.trim_last_sep else 0)
+        parse = F.from_csv(
+            F.col("_raw"), ", ".join(f"_c{i} string" for i in range(n)), opts
+        )
+        fields = [f"_c{i}" for i in range(len(names))]
+    offset = split_chunk_base(F.col("_boffset"), divisor, split_bytes)
+    parsed = _block_lines(spark, blocks, jsonl).withColumn("_r", parse)
+    return _file_base_rowids(parsed, bases, offset + F.col("_bline")).select(
+        ROWID,
+        *[F.col("_r").getField(f).alias(n) for f, n in zip(fields, names)],
     )

@@ -31,7 +31,6 @@ def read_csv(
     cfg: CSVConfig,
     num_columns: int | None = None,
     column_names: list[str] | None = None,
-    byte_faithful: bool = True,
 ) -> DataFrame:
     """Read CSV file(s) into an all-string DataFrame.
 
@@ -47,12 +46,11 @@ def read_csv(
     """
     cfg.validate()
     opts = cfg.spark_options()
-    if byte_faithful:
-        # Read ISO-8859-1: every byte maps 1:1 to a char, so BLOB
-        # columns with raw bytes survive the reader (the reference's
-        # parser is byte-oriented, csv_parser.rl). The cast layer
-        # re-decodes text columns to the table charset.
-        opts["encoding"] = "ISO-8859-1"
+    # Read ISO-8859-1: every byte maps 1:1 to a char, so BLOB columns
+    # with raw bytes survive the reader (the reference's parser is
+    # byte-oriented, csv_parser.rl). The cast layer re-decodes text
+    # columns to the table charset.
+    opts["encoding"] = "ISO-8859-1"
     reader = spark.read.options(**opts)
     # mydumper writes a trailing separator: the lexer DROPS the extra
     # field it produces (csv_parser.rl trim-last-sep), it does not
@@ -181,7 +179,6 @@ def read_csv_native(
     paths: list[str] | str,
     cfg: CSVConfig,
     column_specs: list,  # list[ColumnSpec] in FILE column order
-    byte_faithful: bool = True,
     strict: bool = False,
 ) -> NativeCsvFrame:
     """S4 fast path: typed read with corrupt-record fallback.
@@ -205,8 +202,7 @@ def read_csv_native(
     """
     cfg.validate()
     opts = cfg.spark_options()
-    if byte_faithful:
-        opts["encoding"] = "ISO-8859-1"
+    opts["encoding"] = "ISO-8859-1"  # byte-faithful, as read_csv
     opts["timestampFormat"] = _TS_FORMAT
     opts["dateFormat"] = _DATE_FORMAT
     corrupt = "_corrupt_record"

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..config import CSVConfig
+from ..operators.rowid import file_row_bases, metadata_df
+from .sql_dump_source import positional_frame, positional_schema
 
 _ESCAPES = {
     "0": "\0", "b": "\b", "n": "\n", "r": "\r", "t": "\t", "Z": "\x1a",
@@ -124,14 +126,6 @@ def parse_csv_text(
         yield from end_row()
 
 
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("_row_id", T.LongType(), False),
-        T.StructField("_fields", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-
 def read_csv_strict(
     spark: SparkSession,
     files: list[tuple[str, int]],
@@ -140,11 +134,13 @@ def read_csv_strict(
 ) -> tuple[DataFrame, list[str] | None]:
     """Parse CSV files with exact MySQL semantics.
 
-    Returns (df of (_row_id, _fields), header_columns_or_None).
-    Row-id bases are reserved per file like the .sql reader.
+    Returns (df of ``_row_id`` plus one string column per file
+    column, ``_c0..``, header_columns_or_None). The width is the
+    header's, or ``num_columns`` without one; short rows pad with
+    MISSING_FIELD (LOAD DATA fills defaults for missing trailing
+    fields) and long rows are cut, as in the .sql reader's columnar
+    shape. Row-id bases are reserved per file like the .sql reader.
     """
-    from ..operators.rowid import file_row_bases
-
     bases = file_row_bases(files, num_columns, is_sql=False)
 
     header_cols: list[str] | None = None
@@ -156,8 +152,6 @@ def read_csv_strict(
 
     # one partition per file directly — see metadata_df for why a
     # .repartition here would cost an extra shuffle job per read
-    from ..operators.rowid import metadata_df
-
     plan = metadata_df(
         spark,
         [(p, bases[p]) for p, _ in files],
@@ -172,22 +166,24 @@ def read_csv_strict(
 
     has_header = cfg.header
     cfg_copy = CSVConfig(**cfg.__dict__)
+    width = len(header_cols) if header_cols else num_columns
 
     def parse_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path, rid_base in zip(pdf["path"], pdf["base"]):
-                text = open(path, "rb").read().decode("latin-1")
+                with open(path, "rb") as f:
+                    text = f.read().decode("latin-1")
                 rows = parse_csv_text(text, cfg_copy)
                 if has_header:
                     next(rows, None)
-                out_rid, out_fields = [], []
-                rid = int(rid_base)
-                for r in rows:
-                    rid += 1
-                    out_rid.append(rid)
-                    out_fields.append(r)
-                yield pd.DataFrame(
-                    {"_row_id": out_rid, "_fields": out_fields}
-                )
+                rows = list(rows)
+                if rows:
+                    first = int(rid_base) + 1
+                    yield positional_frame(
+                        range(first, first + len(rows)), rows, width
+                    )
 
-    return plan.mapInPandas(parse_files, schema=OUTPUT_SCHEMA), header_cols
+    return (
+        plan.mapInPandas(parse_files, schema=positional_schema(width)),
+        header_cols,
+    )

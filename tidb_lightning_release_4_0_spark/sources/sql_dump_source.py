@@ -31,7 +31,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _TOKEN = re.compile(
@@ -454,6 +453,31 @@ OUTPUT_SCHEMA = T.StructType(
 )
 
 
+def positional_schema(n: int) -> T.StructType:
+    """``_row_id`` plus ``_c0.._c{n-1}`` strings: the row shape of the
+    .sql reader's columnar branch and of the strict CSV reader."""
+    return T.StructType(
+        [T.StructField("_row_id", T.LongType(), False)]
+        + [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n)]
+    )
+
+
+def positional_frame(row_ids, rows: list[list], n: int) -> pd.DataFrame:
+    """``rows`` in positional_schema(n) columns. A short row pads with
+    MISSING_FIELD (NOT None): `VALUES ()` means column defaults, an
+    explicit NULL literal means NULL (restore.go:1356-1406). A long
+    row is cut to ``n`` fields."""
+    if {len(r) for r in rows} != {n}:
+        rows = [
+            r if len(r) == n else (r + [MISSING_FIELD] * (n - len(r)))[:n]
+            for r in rows
+        ]
+    cols = list(zip(*rows)) or [()] * n
+    return pd.DataFrame(
+        {"_row_id": row_ids, **{f"_c{i}": c for i, c in enumerate(cols)}}
+    )
+
+
 _MARKERS = (b"\nINSERT", b"\nREPLACE")
 _READ_STEP = 8 << 20
 
@@ -698,23 +722,10 @@ def read_sql_dump(
                     # emit positional string columns directly: no
                     # list<string> Arrow arrays, no JVM-side getItem
                     # re-projection — measurably faster at 100 TB
-                    # where every extra pass over the row stream counts.
-                    # Short rows pad with MISSING_FIELD (NOT None):
-                    # `VALUES ()` means column defaults, an explicit
-                    # NULL literal means NULL (restore.go:1356-1406)
-                    n = int(num_columns or 0)
-                    if {len(r) for r in out_fields} != {n}:
-                        out_fields = [
-                            (r + [MISSING_FIELD] * (n - len(r)))[:n]
-                            if len(r) != n
-                            else r
-                            for r in out_fields
-                        ]
-                    cols_t = list(zip(*out_fields)) if out_fields else []
-                    data: dict = {"_row_id": out_rid}
-                    for i in range(n):
-                        data[f"_c{i}"] = cols_t[i] if cols_t else []
-                    yield pd.DataFrame(data)
+                    # where every extra pass over the row stream counts
+                    yield positional_frame(
+                        out_rid, out_fields, int(num_columns or 0)
+                    )
                 else:
                     yield pd.DataFrame(
                         {
@@ -725,32 +736,7 @@ def read_sql_dump(
                         }
                     )
 
-    if columnar:
-        out_schema = T.StructType(
-            [T.StructField("_row_id", T.LongType(), False)]
-            + [
-                T.StructField(f"_c{i}", T.StringType(), True)
-                for i in range(int(num_columns or 0))
-            ]
-        )
-    else:
-        out_schema = OUTPUT_SCHEMA
+    out_schema = (
+        positional_schema(int(num_columns or 0)) if columnar else OUTPUT_SCHEMA
+    )
     return plan.mapInPandas(parse_files, schema=out_schema)
-
-
-def project_fields(df: DataFrame, num_columns: int) -> DataFrame:
-    """Explode the _fields array into positional string columns.
-
-    A row SHORTER than num_columns marks the absent positions with
-    MISSING_FIELD (not NULL): `INSERT INTO t VALUES ()` means "use
-    the column defaults" in MySQL, while an explicit NULL literal
-    means NULL — the two must stay distinguishable through the
-    permutation layer (restore.go:1356-1406 default fill)."""
-    arr = F.col("_fields")
-    cols = [
-        F.when(F.size(arr) > i, arr.getItem(i))
-        .otherwise(F.lit(MISSING_FIELD))
-        .alias(f"_c{i}")
-        for i in range(num_columns)
-    ]
-    return df.select(F.col("_row_id"), *cols)
