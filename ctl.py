@@ -85,19 +85,21 @@ def main(argv: list[str] | None = None) -> int:
             print(f"bad engine spec {args.engine!r}; want db.tbl:ID",
                   file=sys.stderr)
             return 1
-        tdir = os.path.join(args.target_dir, table)
-        live = os.path.join(tdir, f"engine_{int(eid)}")
+        live = os.path.join(args.target_dir, table, f"engine_{int(eid)}")
         staged = live + ".staged"
-        sidecar = os.path.join(tdir, "_checksum.json")
         if args.cmd == "import-engine":
             # ce.Import analog: atomic publish of the closed-but-
             # unimported engine data; idempotent when already live
             if os.path.isdir(staged):
+                from tidb_lightning_release_4_0_spark.sinks.parquet_sink import (
+                    ParquetSink,
+                )
+
                 if os.path.isdir(live):
                     shutil.rmtree(live)
                 os.replace(staged, live)
-                if os.path.exists(sidecar):
-                    os.remove(sidecar)  # contents changed
+                # contents changed: the recorded checksum is stale
+                ParquetSink(args.target_dir).record_checksum(table, None, None)
                 print(f"imported engine {args.engine}")
                 return 0
             if os.path.isdir(live):

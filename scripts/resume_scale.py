@@ -107,24 +107,27 @@ def _run_restore(
     ).run()
     if not s.ok:
         raise RuntimeError(s.report())
-    r = next(iter(s.tables.values()))
-    return {"rows": r.rows, "alloc_base": r.alloc_base}
+    (name, r), = s.tables.items()
+    return {"table": name, "rows": r.rows, "alloc_base": r.alloc_base}
 
 
-def _sidecar_triple(sink: str) -> dict:
-    """The full-table kv_crc64 triple the pipeline persisted after
-    verification (prior XOR batch on resume — the table's checksum,
-    not just this run's engines)."""
-    import glob
+def _sidecar_triple(sink: str, table: str) -> dict:
+    """The full-table kv_crc64 triple the pipeline recorded in the sink
+    after verification (prior XOR batch on resume — the table's
+    checksum, not just this run's engines)."""
+    import dataclasses
 
-    paths = glob.glob(os.path.join(sink, "*", "_checksum.json"))
-    assert len(paths) == 1, paths
-    d = json.load(open(paths[0]))
-    return {
-        "crc_xor": d["crc_xor"],
-        "total_bytes": d["total_bytes"],
-        "total_kvs": d["total_kvs"],
-    }
+    from tidb_lightning_release_4_0_spark.plans.pipeline import (
+        RestoreController,
+    )
+    from tidb_lightning_release_4_0_spark.sinks.parquet_sink import (
+        ParquetSink,
+    )
+
+    tag = ("kv_crc64", RestoreController._CHECKSUM_CODEC_VERSION["kv_crc64"])
+    ck = ParquetSink(sink).delivered_checksum(table, tag)
+    assert ck is not None, f"no checksum recorded for {table} in {sink}"
+    return dataclasses.asdict(ck)
 
 
 def main() -> None:
@@ -228,7 +231,7 @@ def main() -> None:
     t0 = time.monotonic()
     ref = _run_restore(dump, sink_ref, "", strict=strict, mpb=mpb)
     ref_sec = time.monotonic() - t0
-    ref_triple = _sidecar_triple(sink_ref)
+    ref_triple = _sidecar_triple(sink_ref, ref["table"])
 
     # 2) the victim child — SIGKILL after the first engine lands
     child = subprocess.Popen(
@@ -285,7 +288,7 @@ def main() -> None:
     t0 = time.monotonic()
     res = _run_restore(dump, sink_kill, cp_path, strict=strict, mpb=mpb)
     res_sec = time.monotonic() - t0
-    res_triple = _sidecar_triple(sink_kill)
+    res_triple = _sidecar_triple(sink_kill, res["table"])
 
     ok = (
         res_triple == ref_triple

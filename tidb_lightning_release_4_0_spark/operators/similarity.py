@@ -658,6 +658,33 @@ def _np_corpus_encode(
     )
 
 
+def _vec_matrix(arr, nb: int, name: str):
+    """(nb, dim) float64 from an Arrow list<float> column: one flatten
+    + one astype (a zero-copy view of the values buffer; float32 ->
+    float64 widening is exact). The kernel needs one dimension per
+    batch, so a null or ragged row raises ValueError naming the column
+    instead of reaching the matrix math; zero-length vectors give an
+    (nb, 0) matrix."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if arr.null_count:
+        raise ValueError(
+            f"vector column {name!r}: {arr.null_count} of {nb} rows are "
+            "NULL; the numpy kernel needs a vector in every row"
+        )
+    lens = pc.list_value_length(arr).to_numpy()
+    if nb and lens.min() != lens.max():
+        raise ValueError(
+            f"vector column {name!r} is ragged: lengths {lens.min()} to "
+            f"{lens.max()} in one batch; the numpy kernel needs one "
+            "dimension"
+        )
+    dim = int(lens[0]) if nb else 0
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(nb, dim)
+
+
 def _np_pq_topk_fused(
     corpus: DataFrame,
     vec_col: str,
@@ -685,9 +712,9 @@ def _np_pq_topk_fused(
     50k per-row numpy objects (Spark's arrow->pandas conversion plus
     our re-stack). The embedding matrix now comes straight from the
     Arrow list values buffer (one zero-copy flatten + one astype;
-    0.004 s for the same 50k rows), with a per-row fallback for
-    ragged/null rows. float32 -> float64 is exact, so the kernel
-    sees bit-identical inputs either way.
+    0.004 s for the same 50k rows); a null or ragged row raises
+    (see _vec_matrix). float32 -> float64 is exact, so the kernel
+    sees bit-identical inputs.
 
     Exactness contract (same results as the join+window plan):
     - the ADC sum adds the M table entries in the JVM fold order
@@ -729,23 +756,6 @@ def _np_pq_topk_fused(
         probe = np.asarray(q_cells, dtype=np.int64)
         probe = probe.reshape(nq, probe.size // nq if nq else 0)
 
-    def _vec_matrix(arr, nb):
-        """(nb, dim) float64 from an Arrow list<float> column: one
-        flatten + one astype when the column is dense and rectangular
-        (a zero-copy view of the values buffer), per-row fallback
-        otherwise. float32 -> float64 widening is exact, so both
-        paths produce bit-identical matrices."""
-        import pyarrow.compute as pc
-
-        if arr.null_count == 0:
-            lens = pc.list_value_length(arr).to_numpy()
-            if nb and lens.min() == lens.max() and lens[0] > 0:
-                flat = arr.flatten().to_numpy(zero_copy_only=False)
-                return flat.astype(np.float64).reshape(nb, int(lens[0]))
-        return np.array(
-            [np.asarray(x, dtype=np.float64) for x in arr.to_pylist()]
-        )
-
     def fused(batches):
         import pyarrow as pa
 
@@ -757,7 +767,7 @@ def _np_pq_topk_fused(
             if not nb:
                 continue
             names = rb.schema.names
-            v = _vec_matrix(rb.column(names.index(vec_col)), nb)
+            v = _vec_matrix(rb.column(names.index(vec_col)), nb, vec_col)
             c_ids = (
                 rb.column(names.index(id_col))
                 .to_numpy(zero_copy_only=False)

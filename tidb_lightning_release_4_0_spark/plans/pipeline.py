@@ -22,9 +22,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import functools
-import json
 import logging
-import os
 import threading
 import time
 from dataclasses import dataclass, field
@@ -36,7 +34,7 @@ from pyspark.sql import types as T
 from ..config import Config, strict_sql_mode
 from ..functions.checksum import Checksum
 from ..operators.permutation import apply_permutation
-from ..sinks.base import Sink
+from ..sinks.base import Sink, reject_duplicate_keys
 from ..sinks.memory_sink import MemorySink
 from ..sinks.parquet_sink import ParquetSink
 from ..sources.csv_source import read_csv
@@ -892,81 +890,9 @@ class RestoreController:
     # ENUM/SET/BIT/JSON/TIME datum kinds — a type previously
     # rejected, so r8 values where r7 produced any are identical, but
     # the version records the contract). Algos not listed are
-    # version None (stable since introduction).
+    # version None (stable since introduction). The delivered-table
+    # checksum is recorded in the sink under (algo, codec_version).
     _CHECKSUM_CODEC_VERSION = {"kv_crc64": 2, "kv_crc64_v2": 2}
-
-    # -- delivered-table checksum sidecar (incremental C2/C3) ---------
-    # The reference compares the run's local checksum with ADMIN
-    # CHECKSUM over the live table (restore.go:971-1010); for
-    # incremental bulk-file merges the expected value is prior XOR
-    # batch, so the delivered checksum is persisted next to the data
-    # (underscore-prefixed: parquet readers ignore it).
-
-    def _checksum_sidecar(self, name: str) -> str | None:
-        if not isinstance(self.sink, ParquetSink):
-            return None
-        return os.path.join(self.sink._path(name), "_checksum.json")
-
-    def _load_prior_checksum(self, name: str) -> Checksum | None:
-        """The delivered table's checksum before this run: the monoid
-        identity for a fresh table; None when data exists but its
-        checksum is unknown (delivered without a sidecar, or the
-        algo changed) — the merge comparison is then skipped."""
-        sc = self._checksum_sidecar(name)
-        if sc is None:
-            return None
-        # finish any crash-interrupted merge publish BEFORE deciding
-        # whether prior data exists — a stranded .merged would read
-        # as "fresh table" (identity checksum) here while the sink's
-        # own recovery later restored the rows, failing verification
-        ParquetSink._recover_merge(os.path.dirname(sc))
-        if not ParquetSink._has_data(os.path.dirname(sc)):
-            return Checksum(0, 0, 0)
-        try:
-            with open(sc) as f:
-                d = json.load(f)
-            if d.get("algo") != self.cfg.checksum_algo:
-                return None
-            # byte-semantics version: a sidecar persisted by an older
-            # codec (e.g. pre-index-KV kv_crc64 bytes under the same
-            # algo name) must read as "unknown prior", not as a value
-            # the next incremental run fails verification against
-            if d.get("codec_version") != self._CHECKSUM_CODEC_VERSION.get(
-                self.cfg.checksum_algo
-            ):
-                return None
-            return Checksum(
-                int(d["crc_xor"]),
-                int(d["total_bytes"]),
-                int(d["total_kvs"]),
-            )
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def _store_checksum_sidecar(self, name: str, ck: Checksum) -> None:
-        sc = self._checksum_sidecar(name)
-        if sc is None or not os.path.isdir(os.path.dirname(sc)):
-            return
-        tmp = sc + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "algo": self.cfg.checksum_algo,
-                    "codec_version": self._CHECKSUM_CODEC_VERSION.get(
-                        self.cfg.checksum_algo
-                    ),
-                    "crc_xor": ck.crc_xor,
-                    "total_bytes": ck.total_bytes,
-                    "total_kvs": ck.total_kvs,
-                },
-                f,
-            )
-        os.replace(tmp, sc)
-
-    def _drop_checksum_sidecar(self, name: str) -> None:
-        sc = self._checksum_sidecar(name)
-        if sc and os.path.exists(sc):
-            os.remove(sc)
 
     def _dedup_may_drop(self, schema: TableSchema) -> bool:
         """Keyed replace/ignore dedup and incremental merges change the
@@ -1366,12 +1292,13 @@ class RestoreController:
                         schema.partition_count,
                     )
             dedup_may_drop = self._dedup_may_drop(schema)
+            algo = self.cfg.checksum_algo
+            ck_tag = (algo, self._CHECKSUM_CODEC_VERSION.get(algo))
             prior_ck = None
             if self.cfg.incremental and self.cfg.checksum:
-                # the sidecar must be read BEFORE the sink rewrites
-                # the table dir (the merge replaces it, sidecar and
-                # all)
-                prior_ck = self._load_prior_checksum(name)
+                # read BEFORE the sink rewrites the table (the merge
+                # replaces the recorded checksum with the directory)
+                prior_ck = self.sink.delivered_checksum(name, ck_tag)
 
             plan = self._plan_delivery(name, meta, schema)
             log.info("table %s: %s grain (%s)", name, plan.grain, plan.reason)
@@ -1392,17 +1319,7 @@ class RestoreController:
             if need_remote or dedup_may_drop or post_dup_check:
                 back = self.sink.read_back(self.spark, name)
                 if post_dup_check:
-                    dup = (
-                        back.groupBy(*keys)
-                        .count()
-                        .filter(F.col("count") > 1)
-                        .limit(1)
-                        .collect()
-                    )
-                    if dup:
-                        raise ValueError(
-                            f"Duplicate entry for key {dup[0]}"
-                        )
+                    reject_duplicate_keys(back, keys)
                 id_col = self._alloc_id_column(back, schema)
                 # incremental C2/C3: when the merge cannot drop rows
                 # (error mode rejects overlap; PK-less appends), the
@@ -1457,19 +1374,17 @@ class RestoreController:
                 # with zero extra jobs)
                 base = int(obs_max_id) + 1
             # persist the delivered-table checksum so the NEXT
-            # incremental run can verify prior XOR batch == read-back
-            if (
-                self.cfg.checksum
-                and local is not None
-                and isinstance(self.sink, ParquetSink)
-            ):
-                if dedup_may_drop and not inc_verifiable:
-                    # replace/ignore merges drop rows: the delivered
-                    # checksum is unknown — a stale sidecar would make
-                    # a later error-mode increment fail C3
-                    self._drop_checksum_sidecar(name)
-                else:
-                    self._store_checksum_sidecar(name, expected_ck)
+            # incremental run can verify prior XOR batch == read-back;
+            # replace/ignore merges drop rows, so theirs is unknown — a
+            # stale record would make a later error-mode increment
+            # fail C3
+            if self.cfg.checksum and local is not None:
+                self.sink.record_checksum(
+                    name,
+                    ck_tag,
+                    None if dedup_may_drop and not inc_verifiable
+                    else expected_ck,
+                )
             self.cp.set_alloc_base(name, base)
             if self.cfg.checksum:
                 self.cp.set_table_status(name, Status.CHECKSUMMED)

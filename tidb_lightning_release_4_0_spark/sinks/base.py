@@ -15,13 +15,32 @@ from abc import ABC, abstractmethod
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..functions.checksum import Checksum
 
 
 @dataclass
 class SinkResult:
     table: str
     rows: int
-    bytes_written: int = 0
+
+
+def reject_duplicate_keys(
+    df: DataFrame, keys: list[str], existing: DataFrame | None = None
+) -> None:
+    """K3 ``error`` mode: raise ``Duplicate entry for key …`` when a key
+    repeats in ``df`` or, given ``existing`` (the delivered table of an
+    incremental merge), also appears there; one limit-1 job each."""
+    dup = (
+        df.groupBy(*keys).count().filter(F.col("count") > 1).limit(1)
+    ).collect()
+    if not dup and existing is not None:
+        dup = (
+            df.select(*keys).join(existing.select(*keys), on=keys).limit(1)
+        ).collect()
+    if dup:
+        raise ValueError(f"Duplicate entry for key {dup[0]}")
 
 
 class Sink(ABC):
@@ -89,3 +108,17 @@ class Sink(ABC):
 
     def cleanup(self, table: str) -> None:
         """Drop staged state (CleanupEngine analog)."""
+
+    def delivered_checksum(self, table: str, tag: tuple) -> Checksum | None:
+        """The checksum recorded under ``tag`` (the caller's
+        ``(algo, codec_version)``) for the delivered table, which an
+        incremental run verifies prior XOR batch against
+        (restore.go:971-1010): the identity when nothing is delivered,
+        None when unknown (the default)."""
+        return None
+
+    def record_checksum(
+        self, table: str, tag: tuple, ck: Checksum | None
+    ) -> None:
+        """Persist the verified delivered checksum under ``tag`` for the
+        next incremental run; ``ck=None`` forgets it. Default: no-op."""

@@ -9,14 +9,16 @@ for `replace`/`ignore` using the table's key columns.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .base import Sink, SinkResult
+from ..functions.checksum import Checksum
+from .base import Sink, SinkResult, reject_duplicate_keys
 
 
 class ParquetSink(Sink):
@@ -106,22 +108,27 @@ class ParquetSink(Sink):
         the dump's structure immediately; the entry points at the
         (still empty) sink path and becomes queryable as engines
         deliver."""
-        db, tbl = self._catalog_ident(table)
-        path = self._path(table)
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(self._path(table), exist_ok=True)
         st = schema.struct_type
         if not schema.has_int_pk:
             from ..operators.permutation import ROWID_COL
             from pyspark.sql import types as T
 
             st = st.add(T.StructField(ROWID_COL, T.LongType()))
+        self._register(spark, table, st)
+
+    def _register(self, spark: SparkSession, table: str, schema) -> None:
+        """(Re-)create the catalog entry over the sink path; recursive
+        lookup, because the engine-grain layout nests files under
+        engine_<n>/."""
+        db, tbl = self._catalog_ident(table)
         spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
         spark.sql(f"DROP TABLE IF EXISTS `{db}`.`{tbl}`")
         spark.catalog.createTable(
             f"{db}.{tbl}",
-            path=path,
+            path=self._path(table),
             source="parquet",
-            schema=st,
+            schema=schema,
             recursiveFileLookup="true",
         )
 
@@ -229,38 +236,60 @@ class ParquetSink(Sink):
             ["_p"],
         )
 
+    def _survivors(
+        self, df: DataFrame, keys: list[str], order: Column
+    ) -> DataFrame:
+        """One row per key (K3 dup modes, tidb.go:54-62): ``replace``
+        keeps the row with the highest ``order``, ``ignore`` the
+        lowest."""
+        direction = (
+            order.desc() if self.on_duplicate == "replace" else order.asc()
+        )
+        w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(direction)
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
     @staticmethod
-    def _invalidate_sidecar(path: str) -> None:
-        """Any fresh delivery invalidates the delivered-checksum
-        sidecar (the pipeline re-stores it after verification; a
-        stale one would poison a later incremental C3). The caller
-        reads the prior value BEFORE write() runs."""
-        sc = os.path.join(path, "_checksum.json")
-        if os.path.exists(sc):
-            os.remove(sc)
+    def _stage_unique(
+        df: DataFrame,
+        path: str,
+        keys: list[str],
+        pcols=(),
+        existing: DataFrame | None = None,
+    ) -> DataFrame:
+        """``error`` mode: stage ``df`` in ``path.staging`` and return
+        the staged copy once its keys pass reject_duplicate_keys. The
+        probe scans staged files, not a source re-parse; a rejected
+        batch is removed and never reaches ``path`` (tidb.go:271-316
+        errors mid-INSERT without clobbering the target either)."""
+        stage = path + ".staging"
+        shutil.rmtree(stage, ignore_errors=True)
+        df.write.mode("overwrite").partitionBy(*pcols).parquet(stage)
+        staged = df.sparkSession.read.parquet(stage)
+        try:
+            reject_duplicate_keys(staged, keys, existing)
+        except ValueError:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
+        return staged
 
     def write(self, df: DataFrame, table: str) -> SinkResult:
         # No up-front sidecar invalidation here: a REJECTED batch (any
         # dup mode) must leave the delivered checksum armed, and every
         # successful non-incremental publish replaces the whole dir —
         # which removes a stale sidecar implicitly. Only write_engine
-        # needs an explicit invalidate (engine subdirs never clear the
-        # table root).
+        # and the partition swap drop it explicitly (neither clears
+        # the table root).
         path = self._path(table)
         self._recover_merge(path)
         keys = self.key_columns.get(table)
         if keys and self.on_duplicate in ("replace", "ignore"):
-            # keyed upsert semantics (K3 dup modes, tidb.go:54-62):
-            # replace -> last row per key wins; ignore -> first kept.
-            # _row_id gives the deterministic arrival order.
+            # _row_id gives the deterministic arrival order
             order = F.col("_row_id") if "_row_id" in df.columns else F.lit(0)
-            direction = order.desc() if self.on_duplicate == "replace" else order.asc()
-            w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(direction)
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+            df = self._survivors(df, keys, order)
         if "_row_id" in df.columns:
             df = df.drop("_row_id")  # arrival order served its purpose
         if self.incremental and self._has_data(path):
@@ -268,44 +297,18 @@ class ParquetSink(Sink):
         if self.bucket_buckets > 0 and keys:
             return self._write_bucketed(df, table, path, keys)
         df = self._sorted(df, table)
+        pdf, pcols = self._partitioned(df, table)
         if keys and self.on_duplicate == "error":
-            # dup detection runs against a STAGING copy, key-pruned, so
-            # the whole source parse/cast pipeline isn't re-run (for
-            # .sql dumps that second pass was a full Python-lexer
-            # re-read). Only a validated result is published — a
-            # duplicate input or a crash mid-check leaves prior good
-            # data at the destination untouched (the reference's tidb
-            # backend errors mid-INSERT without clobbering the target,
-            # tidb.go:271-316).
-            tmp = path + ".staging"
-            shutil.rmtree(tmp, ignore_errors=True)
-            pdf, pcols = self._partitioned(df, table)
-            pdf.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
-            spark = df.sparkSession
-            dup = (
-                spark.read.parquet(tmp)
-                .groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-            ).collect()
-            if dup:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise ValueError(f"Duplicate entry for key {dup[0]}")
-            shutil.rmtree(path, ignore_errors=True)
-            os.replace(tmp, path)
-            self._record_schema(table, pdf, pcols)
+            # only a validated result is published: a duplicate input
+            # or a crash mid-check leaves the prior table untouched
+            self._stage_unique(pdf, path, keys, pcols)
+            os.replace(path + ".staging", path + ".merged")
+            self._publish(path)
         else:
-            pdf, pcols = self._partitioned(df, table)
             pdf.write.mode("overwrite").partitionBy(*pcols).parquet(path)
-            self._record_schema(table, pdf, pcols)
+        self._record_schema(table, pdf, pcols)
         # rows are reported by the caller's Observation (no extra scan)
-        size = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-        )
-        return SinkResult(table=table, rows=-1, bytes_written=size)
+        return SinkResult(table=table, rows=-1)
 
     def _write_bucketed(
         self, df: DataFrame, table: str, path: str, keys: list[str]
@@ -325,32 +328,15 @@ class ParquetSink(Sink):
         only validated data reaches the target."""
         # conservative: bucketed layouts re-infer schema on read_back
         self._delivered_schema.pop(table, None)
-        spark = df.sparkSession
-        db, tbl = self._catalog_ident(table)
-        tmp = None
         if self.on_duplicate == "error":
-            tmp = path + ".staging"
-            shutil.rmtree(tmp, ignore_errors=True)
-            df.write.mode("overwrite").parquet(tmp)
-            dup = (
-                spark.read.parquet(tmp)
-                .groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-            ).collect()
-            if dup:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise ValueError(f"Duplicate entry for key {dup[0]}")
-            df = spark.read.parquet(tmp)
-        res = self._publish_bucketed(df, table, path, keys)
-        if tmp:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return res
+            df = self._stage_unique(df, path, keys)
+        self._publish_bucketed(df, table, path, keys)
+        shutil.rmtree(path + ".staging", ignore_errors=True)
+        return SinkResult(table=table, rows=-1)
 
     def _publish_bucketed(
         self, df: DataFrame, table: str, path: str, keys: list[str]
-    ) -> SinkResult:
+    ) -> None:
         """Bucketed write of already-validated data + catalog
         registration. The input must NOT be a live read of ``path``
         (saveAsTable overwrites it)."""
@@ -374,18 +360,26 @@ class ParquetSink(Sink):
             .sortBy(*keys)
             .saveAsTable(f"{db}.{tbl}")
         )
-        size = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-        )
-        return SinkResult(table=table, rows=-1, bytes_written=size)
+
+    @staticmethod
+    def _publish(path: str) -> None:
+        """Promote the finished ``path.merged`` to ``path``: path ->
+        .old, .merged -> path, rmtree(.old); _recover_merge repairs
+        either crash window. Never rmtree(path) first: a crash there
+        makes the next run see no table, write its batch alone and,
+        with the checksum sidecar gone, pass C3 verification while
+        dropping every previously delivered row."""
+        old = path + ".old"
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.isdir(path):
+            os.replace(path, old)
+        os.replace(path + ".merged", path)
+        shutil.rmtree(old, ignore_errors=True)
 
     @staticmethod
     def _recover_merge(path: str) -> None:
-        """Finish a merge publish interrupted mid-swap. The publish
-        sequence is path->path.old, path.merged->path, rm path.old;
-        a crash in either window leaves a state this repairs:
+        """Finish a _publish interrupted mid-swap; a crash in either
+        window leaves a state this repairs:
 
         - `path` missing + `.merged` present: the fully-merged output
           survived but was never promoted — promote it now, so the
@@ -421,9 +415,8 @@ class ParquetSink(Sink):
         - no PK: append; `_tidb_rowid` continues from the delivered
           max (the AllocBase continuation, C4)
 
-        The merge rewrites the table through a staging dir and
-        publishes with an atomic rename — a crash mid-merge leaves
-        the previous table intact.
+        The merge is written to ``path.merged`` and promoted by
+        _publish — a crash mid-merge leaves the previous table intact.
 
         Partition pruning: when the table is hash-partitioned
         (`partition_spec`) on a PK column, ONLY the partitions that
@@ -469,45 +462,14 @@ class ParquetSink(Sink):
             ).parquet(path)
             if "_p" in existing.columns:
                 existing = existing.drop("_p")  # re-derived at write
-        stage = path + ".staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        if keys:
-            if self.on_duplicate == "error":
-                df.write.mode("overwrite").parquet(stage)
-                batch = spark.read.parquet(stage)
-                dup = (
-                    batch.groupBy(*keys)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                ).collect()
-                if not dup:
-                    dup = (
-                        batch.select(*keys)
-                        .join(existing.select(*keys), on=keys)
-                        .limit(1)
-                    ).collect()
-                if dup:
-                    shutil.rmtree(stage, ignore_errors=True)
-                    raise ValueError(f"Duplicate entry for key {dup[0]}")
-                merged = existing.unionByName(batch)
-            else:
-                u = existing.withColumn("_gen", F.lit(0)).unionByName(
-                    df.withColumn("_gen", F.lit(1))
-                )
-                direction = (
-                    F.col("_gen").desc()
-                    if self.on_duplicate == "replace"
-                    else F.col("_gen").asc()
-                )
-                w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-                    direction
-                )
-                merged = (
-                    u.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn", "_gen")
-                )
+        if keys and self.on_duplicate == "error":
+            batch = self._stage_unique(df, path, keys, existing=existing)
+            merged = existing.unionByName(batch)
+        elif keys:
+            u = existing.withColumn("_gen", F.lit(0)).unionByName(
+                df.withColumn("_gen", F.lit(1))
+            )
+            merged = self._survivors(u, keys, F.col("_gen")).drop("_gen")
         else:
             from ..operators.permutation import ROWID_COL
 
@@ -528,19 +490,18 @@ class ParquetSink(Sink):
         merged = self._sorted(merged, table)
         pdf, pcols = self._partitioned(merged, table)
         pdf.write.mode("overwrite").partitionBy(*pcols).parquet(out)
-        shutil.rmtree(stage, ignore_errors=True)
+        shutil.rmtree(path + ".staging", ignore_errors=True)
         if self.bucket_buckets > 0 and keys:
-            res = self._publish_bucketed(
+            self._publish_bucketed(
                 spark.read.parquet(out), table, path, keys
             )
             shutil.rmtree(out, ignore_errors=True)
-            return res
-        if pvals is not None:
+        elif pvals is not None:
             # swap only the hash partitions the increment touched;
             # every other partition dir is left byte-identical. The
             # sidecar no longer describes the merged table — drop it
             # now (the pipeline re-stores it after verification)
-            self._invalidate_sidecar(path)
+            self.record_checksum(table, None, None)
             for v in pvals:
                 sub = f"_p={v}"
                 src = os.path.join(out, sub)
@@ -550,27 +511,8 @@ class ParquetSink(Sink):
                     os.replace(src, dst)
             shutil.rmtree(out, ignore_errors=True)
         else:
-            # Swap that never leaves `path` absent (a crash between a
-            # rmtree(path) and the rename would make the NEXT run see
-            # _has_data()==False, write the new batch alone, and —
-            # because the checksum sidecar died with the dir — pass C3
-            # verification while silently dropping every previously
-            # delivered row). Order: path -> .old, .merged -> path,
-            # rmtree(.old). Each window is recoverable: `.merged`
-            # leftover with `path` missing is re-published by
-            # _recover_merge() at the next write; a leftover `.old` is
-            # garbage-collected there too.
-            old = path + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(path, old)
-            os.replace(out, path)
-            shutil.rmtree(old, ignore_errors=True)
-        size = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-        )
-        return SinkResult(table=table, rows=-1, bytes_written=size)
+            self._publish(path)
+        return SinkResult(table=table, rows=-1)
 
     def write_engine(
         self, df: DataFrame, table: str, engine_id: int
@@ -584,19 +526,14 @@ class ParquetSink(Sink):
         onto directory-grain replace. Keyed dedup modes are handled by
         the caller across engines."""
         path = os.path.join(self._path(table), f"engine_{int(engine_id)}")
-        self._invalidate_sidecar(self._path(table))
+        self.record_checksum(table, None, None)
         if "_row_id" in df.columns:
             df = df.drop("_row_id")
         df = self._sorted(df, table)
         df, pcols = self._partitioned(df, table)
         df.write.mode("overwrite").partitionBy(*pcols).parquet(path)
         self._record_schema(table, df, pcols)
-        size = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-        )
-        return SinkResult(table=table, rows=-1, bytes_written=size)
+        return SinkResult(table=table, rows=-1)
 
     def write_index(
         self, df: DataFrame, table: str, index_name: str, sort_cols: list[str]
@@ -674,17 +611,16 @@ class ParquetSink(Sink):
         want = max(int(total / self.target_file_bytes), 1)
         if want < len(files) / 2:  # only rewrite when clearly fragmented
             df = spark.read.option("recursiveFileLookup", "true").parquet(path)
-            tmp = path + ".compact"
+            tmp = path + ".merged"
             df.coalesce(want).write.mode("overwrite").parquet(tmp)
             if os.path.isdir(idx_dir):
                 shutil.move(idx_dir, os.path.join(tmp, "_indexes"))
-            sidecar = os.path.join(path, "_checksum.json")
+            sidecar = os.path.join(path, self._SIDECAR)
             if os.path.exists(sidecar):
                 # compaction does not change content: the delivered
                 # checksum stays valid
-                shutil.move(sidecar, os.path.join(tmp, "_checksum.json"))
-            shutil.rmtree(path)
-            os.replace(tmp, path)
+                shutil.move(sidecar, os.path.join(tmp, self._SIDECAR))
+            self._publish(path)
 
     def analyze(
         self, spark: SparkSession, table: str, noscan: bool = False
@@ -717,21 +653,69 @@ class ParquetSink(Sink):
                     f"ANALYZE TABLE `{db}`.`{tbl}` {stmt_tail}"
                 )
                 return True
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
-        spark.sql(f"DROP TABLE IF EXISTS `{db}`.`{tbl}`")
         # re-register with the DELIVERED schema (authoritative over
-        # the DDL prediction init_schema used) + recursive lookup:
-        # the engine-grain layout nests files under engine_<n>/
-        schema = self.read_back(spark, table).schema
-        spark.catalog.createTable(
-            f"{db}.{tbl}",
-            path=path,
-            source="parquet",
-            schema=schema,
-            recursiveFileLookup="true",
-        )
+        # the DDL prediction init_schema used)
+        self._register(spark, table, self.read_back(spark, table).schema)
         spark.sql(f"ANALYZE TABLE `{db}`.`{tbl}` {stmt_tail}")
         return True
 
     def cleanup(self, table: str) -> None:
         shutil.rmtree(self._path(table), ignore_errors=True)
+
+    # -- delivered-table checksum sidecar (incremental C2/C3) ---------
+    # The reference compares the run's local checksum with ADMIN
+    # CHECKSUM over the live table (restore.go:971-1010); for
+    # incremental bulk-file merges the expected value is prior XOR
+    # batch, so the delivered checksum is persisted next to the data
+    # (underscore-prefixed: parquet readers ignore it). A full publish
+    # replaces the directory and the sidecar with it; engine writes
+    # and partition swaps drop it explicitly.
+    _SIDECAR = "_checksum.json"
+
+    def delivered_checksum(self, table: str, tag: tuple) -> Checksum | None:
+        """A sidecar recorded under another ``(algo, codec_version)``
+        tag — another algo, or an older codec's bytes under the same
+        algo name — reads as unknown, not as a value the next
+        incremental run would fail verification against."""
+        path = self._path(table)
+        # finish any crash-interrupted publish BEFORE deciding whether
+        # prior data exists — a stranded .merged would read as a fresh
+        # table (identity checksum) here while the write's own
+        # recovery later restored the rows, failing verification
+        self._recover_merge(path)
+        if not self._has_data(path):
+            return Checksum(0, 0, 0)
+        try:
+            with open(os.path.join(path, self._SIDECAR)) as f:
+                d = json.load(f)
+            if (d.get("algo"), d.get("codec_version")) != tag:
+                return None
+            return Checksum(
+                int(d["crc_xor"]), int(d["total_bytes"]), int(d["total_kvs"])
+            )
+        except (OSError, ValueError, KeyError):
+            return None
+
+    def record_checksum(
+        self, table: str, tag: tuple, ck: Checksum | None
+    ) -> None:
+        sc = os.path.join(self._path(table), self._SIDECAR)
+        if ck is None:
+            if os.path.exists(sc):
+                os.remove(sc)
+            return
+        if not os.path.isdir(os.path.dirname(sc)):
+            return
+        algo, codec_version = tag
+        with open(sc + ".tmp", "w") as f:
+            json.dump(
+                {
+                    "algo": algo,
+                    "codec_version": codec_version,
+                    "crc_xor": ck.crc_xor,
+                    "total_bytes": ck.total_bytes,
+                    "total_kvs": ck.total_kvs,
+                },
+                f,
+            )
+        os.replace(sc + ".tmp", sc)

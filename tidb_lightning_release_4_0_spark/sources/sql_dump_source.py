@@ -564,19 +564,18 @@ def read_sql_dump(
     from ..operators.rowid import file_row_bases
 
     divisor = max((num_columns or 0) + 2, 1)
-    # row-id bases always come from the table's FULL file list:
-    # engine-grain resume reads a subset of files per call, and the
-    # ids of a file must not depend on which other files ride along
-    # (checkpoint resume parity, restore.go:861-870)
-    base_map = file_row_bases(
-        all_files if all_files is not None else files,
-        num_columns or 0,
-        is_sql=True,
-    )
+    # row-id bases AND the split size always come from the table's
+    # FULL file list: engine-grain resume reads a subset of files per
+    # call, and the ids of a file must not depend on which other files
+    # ride along (checkpoint resume parity, restore.go:861-870) — a
+    # file read whole gets dense ids from its base, a split one
+    # base + statement_offset // divisor
+    table_files = all_files if all_files is not None else files
+    base_map = file_row_bases(table_files, num_columns or 0, is_sql=True)
 
     if split_bytes is None:
         par = max(spark.sparkContext.defaultParallelism, 1)
-        total = sum(sz for _, sz in files)
+        total = sum(sz for _, sz in table_files)
         split_bytes = min(64 << 20, max(1 << 20, total // par + 1))
 
     chunks: list[tuple[str, int, int, int]] = []
