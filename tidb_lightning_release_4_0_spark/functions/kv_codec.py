@@ -968,6 +968,7 @@ def kv_hash_columns(
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
+    from ..session import settle_import_caches
     from . import kv_codec_np as KNP
 
     if col_ids is None:
@@ -1255,6 +1256,7 @@ def kv_hash_columns(
 
     @pandas_udf(out_type)
     def _np_kernel(batch: pd.Series) -> pd.Series:
+        settle_import_caches()
         h, nb = KNP.kv_pairs_crc_np(
             batch, list(cols), dtypes, "__h", list(col_ids),
             table_id, default_null_ids, idx_specs_named,

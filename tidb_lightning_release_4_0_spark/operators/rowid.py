@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..session import settle_import_caches
 from .permutation import session_plan_cache
 
 ROWID = "_row_id"
@@ -86,6 +87,7 @@ _PARTITION_CAPACITY = 1 << 33
 
 def _local_index_mapper(schema):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_import_caches()
         seen = 0
         for pdf in batches:
             n = len(pdf)

@@ -37,6 +37,7 @@ from ..operators.permutation import apply_permutation
 from ..sinks.base import Sink, reject_duplicate_keys
 from ..sinks.memory_sink import MemorySink
 from ..sinks.parquet_sink import ParquetSink
+from ..sources import literal_paths
 from ..sources.csv_source import read_csv
 from ..sources.mydump_loader import MDTableMeta, discover_cfg
 from ..sources.schema_reader import TableSchema, load_table_schema
@@ -444,7 +445,9 @@ class RestoreController:
             from ..operators.permutation import ROWID_COL, default_column
             from ..operators.rowid import assign_rowid_mono
 
-            pdf = self.spark.read.parquet(*[f.path for f in pq_files])
+            pdf = self.spark.read.parquet(
+                *literal_paths([f.path for f in pq_files])
+            )
             by_lower = {c.lower(): c for c in pdf.columns}
             explicit_rowid = by_lower.get(ROWID_COL)
             needs_rowid = (

@@ -56,6 +56,7 @@ from ..operators.rowid import (
     metadata_df,
     split_chunk_base,
 )
+from ..session import settle_import_caches
 
 _TAIL_CHUNK = 64 * 1024
 
@@ -187,6 +188,7 @@ def _block_lines(
     encoding = "utf-8" if jsonl else "latin-1"
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_import_caches()
         for pdf in batches:
             for path, off, ln in zip(pdf["path"], pdf["off"], pdf["len"]):
                 off = int(off)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CSVConfig
+from . import literal_paths
 
 
 def read_csv(
@@ -32,7 +33,8 @@ def read_csv(
     num_columns: int | None = None,
     column_names: list[str] | None = None,
 ) -> DataFrame:
-    """Read CSV file(s) into an all-string DataFrame.
+    """Read CSV file(s) into an all-string DataFrame. Paths are
+    literal: glob characters in them match themselves.
 
     Column naming: with ``cfg.header`` the file's header row names the
     columns (order only — never types, csv_parser.go:101-118);
@@ -63,20 +65,20 @@ def read_csv(
         schema = T.StructType(
             [T.StructField(c, T.StringType(), True) for c in names]
         )
-        df = reader.schema(schema).csv(paths)
+        df = reader.schema(schema).csv(literal_paths(paths))
     elif num_columns:
         n = num_columns + (1 if extra else 0)
         schema = T.StructType(
             [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n)]
         )
-        df = reader.schema(schema).csv(paths)
+        df = reader.schema(schema).csv(literal_paths(paths))
         if extra:
             extra = f"_c{num_columns}"
     else:
         # infer column COUNT only (types stay string); with a trailing
         # separator the inferred frame already carries the extra field
         # as its last column
-        df = reader.option("inferSchema", "false").csv(paths)
+        df = reader.option("inferSchema", "false").csv(literal_paths(paths))
         if cfg.trim_last_sep:
             extra = df.columns[-1]
     if extra:
@@ -223,7 +225,7 @@ def read_csv_native(
     fields.append(T.StructField(corrupt, T.StringType(), True))
     schema = T.StructType(fields)
 
-    df = spark.read.options(**opts).schema(schema).csv(paths)
+    df = spark.read.options(**opts).schema(schema).csv(literal_paths(paths))
     if cfg.trim_last_sep:
         df = df.drop("_trailing_sep")
 

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from ..config import CSVConfig
 from ..operators.rowid import file_row_bases, metadata_df
+from ..session import settle_import_caches
 from .sql_dump_source import positional_frame, positional_schema
 
 _ESCAPES = {
@@ -169,6 +170,7 @@ def read_csv_strict(
     width = len(header_cols) if header_cols else num_columns
 
     def parse_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_import_caches()
         for pdf in batches:
             for path, rid_base in zip(pdf["path"], pdf["base"]):
                 with open(path, "rb") as f:

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import literal_paths
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -34,7 +36,8 @@ def read_jsonl(
     schema: T.StructType | str,
     keep_corrupt: bool = False,
 ) -> DataFrame:
-    """Read JSONL file(s) with an explicit schema.
+    """Read JSONL file(s) with an explicit schema. Paths are literal:
+    glob characters in them match themselves.
 
     ``schema``: StructType or DDL string ("doc_id bigint, text
     string, ..."). ``keep_corrupt=True`` appends ``_corrupt_record``
@@ -50,7 +53,7 @@ def read_jsonl(
         return (
             spark.read.option("mode", "FAILFAST")
             .schema(schema)
-            .json(paths)
+            .json(literal_paths(paths))
         )
     fields = list(schema.fields) + [
         T.StructField(CORRUPT_COL, T.StringType(), True)
@@ -59,7 +62,7 @@ def read_jsonl(
         spark.read.option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .schema(T.StructType(fields))
-        .json(paths)
+        .json(literal_paths(paths))
     )
 
 

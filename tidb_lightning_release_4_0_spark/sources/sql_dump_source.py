@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import settle_import_caches
+
 _TOKEN = re.compile(
     r"""
     (?P<ws>\s+)
@@ -480,6 +482,12 @@ def positional_frame(row_ids, rows: list[list], n: int) -> pd.DataFrame:
 
 _MARKERS = (b"\nINSERT", b"\nREPLACE")
 _READ_STEP = 8 << 20
+# auto-sized byte-range splits: table bytes / SPLIT_TARGETS, clamped
+# to [1 MiB, 64 MiB]. A constant, not defaultParallelism: a PK-less
+# table's _tidb_rowid depends on where the splits fall, so the same
+# dump must split the same way on every cluster (32 reproduces the
+# local[32] record).
+SPLIT_TARGETS = 32
 
 
 def _find_marker(buf: bytes, frm: int) -> int:
@@ -574,9 +582,8 @@ def read_sql_dump(
     base_map = file_row_bases(table_files, num_columns or 0, is_sql=True)
 
     if split_bytes is None:
-        par = max(spark.sparkContext.defaultParallelism, 1)
         total = sum(sz for _, sz in table_files)
-        split_bytes = min(64 << 20, max(1 << 20, total // par + 1))
+        split_bytes = min(64 << 20, max(1 << 20, total // SPLIT_TARGETS + 1))
 
     chunks: list[tuple[str, int, int, int]] = []
     for p, sz in files:
@@ -649,6 +656,7 @@ def read_sql_dump(
         return out_file, out_rid, out_cols, out_fields
 
     def parse_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_import_caches()
         for pdf in batches:
             for path, start, end, fbase in zip(
                 pdf["path"], pdf["start"], pdf["end"], pdf["base"]
