@@ -12,14 +12,10 @@ cmd/tidb-lightning-ctl/main.go:42-307:
     ctl.py compact --target-dir DIR --table db.tbl
            # manual post-import compaction (main.go:114-123's
            # FullLevelCompact, mapped to the sink's small-file rewrite)
-    ctl.py import-engine  --target-dir DIR --engine db.tbl:ID
-           # publish a staged engine dir (main.go:281-293 importEngine:
-           # UnsafeCloseEngine + Import; here engine_<ID>.staged is
-           # atomically replaced into engine_<ID>)
-    ctl.py cleanup-engine --target-dir DIR --engine db.tbl:ID
-           # drop a staged engine dir (main.go:295-307 cleanupEngine:
-           # Cleanup deletes the closed-but-unimported engine data;
-           # imported/live data is never touched)
+
+The reference's import-engine / cleanup-engine have no twin: engine
+delivery writes each engine in place, so no closed-but-unimported
+engine data ever exists.
 
 ``--checkpoint`` accepts either a JSON file path (the file driver) or
 ``sqlite:PATH`` for the SQL checkpoint store (the MySQL-driver analog,
@@ -32,7 +28,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -71,51 +66,8 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("compact")
     p.add_argument("--target-dir", required=True)
     p.add_argument("--table", required=True)
-    for name in ("import-engine", "cleanup-engine"):
-        p = sub.add_parser(name)
-        p.add_argument("--target-dir", required=True)
-        p.add_argument("--engine", required=True,
-                       help="db.tbl:ID (main.go:261-279 engine spec)")
 
     args = ap.parse_args(argv)
-
-    if args.cmd in ("import-engine", "cleanup-engine"):
-        table, _, eid = args.engine.rpartition(":")
-        if not table or not eid.lstrip("-").isdigit():
-            print(f"bad engine spec {args.engine!r}; want db.tbl:ID",
-                  file=sys.stderr)
-            return 1
-        live = os.path.join(args.target_dir, table, f"engine_{int(eid)}")
-        staged = live + ".staged"
-        if args.cmd == "import-engine":
-            # ce.Import analog: atomic publish of the closed-but-
-            # unimported engine data; idempotent when already live
-            if os.path.isdir(staged):
-                from tidb_lightning_release_4_0_spark.sinks.parquet_sink import (
-                    ParquetSink,
-                )
-
-                if os.path.isdir(live):
-                    shutil.rmtree(live)
-                os.replace(staged, live)
-                # contents changed: the recorded checksum is stale
-                ParquetSink(args.target_dir).record_checksum(table, None, None)
-                print(f"imported engine {args.engine}")
-                return 0
-            if os.path.isdir(live):
-                print(f"engine {args.engine} already imported")
-                return 0
-            print(f"engine {args.engine} not found", file=sys.stderr)
-            return 1
-        # cleanup-engine: drop STAGED data only — the reference's
-        # Cleanup removes the importer-side files, never the data
-        # already imported into the cluster
-        if os.path.isdir(staged):
-            shutil.rmtree(staged)
-            print(f"cleaned up engine {args.engine}")
-        else:
-            print(f"no staged data for engine {args.engine}")
-        return 0
 
     if args.cmd == "compact":
         # manual full compaction (main.go:114-123): rewrite the
@@ -150,12 +102,15 @@ def main(argv: list[str] | None = None) -> int:
         # target tables dropped so the next run reimports from
         # scratch (checkpoints.go:1053-1135)
         destroyed = cp.destroy_error(args.table)
-        for name in destroyed:
-            if args.target_dir:
-                path = os.path.join(args.target_dir, name)
-                if os.path.exists(path):
-                    shutil.rmtree(path)
-                    print(f"dropped sink table {path}")
+        if args.target_dir:
+            from tidb_lightning_release_4_0_spark.sinks.parquet_sink import (
+                ParquetSink,
+            )
+
+            sink = ParquetSink(args.target_dir)
+            for name in destroyed:
+                sink.cleanup(name)
+                print(f"dropped sink table {name}")
         print(
             f"destroyed checkpoints for {destroyed or 'no errored tables'}"
         )

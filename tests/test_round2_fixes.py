@@ -153,7 +153,7 @@ def test_trim_last_sep_preserves_empty_last_value(spark, tmp_path):
     # row 2: populated last value, trailing separator
     p.write_text('1,"",\n2,"x",\n')
     cfg = CSVConfig(separator=",", delimiter='"', header=False, trim_last_sep=True)
-    df = read_csv(spark, str(p), cfg, num_columns=2)
+    df = read_csv(spark, str(p), cfg, column_names=["_c0", "_c1"])
     rows = {r[0]: r[1] for r in df.collect()}
     assert df.columns == ["_c0", "_c1"]
     assert rows["1"] == ""  # was corrupted to NULL before the fix
@@ -239,7 +239,9 @@ def test_rowid_fast_path_dense_many_small_files(spark, tmp_path):
         )
         bases = file_row_bases(files, num_columns=2, is_sql=False)
         cfg = CSVConfig(separator=",", header=False)
-        df = read_csv(spark, [p for p, _ in files], cfg, num_columns=2)
+        df = read_csv(
+            spark, [p for p, _ in files], cfg, column_names=["_c0", "_c1"]
+        )
 
         fast = assign_rowid_by_file(df, bases, one_file_per_partition=True)
         slow = assign_rowid_by_file(df, bases)
@@ -262,7 +264,7 @@ def test_rowid_fast_path_broadcast_join_branch(spark, tmp_path):
     bases = {f"/nonexistent/pad{i}": i for i in range(1030)}
     bases[real] = 100
     cfg = CSVConfig(separator=",", header=False)
-    df = read_csv(spark, [real], cfg, num_columns=2)
+    df = read_csv(spark, [real], cfg, column_names=["_c0", "_c1"])
     out = assign_rowid_by_file(df, bases, one_file_per_partition=True)
     ids = sorted(r["_row_id"] for r in out.collect())
     assert ids == [101, 102, 103]

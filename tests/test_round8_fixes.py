@@ -130,7 +130,9 @@ def test_split_rowid_fallback_exact_when_blocks_are_packed(spark):
         spark.conf.set("spark.sql.files.minPartitionNum", "1")
         sb = split_bytes_lower_bound(spark)
         cfg = CSVConfig(strict_format=True)
-        df = read_csv(spark, [p for p, _ in files], cfg, num_columns=3)
+        df = read_csv(
+            spark, [p for p, _ in files], cfg, column_names=["_c0", "_c1", "_c2"]
+        )
         bases = file_row_bases_split(files, 3, sb)
         out = assign_rowid_by_file_split(df, bases, 3, sb)
         res = out.select("_c0", "_row_id").collect()

@@ -28,6 +28,9 @@ from tidb_lightning_release_4_0_spark.operators.rowid import (
     split_bytes_lower_bound,
 )
 from tidb_lightning_release_4_0_spark.sources.csv_source import read_csv
+from tidb_lightning_release_4_0_spark.sources.csv_strict import read_header
+
+C3 = ["_c0", "_c1", "_c2"]
 
 TMP = "/root/repo/.tmp/split_csv_tests"
 
@@ -61,7 +64,7 @@ def test_single_file_fans_out_and_preserves_order(spark, small_splits):
     _write_csv(path, rows)
     sb = small_splits(512)
     cfg = CSVConfig(strict_format=True)
-    df = read_csv(spark, path, cfg, num_columns=3)
+    df = read_csv(spark, path, cfg, column_names=C3)
     nparts = df.rdd.getNumPartitions()
     assert nparts > 10, f"expected many byte-range tasks, got {nparts}"
     bases = file_row_bases_split([(path, os.path.getsize(path))], 3, sb)
@@ -88,7 +91,7 @@ def test_straddling_lines_stay_unique(spark, small_splits):
     _write_csv(path, rows)
     sb = small_splits(64)
     cfg = CSVConfig(strict_format=True)
-    df = read_csv(spark, path, cfg, num_columns=3)
+    df = read_csv(spark, path, cfg, column_names=C3)
     bases = file_row_bases_split([(path, os.path.getsize(path))], 3, sb)
     out = assign_rowid_by_file_split(df, bases, 3, sb)
     ids = [r["_row_id"] for r in out.select("_row_id").collect()]
@@ -107,7 +110,7 @@ def test_multi_file_bases_disjoint(spark, small_splits):
     cfg = CSVConfig(strict_format=True)
     files = [(p1, os.path.getsize(p1)), (p2, os.path.getsize(p2))]
     bases = file_row_bases_split(files, 2, sb)
-    df = read_csv(spark, [p1, p2], cfg, num_columns=2)
+    df = read_csv(spark, [p1, p2], cfg, column_names=["_c0", "_c1"])
     out = assign_rowid_by_file_split(df, bases, 2, sb)
     got = [
         (r["_c1"], int(r["_c0"]), int(r["_row_id"]))
@@ -129,9 +132,9 @@ def test_matches_whole_file_read_values(spark, small_splits):
     _write_csv(path, rows)
     small_splits(128)
     split_df = read_csv(
-        spark, path, CSVConfig(strict_format=True), num_columns=3
+        spark, path, CSVConfig(strict_format=True), column_names=C3
     )
-    whole_df = read_csv(spark, path, CSVConfig(), num_columns=3)
+    whole_df = read_csv(spark, path, CSVConfig(), column_names=C3)
     assert sorted(map(tuple, split_df.collect())) == sorted(
         map(tuple, whole_df.collect())
     )
@@ -216,7 +219,7 @@ def test_header_file_under_splits(spark, small_splits):
             f.write(f"{i},v{i}\n")
     small_splits(512)
     cfg = CSVConfig(strict_format=True, header=True)
-    df = read_csv(spark, path, cfg)
+    df = read_csv(spark, path, cfg, column_names=read_header(path, cfg))
     assert df.rdd.getNumPartitions() > 5
     rows = df.collect()
     assert len(rows) == 1200

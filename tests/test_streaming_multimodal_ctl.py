@@ -385,70 +385,40 @@ def test_stream_stream_interval_join_matches_batch(spark, tables):
     assert batch.select(*key).exceptAll(got.select(*key)).count() == 0
 
 
-def test_ctl_engine_ops(spark):
-    """ctl import-engine / cleanup-engine (main.go:261-307 analogs):
-    stage an engine dir (crash between close and import), clean the
-    staged copy, re-import a staged copy — totals match the original
-    restore throughout the live data's lifecycle."""
-    tgt = os.path.join(TMP, "ctl_engine_sink")
-    tbl_dir = os.path.join(tgt, "db.e")
-    eng = os.path.join(tbl_dir, "engine_0")
+def test_ctl_error_destroy_drops_sink_table(spark):
+    """checkpoint-error-destroy (main.go:166-215) drops only the
+    ERRORED table's sink directory, through the sink's own path (a
+    backticked name resolves to the same directory); a table that did
+    not fail keeps its data and its checkpoint."""
+    from tidb_lightning_release_4_0_spark.plans.checkpoints import (
+        CheckpointStore,
+        Status,
+    )
+
+    tgt = os.path.join(TMP, "ctl_destroy_sink")
+    cp_path = os.path.join(TMP, "ctl_destroy_cp.json")
     shutil.rmtree(tgt, ignore_errors=True)
-    os.makedirs(tbl_dir)
-    spark.range(100).toDF("i").write.parquet(eng)
+    if os.path.exists(cp_path):
+        os.remove(cp_path)
+    for name in ("db.bad", "db.good"):
+        spark.range(3).toDF("i").write.parquet(os.path.join(tgt, name))
+    cp = CheckpointStore(cp_path)
+    cp.set_table_status("`db`.`bad`", 3)  # invalid LOADED/10
+    cp.set_table_status("db.good", Status.ANALYZED)
 
-    def total():
-        return (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(tbl_dir)
-            .count()
-        )
-
-    def ctl(*argv):
-        return subprocess.run(
-            [sys.executable, "ctl.py", *argv],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-
-    base = total()
-    assert base == 100
-
-    # import-engine of an already-live engine: idempotent no-op
-    out = ctl("import-engine", "--target-dir", tgt,
-              "--engine", "db.e:0")
-    assert out.returncode == 0 and "already imported" in out.stdout
-    assert total() == base
-
-    # stage: simulate a crash between engine close and import
-    os.replace(eng, eng + ".staged")
-    # cleanup-engine drops ONLY the staged copy
-    out = ctl("cleanup-engine", "--target-dir", tgt,
-              "--engine", "db.e:0")
-    assert out.returncode == 0 and "cleaned up" in out.stdout
-    assert not os.path.exists(eng + ".staged")
-
-    # engine gone entirely -> import-engine reports not found
-    out = ctl("import-engine", "--target-dir", tgt,
-              "--engine", "db.e:0")
-    assert out.returncode == 1
-
-    # re-stage (re-run of the write phase) then import: atomic publish
-    spark.range(100).toDF("i").write.parquet(eng + ".staged")
-    out = ctl("import-engine", "--target-dir", tgt,
-              "--engine", "db.e:0")
-    assert out.returncode == 0 and "imported engine" in out.stdout
-    assert os.path.isdir(eng) and not os.path.exists(eng + ".staged")
-    assert total() == base
-
-    # cleanup with nothing staged: no-op, live data untouched
-    out = ctl("cleanup-engine", "--target-dir", tgt,
-              "--engine", "db.e:0")
-    assert out.returncode == 0 and "no staged data" in out.stdout
-    assert total() == base
-
-    # bad spec
-    out = ctl("import-engine", "--target-dir", tgt, "--engine", "nope")
-    assert out.returncode == 1
+    out = subprocess.run(
+        [sys.executable, "ctl.py", "checkpoint-error-destroy",
+         "--checkpoint", cp_path, "--target-dir", tgt],
+        capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.returncode == 0, out.stderr
+    assert "dropped sink table `db`.`bad`" in out.stdout
+    assert not os.path.exists(os.path.join(tgt, "db.bad"))
+    assert spark.read.parquet(os.path.join(tgt, "db.good")).count() == 3
+    st = CheckpointStore(cp_path)
+    assert st.table_status("`db`.`bad`") == 0
+    assert st.table_status("db.good") == Status.ANALYZED
 
 
 def test_streaming_sliding_counts_match_batch(spark, tables, sf_dir):

@@ -7,10 +7,11 @@ XOR monoid makes it embarrassingly parallel: Spark computes it as a
 partial+final hash aggregate with map-side combine, zero extra
 shuffle beyond the single 1-row agg exchange.
 
-We do not reproduce TiKV's physical key encoding (SURVEY.md §2.3 T6);
-instead each row is canonically serialized to one string (stable,
-engine-portable formatting) and that serialization is checksummed.
-Two hash backends:
+The restore path's ``kv_crc64`` modes reproduce TiKV's physical KV
+encoding byte for byte (functions/kv_codec.py). This module checksums
+a canonical per-row string instead (stable, engine-portable
+formatting), for registry queries and the streaming restore. Two hash
+backends:
 
 - ``checksum(df, algo="hash60")`` — JVM-side md5-prefix hash, ANSI
   oracle-expressible, the 100 TB path (whole-stage codegen, no
@@ -97,7 +98,9 @@ class Checksum:
     """The (crc ^ ... ^ crc, total_bytes, total_kvs) triple.
 
     Mirrors verification.KVChecksum{checksum, bytes, kvs}
-    (checksum.go:25-31); Add() is XOR/+/+ (checksum.go:77-86).
+    (checksum.go:25-31); Add() is XOR/+/+ (checksum.go:77-86). A
+    ``total_bytes`` of -1 is the xxdirect "bytes not tracked" sentinel
+    and stays -1 under ``add``.
     """
 
     crc_xor: int
@@ -105,11 +108,23 @@ class Checksum:
     total_kvs: int
 
     def add(self, other: "Checksum") -> "Checksum":
+        untracked = self.total_bytes < 0 or other.total_bytes < 0
         return Checksum(
             self.crc_xor ^ other.crc_xor,
-            self.total_bytes + other.total_bytes,
+            -1 if untracked else self.total_bytes + other.total_bytes,
             self.total_kvs + other.total_kvs,
         )
+
+    def verify(self, remote: "Checksum") -> None:
+        """C3: raise ValueError when the sink's ``remote`` triple
+        differs from this local one, like restore.go:1430-1448."""
+        if remote != self:
+            raise ValueError(
+                f"checksum mismatched remote vs local => "
+                f"(checksum: {remote.crc_xor} vs {self.crc_xor}) "
+                f"(total_kvs: {remote.total_kvs} vs {self.total_kvs}) "
+                f"(total_bytes: {remote.total_bytes} vs {self.total_bytes})"
+            )
 
 
 def checksum_df(
@@ -169,15 +184,6 @@ def verify_checksum(
     local: Checksum, sink_df: DataFrame, cols: list[str] | None = None,
     algo: str = "hash60",
 ) -> None:
-    """C3: compare the in-flight checksum with a sink re-scan.
-
-    Raises ValueError on mismatch, like restore.go:1430-1448.
-    """
-    remote = checksum(sink_df, cols, algo)
-    if remote != local:
-        raise ValueError(
-            f"checksum mismatched remote vs local => "
-            f"(checksum: {remote.crc_xor} vs {local.crc_xor}) "
-            f"(total_kvs: {remote.total_kvs} vs {local.total_kvs}) "
-            f"(total_bytes: {remote.total_bytes} vs {local.total_bytes})"
-        )
+    """C3: compare the in-flight checksum with a sink re-scan
+    (Checksum.verify raises on mismatch)."""
+    local.verify(checksum(sink_df, cols, algo))

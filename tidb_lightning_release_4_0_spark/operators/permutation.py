@@ -79,6 +79,21 @@ def default_column(
     return F.lit(zero).cast(spec.spark_type)
 
 
+def _typed_cast(src: Column, spec: ColumnSpec, strict: bool) -> Column:
+    """A typed source value into the DDL type: ``try_cast`` null-fills
+    where lenient MySQL coerces (a plain ANSI cast would throw even
+    when lenient); strict sql_mode rejects the null-fill."""
+    casted = src.try_cast(spec.spark_type)
+    if not strict:
+        return casted
+    return F.when(
+        src.isNotNull() & casted.isNull(),
+        F.raise_error(
+            F.lit(f"strict sql_mode: value not valid for column {spec.name!r}")
+        ).cast(spec.spark_type),
+    ).otherwise(casted)
+
+
 def apply_permutation(
     df: DataFrame,
     schema: TableSchema,
@@ -92,12 +107,15 @@ def apply_permutation(
     native_frame=None,  # NativeCsvFrame from read_csv_native
     missing_sentinel: str | None = None,
 ) -> DataFrame:
-    """Project raw (string-typed) file columns into the table schema.
+    """Project file columns into the table schema.
 
     - reorders file columns to table order
     - fills missing columns from defaults / auto-increment (using the
       deterministic ``rowid`` column, T5)
-    - applies the MySQL cast layer per column (T3)
+    - applies the MySQL cast layer per string column (T3); a typed
+      column (a parquet source) casts directly: ``try_cast`` null-fills
+      like lenient MySQL coerces, and under strict sql_mode a value
+      the cast nulls raises
     - honors an explicit ``_tidb_rowid`` file column (restore.go:1381-1388)
 
     With ``native_frame`` (the typed CSV fast path,
@@ -114,10 +132,12 @@ def apply_permutation(
     when/default/auto-inc scaffolding costs hundreds of py4j round
     trips per call — paid once per distinct (schema, flags,
     rowid-tree) instead of once per engine batch per run. Every input
-    that shapes the projection is in the key; the rowid and
-    native-frame inputs enter via their SQL reprs/fingerprints.
+    that shapes the projection is in the key; the source column types
+    (which pick the typed branch), rowid and native-frame inputs enter
+    via their names/SQL reprs/fingerprints.
     """
     cache = session_plan_cache(df.sparkSession)
+    dtypes = tuple(df.dtypes)
     nf_key = (
         (
             native_frame.corrupt_col,
@@ -134,11 +154,8 @@ def apply_permutation(
         tuple(repr(c) for c in schema.columns),
         schema.has_int_pk,
         tuple(schema.primary_key or ()),
-        (
-            tuple(file_columns)
-            if file_columns is not None
-            else ("<dfcols>", *df.columns)
-        ),
+        tuple(file_columns) if file_columns is not None else None,
+        dtypes,
         strict,
         source_latin1,
         charset,
@@ -170,6 +187,7 @@ def apply_permutation(
         if file_columns is not None
         else [c for c in df.columns if c not in (ROWID_COL, "_row_id")]
     )
+    types = dict(dtypes)
     corrupt = (
         F.col(native_frame.corrupt_col) if native_frame is not None else None
     )
@@ -200,6 +218,9 @@ def apply_permutation(
                 src = F.when(corrupt.isNull(), src.cast("string")).otherwise(
                     native_frame.raw_field(fname)
                 )
+            elif types.get(fname, "string") != "string":
+                expr = _typed_cast(src, spec, strict)
+                src = expr  # a failed cast allocates an auto-inc id
             elif native_frame is not None:
                 # string-read column: cast layer always applies, but a
                 # corrupt row's PERMISSIVE field values are not

@@ -110,6 +110,12 @@ def _with_local_index(df: DataFrame) -> DataFrame:
     return d.mapInPandas(_local_index_mapper(out_schema), schema=out_schema)
 
 
+# a capacity-scheme lane read as several column-list groups gives
+# group i the band from start + i * MONO_GROUP_STRIDE (2^20 partitions
+# of 2^33 rows each)
+MONO_GROUP_STRIDE = 1 << 53
+
+
 def assign_rowid_mono(df: DataFrame, start: int = 1) -> DataFrame:
     """Capacity-scheme row-ids with ZERO extra passes (all-JVM):
     ``monotonically_increasing_id`` IS ``pid * 2^33 +

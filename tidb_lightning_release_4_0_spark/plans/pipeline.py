@@ -23,11 +23,12 @@ from __future__ import annotations
 import datetime as _dt
 import functools
 import logging
+import operator
 import threading
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,6 +40,7 @@ from ..sinks.memory_sink import MemorySink
 from ..sinks.parquet_sink import ParquetSink
 from ..sources import literal_paths
 from ..sources.csv_source import read_csv
+from ..sources.csv_strict import read_csv_strict, read_header
 from ..sources.mydump_loader import MDTableMeta, discover_cfg
 from ..sources.schema_reader import TableSchema, load_table_schema
 from ..sources.sql_dump_source import (
@@ -373,27 +375,20 @@ class RestoreController:
         files (one engine batch) while row-id bases stay computed
         over the FULL file list — a file's ids must not depend on
         which other files ride along, or checkpoint resume would
-        renumber rows (restore.go:861-870 parity)."""
-        all_csv = [
-            f
-            for f in meta.data_files
-            if f.path.lower().endswith((".csv", ".csv.gz"))
-        ]
-        all_sql = [f for f in meta.data_files if f.path.lower().endswith(".sql")]
-        all_pq = [
-            f for f in meta.data_files if f.path.lower().endswith(".parquet")
-        ]
-        all_jsonl = [
-            f
-            for f in meta.data_files
-            if f.path.lower().endswith((".jsonl", ".jsonl.gz"))
-        ]
-        csv_files = [f for f in all_csv if only is None or f.path in only]
-        sql_files = [f for f in all_sql if only is None or f.path in only]
-        pq_files = [f for f in all_pq if only is None or f.path in only]
-        jsonl_files = [
-            f for f in all_jsonl if only is None or f.path in only
-        ]
+        renumber rows (restore.go:861-870 parity). Every lane maps its
+        files' own column lists through _by_file_columns."""
+
+        def by_ext(*exts: str) -> list:
+            return [f for f in meta.data_files if f.path.lower().endswith(exts)]
+
+        def pick(files: list) -> list:
+            return [f for f in files if only is None or f.path in only]
+
+        all_csv, all_sql = by_ext(".csv", ".csv.gz"), by_ext(".sql")
+        csv_files, sql_files = pick(all_csv), pick(all_sql)
+        pq_files = pick(by_ext(".parquet"))
+        jsonl_files = pick(by_ext(".jsonl", ".jsonl.gz"))
+        ncols = len(schema.columns)
         strict = strict_sql_mode(self.cfg.tidb.sql_mode)
         frames: list[DataFrame] = []
 
@@ -401,19 +396,31 @@ class RestoreController:
         # estimate bases (parquet, gzip): each lane starts past the
         # table's whole byte-estimate id range AND in its own band,
         # so mixed-source unions can never collide
-        from ..operators.rowid import estimate_id_ceiling
-
-        _ncols_all = len(schema.columns)
-        from ..operators.rowid import split_bytes_lower_bound
+        from ..operators.rowid import (
+            estimate_id_ceiling,
+            file_row_bases,
+            split_bytes_lower_bound,
+        )
 
         _split_bytes = (
             split_bytes_lower_bound(self.spark)
             if self.cfg.mydumper.csv.strict_format
             else None
         )
+        # each .sql file's column list, from its first INSERT (64 KiB
+        # driver-side peek, no Spark job; None: table order). The
+        # table's one .sql divisor is the narrowest list + 2, at most
+        # the DDL width + 2: a row of k fields takes >= 2k + 2 bytes,
+        # so every file's reserved id range holds its rows, and lists
+        # of different widths share one chain of bases
+        charset = self.cfg.mydumper.character_set
+        sql_columns = {
+            f.path: probe_insert_columns(f.path, charset) for f in all_sql
+        }
+        sql_width = min([ncols] + [len(c) for c in sql_columns.values() if c])
         _ceiling = estimate_id_ceiling(
             [(f.path, f.size) for f in all_csv + all_sql],
-            _ncols_all,
+            sql_width,
             split_bytes=_split_bytes,
         )
         GZ_LANE = _ceiling + 1
@@ -422,94 +429,32 @@ class RestoreController:
 
         if pq_files:
             # Spark-native source extension: columnar dumps are
-            # already typed, so the ladder is align-to-DDL (reorder,
-            # default-fill missing columns, cast to the DDL types) —
-            # NOT apply_permutation, whose mysql_cast layer is
-            # string-token-oriented; typed input casts directly (under
-            # strict sql_mode a null-after-cast on a non-null source
-            # raises, so narrowing corruption still errors; numeric
-            # values parquet already holds are otherwise trusted —
-            # documented deviation for this beyond-reference format).
-            # Row-ids use the capacity scheme in the parquet LANE —
-            # past the table's whole byte-estimate id range and in a
-            # different band than the gz lane (the byte estimate
-            # itself is UNSAFE for compressed columnar files, where a
-            # row can occupy less than a byte): ids are unique,
-            # deterministic, gaps allowed, and DISJOINT from every
-            # other frame of the same table (mixed-source dumps
-            # union cleanly).
+            # already typed, so their columns take apply_permutation's
+            # typed branch (try_cast; under strict sql_mode a value
+            # the cast nulls raises, so narrowing corruption still
+            # errors; numeric values parquet already holds are
+            # otherwise trusted — documented deviation for this
+            # beyond-reference format). The footer names each file's
+            # columns. Row-ids use the capacity scheme in the parquet
+            # LANE: the byte estimate is UNSAFE for compressed
+            # columnar files, where a row can occupy less than a byte.
             # Documented deviation: replace/ignore dup "arrival order"
             # for parquet rows follows the scan's partition order, not
             # the dump's file sequence the CSV/SQL paths guarantee —
             # columnar dumps carry no inherent row sequence.
-            from ..operators.permutation import ROWID_COL, default_column
-            from ..operators.rowid import assign_rowid_mono
+            import pyarrow.parquet as pq
 
-            pdf = self.spark.read.parquet(
-                *literal_paths([f.path for f in pq_files])
+            frames.append(
+                self._by_file_columns(
+                    schema,
+                    pq_files,
+                    lambda path: pq.read_schema(path).names,
+                    lambda cols, group: self.spark.read.parquet(
+                        *literal_paths([f.path for f in group])
+                    ),
+                    mono_start=PQ_LANE,
+                )
             )
-            by_lower = {c.lower(): c for c in pdf.columns}
-            explicit_rowid = by_lower.get(ROWID_COL)
-            needs_rowid = (
-                not schema.has_int_pk
-                or bool(schema.auto_increment_column)
-                or bool(csv_files or sql_files or jsonl_files)  # union needs _row_id
-            )
-            if needs_rowid:
-                pdf = assign_rowid_mono(pdf, start=PQ_LANE)
-
-            def _typed(src: Column, spec) -> Column:
-                # try_cast: lenient mode null-fills like MySQL coerces
-                # (ANSI plain cast would throw even when lenient);
-                # strict mode rejects the null-fill explicitly
-                casted = src.try_cast(spec.spark_type)
-                if strict:
-                    return F.when(
-                        src.isNotNull() & casted.isNull(),
-                        F.raise_error(
-                            F.lit(
-                                f"strict sql_mode: value not valid for "
-                                f"column {spec.name!r}"
-                            )
-                        ).cast(spec.spark_type),
-                    ).otherwise(casted)
-                return casted
-
-            cols = []
-            for spec in schema.columns:
-                src_name = by_lower.get(spec.name.lower())
-                if src_name is not None:
-                    src = _typed(F.col(src_name), spec)
-                    if spec.auto_increment and needs_rowid:
-                        src = F.coalesce(
-                            src, F.col("_row_id").cast(spec.spark_type)
-                        )
-                    cols.append(src.alias(spec.name))
-                elif spec.auto_increment and needs_rowid:
-                    cols.append(
-                        F.col("_row_id").cast(spec.spark_type).alias(spec.name)
-                    )
-                else:
-                    cols.append(
-                        default_column(spec, self.job_timestamp).alias(
-                            spec.name
-                        )
-                    )
-            extra = []
-            if not schema.has_int_pk:
-                # an explicit _tidb_rowid in the file wins
-                # (restore.go:1381-1388 parity, as apply_permutation)
-                if explicit_rowid is not None:
-                    extra.append(
-                        F.col(explicit_rowid).cast("long").alias(ROWID_COL)
-                    )
-                elif needs_rowid:
-                    extra.append(
-                        F.col("_row_id").cast("long").alias(ROWID_COL)
-                    )
-            if needs_rowid:
-                extra.append(F.col("_row_id"))
-            frames.append(pdf.select(*cols, *extra))
 
         jl_strict_blocks = False
         if jsonl_files and self.cfg.mydumper.csv.strict_format:
@@ -555,206 +500,166 @@ class RestoreController:
             # Beyond-reference source: JSON-Lines parts (the
             # training-data handoff format; curation.export_jsonl is
             # the matching writer). Fields are read BY NAME as strings
-            # (exact-name match to the DDL; extra keys ignored,
-            # missing keys arrive NULL and take column defaults) and
-            # run the SAME MySQL cast ladder as CSV — typing semantics
-            # are identical by construction. The JSON reader decodes
-            # real UTF-8, so the latin1 re-decode stays off. Row-ids
-            # use the capacity scheme in their own lane (splittable
+            # (extra keys ignored, missing keys arrive NULL) and run
+            # the SAME MySQL cast ladder as CSV — typing semantics are
+            # identical by construction. The JSON reader decodes real
+            # UTF-8, so the latin1 re-decode stays off. Row-ids use
+            # the capacity scheme in their own lane (splittable
             # named-record files have no per-file dump order to
             # preserve; documented like the parquet lane).
-            from ..operators.rowid import assign_rowid_mono
-            from ..sources.jsonl_source import read_jsonl
-
             # read_jsonl = FAILFAST: a malformed line ERRORS the table
             # restore (surfacing in the O12 summary) instead of
             # materializing as an all-null row that the default-fill
             # ladder would silently fabricate into real data
-            def _read_group(key: tuple, files: list) -> DataFrame:
-                return read_jsonl(
-                    self.spark,
-                    [f.path for f in files],
-                    T.StructType(
-                        [T.StructField(k, T.StringType(), True) for k in key]
-                    ),
-                ).select(
-                    *[
-                        F.col(k).alias(c.name)
-                        for k, c in zip(key, schema.columns)
-                    ]
-                )
+            from ..sources.jsonl_source import read_jsonl
 
-            jdf = self._jsonl_by_casing(
-                schema, jsonl_files, lambda f: f.path, _read_group
-            )
             frames.append(
-                self._permute_jsonl(
-                    assign_rowid_mono(jdf, start=JSONL_LANE), schema
-                )
-            )
-        has_gz = any(f.path.lower().endswith(".csv.gz") for f in csv_files)
-        if has_gz and self.cfg.mydumper.csv.strict_parser:
-            raise ValueError(
-                "strict_parser reads raw bytes and does not decompress; "
-                "gunzip .csv.gz parts first or disable csv.strict-parser"
-            )
-        if csv_files and self.cfg.mydumper.csv.strict_parser:
-            from ..sources.csv_strict import read_csv_strict
-
-            csv_cfg = self.cfg.mydumper.csv
-            ncols = len(schema.columns)
-            raw, header_cols = read_csv_strict(
-                self.spark,
-                [(f.path, f.size) for f in csv_files],
-                csv_cfg,
-                ncols,
-            )
-            file_columns = header_cols or [c.name for c in schema.columns]
-
-            # read_csv_strict marks short rows with the sentinel:
-            # LOAD DATA fills defaults for missing trailing fields
-            frames.append(
-                self._permute(
-                    raw.toDF("_row_id", *file_columns),
+                self._jsonl_frame(
                     schema,
-                    file_columns,
-                    source_latin1=True,
-                    missing_sentinel=MISSING_FIELD,
+                    jsonl_files,
+                    lambda keys, group: read_jsonl(
+                        self.spark,
+                        [f.path for f in group],
+                        T.StructType(
+                            [T.StructField(k, T.StringType()) for k in keys]
+                        ),
+                    ),
+                    mono_start=JSONL_LANE,
                 )
             )
-        elif csv_files:
+        if csv_files:
             csv_cfg = self.cfg.mydumper.csv
-            ncols = len(schema.columns)
-            from ..operators.rowid import (
-                assign_rowid_by_file,
-                assign_rowid_by_file_split,
-                assign_rowid_mono,
-                file_row_bases,
-                file_row_bases_split,
-            )
-
-            split_mode = (
-                self.cfg.mydumper.csv.strict_format and not has_gz
-            )
-            if has_gz:
-                bases = None
-            elif split_mode:
-                bases = file_row_bases_split(
-                    [(f.path, f.size) for f in all_csv],
-                    ncols,
-                    _split_bytes,
+            has_gz = any(f.path.lower().endswith(".gz") for f in csv_files)
+            if has_gz and csv_cfg.strict_parser:
+                raise ValueError(
+                    "strict_parser reads raw bytes and does not "
+                    "decompress; gunzip .csv.gz parts first or disable "
+                    "csv.strict-parser"
                 )
+            sizes = [(f.path, f.size) for f in all_csv]
+            lane = {}
+            if csv_cfg.strict_parser:
+                # read_csv_strict marks short rows with the sentinel:
+                # LOAD DATA fills defaults for missing trailing fields
+                bases = file_row_bases(sizes, ncols)
+                lane["missing_sentinel"] = MISSING_FIELD
+
+                def read(cols, group):
+                    return read_csv_strict(
+                        self.spark, [f.path for f in group], csv_cfg, cols,
+                        bases,
+                    )
             else:
-                bases = file_row_bases(
-                    [(f.path, f.size) for f in all_csv], ncols, is_sql=False
+                from ..operators.rowid import (
+                    assign_rowid_by_file,
+                    assign_rowid_by_file_split,
+                    file_row_bases_split,
                 )
 
-            def _rowids(df: DataFrame) -> DataFrame:
                 if has_gz:
                     # compressed sizes cannot bound row counts, so the
-                    # byte-estimate bases are unsafe: capacity-scheme
-                    # ids in the gz lane (unique, zero extra jobs).
+                    # byte-estimate bases are unsafe: the gz lane's
+                    # capacity-scheme ids (unique, zero extra jobs).
                     # Documented deviation: replace/ignore "arrival
-                    # order" then follows scan partition order, not
-                    # the dump part sequence — gunzip the parts when
+                    # order" then follows scan partition order, not the
+                    # dump part sequence — gunzip the parts when
                     # logical dup order matters
-                    return assign_rowid_mono(df, start=GZ_LANE)
-                if split_mode:
+                    def rowids(df):
+                        return df
+                elif csv_cfg.strict_format:
                     # strict-format: files are chunk-split at byte
                     # ranges (multiLine=false), one huge CSV fans out
                     # across tasks; per-block row-id bases mirror the
                     # reference's SplitLargeFile offset/divisor scheme
-                    return assign_rowid_by_file_split(
-                        df, bases, max(ncols, 1), _split_bytes
+                    rowids = functools.partial(
+                        assign_rowid_by_file_split,
+                        bases=file_row_bases_split(sizes, ncols, _split_bytes),
+                        divisor=max(ncols, 1),
+                        split_bytes=_split_bytes,
                     )
-                return assign_rowid_by_file(
-                    df, bases, one_file_per_partition=True
-                )
-            # typed fast path for headerless files whose null sentinel
-            # is not the empty string (not-null mode has none). Strict
-            # sql_mode keeps it for ints/dates (every natively-rejected
-            # token re-parses through mysql_cast(strict=True), which
-            # raises exactly like the string path) but float/double
-            # columns drop to the string path: Double.parseDouble
-            # accepts NaN/Infinity/hex-float literals strict MySQL must
-            # reject — see native_read_type. Documented deviation (both
-            # lanes): an unquoted empty token reads as NULL, as
-            # univocity substitutes the null sentinel for it on the
-            # string path (MySQL LOAD DATA: 0 with warning / strict
-            # error).
-            native_ok = (
-                not csv_cfg.header
-                and not csv_cfg.not_null
-                and csv_cfg.null != ""
-            )
-            if native_ok:
-                # typed fast path: vectorized JVM parse for clean
-                # rows; corrupt-record fallback through mysql_cast
-                from ..sources.csv_source import read_csv_native
+                else:
+                    # multiLine CSV reads are whole-file, and the
+                    # session's openCostInBytes disables file packing
+                    # -> one file per task, so row-ids need no extra job
+                    rowids = functools.partial(
+                        assign_rowid_by_file,
+                        bases=file_row_bases(sizes, ncols),
+                        one_file_per_partition=True,
+                    )
+                # typed fast path for headerless files whose null
+                # sentinel is not the empty string (not-null mode has
+                # none). Strict sql_mode keeps it for ints/dates (every
+                # natively-rejected token re-parses through
+                # mysql_cast(strict=True), which raises exactly like
+                # the string path) but float/double columns drop to the
+                # string path: Double.parseDouble accepts
+                # NaN/Infinity/hex-float literals strict MySQL must
+                # reject — see native_read_type. Documented deviation
+                # (both lanes): an unquoted empty token reads as NULL,
+                # as univocity substitutes the null sentinel for it on
+                # the string path (MySQL LOAD DATA: 0 with warning /
+                # strict error).
+                if (
+                    not csv_cfg.header
+                    and not csv_cfg.not_null
+                    and csv_cfg.null != ""
+                ):
+                    # vectorized JVM parse for clean rows; corrupt-
+                    # record fallback through mysql_cast. Headerless
+                    # files make one group
+                    from ..sources.csv_source import read_csv_native
 
-                nf = read_csv_native(
-                    self.spark,
-                    [f.path for f in csv_files],
-                    csv_cfg,
-                    schema.columns,
-                    strict=strict,
-                )
-                # multiLine CSV reads are whole-file, and the
-                # session's openCostInBytes disables file packing ->
-                # one file per task, so row-ids need no extra job
-                df = _rowids(nf.df)
-                frames.append(
-                    self._permute(
-                        df,
-                        schema,
-                        [c.name for c in schema.columns],
-                        source_latin1=True,
-                        native_frame=nf,
-                    )
-                )
-            else:
-                # a header row names (and orders) the file columns;
-                # without one the fields come in table order
-                df = _rowids(
-                    read_csv(
+                    nf = read_csv_native(
                         self.spark,
                         [f.path for f in csv_files],
                         csv_cfg,
-                        column_names=(
-                            None
-                            if csv_cfg.header
-                            else [c.name for c in schema.columns]
-                        ),
+                        schema.columns,
+                        strict=strict,
                     )
-                )
-                frames.append(
-                    self._permute(
-                        df,
-                        schema,
-                        [c for c in df.columns if c != "_row_id"],
-                        source_latin1=True,
-                    )
-                )
-        if sql_files:
-            # column list from the first INSERT's header, read
-            # driver-side (64 KiB peek — no Spark job); else table
-            # order (the common mydumper case)
-            file_columns = probe_insert_columns(
-                sql_files[0].path, self.cfg.mydumper.character_set
-            ) or [c.name for c in schema.columns]
-            df = read_sql_dump(
-                self.spark,
-                [(f.path, f.size) for f in sql_files],
-                self.cfg.mydumper.character_set,
-                num_columns=len(file_columns),
-                columnar=True,
-                all_files=[(f.path, f.size) for f in all_sql],
-            )
-            df = df.toDF(*(["_row_id"] + file_columns))
+                    lane["native_frame"] = nf
 
+                    def read(cols, group):
+                        return rowids(nf.df)
+                else:
+
+                    def read(cols, group):
+                        return rowids(
+                            read_csv(
+                                self.spark, [f.path for f in group],
+                                csv_cfg, cols,
+                            )
+                        )
+            # a header row names (and orders) each file's columns;
+            # without one the fields come in table order
             frames.append(
-                self._permute(
-                    df, schema, file_columns, missing_sentinel=MISSING_FIELD
+                self._by_file_columns(
+                    schema,
+                    csv_files,
+                    functools.partial(read_header, cfg=csv_cfg),
+                    read,
+                    mono_start=GZ_LANE if has_gz else None,
+                    source_latin1=True,
+                    **lane,
+                )
+            )
+        if sql_files:
+            # row-id bases and the split size come from the full file
+            # list and the table's one divisor, whatever the group
+            frames.append(
+                self._by_file_columns(
+                    schema,
+                    sql_files,
+                    sql_columns.get,
+                    lambda cols, group: read_sql_dump(
+                        self.spark,
+                        [(f.path, f.size) for f in group],
+                        charset,
+                        num_columns=sql_width,
+                        columnar=True,
+                        all_files=[(f.path, f.size) for f in all_sql],
+                        column_names=cols,
+                    ),
+                    missing_sentinel=MISSING_FIELD,
                 )
             )
         if not frames:
@@ -772,10 +677,7 @@ class RestoreController:
                 struct = struct.add(ROWID_COL, T.LongType(), False)
             struct = struct.add("_row_id", T.LongType())
             return self.spark.createDataFrame([], schema=struct)
-        df = frames[0]
-        for f in frames[1:]:
-            df = df.unionByName(f)
-        return df
+        return functools.reduce(DataFrame.unionByName, frames)
 
     def _observe_write(
         self,
@@ -856,21 +758,6 @@ class RestoreController:
         )
         row = mdf.agg(*metrics).first()
         return row.asDict()
-
-    @staticmethod
-    def _merge_ck(a: Checksum | None, b: Checksum) -> Checksum:
-        """XOR-monoid merge of engine checksums; a -1 byte count is
-        the xxdirect 'bytes not tracked' sentinel and must stay -1."""
-        if a is None:
-            return b
-        nbytes = (
-            -1
-            if (a.total_bytes < 0 or b.total_bytes < 0)
-            else a.total_bytes + b.total_bytes
-        )
-        return Checksum(
-            a.crc_xor ^ b.crc_xor, nbytes, a.total_kvs + b.total_kvs
-        )
 
     def _check_cancelled(self) -> None:
         if self.cancel_event is not None and self.cancel_event.is_set():
@@ -1099,12 +986,10 @@ class RestoreController:
                 if self.progress:
                     self.progress.table_written(name, nbytes)
             if want_cs and rec.get("crc_xor") is not None:
-                total = self._merge_ck(
-                    total,
-                    Checksum(
-                        rec["crc_xor"], rec["total_bytes"], rec["total_kvs"]
-                    ),
+                ck = Checksum(
+                    rec["crc_xor"], rec["total_bytes"], rec["total_kvs"]
                 )
+                total = ck if total is None else total.add(ck)
             rows += int(rec.get("rows") or 0)
             if rec.get("max_id") is not None:
                 v = int(rec["max_id"])
@@ -1144,46 +1029,101 @@ class RestoreController:
             divisor=divisor,
         )
         read = functools.partial(
-            read_blocks, self.spark, names=names, bases=bases,
-            divisor=divisor, split_bytes=split_bytes,
+            read_blocks, self.spark, bases=bases, divisor=divisor,
+            split_bytes=split_bytes,
         )
         if not jsonl:
-            df = read(blocks, csv=self.cfg.mydumper.csv)
+            df = read(blocks, names, csv=self.cfg.mydumper.csv)
             return self._permute(df, schema, names, source_latin1=True)
-        jdf = self._jsonl_by_casing(
+        return self._jsonl_frame(
             schema,
             blocks,
-            lambda b: b[0],
-            lambda key, group: read(group, json_keys=list(key)),
+            lambda keys, group: read(group, keys),
+            path_of=operator.itemgetter(0),
         )
-        return self._permute_jsonl(jdf, schema)
 
-    @staticmethod
-    def _jsonl_by_casing(schema: TableSchema, items: list, path_of, read):
-        """One frame over JSONL ``items`` (files or byte-range blocks
-        of them), shared by the batch and block lanes. Spark's JSON
-        parser matches schema names EXACTLY (the parquet path is
-        case-insensitive — so is this one): each item's file head is
-        probed driver-side, items are grouped by their file's resolved
-        key casing, ``read(key, group)`` reads one group with that
-        exact-name reader schema into DDL-named string columns, and the
-        groups are unioned. Probing only part 0 would silently read a
-        differently-cased later part as all-NULL rows; a part whose
-        keys match NO target column raises (require_match)."""
-        from ..sources.jsonl_source import resolve_field_names
+    def _by_file_columns(
+        self,
+        schema: TableSchema,
+        items: list,
+        probe,
+        read,
+        mono_start: int | None = None,
+        path_of=operator.attrgetter("path"),
+        **lane,
+    ) -> DataFrame:
+        """The one column mapping of every read lane, decided per data
+        file (the reference's per-chunk ColumnPermutation,
+        initializeColumns restore.go:1356-1406): ``probe(path)`` reads
+        the file's own column list driver-side (None: table order),
+        items (data files, or byte-range blocks with ``path_of``)
+        whose files share a list are read together by ``read(columns,
+        items)``, each group goes through _permute under its list with
+        the ``lane`` flags, and the groups are unioned. Probing only
+        the first file would map a later file that orders or omits
+        columns differently onto the wrong columns. ``mono_start``
+        gives a capacity-scheme lane its ids here, one disjoint band
+        per group."""
+        from ..operators.rowid import MONO_GROUP_STRIDE, assign_rowid_mono
 
-        names = [c.name for c in schema.columns]
-        casing: dict[str, tuple] = {}
+        names = tuple(c.name for c in schema.columns)
+        columns: dict[str, tuple] = {}
         groups: dict[tuple, list] = {}
         for it in items:
             path = path_of(it)
-            if path not in casing:
-                fmap = resolve_field_names(names, path, require_match=True)
-                casing[path] = tuple(fmap[n] for n in names)
-            groups.setdefault(casing[path], []).append(it)
-        return functools.reduce(
-            DataFrame.unionByName,
-            [read(key, groups[key]) for key in sorted(groups)],
+            if path not in columns:
+                columns[path] = tuple(probe(path) or names)
+            groups.setdefault(columns[path], []).append(it)
+        if mono_start is not None and len(groups) > 256:
+            raise ValueError(
+                f"{len(groups)} column lists in one table: more than "
+                "its capacity-scheme id lane holds (256)"
+            )
+        frames = []
+        for band, cols in enumerate(sorted(groups)):
+            df = read(list(cols), groups[cols])
+            if mono_start is not None:
+                df = assign_rowid_mono(
+                    df, start=mono_start + band * MONO_GROUP_STRIDE
+                )
+            frames.append(self._permute(df, schema, list(cols), **lane))
+        return functools.reduce(DataFrame.unionByName, frames)
+
+    def _jsonl_frame(
+        self, schema: TableSchema, items: list, read, **where
+    ) -> DataFrame:
+        """JSONL ``items`` (files or byte-range blocks of them) through
+        _by_file_columns, shared by the batch and block lanes. Spark's
+        JSON parser matches schema names EXACTLY (the parquet path is
+        case-insensitive — so is this one), so each file's probe is
+        its key for every DDL column (a part whose keys match NO
+        target column raises: require_match) and ``read(keys,
+        items)`` reads those keys as strings; ``where`` passes
+        ``mono_start`` / ``path_of`` on. JSON cannot distinguish
+        an absent key from an explicit null; for NOT NULL columns a
+        null is invalid anyway, so it maps to the missing sentinel and
+        takes the column DEFAULT (the absent-trailing-field CSV
+        semantics); nullable columns keep real NULLs."""
+        from ..sources.jsonl_source import resolve_field_names
+
+        names = [c.name for c in schema.columns]
+
+        def read_keys(keys, group):
+            df = read(keys, group)
+            nulls = {
+                k: F.coalesce(F.col(k), F.lit(MISSING_FIELD))
+                for k, c in zip(keys, schema.columns)
+                if not c.nullable
+            }
+            return df.withColumns(nulls) if nulls else df
+
+        return self._by_file_columns(
+            schema,
+            items,
+            lambda path: resolve_field_names(names, path, require_match=True),
+            read_keys,
+            missing_sentinel=MISSING_FIELD,
+            **where,
         )
 
     def _permute(
@@ -1204,34 +1144,6 @@ class RestoreController:
             keep=["_row_id"],
             charset=self.cfg.mydumper.character_set,
             **lane,
-        )
-
-    def _permute_jsonl(self, jdf: DataFrame, schema: TableSchema) -> DataFrame:
-        """The JSONL cast ladder over an all-string, DDL-named frame
-        plus ``_row_id``, shared by the batch and block lanes. JSON
-        cannot distinguish an absent key from an explicit null; for
-        NOT NULL columns a null is invalid anyway, so it maps to the
-        missing sentinel and takes the column DEFAULT (the
-        absent-trailing-field CSV semantics); nullable columns keep
-        real NULLs."""
-        jdf = jdf.select(
-            *[
-                (
-                    F.coalesce(
-                        F.col(c.name), F.lit(MISSING_FIELD)
-                    ).alias(c.name)
-                    if not c.nullable
-                    else F.col(c.name)
-                )
-                for c in schema.columns
-            ],
-            F.col("_row_id"),
-        )
-        return self._permute(
-            jdf,
-            schema,
-            [c.name for c in schema.columns],
-            missing_sentinel=MISSING_FIELD,
         )
 
     def restore_table(
@@ -1334,11 +1246,7 @@ class RestoreController:
                     and local is not None
                     and (self.cfg.on_duplicate == "error" or not keys)
                 )
-                expected_ck = (
-                    self._merge_ck(prior_ck, local)
-                    if inc_verifiable
-                    else local
-                )
+                expected_ck = prior_ck.add(local) if inc_verifiable else local
                 want_remote = need_remote and (
                     not dedup_may_drop or inc_verifiable
                 )
@@ -1359,16 +1267,7 @@ class RestoreController:
                             row["total_bytes"],
                             row["total_kvs"] * self._kv_mult(schema),
                         )
-                        if remote != expected_ck:
-                            raise ValueError(
-                                f"checksum mismatched remote vs local => "
-                                f"(checksum: {remote.crc_xor} vs "
-                                f"{expected_ck.crc_xor}) "
-                                f"(total_kvs: {remote.total_kvs} vs "
-                                f"{expected_ck.total_kvs}) "
-                                f"(total_bytes: {remote.total_bytes} vs "
-                                f"{expected_ck.total_bytes})"
-                            )
+                        expected_ck.verify(remote)
                     if id_col:
                         base = (row["max_id"] or 0) + 1
             elif obs_max_id is not None:

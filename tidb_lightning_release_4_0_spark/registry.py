@@ -1024,7 +1024,7 @@ def q_split_csv_rowids(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     bases = file_row_bases_split([(path, os.path.getsize(path))], 3, sb)
-    df = read_csv(spark, path, cfg, num_columns=3)
+    df = read_csv(spark, path, cfg, ["_c0", "_c1", "_c2"])
     df = assign_rowid_by_file_split(df, bases, 3, sb)
     w = Window.orderBy("_row_id")
     return df.select(

@@ -226,33 +226,32 @@ def read_blocks(
     divisor: int,
     split_bytes: int,
     csv: CSVConfig | None = None,
-    json_keys: list[str] | None = None,
 ) -> DataFrame:
     """Read ONLY the given byte-range blocks into all-string columns
     named ``names`` plus ``_row_id``. One task per block.
 
-    ``json_keys`` reads JSON Lines: one resolved key-casing group
-    (jsonl_source.resolve_field_names output aligned with ``names``);
-    the caller groups blocks by their file's casing and unions the
-    groups, as the batch lane does. A malformed line FAILS the job
+    ``csv`` reads headerless CSV through from_csv with the same option
+    map as spark.read.csv. Without it the blocks are JSON Lines and
+    ``names`` are the keys as the files spell them (one casing group:
+    the caller groups blocks by their file's keys and unions the
+    groups, as the batch lane does). A malformed line FAILS the job
     (from_json FAILFAST, the read_jsonl contract: a bad line must
     never materialize as an all-null row that default-fill would
-    fabricate into data). Otherwise ``csv`` reads headerless CSV
-    through from_csv with the same option map as spark.read.csv.
+    fabricate into data).
 
     ``bases`` and ``divisor`` must be the ones file_row_bases_split
     was given: ``_row_id`` is the file base + split_chunk_base +
     in-block line index + 1."""
-    jsonl = json_keys is not None
+    jsonl = csv is None
     if jsonl:
         parse = F.from_json(
             F.col("_raw"),
             T.StructType(
-                [T.StructField(k, T.StringType(), True) for k in json_keys]
+                [T.StructField(k, T.StringType(), True) for k in names]
             ),
             {"mode": "FAILFAST"},
         )
-        fields = json_keys
+        fields = names
     else:
         csv.validate()
         if csv.header:

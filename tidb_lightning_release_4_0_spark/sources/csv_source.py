@@ -30,15 +30,14 @@ def read_csv(
     spark: SparkSession,
     paths: list[str] | str,
     cfg: CSVConfig,
-    num_columns: int | None = None,
-    column_names: list[str] | None = None,
+    column_names: list[str],
 ) -> DataFrame:
-    """Read CSV file(s) into an all-string DataFrame. Paths are
-    literal: glob characters in them match themselves.
-
-    Column naming: with ``cfg.header`` the file's header row names the
-    columns (order only — never types, csv_parser.go:101-118);
-    otherwise ``_c0.._cN`` positional names (or ``column_names``).
+    """Read CSV file(s) into an all-string DataFrame whose columns are
+    ``column_names``: the files' column list, from their header row
+    (csv_strict.read_header; the row itself is skipped, and names
+    order, never type, the columns: csv_parser.go:101-118) or the
+    table's columns for headerless files. Paths are literal: glob
+    characters in them match themselves.
 
     Scale: the reader is splittable (quoted newlines force multiLine
     which disables intra-file splitting, same trade-off the reference
@@ -53,37 +52,20 @@ def read_csv(
     # byte-oriented, csv_parser.rl). The cast layer re-decodes text
     # columns to the table charset.
     opts["encoding"] = "ISO-8859-1"
-    reader = spark.read.options(**opts)
     # mydumper writes a trailing separator: the lexer DROPS the extra
     # field it produces (csv_parser.rl trim-last-sep), it does not
     # null out the real last column — so read n+1 columns and drop
     # the synthetic one. A legitimately-empty last value ('' vs NULL)
     # survives intact.
-    extra = "_trailing_sep" if cfg.trim_last_sep else None
-    if column_names:
-        names = list(column_names) + ([extra] if extra else [])
-        schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in names]
-        )
-        df = reader.schema(schema).csv(literal_paths(paths))
-    elif num_columns:
-        n = num_columns + (1 if extra else 0)
-        schema = T.StructType(
-            [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n)]
-        )
-        df = reader.schema(schema).csv(literal_paths(paths))
-        if extra:
-            extra = f"_c{num_columns}"
-    else:
-        # infer column COUNT only (types stay string); with a trailing
-        # separator the inferred frame already carries the extra field
-        # as its last column
-        df = reader.option("inferSchema", "false").csv(literal_paths(paths))
-        if cfg.trim_last_sep:
-            extra = df.columns[-1]
-    if extra:
-        df = df.drop(extra)
-    return df
+    extra = ["_trailing_sep"] if cfg.trim_last_sep else []
+    schema = T.StructType(
+        [
+            T.StructField(c, T.StringType(), True)
+            for c in [*column_names, *extra]
+        ]
+    )
+    df = spark.read.options(**opts).schema(schema).csv(literal_paths(paths))
+    return df.drop(*extra) if extra else df
 
 
 # ---------------------------------------------------------------------------

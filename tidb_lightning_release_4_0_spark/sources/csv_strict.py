@@ -24,6 +24,7 @@ the Spark-native reader remains the 100 TB default.
 
 from __future__ import annotations
 
+import gzip
 from collections.abc import Iterator
 
 import pandas as pd
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..config import CSVConfig
-from ..operators.rowid import file_row_bases, metadata_df
+from ..operators.rowid import metadata_df
 from ..session import settle_import_caches
 from .sql_dump_source import positional_frame, positional_schema
 
@@ -127,35 +128,37 @@ def parse_csv_text(
         yield from end_row()
 
 
+def read_header(path: str, cfg: CSVConfig) -> list[str] | None:
+    """The names, in order, of the file's columns from its header row
+    (a driver-side read of the first MiB, decompressed for ``.gz``);
+    None without ``cfg.header``."""
+    if not cfg.header:
+        return None
+    opener = gzip.open if path.lower().endswith(".gz") else open
+    with opener(path, "rb") as f:
+        head = f.read(1 << 20).decode("latin-1")
+    first = next(parse_csv_text(head, cfg), None)
+    return [c if c is not None else "" for c in first or []]
+
+
 def read_csv_strict(
     spark: SparkSession,
-    files: list[tuple[str, int]],
+    files: list[str],
     cfg: CSVConfig,
-    num_columns: int,
-) -> tuple[DataFrame, list[str] | None]:
-    """Parse CSV files with exact MySQL semantics.
-
-    Returns (df of ``_row_id`` plus one string column per file
-    column, ``_c0..``, header_columns_or_None). The width is the
-    header's, or ``num_columns`` without one; short rows pad with
+    column_names: list[str],
+    bases: dict[str, int],
+) -> DataFrame:
+    """Parse CSV files with exact MySQL semantics into ``_row_id``
+    plus one string column per name of ``column_names`` (the files'
+    column list). A header row is skipped; short rows pad with
     MISSING_FIELD (LOAD DATA fills defaults for missing trailing
     fields) and long rows are cut, as in the .sql reader's columnar
-    shape. Row-id bases are reserved per file like the .sql reader.
-    """
-    bases = file_row_bases(files, num_columns, is_sql=False)
-
-    header_cols: list[str] | None = None
-    if cfg.header and files:
-        with open(files[0][0], "rb") as f:
-            head_text = f.read(1 << 20).decode("latin-1")
-        first = next(parse_csv_text(head_text, cfg), None)
-        header_cols = [c if c is not None else "" for c in (first or [])]
-
+    shape. ``bases`` are the table's per-file row-id bases."""
     # one partition per file directly — see metadata_df for why a
     # .repartition here would cost an extra shuffle job per read
     plan = metadata_df(
         spark,
-        [(p, bases[p]) for p, _ in files],
+        [(p, bases[p]) for p in files],
         T.StructType(
             [
                 T.StructField("path", T.StringType(), False),
@@ -167,7 +170,7 @@ def read_csv_strict(
 
     has_header = cfg.header
     cfg_copy = CSVConfig(**cfg.__dict__)
-    width = len(header_cols) if header_cols else num_columns
+    width = len(column_names)
 
     def parse_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         settle_import_caches()
@@ -185,7 +188,6 @@ def read_csv_strict(
                         range(first, first + len(rows)), rows, width
                     )
 
-    return (
-        plan.mapInPandas(parse_files, schema=positional_schema(width)),
-        header_cols,
-    )
+    return plan.mapInPandas(
+        parse_files, schema=positional_schema(width)
+    ).toDF("_row_id", *column_names)

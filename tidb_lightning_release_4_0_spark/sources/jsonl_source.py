@@ -102,8 +102,8 @@ def probe_jsonl_keys(path: str) -> list[str] | None:
 
 def resolve_field_names(
     ddl_names: list[str], path: str, require_match: bool = False
-) -> dict[str, str]:
-    """DDL column -> actual file key, matched case-insensitively
+) -> list[str]:
+    """The file's key for each DDL column, matched case-insensitively
     against the head's keys (Spark's JSON parser matches schema
     field names EXACTLY, so a dump whose keys differ in case from the
     DDL would otherwise read every such value as NULL). Falls back to
@@ -127,4 +127,4 @@ def resolve_field_names(
                 "all-NULL and default-fill would fabricate data; "
                 "refusing to ingest it"
             )
-    return {n: by_lower.get(n.lower(), n) for n in ddl_names}
+    return [by_lower.get(n.lower(), n) for n in ddl_names]

@@ -266,13 +266,13 @@ def _resolve_field(
     return f
 
 
-def _parse_insert_statements_slow(
-    text: str, backslash_escape: bool = True
-) -> Iterator[tuple[list[str] | None, list[list[str | None]]]]:
-    """Exact per-token state machine (the reference-parity path)."""
-    tok = _TOKEN if backslash_escape else _TOKEN_NOESC
-    pos, n = 0, len(text)
-    # state: scan for INSERT/REPLACE ... VALUES
+def _insert_header(
+    text: str, pos: int, tok: re.Pattern
+) -> tuple[list[str] | None, int] | None:
+    """The next INSERT/REPLACE ... VALUES header at or after ``pos``:
+    (its column list, None without one; the position after VALUES),
+    or None when no statement follows."""
+    n = len(text)
     while pos < n:
         m = tok.match(text, pos)
         if not m:
@@ -288,7 +288,6 @@ def _parse_insert_statements_slow(
         cols: list[str] | None = None
         pending: list[str] = []
         in_parens = False
-        found_values = False
         while pos < n:
             m = tok.match(text, pos)
             if not m:
@@ -301,8 +300,7 @@ def _parse_insert_statements_slow(
             if kind == "word":
                 w = m.group("word").upper()
                 if w in ("VALUES", "VALUE") and not in_parens:
-                    found_values = True
-                    break
+                    return cols, pos
                 if in_parens:
                     pending.append(m.group("word"))
                 continue
@@ -318,8 +316,17 @@ def _parse_insert_statements_slow(
                 elif p == ";":
                     break
             # anything else inside the header is ignored
-        if not found_values:
-            continue
+    return None
+
+
+def _parse_insert_statements_slow(
+    text: str, backslash_escape: bool = True
+) -> Iterator[tuple[list[str] | None, list[list[str | None]]]]:
+    """Exact per-token state machine (the reference-parity path)."""
+    tok = _TOKEN if backslash_escape else _TOKEN_NOESC
+    pos = 0
+    while (header := _insert_header(text, pos, tok)) is not None:
+        cols, pos = header
         rows, pos = _parse_tuples(text, pos, tok, backslash_escape)
         yield cols, rows
 
@@ -519,13 +526,13 @@ def _utf8_head(path: str) -> bool:
 
 
 def probe_insert_columns(
-    path: str, character_set: str = "auto", backslash_escape: bool = True
+    path: str, character_set: str = "auto"
 ) -> list[str] | None:
     """Driver-side peek at the first INSERT's column list (no Spark
     job): mydumper writes the header at the top of every data file,
-    so a 64 KiB head + the tolerant tokenizer finds it. None when
-    statements carry no column list (the common case — table order
-    applies)."""
+    so a 64 KiB head + the tolerant tokenizer, stopped at VALUES,
+    finds it. None when statements carry no column list (the common
+    case — table order applies)."""
     try:
         head = open(path, "rb").read(65536)
     except OSError:
@@ -534,27 +541,32 @@ def probe_insert_columns(
         text = _decode(head, character_set)
     except UnicodeDecodeError:
         text = head.decode("utf-8", errors="ignore")
-    for cols, _rows in _parse_insert_statements_slow(text, backslash_escape):
-        return cols
-    return None
+    header = _insert_header(text, 0, _TOKEN)
+    return header[0] if header else None
 
 
 def read_sql_dump(
     spark: SparkSession,
     files: list[tuple[str, int]],
     character_set: str = "auto",
-    backslash_escape: bool = True,
     num_columns: int | None = None,
     split_bytes: int | None = None,
     columnar: bool = False,
     all_files: list[tuple[str, int]] | None = None,
+    column_names: list[str] | None = None,
 ) -> DataFrame:
     """Parse mydumper .sql data files into (file, row_id, fields) rows.
 
     ``files``: (path, size) pairs from the discovery step. Row-id
     bases are reserved per file at plan time with the reference's
-    size/divisor estimate (divisor = #cols + 2 for .sql,
-    region.go:146-170): ids are unique + deterministic, bounded gaps.
+    size/divisor estimate (divisor = ``num_columns`` + 2,
+    region.go:146-170; the caller passes the table's column count, or
+    the narrowest INSERT column list of its files when that is
+    shorter, so every row takes >= divisor bytes): ids are unique +
+    deterministic, bounded gaps. ``columnar`` rows are ``_row_id``
+    plus one string column per field: named ``column_names`` (the
+    files' INSERT column list, which may differ from the table's) or
+    ``_c0..`` for ``num_columns`` fields.
 
     Large UTF-8 files are **byte-range split** (the distributed analog
     of the reference's statement-boundary ReadChunks,
@@ -581,6 +593,7 @@ def read_sql_dump(
     table_files = all_files if all_files is not None else files
     base_map = file_row_bases(table_files, num_columns or 0, is_sql=True)
 
+    width = len(column_names) if column_names else int(num_columns or 0)
     if split_bytes is None:
         total = sum(sz for _, sz in table_files)
         split_bytes = min(64 << 20, max(1 << 20, total // SPLIT_TARGETS + 1))
@@ -589,7 +602,6 @@ def read_sql_dump(
     for p, sz in files:
         if (
             sz > split_bytes * 3 // 2
-            and backslash_escape
             and character_set.lower() in ("utf8", "utf8mb4", "auto", "binary")
             and _utf8_head(p)
         ):
@@ -646,7 +658,7 @@ def read_sql_dump(
             if not seg.strip():
                 continue
             rid = fbase + (byte_off + s0) // divisor
-            for cols, rows in parse_insert_statements(seg, backslash_escape):
+            for cols, rows in parse_insert_statements(seg):
                 for r in rows:
                     rid += 1
                     out_file.append(path)
@@ -669,9 +681,7 @@ def read_sql_dump(
                     text = _decode(raw, character_set)
                     out_file, out_rid, out_cols, out_fields = [], [], [], []
                     rid = fbase
-                    for cols, rows in parse_insert_statements(
-                        text, backslash_escape
-                    ):
+                    for cols, rows in parse_insert_statements(text):
                         for r in rows:
                             rid += 1
                             out_file.append(path)
@@ -730,9 +740,7 @@ def read_sql_dump(
                     # list<string> Arrow arrays, no JVM-side getItem
                     # re-projection — measurably faster at 100 TB
                     # where every extra pass over the row stream counts
-                    yield positional_frame(
-                        out_rid, out_fields, int(num_columns or 0)
-                    )
+                    yield positional_frame(out_rid, out_fields, width)
                 else:
                     yield pd.DataFrame(
                         {
@@ -743,7 +751,7 @@ def read_sql_dump(
                         }
                     )
 
-    out_schema = (
-        positional_schema(int(num_columns or 0)) if columnar else OUTPUT_SCHEMA
-    )
-    return plan.mapInPandas(parse_files, schema=out_schema)
+    if not columnar:
+        return plan.mapInPandas(parse_files, schema=OUTPUT_SCHEMA)
+    df = plan.mapInPandas(parse_files, schema=positional_schema(width))
+    return df.toDF("_row_id", *column_names) if column_names else df
