@@ -30,7 +30,9 @@ from tidb_lightning_release_4_0_spark.plans.checkpoints import (
 from tidb_lightning_release_4_0_spark.plans.pipeline import RestoreController
 from tidb_lightning_release_4_0_spark.sinks.parquet_sink import ParquetSink
 
-TMP = "/root/repo/.tmp/block_resume"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "block_resume"
+)
 
 N_ROWS = 4000  # one file, several KiB-scale blocks
 

@@ -7,8 +7,10 @@ column, must restore the same rows through the ``.sql``, header
 string-CSV, strict-CSV, JSONL and parquet lanes: no part may be read
 under another part's column list.
 
-Also pins that a PK-less ``.sql`` table read as two column-list groups
-gets distinct ``_tidb_rowid`` values (one row-id divisor per table),
+Also pins that a PK-less ``.sql`` table read as two column-list groups,
+and a PK-less table whose ``.sql`` lists or CSV headers are narrower
+than its DDL, get distinct ``_tidb_rowid`` values (one row-id divisor
+per table, from the narrowest list),
 and that parquet's typed cast branch keys the session projection memo:
 lenient and strict sql_mode, and a string frame next to a typed one,
 each get their own projection in one session.
@@ -167,6 +169,35 @@ def test_narrow_sql_lists_keep_rowids_distinct(spark):
         parts=parts,
     )
     summary, sink = _restore(spark, d)
+    assert summary.ok, summary.report()
+    df = sink.tables["fc.t"]
+    assert df.count() == 2 * n
+    assert df.select(ROWID_COL).distinct().count() == 2 * n
+
+
+@pytest.mark.parametrize(
+    "csv",
+    [
+        CSVConfig(header=True),
+        CSVConfig(header=True, strict_format=True),
+        CSVConfig(header=True, strict_parser=True),
+    ],
+    ids=["header_csv", "strict_format_csv", "strict_csv"],
+)
+def test_narrow_csv_headers_keep_rowids_distinct(spark, csv):
+    """A PK-less six-column table whose header CSV parts list only
+    (a, b): a row is 4 bytes, ``1,2\n``, fewer than the DDL width, so
+    the table's CSV divisor must shrink to the narrowest header for
+    each part's reserved id range to hold its rows."""
+    n = 200
+    parts = [(("a", "b"), [(i % 10, k) for i in range(n)]) for k in range(2)]
+    d = _write_dump(
+        "rowid_narrow_csv",
+        "csv",
+        ddl="CREATE TABLE t (a INT, b INT, c INT, d INT, e INT, f INT);",
+        parts=parts,
+    )
+    summary, sink = _restore(spark, d, csv)
     assert summary.ok, summary.report()
     df = sink.tables["fc.t"]
     assert df.count() == 2 * n

@@ -16,7 +16,6 @@ import zipimport
 import pytest
 
 from tidb_lightning_release_4_0_spark.functions import kv_codec
-from tidb_lightning_release_4_0_spark.operators import rowid
 from tidb_lightning_release_4_0_spark.session import settle_import_caches
 from tidb_lightning_release_4_0_spark.sources import (
     csv_blocks,
@@ -69,7 +68,6 @@ ENTRY_POINTS = [
     (kv_codec, "kv_hash_columns", "_np_kernel"),
     (csv_strict, "read_csv_strict", "parse_files"),
     (csv_blocks, "_block_lines", "extract"),
-    (rowid, "_local_index_mapper", "fn"),
 ]
 
 

@@ -24,7 +24,9 @@ from tidb_lightning_release_4_0_spark.sources.dump_writer import (
     write_dump_table,
 )
 
-TMP = "/root/repo/.tmp/incremental"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "incremental"
+)
 
 DUP_DDL = """
 CREATE TABLE `dup` (

@@ -26,7 +26,9 @@ from tidb_lightning_release_4_0_spark.sinks.jdbc_sink import (
     render_insert,
 )
 
-TMP = "/root/repo/.tmp/jdbc_delivery"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "jdbc_delivery"
+)
 
 DDL = """
 CREATE TABLE `dup` (

@@ -11,7 +11,9 @@ import shutil
 from tidb_lightning_release_4_0_spark.config import Config, MydumperConfig
 from tidb_lightning_release_4_0_spark.plans.pipeline import RestoreController
 
-TMP = "/root/repo/.tmp/jsonl_ingest"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "jsonl_ingest"
+)
 
 DDL = """
 CREATE TABLE `t` (

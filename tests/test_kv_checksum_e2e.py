@@ -19,7 +19,9 @@ from tidb_lightning_release_4_0_spark.functions.hashing import crc64_bytes
 from tidb_lightning_release_4_0_spark.functions.kv_codec import encode_record
 from tidb_lightning_release_4_0_spark.plans.pipeline import RestoreController
 
-ROOT = "/root/repo/.tmp/kv_e2e"
+ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "kv_e2e"
+)
 
 
 def _dump(tag: str, ddl: str, csv_rows: str) -> str:

@@ -300,7 +300,11 @@ def test_kv_checksum_e2e_various_types_shaped(spark, rfv, algo):
         RestoreController,
     )
 
-    root = "/root/repo/.tmp/kv_kinds_e2e"
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".tmp",
+        "kv_kinds_e2e",
+    )
     tag = f"vt_{algo}"
     d = os.path.join(root, tag)
     shutil.rmtree(d, ignore_errors=True)

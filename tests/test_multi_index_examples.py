@@ -18,7 +18,11 @@ import duckdb
 import pytest
 
 EXAMPLES = "/root/reference/lightning/mydump/examples"
-ROOT = "/root/repo/.tmp/multi_index_test"
+ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".tmp",
+    "multi_index_test",
+)
 
 # the pinned golden (crc64-ECMA XOR over every record+index KV pair,
 # total bytes, total kv count = 10000 rows x (1 data + 2 index))

@@ -73,7 +73,9 @@ def test_ingest_plan_stays_jvm(spark, tables):
         parse_create_table,
     )
 
-    d = "/root/repo/.tmp/planq"
+    d = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "planq"
+    )
     import shutil
 
     shutil.rmtree(d, ignore_errors=True)
@@ -524,29 +526,32 @@ def test_minhash_candidate_shuffle_sizes_with_data(spark, sf_dir):
     # candidate volume is ~1e-7 of brute force, measured at 1024x)
 
 
-def test_minhash_sizing_count_is_metadata_job(spark, sf_dir):
+def test_minhash_sizing_count_is_metadata_job(spark, sf_dir, monkeypatch):
     """r11 opt pinned (r12 directive #6): the derived-partitions
     sizing ``count()`` runs on the RAW parquet scan BEFORE ``_spread``
     — a metadata-answerable single job — instead of executing the
     round-robin exchange (+ sort-before-repartition) just to learn a
-    row count. With the count pre-spread the whole pairs count is 7
-    jobs at this shape; the post-spread formulation added one more
-    (the AQE exchange materialization for the count). Pin the job
-    budget so a regression re-adding the exchange trips loudly."""
+    row count. Pinned on the plan of every frame minhash_lsh_pairs
+    counts while it builds the pairs: none holds a round-robin
+    exchange."""
     from tidb_lightning_release_4_0_spark.operators import dedup as D
 
-    sc = spark.sparkContext
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    docs.count()  # warm the scan metadata
-    sc.setJobGroup("mh_jobcount", "minhash pairs sizing job budget")
-    try:
-        D.minhash_lsh_pairs(docs, threshold=0.2).count()
-    finally:
-        sc.setJobGroup(None, None)
-    ids = sc.statusTracker().getJobIdsForGroup("mh_jobcount")
-    assert len(ids) <= 7, f"minhash pairs count ran {len(ids)} jobs"
+    plans = []
+    frame_class = type(docs)
+    real_count = frame_class.count
+
+    def recording_count(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real_count(self)
+
+    monkeypatch.setattr(frame_class, "count", recording_count)
+    D.minhash_lsh_pairs(docs, threshold=0.2)
+    assert plans, "minhash pairs ran no sizing count"
+    for plan in plans:
+        assert "RoundRobinPartitioning" not in plan, plan
 
 
 def test_cc_label_frame_is_one_arrow_batch(spark):

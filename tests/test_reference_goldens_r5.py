@@ -27,7 +27,9 @@ from tidb_lightning_release_4_0_spark.plans.checkpoints import (
 from tidb_lightning_release_4_0_spark.plans.pipeline import RestoreController
 from tidb_lightning_release_4_0_spark.sinks.parquet_sink import ParquetSink
 
-TMP = "/root/repo/.tmp/goldens_r5"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "goldens_r5"
+)
 
 
 class _FailNthEngineSink(ParquetSink):

@@ -24,7 +24,9 @@ from pyspark.sql import functions as F
 from tests.oracle import normalize
 from tidb_lightning_release_4_0_spark.sinks.parquet_sink import ParquetSink
 
-TMP = "/root/repo/.tmp/round4_fixes"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "round4_fixes"
+)
 
 
 def _sink(root: str) -> ParquetSink:

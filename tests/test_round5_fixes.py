@@ -27,7 +27,9 @@ from tidb_lightning_release_4_0_spark.sources.schema_reader import (
 )
 from tidb_lightning_release_4_0_spark.streaming.restore import StreamingRestore
 
-TMP = "/root/repo/.tmp/round5_fixes"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "round5_fixes"
+)
 
 DDL = (
     "create table t (id int primary key, name varchar(20) not null,"

@@ -30,7 +30,9 @@ from tidb_lightning_release_4_0_spark.operators.rowid import (
 from tidb_lightning_release_4_0_spark.sources.csv_source import read_csv
 from tidb_lightning_release_4_0_spark.config import CSVConfig
 
-TMP = "/root/repo/.tmp/round8_tests"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "round8_tests"
+)
 
 
 def _driver_default_session(spark):

@@ -32,7 +32,11 @@ from tidb_lightning_release_4_0_spark.sources.csv_strict import read_header
 
 C3 = ["_c0", "_c1", "_c2"]
 
-TMP = "/root/repo/.tmp/split_csv_tests"
+TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".tmp",
+    "split_csv_tests",
+)
 
 
 @pytest.fixture

@@ -21,9 +21,8 @@ from tidb_lightning_release_4_0_spark.streaming.events import (
     windowed_counts,
 )
 
-TMP = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "stream"
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, ".tmp", "stream")
 
 
 def _events_json_dir(spark, tables) -> str:
@@ -158,7 +157,7 @@ def test_ctl_cli(tmp_path):
     def run(*args):
         return subprocess.run(
             [sys.executable, "ctl.py", *args],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=REPO,
         )
 
     out = run("checkpoint-dump", "--checkpoint", cp_path)
@@ -293,7 +292,7 @@ def test_ctl_sqlite_store(tmp_path):
     store.set_task_meta("job_timestamp", "2026-01-01T00:00:00")
 
     r = subprocess.run(
-        [_sys.executable, "/root/repo/ctl.py", "checkpoint-dump",
+        [_sys.executable, os.path.join(REPO, "ctl.py"), "checkpoint-dump",
          "--checkpoint", f"sqlite:{db}"],
         capture_output=True, text=True, timeout=120,
     )
@@ -303,7 +302,7 @@ def test_ctl_sqlite_store(tmp_path):
     assert dump["task"]["job_timestamp"] == "2026-01-01T00:00:00"
 
     r2 = subprocess.run(
-        [_sys.executable, "/root/repo/ctl.py", "checkpoint-remove",
+        [_sys.executable, os.path.join(REPO, "ctl.py"), "checkpoint-remove",
          "--checkpoint", f"sqlite:{db}", "--table", "all"],
         capture_output=True, text=True, timeout=120,
     )
@@ -332,7 +331,7 @@ def test_ctl_compact(spark):
     out = subprocess.run(
         [sys.executable, "ctl.py", "compact",
          "--target-dir", tgt, "--table", "db.frag"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert out.returncode == 0, out.stderr
     n_after = sum(
@@ -410,7 +409,7 @@ def test_ctl_error_destroy_drops_sink_table(spark):
         [sys.executable, "ctl.py", "checkpoint-error-destroy",
          "--checkpoint", cp_path, "--target-dir", tgt],
         capture_output=True, text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        cwd=REPO,
     )
     assert out.returncode == 0, out.stderr
     assert "dropped sink table `db`.`bad`" in out.stdout

@@ -17,7 +17,11 @@ import pytest
 from pyspark.sql import functions as F
 
 VT = "/root/reference/tests/various_types/data"
-ROOT = "/root/repo/.tmp/vt_fixture_test"
+ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".tmp",
+    "vt_fixture_test",
+)
 
 
 @pytest.fixture(scope="module")

@@ -17,23 +17,22 @@ semantics we reproduce:
   how the reference gets exact continuation for auto-increment
   rebase. Range-partitioned, never a single-partition window.
 
-NOT implemented with ``monotonically_increasing_id`` (non-dense,
-non-contiguous semantics are underdocumented) nor a global
-``row_number()`` window (single-partition bottleneck).
+Dense ids are NOT ``monotonically_increasing_id`` itself (its values
+jump at every partition) nor a global ``row_number()`` window
+(single-partition bottleneck); its low 33 bits serve only as the
+row's index within its partition.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyarrow import ArrowException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.types import _make_type_verifier
 from pyspark.sql.window import Window
 
-from ..session import settle_import_caches
 from .permutation import session_plan_cache
 
 ROWID = "_row_id"
@@ -46,18 +45,25 @@ def metadata_df(spark, rows: list, schema, slices: int = 1) -> DataFrame:
     32 near-empty tasks as an extra job per restore), and a
     .repartition to fix the layout is a shuffle AQE materializes as
     its own job. slices=1 for broadcast tables; slices=len(rows) for
-    one-task-per-row read plans.
+    one-task-per-row read plans (the reference's one restore task per
+    chunk, mydump/region.go:87-170).
 
-    The slices=1 (broadcast) path converts through pandas/Arrow
-    instead of parallelize(): the Arrow batch is built driver-side,
-    so materializing the broadcast costs ~half the wall of the
-    1-task RDD scan (measured 0.52 -> 0.24 s per build at 32 rows;
-    one build per table per restore). The explicit-slices path keeps
-    the RDD layout — its callers map one TASK per row.
+    The slices=1 (broadcast) path converts through pandas/Arrow: the
+    Arrow batch is built in this process, so materializing the
+    broadcast costs ~half the wall of the 1-task RDD scan (measured
+    0.52 -> 0.24 s per build at 32 rows; one build per table per
+    restore). pandas stores an integer column holding a None as
+    float64, which rounds every value above 2^53: such rows take the
+    row path.
 
-    pandas stores an integer column holding a None as float64, which
-    rounds every value above 2^53: such rows take the RDD path, which
-    keeps them exact."""
+    The row path makes the JVM calls of pyspark's own
+    createDataFrame(list) without its Python hop: each row is checked
+    by the schema's type verifier (a wrong-typed value raises before
+    any job starts) and converted to its internal form here, then the
+    JVM unpickles the parallelized list (SerDeUtil) and applies the
+    schema. createDataFrame(parallelize(rows)) would put a PythonRDD
+    identity map (RDD._pickled) under the plan: one more Python runner
+    in every task of a .sql, strict-CSV or block read."""
     if slices == 1 and rows and not _int_nulls(rows, schema):
         try:
             names = [f.name for f in schema.fields]
@@ -65,9 +71,20 @@ def metadata_df(spark, rows: list, schema, slices: int = 1) -> DataFrame:
                 pd.DataFrame(rows, columns=names), schema
             )
         except (ArrowException, TypeError, ValueError, OverflowError):
-            pass  # arrow/pandas conversion edge: RDD path below
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, max(slices, 1)), schema
+            pass  # arrow/pandas conversion edge: the row path below
+    verify = _make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    jvm = spark._jvm
+    jrdd = spark.sparkContext.parallelize(internal, max(slices, 1))._jrdd
+    objects = jvm.SerDeUtil.toJavaArray(jvm.SerDeUtil.pythonToJava(jrdd, True))
+    return DataFrame(
+        spark._jsparkSession.applySchemaToPythonRDD(
+            objects.rdd(), schema.json()
+        ),
+        spark,
     )
 
 
@@ -85,29 +102,16 @@ def _int_nulls(rows: list, schema) -> bool:
 _PARTITION_CAPACITY = 1 << 33
 
 
-def _local_index_mapper(schema):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        settle_import_caches()
-        seen = 0
-        for pdf in batches:
-            n = len(pdf)
-            pdf = pdf.copy()
-            pdf["_local_idx"] = range(seen, seen + n)
-            seen += n
-            yield pdf
-
-    return fn
-
-
 def _with_local_index(df: DataFrame) -> DataFrame:
-    """Add _pid + _local_idx without shuffling (Arrow batches)."""
-    from pyspark.sql import types as T
-
-    d = df.withColumn("_pid", F.spark_partition_id())
-    out_schema = T.StructType(
-        list(d.schema.fields) + [T.StructField("_local_idx", T.LongType(), False)]
+    """Add _pid + _local_idx without shuffling or Python: the low 33
+    bits of monotonically_increasing_id are the row's index within its
+    partition (the capacity scheme, as in assign_rowid_by_file)."""
+    return df.withColumn("_pid", F.spark_partition_id()).withColumn(
+        "_local_idx",
+        F.monotonically_increasing_id().bitwiseAND(
+            F.lit(_PARTITION_CAPACITY - 1)
+        ),
     )
-    return d.mapInPandas(_local_index_mapper(out_schema), schema=out_schema)
 
 
 # a capacity-scheme lane read as several column-list groups gives

@@ -418,9 +418,15 @@ class RestoreController:
             f.path: probe_insert_columns(f.path, charset) for f in all_sql
         }
         sql_width = min([ncols] + [len(c) for c in sql_columns.values() if c])
+        # each header CSV's column list (None without a header): the
+        # table's one CSV divisor is the narrowest header, at most the
+        # DDL width, since a row of k fields takes >= k bytes
+        csv_cfg = self.cfg.mydumper.csv
+        csv_columns = {f.path: read_header(f.path, csv_cfg) for f in all_csv}
+        csv_width = min([ncols] + [len(c) for c in csv_columns.values() if c])
         _ceiling = estimate_id_ceiling(
             [(f.path, f.size) for f in all_csv + all_sql],
-            sql_width,
+            min(sql_width, csv_width),
             split_bytes=_split_bytes,
         )
         GZ_LANE = _ceiling + 1
@@ -528,7 +534,6 @@ class RestoreController:
                 )
             )
         if csv_files:
-            csv_cfg = self.cfg.mydumper.csv
             has_gz = any(f.path.lower().endswith(".gz") for f in csv_files)
             if has_gz and csv_cfg.strict_parser:
                 raise ValueError(
@@ -541,7 +546,7 @@ class RestoreController:
             if csv_cfg.strict_parser:
                 # read_csv_strict marks short rows with the sentinel:
                 # LOAD DATA fills defaults for missing trailing fields
-                bases = file_row_bases(sizes, ncols)
+                bases = file_row_bases(sizes, csv_width)
                 lane["missing_sentinel"] = MISSING_FIELD
 
                 def read(cols, group):
@@ -573,8 +578,10 @@ class RestoreController:
                     # reference's SplitLargeFile offset/divisor scheme
                     rowids = functools.partial(
                         assign_rowid_by_file_split,
-                        bases=file_row_bases_split(sizes, ncols, _split_bytes),
-                        divisor=max(ncols, 1),
+                        bases=file_row_bases_split(
+                            sizes, csv_width, _split_bytes
+                        ),
+                        divisor=max(csv_width, 1),
                         split_bytes=_split_bytes,
                     )
                 else:
@@ -583,7 +590,7 @@ class RestoreController:
                     # -> one file per task, so row-ids need no extra job
                     rowids = functools.partial(
                         assign_rowid_by_file,
-                        bases=file_row_bases(sizes, ncols),
+                        bases=file_row_bases(sizes, csv_width),
                         one_file_per_partition=True,
                     )
                 # typed fast path for headerless files whose null
@@ -635,7 +642,7 @@ class RestoreController:
                 self._by_file_columns(
                     schema,
                     csv_files,
-                    functools.partial(read_header, cfg=csv_cfg),
+                    csv_columns.get,
                     read,
                     mono_start=GZ_LANE if has_gz else None,
                     source_latin1=True,
