@@ -41,3 +41,22 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def tables(spark, sf_dir):
     return load_tables(spark, sf_dir)
+
+
+@pytest.fixture
+def small_splits(spark):
+    """Run the body under a tiny maxPartitionBytes so even KB files
+    split into many byte-range blocks; returns the split size the
+    row-id plan sees."""
+    from tidb_lightning_release_4_0_spark.operators.rowid import (
+        split_bytes_lower_bound,
+    )
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+
+    def setter(nbytes: int) -> int:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(nbytes))
+        return split_bytes_lower_bound(spark)
+
+    yield setter
+    spark.conf.set("spark.sql.files.maxPartitionBytes", old)

@@ -8,9 +8,10 @@ string-CSV, strict-CSV, JSONL and parquet lanes: no part may be read
 under another part's column list.
 
 Also pins that a PK-less ``.sql`` table read as two column-list groups,
-and a PK-less table whose ``.sql`` lists or CSV headers are narrower
-than its DDL, get distinct ``_tidb_rowid`` values (one row-id divisor
-per table, from the narrowest list),
+a PK-less table whose ``.sql`` lists or CSV headers are narrower than
+its DDL, and a PK-less table of ``.csv`` and ``.sql`` parts get
+distinct ``_tidb_rowid`` values (one row-id chain per table, each
+lane's divisor from its narrowest list),
 and that parquet's typed cast branch keys the session projection memo:
 lenient and strict sql_mode, and a string frame next to a typed one,
 each get their own projection in one session.
@@ -81,7 +82,8 @@ def _jsonl(cols, rows):
     )
 
 
-def _write_dump(name: str, ext: str, ddl: str = DDL, parts=PARTS) -> str:
+def _write_dump(name: str, ext, ddl: str = DDL, parts=PARTS) -> str:
+    """``ext``: one extension for every part, or one per part."""
     d = os.path.join(TMP, name)
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
@@ -89,7 +91,8 @@ def _write_dump(name: str, ext: str, ddl: str = DDL, parts=PARTS) -> str:
         f.write("CREATE DATABASE fc;")
     with open(os.path.join(d, "fc.t-schema.sql"), "w") as f:
         f.write(ddl)
-    for i, (cols, rows) in enumerate(parts, 1):
+    exts = [ext] * len(parts) if isinstance(ext, str) else ext
+    for i, ((cols, rows), ext) in enumerate(zip(parts, exts), 1):
         path = os.path.join(d, f"fc.t.{i:04d}.{ext}")
         if ext == "parquet":
             pd.DataFrame(rows, columns=list(cols)).to_parquet(path)
@@ -100,12 +103,19 @@ def _write_dump(name: str, ext: str, ddl: str = DDL, parts=PARTS) -> str:
     return d
 
 
-def _restore(spark, d, csv=None, sql_mode=""):
+def _restore(spark, d, csv=None, sql_mode="", checkpoint=""):
+    """``checkpoint``: a checkpoint file, which also puts each data
+    file in an engine of its own; none restores at table grain."""
     cfg = Config(
-        mydumper=MydumperConfig(source_dir=d, csv=csv or CSVConfig()),
+        mydumper=MydumperConfig(
+            source_dir=d,
+            csv=csv or CSVConfig(),
+            batch_size=1 if checkpoint else MydumperConfig.batch_size,
+        ),
         tidb=TiDBConfig(sql_mode=sql_mode),
         backend="memory",
-        checkpoint_enable=False,
+        checkpoint_enable=bool(checkpoint),
+        checkpoint_path=checkpoint,
     )
     sink = MemorySink("error")
     summary = RestoreController(spark, cfg, sink=sink).run()
@@ -198,6 +208,33 @@ def test_narrow_csv_headers_keep_rowids_distinct(spark, csv):
         parts=parts,
     )
     summary, sink = _restore(spark, d, csv)
+    assert summary.ok, summary.report()
+    df = sink.tables["fc.t"]
+    assert df.count() == 2 * n
+    assert df.select(ROWID_COL).distinct().count() == 2 * n
+
+
+@pytest.mark.parametrize("grain", ["table", "file"])
+def test_mixed_csv_and_sql_parts_share_one_rowid_chain(spark, grain):
+    """A PK-less table with one header .csv part and one .sql part:
+    both take their bases from one chain over the table's data files,
+    as the reference's MakeTableRegions does, so no two rows share a
+    _tidb_rowid, whether the table is read in one pass or each part
+    is its own engine."""
+    n = 100
+    parts = [(("a", "b"), [(k * n + i, i % 10) for i in range(n)]) for k in range(2)]
+    d = _write_dump(
+        f"mixed_chain_{grain}",
+        ["csv", "sql"],
+        ddl="CREATE TABLE t (a INT, b INT);",
+        parts=parts,
+    )
+    cp = ""
+    if grain == "file":
+        cp = os.path.join(TMP, "mixed_chain.cp.json")
+        if os.path.exists(cp):
+            os.remove(cp)
+    summary, sink = _restore(spark, d, CSVConfig(header=True), checkpoint=cp)
     assert summary.ok, summary.report()
     df = sink.tables["fc.t"]
     assert df.count() == 2 * n

@@ -63,7 +63,7 @@ def test_ingest_plan_stays_jvm(spark, tables):
     )
     from tidb_lightning_release_4_0_spark.operators.rowid import (
         assign_rowid_by_file,
-        file_row_bases,
+        plan_row_ids,
     )
     from tidb_lightning_release_4_0_spark.sources.csv_source import read_csv
     from tidb_lightning_release_4_0_spark.sources.dump_writer import (
@@ -87,7 +87,8 @@ def test_ingest_plan_stays_jvm(spark, tables):
     files = [(os.path.join(d, "db.nation.csv"), 100)]
     cols = ["n_nationkey", "n_name", "n_regionkey"]
     df = read_csv(spark, [f for f, _ in files], CSVConfig(), column_names=cols)
-    df = assign_rowid_by_file(df, file_row_bases(files, 3))
+    ids = plan_row_ids([(p, sz, "csv") for p, sz in files], {"csv": 3})
+    df = assign_rowid_by_file(df, ids.bases)
     out = apply_permutation(
         df, parse_create_table(
             "CREATE TABLE nation (n_nationkey INT PRIMARY KEY, "

@@ -220,9 +220,7 @@ def test_rowid_fast_path_dense_many_small_files(spark, tmp_path):
     exactly the same dense per-file ids as the min-agg slow path."""
     import os
 
-    from tidb_lightning_release_4_0_spark.operators.rowid import (
-        file_row_bases,
-    )
+    from tidb_lightning_release_4_0_spark.operators.rowid import plan_row_ids
 
     nfiles, rows_per = 200, 20
     # input_file_name() percent-encodes a space, '%' and '#': the base
@@ -237,7 +235,9 @@ def test_rowid_fast_path_dense_many_small_files(spark, tmp_path):
         files = sorted(
             (str(d / n), os.path.getsize(d / n)) for n in os.listdir(d)
         )
-        bases = file_row_bases(files, num_columns=2, is_sql=False)
+        bases = plan_row_ids(
+            [(p, sz, "csv") for p, sz in files], {"csv": 2}
+        ).bases
         cfg = CSVConfig(separator=",", header=False)
         df = read_csv(
             spark, [p for p, _ in files], cfg, column_names=["_c0", "_c1"]

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from tidb_lightning_release_4_0_spark.operators.rowid import (
     assign_rowid_by_file_split,
-    file_row_bases_split,
+    plan_row_ids,
     split_bytes_lower_bound,
 )
 from tidb_lightning_release_4_0_spark.sources.csv_source import read_csv
@@ -135,8 +135,8 @@ def test_split_rowid_fallback_exact_when_blocks_are_packed(spark):
         df = read_csv(
             spark, [p for p, _ in files], cfg, column_names=["_c0", "_c1", "_c2"]
         )
-        bases = file_row_bases_split(files, 3, sb)
-        out = assign_rowid_by_file_split(df, bases, 3, sb)
+        ids = plan_row_ids([(p, sz, "csv") for p, sz in files], {"csv": 3}, sb)
+        out = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
         res = out.select("_c0", "_row_id").collect()
         nparts = df.rdd.getNumPartitions()
         assert nparts < len(files), (

@@ -14,7 +14,6 @@ from __future__ import annotations
 import os
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from tidb_lightning_release_4_0_spark.config import (
@@ -24,8 +23,7 @@ from tidb_lightning_release_4_0_spark.config import (
 )
 from tidb_lightning_release_4_0_spark.operators.rowid import (
     assign_rowid_by_file_split,
-    file_row_bases_split,
-    split_bytes_lower_bound,
+    plan_row_ids,
 )
 from tidb_lightning_release_4_0_spark.sources.csv_source import read_csv
 from tidb_lightning_release_4_0_spark.sources.csv_strict import read_header
@@ -37,20 +35,6 @@ TMP = os.path.join(
     ".tmp",
     "split_csv_tests",
 )
-
-
-@pytest.fixture
-def small_splits(spark):
-    """Run the body under a tiny maxPartitionBytes so even KB files
-    split into many byte-range blocks."""
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-
-    def setter(nbytes: int) -> int:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(nbytes))
-        return split_bytes_lower_bound(spark)
-
-    yield setter
-    spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def _write_csv(path: str, rows: list[tuple]) -> None:
@@ -71,8 +55,8 @@ def test_single_file_fans_out_and_preserves_order(spark, small_splits):
     df = read_csv(spark, path, cfg, column_names=C3)
     nparts = df.rdd.getNumPartitions()
     assert nparts > 10, f"expected many byte-range tasks, got {nparts}"
-    bases = file_row_bases_split([(path, os.path.getsize(path))], 3, sb)
-    out = assign_rowid_by_file_split(df, bases, 3, sb)
+    ids = plan_row_ids([(path, os.path.getsize(path), "csv")], {"csv": 3}, sb)
+    out = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
     got = [
         (int(r["_c0"]), int(r["_row_id"]))
         for r in out.select("_c0", "_row_id").collect()
@@ -96,8 +80,8 @@ def test_straddling_lines_stay_unique(spark, small_splits):
     sb = small_splits(64)
     cfg = CSVConfig(strict_format=True)
     df = read_csv(spark, path, cfg, column_names=C3)
-    bases = file_row_bases_split([(path, os.path.getsize(path))], 3, sb)
-    out = assign_rowid_by_file_split(df, bases, 3, sb)
+    ids = plan_row_ids([(path, os.path.getsize(path), "csv")], {"csv": 3}, sb)
+    out = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
     ids = [r["_row_id"] for r in out.select("_row_id").collect()]
     assert len(ids) == len(rows)
     assert len(set(ids)) == len(ids), "straddling lines collided"
@@ -113,9 +97,9 @@ def test_multi_file_bases_disjoint(spark, small_splits):
     sb = small_splits(256)
     cfg = CSVConfig(strict_format=True)
     files = [(p1, os.path.getsize(p1)), (p2, os.path.getsize(p2))]
-    bases = file_row_bases_split(files, 2, sb)
+    ids = plan_row_ids([(p, sz, "csv") for p, sz in files], {"csv": 2}, sb)
     df = read_csv(spark, [p1, p2], cfg, column_names=["_c0", "_c1"])
-    out = assign_rowid_by_file_split(df, bases, 2, sb)
+    out = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
     got = [
         (r["_c1"], int(r["_c0"]), int(r["_row_id"]))
         for r in out.collect()

@@ -1,29 +1,34 @@
 """F4/T5: deterministic row-id assignment.
 
-The reference gives every chunk a reserved row-id range computed at
-plan time (PrevRowIDMax/RowIDMax, lightning/mydump/region.go:146-170)
-and increments within the chunk (parser.go:429, csv_parser.go:97).
-Ranges are *estimates* (file_size / column-width divisor), so ids are
-unique and monotonic but may have gaps between chunks — exactly the
-semantics we reproduce:
+One chain per table, as the reference's MakeTableRegions: each data
+file, in dump order, reserves size / divisor ids past the previous
+file's range (prevRowIDMax, lightning/mydump/region.go:146-170; the
+divisor is the column count, + 2 for a non-CSV file), and its rows
+count up from that base (parser.go:429, csv_parser.go:97).
+``plan_row_ids`` is the only place that decides a lane's divisor, a
+file's base and the chain's end; every byte-estimate reader takes its
+bases and divisor from it, so a table's formats share one chain:
+``assign_rowid_by_file`` (whole-file CSV, zero extra jobs on
+one-file-per-task reads), ``assign_rowid_by_file_split`` and
+``csv_blocks.read_blocks`` (byte ranges: + the block's
+``split_chunk_base``), ``csv_strict.read_csv_strict`` and
+``sql_dump_source.read_sql_dump`` (a split .sql file counts from base +
+statement offset // divisor). Ids are unique and monotonic in dump
+order, with gaps between files. Sources whose bytes cannot bound their
+rows (gzip, parquet, JSONL outside the block reader) take
+``assign_rowid_mono``'s capacity scheme, in bands past the chain's end.
 
-- ``assign_rowid_by_file`` / ``assign_rowid_by_file_split``: the
-  plan-time per-file (per-block) base plus the in-file row index, with
-  zero extra jobs on one-file-per-task reads. Unique + deterministic,
-  gaps allowed between files. This is the 100 TB path.
-
-- ``assign_rowid_dense``: exact dense 1..N ids given a total order
-  key — two passes (per-partition counts, then offsets), mirroring
-  how the reference gets exact continuation for auto-increment
-  rebase. Range-partitioned, never a single-partition window.
-
-Dense ids are NOT ``monotonically_increasing_id`` itself (its values
-jump at every partition) nor a global ``row_number()`` window
-(single-partition bottleneck); its low 33 bits serve only as the
-row's index within its partition.
+``assign_rowid_dense``: exact dense 1..N ids given a total order key —
+two passes (per-partition counts, then offsets), mirroring how the
+reference gets exact continuation for auto-increment rebase.
+Range-partitioned, never a single-partition window; its
+``monotonically_increasing_id`` low 33 bits serve only as the row's
+index within its partition.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import pandas as pd
 from pyarrow import ArrowException
@@ -134,42 +139,55 @@ def assign_rowid_mono(df: DataFrame, start: int = 1) -> DataFrame:
     )
 
 
-def estimate_id_ceiling(
-    files: list[tuple[str, int]],
-    num_columns: int,
+# a JSON-Lines row is at least "{}" and its newline
+JSONL_MIN_LINE_BYTES = 3
+
+
+@dataclass(frozen=True)
+class RowIdPlan:
+    """``bases[path]``: the id before a file's first row;
+    ``divisor[lane]``: the lane's minimum row bytes, also the offset
+    term of its split reads (split_chunk_base); every id the chain
+    assigns is below ``end``."""
+
+    bases: dict[str, int]
+    divisor: dict[str, int]
+    end: int
+
+
+def plan_row_ids(
+    files: list[tuple[str, int, str]],
+    widths: dict[str, int],
     split_bytes: int | None = None,
-) -> int:
-    """Upper bound of every byte-estimate row-id this table's CSV/SQL
-    frames can produce (the chained file_row_bases total) — capacity-
-    scheme lanes start PAST this so mixed-source unions cannot
-    collide (a fixed offset would not clear large tables).
-    ``split_bytes``: account for chunk-split reads' one-extra-id-per-
-    block cushion (file_row_bases_split)."""
-    divisor = max(num_columns, 1)
-    total = 0
-    for _, sz in files:
-        total += max(sz // divisor, 1) + 2
-        if split_bytes:
-            total += max(-(-sz // max(split_bytes, 1)), 1)
-    return total + 1
+) -> RowIdPlan:
+    """A table's one row-id chain: ``files`` are (path, size, lane) in
+    dump order, and each reserves ``size // divisor`` ids past the
+    previous file's range. The divisor is a lower bound on a row's
+    bytes, from ``widths[lane]``, the field count of the lane's
+    narrowest column list: the width for "csv" (k fields take k - 1
+    separators and a newline), the width + 2 for "sql" (the
+    reference's non-CSV divisor; a tuple takes 2k + 2 bytes) and
+    JSONL_MIN_LINE_BYTES for "jsonl".
 
-
-def file_row_bases(
-    files: list[tuple[str, int]], num_columns: int, is_sql: bool = False
-) -> dict[str, int]:
-    """Reserved row-id base per file, exactly the reference's scheme:
-    estimated rows = file_size / divisor with divisor = #columns
-    (+2 for .sql dumps), chained cumulatively
-    (lightning/mydump/region.go:146-170). The estimate is a safe
-    upper bound: every delimited row occupies >= divisor bytes.
-    """
-    divisor = max(num_columns + (2 if is_sql else 0), 1)
+    ``split_bytes``: the csv and jsonl files are read in byte ranges of
+    that size. A range reads through the line straddling its end, so
+    each such file reserves one more id per range; a split .sql file
+    needs none, as its ranges realign at statement markers."""
+    divisor = {
+        lane: JSONL_MIN_LINE_BYTES if lane == "jsonl"
+        else max(widths[lane] + (2 if lane == "sql" else 0), 1)
+        for lane in {*widths, *(f[2] for f in files)}
+    }
     bases: dict[str, int] = {}
     base = 0
-    for path, size in files:
+    for path, size, lane in files:
         bases[path] = base
-        base += max(size // divisor, 1) + 1
-    return bases
+        base += max(size // divisor[lane], 1) + 1
+        if split_bytes and lane != "sql":
+            base += max(-(-size // split_bytes), 1)
+    # one spare id per file past the chain: where the capacity-scheme
+    # lanes have always started, so their ids do not move
+    return RowIdPlan(bases, divisor, base + len(files) + 1)
 
 
 def assign_rowid_by_file(
@@ -349,32 +367,6 @@ def split_bytes_lower_bound(spark) -> int:
     return max(min(mpb, max(oc, 1)), 1)
 
 
-def file_row_bases_split(
-    files: list[tuple[str, int]],
-    num_columns: int,
-    split_bytes: int,
-    divisor: int | None = None,
-) -> dict[str, int]:
-    """Per-file bases for chunk-split reads: capacity = size/divisor
-    PLUS one row per block — a line straddling a block boundary makes
-    that block hold up to one row more than its byte capacity implies
-    (the trailing line is read past the block end), so each file
-    reserves ceil(size / split_bytes) extra ids.
-
-    ``divisor`` defaults to the column count (a delimited CSV row
-    occupies >= #columns bytes); line-delimited formats with a
-    different minimum row width pass it explicitly (JSONL:
-    csv_blocks.JSONL_MIN_LINE_BYTES — a row is at least "{}\\n")."""
-    divisor = max(num_columns if divisor is None else divisor, 1)
-    bases: dict[str, int] = {}
-    base = 0
-    for path, size in files:
-        bases[path] = base
-        blocks = max(-(-size // max(split_bytes, 1)), 1)
-        base += max(size // divisor, 1) + blocks + 1
-    return bases
-
-
 def split_chunk_base(offset: Column, divisor: int, split_bytes: int) -> Column:
     """The row-id base of the byte-range block at ``offset`` within
     its file, ``floor(off / divisor) + floor(off / S)``: the
@@ -401,17 +393,12 @@ def assign_rowid_by_file_split(
     with ``off`` the block's byte offset, ``S`` the split size and
     ``i`` the row index inside the block — the reference's
     SplitLargeFile scheme (mydump/region.go:87-143:
-    chunk.PrevRowIDMax = offset/divisor, divisor = #columns). The
-    byte-offset estimate is a safe capacity bound because every
-    delimited row occupies >= divisor bytes; the floor(off/S) term
-    adds one reserved id per preceding block, covering the boundary-
-    straddling line each block may absorb from beyond its byte range
-    (the reference avoids this by re-aligning chunk offsets to line
-    boundaries at plan time; Spark re-syncs at READ time, so the
-    cushion restores the bound). Ids are unique, monotonic in file
-    order, gaps allowed — same semantics as the whole-file path, so
-    AllocBase/max-rowid behaves the same. ``bases`` must come from
-    file_row_bases_split with the same split_bytes.
+    chunk.PrevRowIDMax = offset/divisor). The floor(off/S) term spends
+    the one id per preceding block that plan_row_ids reserves for the
+    line a block absorbs from beyond its range (the reference
+    re-aligns chunk offsets to line boundaries at plan time; Spark
+    re-syncs at READ time). ``bases`` and ``divisor`` must come from
+    a plan_row_ids call given the same split_bytes.
 
     Fast path precondition: one block per task (the session's huge
     openCostInBytes makes every split its own FilePartition) and an

@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from ..config import Config, strict_sql_mode
 from ..functions.checksum import Checksum
 from ..operators.permutation import apply_permutation
+from ..operators.rowid import RowIdPlan, plan_row_ids
 from ..sinks.base import Sink, reject_duplicate_keys
 from ..sinks.memory_sink import MemorySink
 from ..sinks.parquet_sink import ParquetSink
@@ -388,19 +389,10 @@ class RestoreController:
         csv_files, sql_files = pick(all_csv), pick(all_sql)
         pq_files = pick(by_ext(".parquet"))
         jsonl_files = pick(by_ext(".jsonl", ".jsonl.gz"))
-        ncols = len(schema.columns)
         strict = strict_sql_mode(self.cfg.tidb.sql_mode)
         frames: list[DataFrame] = []
 
-        # capacity-scheme id lanes for sources without safe byte-
-        # estimate bases (parquet, gzip): each lane starts past the
-        # table's whole byte-estimate id range AND in its own band,
-        # so mixed-source unions can never collide
-        from ..operators.rowid import (
-            estimate_id_ceiling,
-            file_row_bases,
-            split_bytes_lower_bound,
-        )
+        from ..operators.rowid import split_bytes_lower_bound
 
         _split_bytes = (
             split_bytes_lower_bound(self.spark)
@@ -408,30 +400,24 @@ class RestoreController:
             else None
         )
         # each .sql file's column list, from its first INSERT (64 KiB
-        # driver-side peek, no Spark job; None: table order). The
-        # table's one .sql divisor is the narrowest list + 2, at most
-        # the DDL width + 2: a row of k fields takes >= 2k + 2 bytes,
-        # so every file's reserved id range holds its rows, and lists
-        # of different widths share one chain of bases
+        # driver-side peek, no Spark job; None: table order), and each
+        # header CSV's (None without a header): the row-id widths
         charset = self.cfg.mydumper.character_set
         sql_columns = {
             f.path: probe_insert_columns(f.path, charset) for f in all_sql
         }
-        sql_width = min([ncols] + [len(c) for c in sql_columns.values() if c])
-        # each header CSV's column list (None without a header): the
-        # table's one CSV divisor is the narrowest header, at most the
-        # DDL width, since a row of k fields takes >= k bytes
         csv_cfg = self.cfg.mydumper.csv
         csv_columns = {f.path: read_header(f.path, csv_cfg) for f in all_csv}
-        csv_width = min([ncols] + [len(c) for c in csv_columns.values() if c])
-        _ceiling = estimate_id_ceiling(
-            [(f.path, f.size) for f in all_csv + all_sql],
-            min(sql_width, csv_width),
-            split_bytes=_split_bytes,
-        )
-        GZ_LANE = _ceiling + 1
-        PQ_LANE = _ceiling + (1 << 61) + 1
-        JSONL_LANE = _ceiling + (1 << 62) + 1
+        # the strict parser reads whole files
+        split = None if csv_cfg.strict_parser else _split_bytes
+        ids = self._row_id_plan(meta, schema, split, csv_columns | sql_columns)
+        # capacity-scheme id lanes for sources without safe byte-
+        # estimate bases (parquet, gzip): each lane starts past the
+        # table's row-id chain AND in its own band, so mixed-source
+        # unions can never collide
+        GZ_LANE = ids.end + 1
+        PQ_LANE = ids.end + (1 << 61) + 1
+        JSONL_LANE = ids.end + (1 << 62) + 1
 
         if pq_files:
             # Spark-native source extension: columnar dumps are
@@ -541,24 +527,21 @@ class RestoreController:
                     "decompress; gunzip .csv.gz parts first or disable "
                     "csv.strict-parser"
                 )
-            sizes = [(f.path, f.size) for f in all_csv]
             lane = {}
             if csv_cfg.strict_parser:
                 # read_csv_strict marks short rows with the sentinel:
                 # LOAD DATA fills defaults for missing trailing fields
-                bases = file_row_bases(sizes, csv_width)
                 lane["missing_sentinel"] = MISSING_FIELD
 
                 def read(cols, group):
                     return read_csv_strict(
                         self.spark, [f.path for f in group], csv_cfg, cols,
-                        bases,
+                        ids.bases,
                     )
             else:
                 from ..operators.rowid import (
                     assign_rowid_by_file,
                     assign_rowid_by_file_split,
-                    file_row_bases_split,
                 )
 
                 if has_gz:
@@ -578,10 +561,8 @@ class RestoreController:
                     # reference's SplitLargeFile offset/divisor scheme
                     rowids = functools.partial(
                         assign_rowid_by_file_split,
-                        bases=file_row_bases_split(
-                            sizes, csv_width, _split_bytes
-                        ),
-                        divisor=max(csv_width, 1),
+                        bases=ids.bases,
+                        divisor=ids.divisor["csv"],
                         split_bytes=_split_bytes,
                     )
                 else:
@@ -590,7 +571,7 @@ class RestoreController:
                     # -> one file per task, so row-ids need no extra job
                     rowids = functools.partial(
                         assign_rowid_by_file,
-                        bases=file_row_bases(sizes, csv_width),
+                        bases=ids.bases,
                         one_file_per_partition=True,
                     )
                 # typed fast path for headerless files whose null
@@ -651,7 +632,7 @@ class RestoreController:
             )
         if sql_files:
             # row-id bases and the split size come from the full file
-            # list and the table's one divisor, whatever the group
+            # list, whatever the group
             frames.append(
                 self._by_file_columns(
                     schema,
@@ -661,10 +642,11 @@ class RestoreController:
                         self.spark,
                         [(f.path, f.size) for f in group],
                         charset,
-                        num_columns=sql_width,
                         columnar=True,
                         all_files=[(f.path, f.size) for f in all_sql],
                         column_names=cols,
+                        bases=ids.bases,
+                        divisor=ids.divisor["sql"],
                     ),
                     missing_sentinel=MISSING_FIELD,
                 )
@@ -1003,6 +985,33 @@ class RestoreController:
                 max_id = v if max_id is None else max(max_id, v)
         return total, rows, max_id
 
+    def _row_id_plan(
+        self, meta: MDTableMeta, schema: TableSchema,
+        split_bytes: int | None, columns: dict, jsonl: bool = False,
+    ) -> RowIdPlan:
+        """The table's one row-id chain (rowid.plan_row_ids) over its
+        byte-estimate data files in dump order: .csv, .csv.gz (its rows
+        take the gz capacity lane, but it keeps its place in the chain)
+        and .sql, plus .jsonl with ``jsonl`` (the block reader's lane).
+        A lane's width is its narrowest list in ``columns`` (path ->
+        probed list or None), at most the DDL width."""
+        ncols = len(schema.columns)
+        files, widths = [], {}
+        for f in meta.data_files:
+            p = f.path.lower()
+            lane = (
+                "csv" if p.endswith((".csv", ".csv.gz"))
+                else "sql" if p.endswith(".sql")
+                else "jsonl" if jsonl and p.endswith(".jsonl")
+                else None
+            )
+            if lane is None:
+                continue
+            files.append((f.path, f.size, lane))
+            cols = columns.get(f.path)
+            widths[lane] = min(widths.get(lane, ncols), len(cols or ()) or ncols)
+        return plan_row_ids(files, widths, split_bytes)
+
     def _block_frame(
         self,
         meta: MDTableMeta,
@@ -1018,25 +1027,17 @@ class RestoreController:
         whether it ran in the first attempt or in a mid-file resume.
         JSONL keeps the batch lane's per-file key-casing groups and
         takes the JSONL minimum-line divisor."""
-        from ..operators.rowid import file_row_bases_split
-        from ..sources.csv_blocks import JSONL_MIN_LINE_BYTES, read_blocks
+        from ..sources.csv_blocks import read_blocks
 
         names = [c.name for c in schema.columns]
         jsonl = meta.data_files[0].path.lower().endswith(".jsonl")
-        # the one divisor of both row-id terms: the file bases here
-        # and the block offsets in read_blocks
-        divisor = JSONL_MIN_LINE_BYTES if jsonl else max(len(names), 1)
         # bases over the FULL file list: a block's ids must not
         # depend on which blocks ride along (resume-renumber parity,
         # as read_table's `only` contract)
-        bases = file_row_bases_split(
-            [(f.path, f.size) for f in meta.data_files],
-            len(names),
-            split_bytes,
-            divisor=divisor,
-        )
+        ids = self._row_id_plan(meta, schema, split_bytes, {}, jsonl=True)
         read = functools.partial(
-            read_blocks, self.spark, bases=bases, divisor=divisor,
+            read_blocks, self.spark, bases=ids.bases,
+            divisor=ids.divisor["jsonl" if jsonl else "csv"],
             split_bytes=split_bytes,
         )
         if not jsonl:

@@ -36,6 +36,9 @@ from .sources.schema_reader import ColumnSpec
 from pyspark.sql import types as T
 from .sources.testdata import load_table
 
+# round-trip fixtures: under the .tmp of the checkout holding the package
+_SCRATCH = os.path.abspath(os.path.join(__file__, "..", "..", ".tmp"))
+
 # DuckDB-side column types for checksum canonicalization
 LINEITEM_TYPES = [
     ("l_orderkey", "BIGINT"), ("l_partkey", "BIGINT"),
@@ -867,7 +870,7 @@ def q_jsonl_roundtrip(spark, sf_dir):
     from .sources.jsonl_source import read_jsonl
 
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"/root/repo/.tmp/jsonl_rt/{tag}/documents"
+    path = os.path.join(_SCRATCH, f"jsonl_rt/{tag}/documents")
     src = os.path.join(sf_dir, "documents.parquet")
     marker = os.path.join(path, "_SUCCESS")
     if _stale_vs_parquet(marker, src) or not os.path.exists(marker):
@@ -895,7 +898,7 @@ def q_orc_roundtrip(spark, sf_dir):
     import os
 
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"/root/repo/.tmp/orc_rt/{tag}/orders"
+    path = os.path.join(_SCRATCH, f"orc_rt/{tag}/orders")
     src = os.path.join(sf_dir, "orders.parquet")
     marker = os.path.join(path, "_SUCCESS")
     if _stale_vs_parquet(marker, src) or not os.path.exists(marker):
@@ -990,13 +993,13 @@ def q_split_csv_rowids(spark, sf_dir):
     from .config import CSVConfig
     from .operators.rowid import (
         assign_rowid_by_file_split,
-        file_row_bases_split,
+        plan_row_ids,
         split_bytes_lower_bound,
     )
     from .sources.csv_source import read_csv
 
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"/root/repo/.tmp/split_csv/{tag}/orders.csv"
+    path = os.path.join(_SCRATCH, f"split_csv/{tag}/orders.csv")
     src = os.path.join(sf_dir, "orders.parquet")
     if _stale_vs_parquet(path, src):
         os.remove(path)
@@ -1023,9 +1026,9 @@ def q_split_csv_rowids(spark, sf_dir):
         sb = split_bytes_lower_bound(spark)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-    bases = file_row_bases_split([(path, os.path.getsize(path))], 3, sb)
+    ids = plan_row_ids([(path, os.path.getsize(path), "csv")], {"csv": 3}, sb)
     df = read_csv(spark, path, cfg, ["_c0", "_c1", "_c2"])
-    df = assign_rowid_by_file_split(df, bases, 3, sb)
+    df = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
     w = Window.orderBy("_row_id")
     return df.select(
         F.row_number().over(w).alias("rn"),
@@ -1053,7 +1056,7 @@ def q_resume_split_csv(spark, sf_dir):
     from .sinks.parquet_sink import ParquetSink
 
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    fix = f"/root/repo/.tmp/split_csv/{tag}/orders.csv"
+    fix = os.path.join(_SCRATCH, f"split_csv/{tag}/orders.csv")
     src = os.path.join(sf_dir, "orders.parquet")
     if _stale_vs_parquet(fix, src):
         os.remove(fix)
@@ -1068,7 +1071,7 @@ def q_resume_split_csv(spark, sf_dir):
         tmp = fix + ".tmp"
         pdf.to_csv(tmp, header=False, index=False)
         os.replace(tmp, fix)
-    root = f"/root/repo/.tmp/resume_csv/{tag}"
+    root = os.path.join(_SCRATCH, f"resume_csv/{tag}")
     shutil.rmtree(root, ignore_errors=True)
     d = os.path.join(root, "dump")
     os.makedirs(d)
@@ -3172,7 +3175,7 @@ def q_resume_split_jsonl(spark, sf_dir):
     from .sinks.parquet_sink import ParquetSink
 
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    fix = f"/root/repo/.tmp/split_jsonl/{tag}/orders.jsonl"
+    fix = os.path.join(_SCRATCH, f"split_jsonl/{tag}/orders.jsonl")
     src = os.path.join(sf_dir, "orders.parquet")
     if _stale_vs_parquet(fix, src):
         os.remove(fix)
@@ -3189,7 +3192,7 @@ def q_resume_split_jsonl(spark, sf_dir):
             tmp, orient="records", lines=True, force_ascii=False
         )
         os.replace(tmp, fix)
-    root = f"/root/repo/.tmp/resume_jsonl/{tag}"
+    root = os.path.join(_SCRATCH, f"resume_jsonl/{tag}")
     shutil.rmtree(root, ignore_errors=True)
     d = os.path.join(root, "dump")
     os.makedirs(d)

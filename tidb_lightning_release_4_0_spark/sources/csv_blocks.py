@@ -152,12 +152,6 @@ def _extract_lines(
                 cursor = 0
 
 
-# A valid JSON-Lines row is at least "{}" plus its newline — 3 bytes
-# — so byte-capacity row-id reservations for JSONL blocks divide by 3
-# (the CSV path divides by the column count for the same reason:
-# every delimited row occupies >= #columns bytes).
-JSONL_MIN_LINE_BYTES = 3
-
 _PLAN_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType(), False),
@@ -239,9 +233,9 @@ def read_blocks(
     never materialize as an all-null row that default-fill would
     fabricate into data).
 
-    ``bases`` and ``divisor`` must be the ones file_row_bases_split
-    was given: ``_row_id`` is the file base + split_chunk_base +
-    in-block line index + 1."""
+    ``bases`` and ``divisor`` come from the table's rowid.plan_row_ids
+    chain: ``_row_id`` is the file base + split_chunk_base + in-block
+    line index + 1."""
     jsonl = csv is None
     if jsonl:
         parse = F.from_json(

@@ -554,18 +554,20 @@ def read_sql_dump(
     columnar: bool = False,
     all_files: list[tuple[str, int]] | None = None,
     column_names: list[str] | None = None,
+    bases: dict[str, int] | None = None,
+    divisor: int | None = None,
 ) -> DataFrame:
     """Parse mydumper .sql data files into (file, row_id, fields) rows.
 
     ``files``: (path, size) pairs from the discovery step. Row-id
-    bases are reserved per file at plan time with the reference's
-    size/divisor estimate (divisor = ``num_columns`` + 2,
-    region.go:146-170; the caller passes the table's column count, or
-    the narrowest INSERT column list of its files when that is
-    shorter, so every row takes >= divisor bytes): ids are unique +
-    deterministic, bounded gaps. ``columnar`` rows are ``_row_id``
-    plus one string column per field: named ``column_names`` (the
-    files' INSERT column list, which may differ from the table's) or
+    ``bases`` and ``divisor`` come from the table's row-id chain
+    (rowid.plan_row_ids, which reserves size/divisor ids per file as
+    the reference does, region.go:146-170): ids are unique +
+    deterministic, bounded gaps. Without them the chain is planned
+    over ``all_files`` alone, ``num_columns`` being the narrowest
+    INSERT column list. ``columnar`` rows are ``_row_id`` plus one
+    string column per field: named ``column_names`` (the files'
+    INSERT column list, which may differ from the table's) or
     ``_c0..`` for ``num_columns`` fields.
 
     Large UTF-8 files are **byte-range split** (the distributed analog
@@ -581,9 +583,8 @@ def read_sql_dump(
     immediately followed by INSERT/REPLACE would be mis-split;
     mydumper and this repo's writer always escape newlines in strings.
     """
-    from ..operators.rowid import file_row_bases
+    from ..operators.rowid import plan_row_ids
 
-    divisor = max((num_columns or 0) + 2, 1)
     # row-id bases AND the split size always come from the table's
     # FULL file list: engine-grain resume reads a subset of files per
     # call, and the ids of a file must not depend on which other files
@@ -591,7 +592,12 @@ def read_sql_dump(
     # file read whole gets dense ids from its base, a split one
     # base + statement_offset // divisor
     table_files = all_files if all_files is not None else files
-    base_map = file_row_bases(table_files, num_columns or 0, is_sql=True)
+    if bases is None:
+        ids = plan_row_ids(
+            [(p, sz, "sql") for p, sz in table_files],
+            {"sql": num_columns or 0},
+        )
+        bases, divisor = ids.bases, ids.divisor["sql"]
 
     width = len(column_names) if column_names else int(num_columns or 0)
     if split_bytes is None:
@@ -608,10 +614,10 @@ def read_sql_dump(
             nchunks = -(-sz // split_bytes)
             for i in range(nchunks):
                 chunks.append(
-                    (p, i * split_bytes, min((i + 1) * split_bytes, sz), base_map[p])
+                    (p, i * split_bytes, min((i + 1) * split_bytes, sz), bases[p])
                 )
         else:
-            chunks.append((p, 0, sz, base_map[p]))
+            chunks.append((p, 0, sz, bases[p]))
 
     # one PARTITION per chunk directly — see metadata_df for why a
     # .repartition here would cost an extra shuffle job per read
