@@ -5,8 +5,8 @@ Hadoop line geometry as strict-format CSV — these tests mirror
 test_block_resume.py for the JSONL lane: kill the restore at a block
 boundary inside one file, assert the resume reproduces exact totals
 without re-delivering finished block engines, and pin the batch-lane
-parity contracts (key-casing groups, NOT NULL default fill, FAILFAST
-on malformed lines).
+parity contracts (keys matched case-insensitively on every line, NOT
+NULL default fill, FAILFAST on malformed lines).
 """
 
 from __future__ import annotations
@@ -170,8 +170,8 @@ def test_jsonl_midfile_kill_resume_exact_totals(spark):
 
 def test_jsonl_block_casing_groups_and_default_fill(spark):
     """A second part with different key CASING and a missing NOT NULL
-    key must behave exactly like the batch lane: per-group reader
-    schemas (no all-NULL part) and column DEFAULT for absent keys."""
+    key must behave exactly like the batch lane: no all-NULL part,
+    and column DEFAULT for absent keys."""
     root, d, tgt = _mkdump(
         "casing",
         lines=['{"id": 1, "v": "a", "x": 0.5}'] * 1,
@@ -213,6 +213,35 @@ def test_jsonl_block_casing_groups_and_default_fill(spark):
         assert got.agg(F.sum("x")).first()[0] == sum(
             i * 0.5 for i in range(1, 4001)
         )
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_jsonl_block_key_casing_per_line(spark):
+    """Lines of ONE part alternate key casings across several block
+    engines: every line restores its own values, none reads as
+    all-NULL and takes defaults."""
+    lines = [
+        (
+            '{"ID": %d, "V": "row-%d", "X": %s}'
+            if i % 2
+            else '{"id": %d, "v": "row-%d", "x": %s}'
+        )
+        % (i, i, i * 0.5)
+        for i in range(1, 2001)
+    ]
+    root, d, tgt = _mkdump("casing_per_line", lines=lines)
+    cp_path = os.path.join(root, "cp.json")
+    old = _with_small_blocks(spark)
+    try:
+        sink = _FailNthEngineSink(tgt, fail_at=None)
+        run = RestoreController(spark, _cfg(d, tgt, cp_path), sink=sink).run()
+        assert run.ok, run.report()
+        assert sink.delivered > 1, "the part must span several engines"
+        got = sorted(
+            tuple(r) for r in _read(spark, tgt).select("id", "v", "x").collect()
+        )
+        assert got == [(i, f"row-{i}", i * 0.5) for i in range(1, 2001)]
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 

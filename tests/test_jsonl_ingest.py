@@ -5,8 +5,11 @@ missing keys defaulted, mixed-format dumps unioning cleanly."""
 
 from __future__ import annotations
 
+import gzip
 import os
 import shutil
+
+import pytest
 
 from tidb_lightning_release_4_0_spark.config import Config, MydumperConfig
 from tidb_lightning_release_4_0_spark.plans.pipeline import RestoreController
@@ -34,7 +37,8 @@ def _dump(name: str, files: dict[str, str]) -> tuple[str, str]:
     with open(os.path.join(dump, "db.t-schema.sql"), "w") as f:
         f.write(DDL.rstrip() + ";\n")
     for fname, text in files.items():
-        with open(os.path.join(dump, fname), "w", encoding="utf-8") as f:
+        opener = gzip.open if fname.endswith(".gz") else open
+        with opener(os.path.join(dump, fname), "wt", encoding="utf-8") as f:
             f.write(text)
     return dump, os.path.join(root, "sink")
 
@@ -122,6 +126,36 @@ def test_jsonl_case_insensitive_keys(spark):
     t = _run(spark, dump, sink)
     got = {r["id"]: (r["name"], r["v"]) for r in t.collect()}
     assert got == {1: ("x", 4.0), 2: ("y", 5.0)}
+
+
+@pytest.mark.parametrize("ext", [".jsonl", ".jsonl.gz"])
+def test_jsonl_key_casing_per_line(spark, ext):
+    """One part spells each key in two casings, one per line. Every
+    line must restore its own values, never read as all-NULL and
+    filled with the NOT NULL defaults (id 0, '' and 7.5)."""
+    dump, sink = _dump(
+        "case_per_line" + ext.replace(".", "_"),
+        {
+            "db.t.0001" + ext: (
+                '{"ID":1,"Name":"a","V":1.5}\n'
+                '{"id":2,"name":"b","v":2.5}\n'
+            ),
+        },
+    )
+    t = _run(spark, dump, sink)
+    got = sorted(tuple(r) for r in t.select("id", "name", "v").collect())
+    assert got == [(1, "a", 1.5), (2, "b", 2.5)]
+
+
+def test_jsonl_gz_part_keeps_unicode(spark):
+    """A gzipped part decodes as UTF-8: non-ASCII text survives."""
+    dump, sink = _dump(
+        "gz_unicode",
+        {"db.t.0001.jsonl.gz": '{"id": 1, "name": "café 中", "v": 1.5}\n'},
+    )
+    t = _run(spark, dump, sink)
+    got = {r["id"]: (r["name"], r["v"]) for r in t.collect()}
+    assert got == {1: ("café 中", 1.5)}
 
 
 def test_jsonl_malformed_line_fails_loudly(spark):

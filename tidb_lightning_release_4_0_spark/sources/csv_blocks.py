@@ -26,8 +26,8 @@ produce byte-identical rows):
   whitespace-only lines, as Spark's JSON text source does.
 - CSV fields parse with ``F.from_csv`` and the SAME option map as
   ``spark.read.csv`` — the same Univocity parser, so separators,
-  quotes, escapes and null sentinels behave identically. JSONL
-  parses with ``F.from_json`` FAILFAST, as read_jsonl.
+  quotes, escapes and null sentinels behave identically. JSONL lines
+  parse with ``jsonl_source.json_line_map``, the batch lane's parse.
 - Row-ids take the SplitLargeFile offset term from
   ``rowid.split_chunk_base`` and the file base from
   ``rowid._file_base_rowids``, the two pieces
@@ -57,6 +57,7 @@ from ..operators.rowid import (
     split_chunk_base,
 )
 from ..session import settle_import_caches
+from .jsonl_source import json_line_fields, json_line_map
 
 _TAIL_CHUNK = 64 * 1024
 
@@ -225,27 +226,18 @@ def read_blocks(
     named ``names`` plus ``_row_id``. One task per block.
 
     ``csv`` reads headerless CSV through from_csv with the same option
-    map as spark.read.csv. Without it the blocks are JSON Lines and
-    ``names`` are the keys as the files spell them (one casing group:
-    the caller groups blocks by their file's keys and unions the
-    groups, as the batch lane does). A malformed line FAILS the job
-    (from_json FAILFAST, the read_jsonl contract: a bad line must
-    never materialize as an all-null row that default-fill would
-    fabricate into data).
+    map as spark.read.csv. Without it the blocks are JSON Lines, parsed
+    as the batch lane parses them (jsonl_source.json_line_map: keys
+    matched case-insensitively on every line; a malformed line FAILS
+    the job).
 
     ``bases`` and ``divisor`` come from the table's rowid.plan_row_ids
     chain: ``_row_id`` is the file base + split_chunk_base + in-block
     line index + 1."""
     jsonl = csv is None
     if jsonl:
-        parse = F.from_json(
-            F.col("_raw"),
-            T.StructType(
-                [T.StructField(k, T.StringType(), True) for k in names]
-            ),
-            {"mode": "FAILFAST"},
-        )
-        fields = names
+        parse = json_line_map(F.col("_raw"))
+        fields = json_line_fields(F.col("_r"), names)
     else:
         csv.validate()
         if csv.header:
@@ -262,10 +254,11 @@ def read_blocks(
         parse = F.from_csv(
             F.col("_raw"), ", ".join(f"_c{i} string" for i in range(n)), opts
         )
-        fields = [f"_c{i}" for i in range(len(names))]
+        fields = [
+            F.col("_r").getField(f"_c{i}").alias(n) for i, n in enumerate(names)
+        ]
     offset = split_chunk_base(F.col("_boffset"), divisor, split_bytes)
     parsed = _block_lines(spark, blocks, jsonl).withColumn("_r", parse)
     return _file_base_rowids(parsed, bases, offset + F.col("_bline")).select(
-        ROWID,
-        *[F.col("_r").getField(f).alias(n) for f, n in zip(fields, names)],
+        ROWID, *fields
     )

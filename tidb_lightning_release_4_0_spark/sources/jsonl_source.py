@@ -10,7 +10,9 @@ Scale shape: Spark's native JSON reader with an EXPLICIT schema —
 no sampling/inference pass over 100 TB — and multiLine=false, so
 uncompressed shards split at maxPartitionBytes byte ranges (JSONL's
 one-object-per-line framing makes line-boundary resync exact);
-gzip shards parallelize per-file.
+gzip shards parallelize per-file. The restore lanes read the lines
+as text instead and match each line's keys to the DDL
+case-insensitively (json_line_map).
 
 Malformed lines are never silently nulled: the default is FAILFAST
 (a bad line errors the job loudly); ``keep_corrupt=True`` switches
@@ -22,7 +24,8 @@ of both: garbage all-null rows indistinguishable from real nulls.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import literal_paths
@@ -66,14 +69,49 @@ def read_jsonl(
     )
 
 
-def probe_jsonl_keys(path: str) -> list[str] | None:
-    """Driver-side peek at the key casings used by the file — the
-    JSONL analog of the .sql path's first-INSERT column probe
-    (sql_dump_source.probe_insert_columns): one 64 KiB read, no Spark
-    job. Keys accumulate across EVERY parseable line in the head
-    (JSONL rows may omit keys, so one line alone under-reports);
-    first-seen casing wins per lowercased key. Returns None when
-    nothing parseable is found."""
+def json_line_map(line: Column) -> Column:
+    """One JSON line as map<string,string> with lower-cased keys: the
+    one JSONL parse of both restore lanes (read_jsonl_lines and
+    csv_blocks.read_blocks). MySQL column names are case-insensitive
+    and Spark's JSON parser is not, so each line's keys are matched on
+    their own: one part may spell a key differently on every line.
+    Values are the JSON reader's strings. FAILFAST: a malformed line
+    FAILS the job instead of materializing as an all-null row that
+    default-fill would fabricate into data."""
+    m = F.from_json(line, "map<string,string>", {"mode": "FAILFAST"})
+    return F.transform_keys(m, lambda k, _: F.lower(k))
+
+
+def json_line_fields(m: Column, names: list[str]) -> list[Column]:
+    """Each of ``names`` looked up by its lower-cased name in a
+    json_line_map column (an absent key reads NULL)."""
+    return [m[n.lower()].alias(n) for n in names]
+
+
+def read_jsonl_lines(
+    spark: SparkSession, paths: list[str], names: list[str]
+) -> DataFrame:
+    """JSONL files as all-string columns ``names`` (json_line_map).
+    Whitespace-only lines are skipped, as Spark's JSON source does;
+    the text source splits and decompresses as the JSON one would.
+    Paths are literal."""
+    return (
+        spark.read.text(literal_paths(paths))
+        .filter(F.col("value").rlike(r"\S"))
+        .select(json_line_map(F.col("value")).alias("_m"))
+        .select(*json_line_fields(F.col("_m"), names))
+    )
+
+
+def require_key_match(ddl_names: list[str], path: str) -> None:
+    """Refuse a JSONL file whose keys match NO target column: its rows
+    would read as all-NULL, and the NOT NULL default-fill ladder would
+    then silently fabricate rows out of column defaults. Driver-side
+    peek at the keys of every parseable line in the file's 64 KiB head
+    (JSONL rows may omit keys, so one line alone under-reports), no
+    Spark job; keys compare case-insensitively, as the read matches
+    them. A head with no parseable object passes: the read's FAILFAST
+    parse owns malformed lines."""
     import gzip
     import json as _json
 
@@ -82,9 +120,8 @@ def probe_jsonl_keys(path: str) -> list[str] | None:
         with opener(path, "rt", encoding="utf-8", errors="replace") as f:
             head = f.read(64 * 1024)
     except OSError:
-        return None
-    seen: dict[str, str] = {}
-    any_obj = False
+        return
+    seen: set[str] = set()
     for line in head.splitlines():
         line = line.strip()
         if not line:
@@ -94,37 +131,13 @@ def probe_jsonl_keys(path: str) -> list[str] | None:
         except ValueError:
             continue
         if isinstance(obj, dict):
-            any_obj = True
-            for k in obj:
-                seen.setdefault(k.lower(), k)
-    return list(seen.values()) if any_obj else None
-
-
-def resolve_field_names(
-    ddl_names: list[str], path: str, require_match: bool = False
-) -> list[str]:
-    """The file's key for each DDL column, matched case-insensitively
-    against the head's keys (Spark's JSON parser matches schema
-    field names EXACTLY, so a dump whose keys differ in case from the
-    DDL would otherwise read every such value as NULL). Falls back to
-    the DDL casing for keys the probe does not see. MySQL column
-    names are unique case-insensitively, so the mapping is
-    injective.
-
-    ``require_match=True`` raises when the probe sees keys but NONE
-    of them matches a DDL column: such a file would read as all-NULL
-    rows, and the NOT NULL default-fill ladder would then silently
-    fabricate rows out of column defaults — refusing loudly is the
-    only honest behavior."""
-    probed = probe_jsonl_keys(path) or []
-    by_lower = {k.lower(): k for k in probed}
-    if require_match and probed:
-        if not any(n.lower() in by_lower for n in ddl_names):
-            raise ValueError(
-                f"JSONL file {path!r}: none of its keys "
-                f"{sorted(probed)[:8]} match any target column "
-                f"{list(ddl_names)[:8]} — its rows would read as "
-                "all-NULL and default-fill would fabricate data; "
-                "refusing to ingest it"
-            )
-    return [by_lower.get(n.lower(), n) for n in ddl_names]
+            seen.update(k.lower() for k in obj)
+    wanted = {n.lower() for n in ddl_names}
+    if seen and not seen & wanted:
+        raise ValueError(
+            f"JSONL file {path!r}: none of its keys "
+            f"{sorted(seen)[:8]} match any target column "
+            f"{list(ddl_names)[:8]} — its rows would read as "
+            "all-NULL and default-fill would fabricate data; "
+            "refusing to ingest it"
+        )

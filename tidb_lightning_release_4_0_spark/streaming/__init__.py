@@ -1,2 +1,6 @@
-"""Structured Streaming ingest paths (beyond-reference; the closest
-reference analog is the server-mode task queue, configlist.go)."""
+"""Structured Streaming analytics operators (beyond-reference):
+windowed aggregates, sessions, stateful per-user stats and an
+incremental checksum, each with a batch twin. Continuous import is
+server mode (server.py) feeding incremental batch restores, as the
+reference's task queue feeds identical batch pipelines
+(lightning.go:149-167, configlist.go)."""
