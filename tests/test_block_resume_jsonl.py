@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from tidb_lightning_release_4_0_spark.config import (
@@ -316,3 +317,54 @@ def test_jsonl_strict_rowids_invariant_to_checkpointing(spark):
         assert rows.agg(F.max("_tidb_rowid")).first()[0] < 1 << 62
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+@pytest.mark.parametrize("split", [64, 256, 1000])
+def test_jsonl_table_scan_ids_match_block_reader(spark, small_splits, split):
+    """The table-grain read of a strict-format JSONL table (a JVM text
+    scan + rowid.assign_rowid_by_range) assigns every line the id the
+    block-grain reader assigns it, across blank lines, whitespace-only
+    lines and CRLF endings, whatever the split size."""
+    from tidb_lightning_release_4_0_spark.sources.csv_blocks import (
+        plan_file_blocks,
+    )
+    from tidb_lightning_release_4_0_spark.sources.mydump_loader import (
+        FileInfo,
+        MDTableMeta,
+    )
+    from tidb_lightning_release_4_0_spark.sources.schema_reader import (
+        parse_create_table,
+    )
+
+    d = os.path.join(TMP, f"scan_parity_{split}")
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    files, key = [], 0
+    for part, eol in enumerate(("\n", "\r\n", "\n")):
+        lines = []
+        for i in range(126):
+            lines.append('{"a": %d, "b": "%s"}' % (key, "x" * (key % 17)))
+            key += 1
+            if i % 9 == 0:
+                lines.append("")
+            if i % 13 == 0:
+                lines.append(" \t ")
+        path = os.path.join(d, f"blk.t.{part:04d}.jsonl")
+        with open(path, "w", newline="") as f:
+            f.write(eol.join(lines) + eol)
+        files.append(FileInfo("blk", "t", path, os.path.getsize(path)))
+    meta = MDTableMeta("blk", "t", None, files, sum(f.size for f in files))
+    schema = parse_create_table("CREATE TABLE t (a INT, b VARCHAR(20))")
+    sb = small_splits(split)
+    ctl = RestoreController(
+        spark,
+        _cfg(d, os.path.join(d, "sink"), "", checkpoint=False),
+    )
+
+    def ids(df):
+        return {r["a"]: r["_row_id"] for r in df.collect()}
+
+    plan = plan_file_blocks([(f.path, f.size) for f in files], sb)
+    blocks = ids(ctl._block_frame(meta, schema, plan, sb))
+    assert len(blocks) == key == 378
+    assert ids(ctl.read_table(meta, schema)) == blocks

@@ -118,6 +118,9 @@ CASES = [
      "table", "capacity-scheme row ids"),
     ("strict_format_jsonl", "jsonl", KEYED, {}, {"strict_format": True},
      "parquet", True, "block", "strict-format byte ranges"),
+    ("strict_format_jsonl_header", "jsonl", KEYED, {},
+     {"strict_format": True, "header": True}, "parquet", True,
+     "file", "whole-file batches"),
     ("plain_csv", "csv", KEYED, {}, {}, "parquet", True,
      "file", "whole-file batches"),
     ("strict_format_csv", "csv", KEYED, {}, {"strict_format": True},

@@ -182,3 +182,49 @@ def test_jsonl_malformed_line_fails_loudly(spark):
     s = RestoreController(spark, cfg).run()
     assert not s.ok, "malformed JSONL must fail the table"
     assert s.tables["db.t"].status == "failed"
+
+
+@pytest.mark.parametrize("grain", ["table", "strict_table", "block"])
+def test_jsonl_unmatched_line_after_matched_ones_raises(spark, grain):
+    """A line whose keys match no column fails the restore wherever it
+    sits in its part, on the table, strict-format table and block
+    lanes: it would read as all-NULL and the NOT NULL ladder would
+    fabricate (0, '', 7.5) out of the defaults."""
+    from tidb_lightning_release_4_0_spark.config import CSVConfig
+    from tidb_lightning_release_4_0_spark.plans.checkpoints import (
+        CheckpointStore,
+    )
+
+    good = "".join(
+        '{"id": %d, "name": "n%d", "v": 1.5}\n' % (i, i)
+        for i in range(1, 301)
+    )
+    dump, sink = _dump(
+        "unmatched_" + grain,
+        {"db.t.0001.jsonl": good + '{"wrong": 2, "keys": "x"}\n'},
+    )
+    cp_path = os.path.join(os.path.dirname(dump), "cp.json")
+    block = grain == "block"
+    cfg = Config(
+        mydumper=MydumperConfig(
+            source_dir=dump,
+            csv=CSVConfig(strict_format=grain != "table"),
+            batch_size=2048,
+        ),
+        backend="parquet",
+        target_dir=sink,
+        checkpoint_enable=block,
+        checkpoint_path=cp_path if block else "",
+        on_duplicate="error",
+    )
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+    try:
+        s = RestoreController(spark, cfg).run()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert not s.ok
+    assert "refusing to ingest" in s.report()
+    if block:
+        # the engines before the bad line's block were delivered
+        assert CheckpointStore(cp_path).engine_state("db.t", 0) is not None

@@ -9,10 +9,18 @@ ingest hot path stays JVM-side.
 from __future__ import annotations
 
 import io
+import os
+import shutil
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
+from tidb_lightning_release_4_0_spark.config import (
+    Config,
+    CSVConfig,
+    MydumperConfig,
+)
+from tidb_lightning_release_4_0_spark.plans.pipeline import RestoreController
 from tidb_lightning_release_4_0_spark.registry import (
     q_ann_topk_lsh,
     q_filtered_revenue,
@@ -20,6 +28,13 @@ from tidb_lightning_release_4_0_spark.registry import (
     q_top_orders_by_revenue,
     q_topk_parts,
     build_queries,
+)
+from tidb_lightning_release_4_0_spark.sources.mydump_loader import (
+    FileInfo,
+    MDTableMeta,
+)
+from tidb_lightning_release_4_0_spark.sources.schema_reader import (
+    parse_create_table,
 )
 
 
@@ -51,53 +66,54 @@ def test_broadcast_join_for_small_dim(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
 
 
+_NATION_DDL = (
+    "CREATE TABLE nation (n_nationkey INT PRIMARY KEY, "
+    "n_name VARCHAR(32), n_regionkey INT)"
+)
+
+
 def test_ingest_plan_stays_jvm(spark, tables):
-    """The native-CSV ingest path must contain no Python evaluation
-    (BatchEvalPython/ArrowEvalPython/MapInPandas) — cast, rowid and
-    checksum are all built-ins."""
-    import os
-
-    from tidb_lightning_release_4_0_spark.config import CSVConfig
-    from tidb_lightning_release_4_0_spark.operators.permutation import (
-        apply_permutation,
+    """The restore's table-grain read (RestoreController.read_table)
+    must contain no Python evaluation (BatchEvalPython/ArrowEvalPython/
+    MapInPandas) on the native-CSV lane and on the strict-format JSONL
+    lane: parse, cast and row ids are all built-ins."""
+    pdf = tables["nation"].select(
+        "n_nationkey", "n_name", "n_regionkey"
+    ).toPandas()
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".tmp", "planq",
     )
-    from tidb_lightning_release_4_0_spark.operators.rowid import (
-        assign_rowid_by_file,
-        plan_row_ids,
-    )
-    from tidb_lightning_release_4_0_spark.sources.csv_source import read_csv
-    from tidb_lightning_release_4_0_spark.sources.dump_writer import (
-        write_dump_table,
-    )
-    from tidb_lightning_release_4_0_spark.sources.schema_reader import (
-        parse_create_table,
-    )
-
-    d = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "planq"
-    )
-    import shutil
-
-    shutil.rmtree(d, ignore_errors=True)
-    write_dump_table(
-        d, "db", "nation", tables["nation"].toPandas(),
-        "CREATE TABLE nation (n_nationkey INT PRIMARY KEY, "
-        "n_name VARCHAR(32), n_regionkey INT)", fmt="csv",
-    )
-    files = [(os.path.join(d, "db.nation.csv"), 100)]
-    cols = ["n_nationkey", "n_name", "n_regionkey"]
-    df = read_csv(spark, [f for f, _ in files], CSVConfig(), column_names=cols)
-    ids = plan_row_ids([(p, sz, "csv") for p, sz in files], {"csv": 3})
-    df = assign_rowid_by_file(df, ids.bases)
-    out = apply_permutation(
-        df, parse_create_table(
-            "CREATE TABLE nation (n_nationkey INT PRIMARY KEY, "
-            "n_name VARCHAR(32), n_regionkey INT)"
-        ), cols, rowid=df["_row_id"], source_latin1=True,
-    )
-    plan = _plan(out)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, f"{marker} found in ingest plan"
+    for fmt, csv in (
+        ("csv", CSVConfig()), ("jsonl", CSVConfig(strict_format=True))
+    ):
+        d = os.path.join(root, fmt)
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        files = []
+        for i, part in enumerate((pdf[:12], pdf[12:])):
+            path = os.path.join(d, f"db.nation.{i:04d}.{fmt}")
+            if fmt == "csv":
+                part.to_csv(path, header=False, index=False)
+            else:
+                part.to_json(path, orient="records", lines=True)
+            files.append(
+                FileInfo("db", "nation", path, os.path.getsize(path))
+            )
+        meta = MDTableMeta(
+            "db", "nation", None, files, sum(f.size for f in files)
+        )
+        ctl = RestoreController(
+            spark,
+            Config(
+                mydumper=MydumperConfig(source_dir=d, csv=csv),
+                backend="memory",
+                checkpoint_enable=False,
+            ),
+        )
+        plan = _plan(ctl.read_table(meta, parse_create_table(_NATION_DDL)))
+        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+            assert marker not in plan, f"{marker} in the {fmt} ingest plan"
 
 
 def test_lsh_reduces_comparisons(spark, sf_dir):

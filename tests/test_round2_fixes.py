@@ -6,7 +6,7 @@
 3. CSV trim_last_sep drops the synthetic trailing field, preserving
    a legitimately-empty last column ('' vs NULL)
 4. strict sql_mode rejects out-of-range BIGINT UNSIGNED
-5. assign_rowid_by_file tolerates zero-row input
+5. assign_rowid_by_range tolerates zero-row input
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 from tidb_lightning_release_4_0_spark.config import CSVConfig
 from tidb_lightning_release_4_0_spark.operators.cast import mysql_cast
 from tidb_lightning_release_4_0_spark.operators.rowid import (
-    assign_rowid_by_file,
+    assign_rowid_by_range,
 )
 from tidb_lightning_release_4_0_spark.plans.checkpoints import (
     CheckpointStore,
@@ -202,10 +202,10 @@ def test_lenient_uint64_still_clamps(spark):
 # -- 5: empty-input rowid -----------------------------------------------------
 
 
-def test_assign_rowid_by_file_empty_input(spark):
+def test_assign_rowid_by_range_empty_input(spark):
     schema = T.StructType([T.StructField("a", T.StringType())])
     df = spark.createDataFrame([], schema)
-    out = assign_rowid_by_file(df, {})
+    out = assign_rowid_by_range(df, {}, 1)
     assert out.count() == 0
     assert "_row_id" in out.columns
 
@@ -217,7 +217,8 @@ def test_rowid_fast_path_dense_many_small_files(spark, tmp_path):
     """200 small files would normally bin-pack into ~30 FilePartitions
     (breaking the mono-id bit trick); the session's openCostInBytes
     forces one file per task, so the job-free fast path must produce
-    exactly the same dense per-file ids as the min-agg slow path."""
+    exactly the same dense per-file ids as a session that packs the
+    files (the stamp's window fallback)."""
     import os
 
     from tidb_lightning_release_4_0_spark.operators.rowid import plan_row_ids
@@ -239,25 +240,35 @@ def test_rowid_fast_path_dense_many_small_files(spark, tmp_path):
             [(p, sz, "csv") for p, sz in files], {"csv": 2}
         ).bases
         cfg = CSVConfig(separator=",", header=False)
-        df = read_csv(
-            spark, [p for p, _ in files], cfg, column_names=["_c0", "_c1"]
-        )
 
-        fast = assign_rowid_by_file(df, bases, one_file_per_partition=True)
-        slow = assign_rowid_by_file(df, bases)
-        a = {(r["_c0"], r["_c1"]): r["_row_id"] for r in fast.collect()}
-        b = {(r["_c0"], r["_c1"]): r["_row_id"] for r in slow.collect()}
+        def ids():
+            df = read_csv(
+                spark, [p for p, _ in files], cfg,
+                column_names=["_c0", "_c1"],
+            )
+            out = assign_rowid_by_range(df, bases, 2)
+            return df.rdd.getNumPartitions(), {
+                (r["_c0"], r["_c1"]): r["_row_id"] for r in out.collect()
+            }
+
+        tasks, a = ids()
+        assert tasks == nfiles, sub
+        old_oc = spark.conf.get("spark.sql.files.openCostInBytes")
+        try:
+            spark.conf.set("spark.sql.files.openCostInBytes", "0")
+            tasks, b = ids()
+        finally:
+            spark.conf.set("spark.sql.files.openCostInBytes", old_oc)
+        assert tasks < nfiles, sub  # the files really were packed
         assert a == b, sub
         assert len(a) == nfiles * rows_per, sub
         assert len(set(a.values())) == nfiles * rows_per, sub  # unique
 
 
 def test_rowid_fast_path_broadcast_join_branch(spark, tmp_path):
-    """>1024 files takes the broadcast-join branch; exercise it by
-    lowering the literal-map cutoff indirectly: call with a bases dict
-    padded past the cutoff."""
-    import os
-
+    """The per-file bases are a broadcast-joined table: a bases dict
+    of 1031 files, one of them real, still gives that file's rows its
+    own base."""
     p = tmp_path / "one.csv"
     p.write_text("1,a\n2,b\n3,c\n")
     real = str(p)
@@ -265,7 +276,7 @@ def test_rowid_fast_path_broadcast_join_branch(spark, tmp_path):
     bases[real] = 100
     cfg = CSVConfig(separator=",", header=False)
     df = read_csv(spark, [real], cfg, column_names=["_c0", "_c1"])
-    out = assign_rowid_by_file(df, bases, one_file_per_partition=True)
+    out = assign_rowid_by_range(df, bases, 2)
     ids = sorted(r["_row_id"] for r in out.collect())
     assert ids == [101, 102, 103]
 

@@ -22,7 +22,7 @@ from tidb_lightning_release_4_0_spark.config import (
     MydumperConfig,
 )
 from tidb_lightning_release_4_0_spark.operators.rowid import (
-    assign_rowid_by_file_split,
+    assign_rowid_by_range,
     plan_row_ids,
 )
 from tidb_lightning_release_4_0_spark.sources.csv_source import read_csv
@@ -56,7 +56,7 @@ def test_single_file_fans_out_and_preserves_order(spark, small_splits):
     nparts = df.rdd.getNumPartitions()
     assert nparts > 10, f"expected many byte-range tasks, got {nparts}"
     ids = plan_row_ids([(path, os.path.getsize(path), "csv")], {"csv": 3}, sb)
-    out = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
+    out = assign_rowid_by_range(df, ids.bases, ids.divisor["csv"], sb)
     got = [
         (int(r["_c0"]), int(r["_row_id"]))
         for r in out.select("_c0", "_row_id").collect()
@@ -81,7 +81,7 @@ def test_straddling_lines_stay_unique(spark, small_splits):
     cfg = CSVConfig(strict_format=True)
     df = read_csv(spark, path, cfg, column_names=C3)
     ids = plan_row_ids([(path, os.path.getsize(path), "csv")], {"csv": 3}, sb)
-    out = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
+    out = assign_rowid_by_range(df, ids.bases, ids.divisor["csv"], sb)
     ids = [r["_row_id"] for r in out.select("_row_id").collect()]
     assert len(ids) == len(rows)
     assert len(set(ids)) == len(ids), "straddling lines collided"
@@ -99,7 +99,7 @@ def test_multi_file_bases_disjoint(spark, small_splits):
     files = [(p1, os.path.getsize(p1)), (p2, os.path.getsize(p2))]
     ids = plan_row_ids([(p, sz, "csv") for p, sz in files], {"csv": 2}, sb)
     df = read_csv(spark, [p1, p2], cfg, column_names=["_c0", "_c1"])
-    out = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
+    out = assign_rowid_by_range(df, ids.bases, ids.divisor["csv"], sb)
     got = [
         (r["_c1"], int(r["_c0"]), int(r["_row_id"]))
         for r in out.collect()

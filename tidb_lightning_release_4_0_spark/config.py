@@ -50,7 +50,9 @@ class CSVConfig:
     # splittable and one huge file fans out across the cluster at
     # maxPartitionBytes-sized blocks instead of one task; row-ids use
     # the reference's per-chunk byte-offset bases
-    # (rowid.assign_rowid_by_file_split).
+    # (rowid.assign_rowid_by_range). Plain .jsonl tables split the
+    # same way and take the same bases (JSON Lines never hold a
+    # newline inside a record).
     strict_format: bool = False
 
     def validate(self) -> None:

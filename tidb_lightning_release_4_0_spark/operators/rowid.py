@@ -7,16 +7,19 @@ divisor is the column count, + 2 for a non-CSV file), and its rows
 count up from that base (parser.go:429, csv_parser.go:97).
 ``plan_row_ids`` is the only place that decides a lane's divisor, a
 file's base and the chain's end; every byte-estimate reader takes its
-bases and divisor from it, so a table's formats share one chain:
-``assign_rowid_by_file`` (whole-file CSV, zero extra jobs on
-one-file-per-task reads), ``assign_rowid_by_file_split`` and
-``csv_blocks.read_blocks`` (byte ranges: + the block's
-``split_chunk_base``), ``csv_strict.read_csv_strict`` and
-``sql_dump_source.read_sql_dump`` (a split .sql file counts from base +
-statement offset // divisor). Ids are unique and monotonic in dump
-order, with gaps between files. Sources whose bytes cannot bound their
-rows (gzip, parquet, JSONL outside the block reader) take
-``assign_rowid_mono``'s capacity scheme, in bands past the chain's end.
+bases and divisor from it, so a table's formats share one chain.
+Each reader has one stamp: ``assign_rowid_by_range`` for every JVM
+text scan (whole-file and strict-format CSV, strict-format JSONL:
+base + the block's ``split_chunk_base`` + the row's index in its
+block, zero extra jobs on one-block-per-task sessions),
+``csv_blocks.read_blocks`` for block-grain engines (the same
+formula over an explicit block list), ``csv_strict.read_csv_strict``
+and ``sql_dump_source.read_sql_dump`` (a split .sql file counts from
+base + statement offset // divisor). Ids are unique and monotonic in
+dump order, with gaps between files. Sources whose bytes cannot bound
+their rows (gzip, parquet, JSONL outside a strict-format table of
+plain .jsonl parts) take ``assign_rowid_mono``'s capacity scheme, in
+bands past the chain's end.
 
 ``assign_rowid_dense``: exact dense 1..N ids given a total order key —
 two passes (per-partition counts, then offsets), mirroring how the
@@ -110,7 +113,7 @@ _PARTITION_CAPACITY = 1 << 33
 def _with_local_index(df: DataFrame) -> DataFrame:
     """Add _pid + _local_idx without shuffling or Python: the low 33
     bits of monotonically_increasing_id are the row's index within its
-    partition (the capacity scheme, as in assign_rowid_by_file)."""
+    partition (the capacity scheme, as in assign_rowid_by_range)."""
     return df.withColumn("_pid", F.spark_partition_id()).withColumn(
         "_local_idx",
         F.monotonically_increasing_id().bitwiseAND(
@@ -190,76 +193,6 @@ def plan_row_ids(
     return RowIdPlan(bases, divisor, base + len(files) + 1)
 
 
-def assign_rowid_by_file(
-    df: DataFrame,
-    bases: dict[str, int],
-    one_file_per_partition: bool = False,
-) -> DataFrame:
-    """Row-ids = plan-time per-file base + in-file row number.
-
-    Matches the reference's chunk semantics (PrevRowIDMax + per-row
-    increment, parser.go:429): deterministic, unique, dense within a
-    file, bounded gaps between files — so ``max(rowid)`` stays O(rows)
-    and AllocBase rebase behaves like the reference's.
-
-    Pure JVM, no wide shuffle, no Python exchange:
-    ``monotonically_increasing_id`` is ``(partition_id << 33) +
-    row_index_in_partition`` — contiguous within a partition — and
-    our file reads are unsplit (multiLine CSV / one-file-per-task
-    .sql), so each file's rows are one contiguous mono-id run.
-    Job 1 aggregates ``min(mono)`` per file (output: #files rows);
-    job 2 computes ``rowid = base[file] + (mono - min_mono[file]) + 1``
-    via a broadcast join. Data-plane cost: one extra column scan —
-    no repartitioning of the 100 TB stream.
-
-    ``one_file_per_partition=True`` (the caller guarantees each task
-    owns exactly one whole file — true for multiLine CSV / .sql reads
-    under the session's huge ``spark.sql.files.openCostInBytes``,
-    which disables FilePartition bin-packing): then ``mono & (2^33-1)``
-    IS the in-file row index and the min-agg job disappears — row-ids
-    come from plan-time ``bases`` with ZERO extra jobs/scans.
-    """
-    if one_file_per_partition:
-        local = F.monotonically_increasing_id().bitwiseAND(
-            F.lit(_PARTITION_CAPACITY - 1)
-        )
-        return _file_base_rowids(df, bases, local)
-
-    d = df.withColumn("_fname", F.input_file_name()).withColumn(
-        "_mono", F.monotonically_increasing_id()
-    )
-
-    mins = (
-        d.groupBy("_fname").agg(F.min("_mono").alias("_mn")).collect()
-    )  # O(#files) rows on the driver
-    spark = df.sparkSession
-    keyed = _file_aliases(spark, bases)
-    base_rows = [
-        (r["_fname"], int(r["_mn"]), keyed.get(r["_fname"], 0)) for r in mins
-    ]
-    # explicit schema: zero-row input (valid empty table) yields no
-    # rows to infer from, and createDataFrame([], [names]) raises
-    bmap_schema = T.StructType(
-        [
-            T.StructField("_fname", T.StringType()),
-            T.StructField("_mn", T.LongType()),
-            T.StructField("_fbase", T.LongType()),
-        ]
-    )
-    bmap = metadata_df(spark, base_rows, bmap_schema)
-
-    return (
-        d.join(F.broadcast(bmap), "_fname", "left")
-        .withColumn(
-            ROWID,
-            F.coalesce(F.col("_fbase"), F.lit(0))
-            + (F.col("_mono") - F.coalesce(F.col("_mn"), F.lit(0)))
-            + F.lit(1),
-        )
-        .drop("_fname", "_mono", "_mn", "_fbase")
-    )
-
-
 def _file_aliases(spark, bases: dict[str, int]) -> dict[str, int]:
     """``bases`` keyed by every name a row's file can carry: the raw
     path (a caller-materialized ``_fname``) and input_file_name()'s
@@ -285,11 +218,11 @@ def _file_base_rowids(
     """rowid = plan-time per-file base + ``in_file_index`` + 1, with
     the base broadcast-joined on ``_fname``: input_file_name(), or the
     raw path a caller materialized itself (the block reader, the
-    split-path window fallback).
+    packed-session window fallback).
 
-    Shared by the whole-file scheme (index = mono low bits), the
-    chunk-split scheme and the block reader (index = split_chunk_base
-    + in-block row index). Map keys are normalized to both aliases at
+    Shared by the range stamp (index = [split_chunk_base +] in-block
+    row index) and the block reader (index = split_chunk_base +
+    the row index it emits). Map keys are normalized to both aliases at
     PLAN time (_file_aliases) so no per-row regexp runs — the rowid
     expression gets inlined into multiple downstream projections
     (CollapseProject duplicates it), so per-row cost matters doubly.
@@ -319,7 +252,7 @@ def _file_base_rowids(
         if cache is not None:
             cache[key] = bmap
     # a caller that already materialized _fname keeps its column (the
-    # split-path window fallback must: input_file_name() is only
+    # packed-session window fallback must: input_file_name() is only
     # defined inside the file-scan stage, not above the window's
     # shuffle); otherwise evaluate it here, in the scan stage
     d = df if "_fname" in df.columns else df.withColumn(
@@ -370,7 +303,7 @@ def split_bytes_lower_bound(spark) -> int:
 def split_chunk_base(offset: Column, divisor: int, split_bytes: int) -> Column:
     """The row-id base of the byte-range block at ``offset`` within
     its file, ``floor(off / divisor) + floor(off / S)``: the
-    SplitLargeFile rule (see assign_rowid_by_file_split). Every
+    SplitLargeFile rule (see assign_rowid_by_range). Every
     byte-range reader takes its offset term from here, so a block's
     ids do not depend on which reader produced them."""
     return (
@@ -379,18 +312,18 @@ def split_chunk_base(offset: Column, divisor: int, split_bytes: int) -> Column:
     ).cast("long")
 
 
-def assign_rowid_by_file_split(
+def assign_rowid_by_range(
     df: DataFrame,
     bases: dict[str, int],
     divisor: int,
-    split_bytes: int,
+    split_bytes: int | None = None,
 ) -> DataFrame:
-    """Row-ids for CHUNK-SPLIT file reads (strict-format CSV): each
-    byte-range block gets the reserved base
+    """Row-ids for a JVM text scan of byte-estimate files (CSV, JSON
+    Lines): each byte-range block gets the reserved base
 
         rowid = file_base + floor(off / divisor) + floor(off / S) + i + 1
 
-    with ``off`` the block's byte offset, ``S`` the split size and
+    with ``off`` the block's byte offset, ``S`` = ``split_bytes`` and
     ``i`` the row index inside the block — the reference's
     SplitLargeFile scheme (mydump/region.go:87-143:
     chunk.PrevRowIDMax = offset/divisor). The floor(off/S) term spends
@@ -398,58 +331,53 @@ def assign_rowid_by_file_split(
     line a block absorbs from beyond its range (the reference
     re-aligns chunk offsets to line boundaries at plan time; Spark
     re-syncs at READ time). ``bases`` and ``divisor`` must come from
-    a plan_row_ids call given the same split_bytes.
+    a plan_row_ids call given the same split_bytes. Without
+    ``split_bytes`` the read is whole-file (multiLine CSV: every block
+    starts at offset 0), so the offset term is dropped and
+    rowid = file_base + i + 1 (parser.go:429).
 
-    Fast path precondition: one block per task (the session's huge
-    openCostInBytes makes every split its own FilePartition) and an
-    uncompressed, splittable read (multiLine=false). ``block_start``
-    comes from input_file_block_start(), so the data plane needs NO
-    extra job or scan — the 100 TB path for one giant CSV.
+    Fast path: one block per task — the session's huge
+    openCostInBytes makes every split (or whole file) its own
+    FilePartition, so the low 33 bits of monotonically_increasing_id
+    ARE the in-block row index and ``off`` comes from
+    input_file_block_start(): no extra job, scan or shuffle.
 
-    Session portability: when the session is NOT configured for
-    one-block-per-task (openCostInBytes < maxPartitionBytes — Spark
-    then PACKS several splits into one FilePartition and
-    monotonically_increasing_id keeps counting across the packed
-    blocks), the operator self-heals instead of raising: the in-block
-    index comes from a window partitioned by (file, block_start)
-    ordered by the mono id, which is exact under ANY packing. That
-    fallback costs one shuffle of (ids + projected columns); the
-    zero-shuffle fast path stays the default under tlr4s.session."""
+    A session that PACKS blocks (openCostInBytes < maxPartitionBytes:
+    Spark bin-packs several splits or small files into one
+    FilePartition, and the mono id keeps counting across them) takes
+    an exact fallback instead: the in-block index comes from a window
+    partitioned by (file, block start) ordered by the mono id, which
+    is exact under any packing, at the cost of one shuffle of the
+    projected columns."""
     conf = df.sparkSession.conf
     oc = _conf_bytes(conf.get("spark.sql.files.openCostInBytes"))
     if oc >= _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes")):
-        # fast path: each byte-range block is its own task, so the low
-        # bits of the mono id ARE the in-block row index — no shuffle.
         local = F.monotonically_increasing_id().bitwiseAND(
             F.lit(_PARTITION_CAPACITY - 1)
         )
-        chunk_base = split_chunk_base(
-            F.expr("input_file_block_start()"), divisor, split_bytes
+        offset = F.expr("input_file_block_start()")
+    else:
+        # the mono id is monotone within a task, hence within each
+        # packed block, so ordering by it keeps the in-block physical
+        # row order. Every file-context expression is materialized at
+        # SCAN time: above the window's shuffle, input_file_name() and
+        # input_file_block_start() have no file context and silently
+        # return constants.
+        df = (
+            df.withColumn("_fname", F.input_file_name())
+            .withColumn("_boff", F.expr("input_file_block_start()"))
+            .withColumn("_mono", F.monotonically_increasing_id())
         )
-        return _file_base_rowids(df, bases, chunk_base + local)
-    # portability fallback: blocks are packed into shared tasks;
-    # derive an EXACT per-block index by windowing on the block
-    # identity. The mono id is monotone within a task (and hence
-    # within each packed block), so ordering by it preserves in-block
-    # physical row order. ALL file-context expressions must be
-    # materialized at SCAN time: above the window's shuffle,
-    # input_file_name()/input_file_block_start() have no file context
-    # and silently return constants.
-    d = (
-        df.withColumn("_fname", F.input_file_name())
-        .withColumn("_boff", F.expr("input_file_block_start()"))
-        .withColumn("_mono", F.monotonically_increasing_id())
-    )
-    local = (
-        F.row_number().over(
-            Window.partitionBy("_fname", "_boff").orderBy("_mono")
-        )
-        - F.lit(1)
-    ).cast("long")
-    chunk_base = split_chunk_base(F.col("_boff"), divisor, split_bytes)
-    return _file_base_rowids(d, bases, chunk_base + local).drop(
-        "_boff", "_mono"
-    )
+        local = (
+            F.row_number().over(
+                Window.partitionBy("_fname", "_boff").orderBy("_mono")
+            )
+            - F.lit(1)
+        ).cast("long")
+        offset = F.col("_boff")
+    if split_bytes:
+        local = split_chunk_base(offset, divisor, split_bytes) + local
+    return _file_base_rowids(df, bases, local).drop("_boff", "_mono")
 
 
 def assign_rowid_dense(

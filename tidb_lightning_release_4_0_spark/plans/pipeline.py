@@ -408,8 +408,11 @@ class RestoreController:
         }
         csv_cfg = self.cfg.mydumper.csv
         csv_columns = {f.path: read_header(f.path, csv_cfg) for f in all_csv}
-        # the strict parser reads whole files
-        split = None if csv_cfg.strict_parser else _split_bytes
+        jl_chain = self._jsonl_on_chain(meta)
+        # the strict parser reads whole CSV files
+        split = (
+            None if csv_cfg.strict_parser and not jl_chain else _split_bytes
+        )
         ids = self._row_id_plan(meta, schema, split, csv_columns | sql_columns)
         # capacity-scheme id lanes for sources without safe byte-
         # estimate bases (parquet, gzip): each lane starts past the
@@ -448,65 +451,36 @@ class RestoreController:
                 )
             )
 
-        jl_strict_blocks = False
-        if jsonl_files and self.cfg.mydumper.csv.strict_format:
-            # r11 determinism fix (found by the resume_64x_jsonl kill
-            # proof): strict-format JSONL must take the SAME
-            # SplitLargeFile block row-id scheme the checkpointed
-            # block-engine lane uses — the old routing sent the
-            # no-checkpoint run through the capacity-scheme mono lane
-            # (2^62 band), so _tidb_rowid (and hence kv_crc64)
-            # depended on whether checkpointing was on. Same gates as
-            # the block lane: plain .jsonl only (the byte-range
-            # reader seeks), one scheme per table (no mixed sources),
-            # supported line terminators.
-            from ..sources.csv_blocks import (
-                files_use_supported_terminators,
-                plan_file_blocks,
-            )
-
-            jl_strict_blocks = (
-                bool(meta.data_files)
-                and all(
-                    f.path.lower().endswith(".jsonl")
-                    for f in meta.data_files
-                )
-                and files_use_supported_terminators(
-                    [(f.path, f.size) for f in jsonl_files]
-                )
-            )
-            if jl_strict_blocks:
-                jl_split = _split_bytes  # same geometry as the planner
-                frames.append(
-                    self._block_frame(
-                        meta,
-                        schema,
-                        plan_file_blocks(
-                            [(f.path, f.size) for f in jsonl_files],
-                            jl_split,
-                        ),
-                        jl_split,
-                    )
-                )
-        if jsonl_files and not jl_strict_blocks:
+        if jsonl_files:
             # Beyond-reference source: JSON-Lines parts (the
             # training-data handoff format; curation.export_jsonl is
-            # the matching writer). Row-ids use the capacity scheme in
-            # their own lane (splittable named-record files have no
-            # per-file dump order to preserve; documented like the
-            # parquet lane).
+            # the matching writer), read as text through the JVM. A
+            # strict-format table of plain .jsonl parts takes the
+            # table's chain through the range stamp with the JSONL
+            # divisor: the ids its block-grain engines assign, so
+            # _tidb_rowid (and kv_crc64) does not depend on whether
+            # checkpointing is on. Other JSONL parts (gzip, or mixed
+            # with other formats) take the capacity scheme in their
+            # own lane (documented like the parquet lane).
+            from ..operators.rowid import (
+                assign_rowid_by_range,
+                assign_rowid_mono,
+            )
             from ..sources.jsonl_source import read_jsonl_lines
 
-            paths = [f.path for f in jsonl_files]
-            names = [c.name for c in schema.columns]
-            frames.append(
-                self._jsonl_frame(
-                    schema,
-                    paths,
-                    read_jsonl_lines(self.spark, paths, names),
-                    mono_start=JSONL_LANE,
-                )
+            df = read_jsonl_lines(
+                self.spark,
+                [f.path for f in jsonl_files],
+                [c.name for c in schema.columns],
             )
+            df = (
+                assign_rowid_by_range(
+                    df, ids.bases, ids.divisor["jsonl"], _split_bytes
+                )
+                if jl_chain
+                else assign_rowid_mono(df, start=JSONL_LANE)
+            )
+            frames.append(self._jsonl_frame(schema, df))
         if csv_files:
             has_gz = any(f.path.lower().endswith(".gz") for f in csv_files)
             if has_gz and csv_cfg.strict_parser:
@@ -527,41 +501,30 @@ class RestoreController:
                         ids.bases,
                     )
             else:
-                from ..operators.rowid import (
-                    assign_rowid_by_file,
-                    assign_rowid_by_file_split,
-                )
+                from ..operators.rowid import assign_rowid_by_range
 
-                if has_gz:
-                    # compressed sizes cannot bound row counts, so the
-                    # byte-estimate bases are unsafe: the gz lane's
-                    # capacity-scheme ids (unique, zero extra jobs).
-                    # Documented deviation: replace/ignore "arrival
-                    # order" then follows scan partition order, not the
-                    # dump part sequence — gunzip the parts when
-                    # logical dup order matters
-                    def rowids(df):
-                        return df
-                elif csv_cfg.strict_format:
-                    # strict-format: files are chunk-split at byte
-                    # ranges (multiLine=false), one huge CSV fans out
-                    # across tasks; per-block row-id bases mirror the
-                    # reference's SplitLargeFile offset/divisor scheme
-                    rowids = functools.partial(
-                        assign_rowid_by_file_split,
+                # compressed sizes cannot bound row counts, so the
+                # byte-estimate bases are unsafe: gz parts take the gz
+                # lane's capacity-scheme ids (unique, zero extra jobs;
+                # mono_start below). Documented deviation:
+                # replace/ignore "arrival order" then follows scan
+                # partition order, not the dump part sequence —
+                # gunzip the parts when logical dup order matters.
+                # Plain parts take the range stamp: strict-format
+                # files are chunk-split at byte ranges (multiLine=false,
+                # one huge CSV fans out across tasks) and each block
+                # takes the reference's SplitLargeFile offset/divisor
+                # base; multiLine reads are whole-file (no offset term)
+                rowids = (
+                    (lambda df: df)
+                    if has_gz
+                    else functools.partial(
+                        assign_rowid_by_range,
                         bases=ids.bases,
                         divisor=ids.divisor["csv"],
                         split_bytes=_split_bytes,
                     )
-                else:
-                    # multiLine CSV reads are whole-file, and the
-                    # session's openCostInBytes disables file packing
-                    # -> one file per task, so row-ids need no extra job
-                    rowids = functools.partial(
-                        assign_rowid_by_file,
-                        bases=ids.bases,
-                        one_file_per_partition=True,
-                    )
+                )
                 # typed fast path for headerless files whose null
                 # sentinel is not the empty string (not-null mode has
                 # none). Strict sql_mode keeps it for ints/dates (every
@@ -853,11 +816,11 @@ class RestoreController:
                     "block-grain resume disabled for this table",
                     name,
                 )
-        # parquet/gzip/jsonl sources have no plan-time per-file id
-        # bases (byte estimates are unsafe for compressed or columnar
-        # files), so their capacity-scheme ids are only unique within
-        # ONE read — engine-split reads would collide
-        if any(
+        # parquet, gzip and off-chain jsonl sources have no plan-time
+        # per-file id bases (byte estimates are unsafe for compressed
+        # or columnar files), so their capacity-scheme ids are only
+        # unique within ONE read — engine-split reads would collide
+        if not self._jsonl_on_chain(meta) and any(
             p.endswith((".parquet", ".csv.gz", ".jsonl", ".jsonl.gz"))
             for p in paths
         ):
@@ -973,17 +936,30 @@ class RestoreController:
                 max_id = v if max_id is None else max(max_id, v)
         return total, rows, max_id
 
+    def _jsonl_on_chain(self, meta: MDTableMeta) -> bool:
+        """Whether the table's .jsonl parts take its byte-estimate
+        chain: a strict-format table of plain .jsonl parts only (one
+        id scheme per table, as its block-grain engines read it)."""
+        return (
+            self.cfg.mydumper.csv.strict_format
+            and bool(meta.data_files)
+            and all(
+                f.path.lower().endswith(".jsonl") for f in meta.data_files
+            )
+        )
+
     def _row_id_plan(
         self, meta: MDTableMeta, schema: TableSchema,
-        split_bytes: int | None, columns: dict, jsonl: bool = False,
+        split_bytes: int | None, columns: dict,
     ) -> RowIdPlan:
         """The table's one row-id chain (rowid.plan_row_ids) over its
         byte-estimate data files in dump order: .csv, .csv.gz (its rows
         take the gz capacity lane, but it keeps its place in the chain)
-        and .sql, plus .jsonl with ``jsonl`` (the block reader's lane).
-        A lane's width is its narrowest list in ``columns`` (path ->
-        probed list or None), at most the DDL width."""
+        and .sql, plus .jsonl when _jsonl_on_chain. A lane's width is
+        its narrowest list in ``columns`` (path -> probed list or
+        None), at most the DDL width."""
         ncols = len(schema.columns)
+        jsonl = self._jsonl_on_chain(meta)
         files, widths = [], {}
         for f in meta.data_files:
             p = f.path.lower()
@@ -1010,10 +986,10 @@ class RestoreController:
         """The read->permute->cast ladder over an explicit byte-range
         block list of a plain .csv or plain .jsonl table
         (csv_blocks.read_blocks): the same all-string shape,
-        SplitLargeFile row-id formula and cast ladder as the whole-file
-        strict-format lanes — so an engine produces identical rows
+        SplitLargeFile row-id formula and cast ladder as the table-grain
+        strict-format scans — so an engine produces identical rows
         whether it ran in the first attempt or in a mid-file resume.
-        JSONL blocks go through the batch lane's _jsonl_frame and take
+        JSONL blocks go through the table lane's _jsonl_frame and take
         the JSONL minimum-line divisor."""
         from ..sources.csv_blocks import read_blocks
 
@@ -1022,7 +998,7 @@ class RestoreController:
         # bases over the FULL file list: a block's ids must not
         # depend on which blocks ride along (resume-renumber parity,
         # as read_table's `only` contract)
-        ids = self._row_id_plan(meta, schema, split_bytes, {}, jsonl=True)
+        ids = self._row_id_plan(meta, schema, split_bytes, {})
         read = functools.partial(
             read_blocks, self.spark, bases=ids.bases,
             divisor=ids.divisor["jsonl" if jsonl else "csv"],
@@ -1031,9 +1007,7 @@ class RestoreController:
         if not jsonl:
             df = read(blocks, names, csv=self.cfg.mydumper.csv)
             return self._permute(df, schema, names, source_latin1=True)
-        return self._jsonl_frame(
-            schema, [path for path, _, _ in blocks], read(blocks, names)
-        )
+        return self._jsonl_frame(schema, read(blocks, names))
 
     def _by_file_columns(
         self,
@@ -1076,31 +1050,19 @@ class RestoreController:
             frames.append(self._permute(df, schema, list(cols), **lane))
         return functools.reduce(DataFrame.unionByName, frames)
 
-    def _jsonl_frame(
-        self,
-        schema: TableSchema,
-        paths: list[str],
-        df: DataFrame,
-        mono_start: int | None = None,
-    ) -> DataFrame:
-        """JSONL read ``df`` of the files at ``paths``, shared by the
-        batch and block lanes: the DDL columns as strings, each line's
-        keys matched case-insensitively (jsonl_source.json_line_map),
-        so extra keys are ignored and missing keys arrive NULL; they
-        run the same MySQL cast ladder as CSV, and the text is real
-        UTF-8, so the latin1 re-decode stays off. ``mono_start`` gives
-        the batch lane its capacity-scheme ids. A part whose keys
-        match NO target column raises (require_key_match). JSON cannot
-        distinguish an absent key from an explicit null; for NOT NULL
-        columns a null is invalid anyway, so it maps to the missing
-        sentinel and takes the column DEFAULT (the absent-trailing-
-        field CSV semantics); nullable columns keep real NULLs."""
-        from ..operators.rowid import assign_rowid_mono
-        from ..sources.jsonl_source import require_key_match
-
+    def _jsonl_frame(self, schema: TableSchema, df: DataFrame) -> DataFrame:
+        """JSONL read ``df`` with its ``_row_id``, shared by the table
+        and block lanes: the DDL columns as strings, each line's keys
+        matched case-insensitively (jsonl_source.json_line_map), so
+        extra keys are ignored and missing keys arrive NULL, and a line
+        whose keys match NO target column fails the job; they run the
+        same MySQL cast ladder as CSV, and the text is real UTF-8, so
+        the latin1 re-decode stays off. JSON cannot distinguish an
+        absent key from an explicit null; for NOT NULL columns a null
+        is invalid anyway, so it maps to the missing sentinel and takes
+        the column DEFAULT (the absent-trailing-field CSV semantics);
+        nullable columns keep real NULLs."""
         names = [c.name for c in schema.columns]
-        for path in dict.fromkeys(paths):
-            require_key_match(names, path)
         nulls = {
             c.name: F.coalesce(F.col(c.name), F.lit(MISSING_FIELD))
             for c in schema.columns
@@ -1108,8 +1070,6 @@ class RestoreController:
         }
         if nulls:
             df = df.withColumns(nulls)
-        if mono_start is not None:
-            df = assign_rowid_mono(df, start=mono_start)
         return self._permute(df, schema, names, missing_sentinel=MISSING_FIELD)
 
     def _permute(

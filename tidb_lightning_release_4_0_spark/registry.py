@@ -992,7 +992,7 @@ def q_split_csv_rowids(spark, sf_dir):
 
     from .config import CSVConfig
     from .operators.rowid import (
-        assign_rowid_by_file_split,
+        assign_rowid_by_range,
         plan_row_ids,
         split_bytes_lower_bound,
     )
@@ -1028,7 +1028,7 @@ def q_split_csv_rowids(spark, sf_dir):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     ids = plan_row_ids([(path, os.path.getsize(path), "csv")], {"csv": 3}, sb)
     df = read_csv(spark, path, cfg, ["_c0", "_c1", "_c2"])
-    df = assign_rowid_by_file_split(df, ids.bases, ids.divisor["csv"], sb)
+    df = assign_rowid_by_range(df, ids.bases, ids.divisor["csv"], sb)
     w = Window.orderBy("_row_id")
     return df.select(
         F.row_number().over(w).alias("rn"),

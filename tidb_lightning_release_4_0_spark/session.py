@@ -70,13 +70,14 @@ def get_spark(
         # measured 2-5x on the ingest scan->cast stage at sf0.1, and
         # the same reasoning holds on any executor JVM at 100 TB.
         .config("spark.sql.codegen.hugeMethodLimit", HUGE_METHOD_LIMIT)
-        # one FILE per partition for unsplittable (whole-file) reads:
-        # a huge per-file open cost stops FilePartition bin-packing, so
-        # multiLine CSV / .sql dump tasks each own exactly one file and
-        # the low 33 bits of monotonically_increasing_id are the exact
-        # in-file row index (assign_rowid_by_file fast path — no extra
-        # scan for row-id bases). Splittable formats (parquet) still
-        # split at maxPartitionBytes; only small-file packing is lost.
+        # one FILE (or byte-range split) per partition: a huge
+        # per-file open cost stops FilePartition bin-packing, so every
+        # task of a text scan owns exactly one block and the low 33
+        # bits of monotonically_increasing_id are the exact in-block
+        # row index (rowid.assign_rowid_by_range fast path — no extra
+        # job; a session that packs takes its window fallback).
+        # Splittable formats still split at maxPartitionBytes; only
+        # small-file packing is lost.
         .config("spark.sql.files.openCostInBytes", str(1 << 40))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -1,5 +1,7 @@
 """Byte-range block reader for strict-format CSV and JSON Lines — the
-read side of block-grain (mid-file) checkpoint resume.
+read side of block-grain (mid-file) checkpoint resume, and only that:
+table- and file-grain reads of the same files are JVM scans stamped by
+rowid.assign_rowid_by_range.
 
 Why this exists: Spark's job commit is atomic, so a crashed write job
 delivers NOTHING — the only way to make MID-FILE progress durable is
@@ -31,9 +33,9 @@ produce byte-identical rows):
 - Row-ids take the SplitLargeFile offset term from
   ``rowid.split_chunk_base`` and the file base from
   ``rowid._file_base_rowids``, the two pieces
-  ``assign_rowid_by_file_split`` uses; the in-block row index is
+  ``assign_rowid_by_range`` uses; the in-block row index is
   explicit here (the reader emits it), so ids are identical to what
-  the whole-file splittable read would have assigned.
+  the table-grain splittable scan assigns.
 
 Constraint (documented, gated by the caller): line terminators are
 ``\\n`` / ``\\r\\n``. ``header`` files are not block-split (the
@@ -228,15 +230,15 @@ def read_blocks(
     ``csv`` reads headerless CSV through from_csv with the same option
     map as spark.read.csv. Without it the blocks are JSON Lines, parsed
     as the batch lane parses them (jsonl_source.json_line_map: keys
-    matched case-insensitively on every line; a malformed line FAILS
-    the job).
+    matched case-insensitively on every line; a malformed line, or one
+    with no DDL key, FAILS the job).
 
     ``bases`` and ``divisor`` come from the table's rowid.plan_row_ids
     chain: ``_row_id`` is the file base + split_chunk_base + in-block
     line index + 1."""
     jsonl = csv is None
     if jsonl:
-        parse = json_line_map(F.col("_raw"))
+        parse = json_line_map(F.col("_raw"), names)
         fields = json_line_fields(F.col("_r"), names)
     else:
         csv.validate()

@@ -10,9 +10,12 @@ Scale shape: Spark's native JSON reader with an EXPLICIT schema —
 no sampling/inference pass over 100 TB — and multiLine=false, so
 uncompressed shards split at maxPartitionBytes byte ranges (JSONL's
 one-object-per-line framing makes line-boundary resync exact);
-gzip shards parallelize per-file. The restore lanes read the lines
-as text instead and match each line's keys to the DDL
-case-insensitively (json_line_map).
+gzip shards parallelize per-file. The restore's table-grain lane
+reads the lines as text instead (read_jsonl_lines, a JVM text scan)
+and matches each line's keys to the DDL case-insensitively
+(json_line_map); on a strict-format table of plain .jsonl parts its
+rows take rowid.assign_rowid_by_range, the ids the block-grain
+reader (csv_blocks.read_blocks) assigns to the same lines.
 
 Malformed lines are never silently nulled: the default is FAILFAST
 (a bad line errors the job loudly); ``keep_corrupt=True`` switches
@@ -69,7 +72,7 @@ def read_jsonl(
     )
 
 
-def json_line_map(line: Column) -> Column:
+def json_line_map(line: Column, names: list[str]) -> Column:
     """One JSON line as map<string,string> with lower-cased keys: the
     one JSONL parse of both restore lanes (read_jsonl_lines and
     csv_blocks.read_blocks). MySQL column names are case-insensitive
@@ -77,9 +80,31 @@ def json_line_map(line: Column) -> Column:
     their own: one part may spell a key differently on every line.
     Values are the JSON reader's strings. FAILFAST: a malformed line
     FAILS the job instead of materializing as an all-null row that
-    default-fill would fabricate into data."""
-    m = F.from_json(line, "map<string,string>", {"mode": "FAILFAST"})
-    return F.transform_keys(m, lambda k, _: F.lower(k))
+    default-fill would fabricate into data; for the same reason a
+    non-empty object none of whose keys is one of ``names`` (the DDL
+    columns) fails the job, whichever line of its part it is."""
+    parsed = F.transform_keys(
+        F.from_json(line, "map<string,string>", {"mode": "FAILFAST"}),
+        lambda k, _: F.lower(k),
+    )
+    wanted = F.array(*[F.lit(n.lower()) for n in names])
+
+    def checked(m: Column) -> Column:
+        unmatched = (F.size(m) > 0) & ~F.arrays_overlap(F.map_keys(m), wanted)
+        message = F.concat(
+            F.lit("JSONL line "),
+            F.substring(line, 1, 200),
+            F.lit(
+                " has no key matching a target column "
+                f"{list(names)[:8]}: its row would read as all-NULL and "
+                "default-fill would fabricate data; refusing to ingest it"
+            ),
+        )
+        return F.when(unmatched, F.raise_error(message)).otherwise(m)
+
+    # the check reads the map through a lambda variable: each line is
+    # parsed once (a plain CASE over the parse would repeat it per use)
+    return F.transform(F.array(parsed), checked)[0]
 
 
 def json_line_fields(m: Column, names: list[str]) -> list[Column]:
@@ -94,50 +119,12 @@ def read_jsonl_lines(
     """JSONL files as all-string columns ``names`` (json_line_map).
     Whitespace-only lines are skipped, as Spark's JSON source does;
     the text source splits and decompresses as the JSON one would.
-    Paths are literal."""
+    One row per kept line in scan order, with no shuffle, so a row-id
+    stamp applied on top counts kept lines only, as the block reader
+    does. Paths are literal."""
     return (
         spark.read.text(literal_paths(paths))
         .filter(F.col("value").rlike(r"\S"))
-        .select(json_line_map(F.col("value")).alias("_m"))
+        .select(json_line_map(F.col("value"), names).alias("_m"))
         .select(*json_line_fields(F.col("_m"), names))
     )
-
-
-def require_key_match(ddl_names: list[str], path: str) -> None:
-    """Refuse a JSONL file whose keys match NO target column: its rows
-    would read as all-NULL, and the NOT NULL default-fill ladder would
-    then silently fabricate rows out of column defaults. Driver-side
-    peek at the keys of every parseable line in the file's 64 KiB head
-    (JSONL rows may omit keys, so one line alone under-reports), no
-    Spark job; keys compare case-insensitively, as the read matches
-    them. A head with no parseable object passes: the read's FAILFAST
-    parse owns malformed lines."""
-    import gzip
-    import json as _json
-
-    opener = gzip.open if path.endswith(".gz") else open
-    try:
-        with opener(path, "rt", encoding="utf-8", errors="replace") as f:
-            head = f.read(64 * 1024)
-    except OSError:
-        return
-    seen: set[str] = set()
-    for line in head.splitlines():
-        line = line.strip()
-        if not line:
-            continue
-        try:
-            obj = _json.loads(line)
-        except ValueError:
-            continue
-        if isinstance(obj, dict):
-            seen.update(k.lower() for k in obj)
-    wanted = {n.lower() for n in ddl_names}
-    if seen and not seen & wanted:
-        raise ValueError(
-            f"JSONL file {path!r}: none of its keys "
-            f"{sorted(seen)[:8]} match any target column "
-            f"{list(ddl_names)[:8]} — its rows would read as "
-            "all-NULL and default-fill would fabricate data; "
-            "refusing to ingest it"
-        )
