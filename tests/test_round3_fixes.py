@@ -90,7 +90,12 @@ def _engine_dump() -> str:
     return _dump("engine_resume", files)
 
 
-def test_engine_grain_resume(spark):
+@pytest.mark.parametrize("table_concurrency", [1, 4])
+def test_engine_grain_resume(spark, table_concurrency):
+    """At one engine slot the engines deliver serially in id order; at
+    four they run concurrently, so which engines finished before the
+    injected failure depends on timing — the checkpoint must then hold
+    exactly those, and the resume must deliver exactly the rest."""
     d = _engine_dump()
     tgt = os.path.join(TMP, "engine_resume_sink")
     shutil.rmtree(tgt, ignore_errors=True)
@@ -106,12 +111,18 @@ def test_engine_grain_resume(spark):
             on_duplicate="error",
             checkpoint_path=cp_path,
             tidb=TiDBConfig(sql_mode=""),
+            table_concurrency=table_concurrency,
         )
 
     sink1 = _EngineFailSink(tgt, fail_engine=3)
     run1 = RestoreController(spark, cfg(), sink=sink1).run()
     assert not run1.ok
-    assert sink1.calls == [0, 1, 2]  # engines 0-2 delivered, 3 failed
+    delivered = set(sink1.calls)
+    if table_concurrency == 1:
+        assert sink1.calls == [0, 1, 2]  # engines 0-2 delivered, 3 failed
+    else:
+        assert 3 not in delivered
+        assert len(sink1.calls) == len(delivered)  # each engine once
 
     cp = CheckpointStore(cp_path)
     meta_files = sorted(
@@ -119,12 +130,13 @@ def test_engine_grain_resume(spark):
     )
     for i, fname in enumerate(meta_files):
         st = cp.chunk_status("eng.t", os.path.join(d, fname))
-        if i < 3:
+        if i in delivered:
             assert st >= Status.ALL_WRITTEN, (i, st)
         else:
             assert st < Status.ALL_WRITTEN, (i, st)
 
-    # resume: only engines 3..5 are delivered; 0..2 never re-read
+    # resume: only the undelivered engines run; delivered ones are
+    # never re-read
     sink2 = _EngineFailSink(tgt)
     cp_r = CheckpointStore(cp_path)
     cp_r.ignore_error("eng.t")  # ctl step: clear the errored status
@@ -132,7 +144,10 @@ def test_engine_grain_resume(spark):
         spark, cfg(), sink=sink2, checkpoints=cp_r
     ).run()
     assert run2.ok, run2.report()
-    assert sink2.calls == [3, 4, 5]
+    if table_concurrency == 1:
+        assert sink2.calls == [3, 4, 5]
+    else:
+        assert sorted(sink2.calls) == sorted(set(range(6)) - delivered)
     t = spark.read.option("recursiveFileLookup", "true").parquet(
         os.path.join(tgt, "eng.t")
     )

@@ -1,10 +1,11 @@
 """The session plan memo: one store, keyed on every input that shapes a plan.
 
 ``apply_permutation`` memoizes each finished projection per Spark
-session, and ``rowid._file_base_rowids`` keeps its per-file bases frames
-in the same store. Two tasks in one session that restore the same CSV
-dump must still get their own plans when their job timestamp or
-sql_mode differ: those inputs are in the projection key.
+session; ``rowid._file_base_rowids`` keeps its per-file bases frames,
+and the restore's row hash its kv_crc64 pair Columns, in the same
+store. Two tasks in one session that restore the same CSV dump must
+still get their own plans when their job timestamp or sql_mode
+differ: those inputs are in the projection key.
 
 Also pins the driver-row frames (``rowid.metadata_df`` and
 ``curation._labels_frame``) to the exact values of the list path when an
@@ -18,6 +19,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import types as T
 
 from tidb_lightning_release_4_0_spark.config import (
@@ -97,9 +99,15 @@ def test_two_tasks_keep_their_own_job_timestamp(spark):
             (1, 10, stamp),
             (2, 20, stamp),
         ]
-    # the one store holds projections and bases frames, no whole plans
+    # the one store holds plan fragments, no whole plans: projections,
+    # bases frames and kv_crc64 pair Columns
     cache = session_plan_cache(spark)
-    assert cache and {k[0] for k in cache} <= {"projection", "bases"}
+    assert cache and {k[0] for k in cache} <= {
+        "projection", "bases", "kv_pair"
+    }
+    assert all(
+        isinstance(v, Column) for k, v in cache.items() if k[0] == "kv_pair"
+    )
 
 
 @pytest.mark.parametrize("header", [True, False], ids=["string", "native"])

@@ -233,7 +233,10 @@ class Config:
     # compact/level-1-compact (config.go:122-123, toml:181-184)
     compact: bool = False
     # concurrent tables in flight (reference table-concurrency,
-    # config.go:373-386); Spark's FAIR/ FIFO scheduler multiplexes
+    # config.go:373-386); Spark's FAIR/ FIFO scheduler multiplexes.
+    # Also bounds engine deliveries in flight across all tables: a
+    # table's engines run concurrently, as restoreEngines does
+    # (restore.go:770-809), each holding one of these slots
     table_concurrency: int = 4
     # O7: seconds between periodic progress/ETA log lines during
     # run() (the reference's logProgress ticker, restore.go:443-501);

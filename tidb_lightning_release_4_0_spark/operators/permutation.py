@@ -26,7 +26,8 @@ from .cast import mysql_cast
 ROWID_COL = "_tidb_rowid"
 
 # Per-session store of finished plan fragments: apply_permutation's
-# projection memo and rowid's per-file bases frames.
+# projection memo, rowid's per-file bases frames and the restore's
+# kv_crc64 pair Columns.
 _PLAN_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 

@@ -20,6 +20,7 @@ per-table error summary (O12, restore.go:89-129).
 
 from __future__ import annotations
 
+import concurrent.futures as cf
 import datetime as _dt
 import functools
 import logging
@@ -30,10 +31,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..config import Config, strict_sql_mode
 from ..functions.checksum import Checksum
-from ..operators.permutation import apply_permutation
+from ..operators.permutation import apply_permutation, session_plan_cache
 from ..operators.rowid import RowIdPlan, plan_row_ids
 from ..sinks.base import Sink, reject_duplicate_keys
 from ..sinks.memory_sink import MemorySink
@@ -275,6 +277,10 @@ class RestoreController:
                 "job_timestamp", self.job_timestamp.isoformat()
             )
         self._ticker: _ProgressTicker | None = None
+        # the table worker pool's bound (config.go:373-386): tables in
+        # flight, and engine deliveries in flight across all tables
+        self._table_workers = max(int(self.cfg.table_concurrency), 1)
+        self._engine_slots = threading.BoundedSemaphore(self._table_workers)
 
     def _default_sink(self) -> Sink:
         if self.cfg.backend == "parquet":
@@ -848,15 +854,25 @@ class RestoreController:
         run skips delivered engines without re-reading their data
         (restore.go:861-870), rebuilding the table's local checksum
         from the stored triples. Table grain writes no engine record
-        (table-grain resume)."""
-        want_cs = self.cfg.checksum
+        (table-grain resume).
+
+        The pending engines run as pool tasks, as the reference's
+        restoreEngines starts one goroutine per engine
+        (restore.go:770-809). Each holds one of the controller's
+        ``table_concurrency`` engine slots while it runs (the
+        reference's rc.tableWorkers), so no more write jobs run at
+        once than tables may; at one slot the engines run serially in
+        id order. The first failure cancels the engines not yet
+        started; the in-flight ones finish, each still writing and
+        then recording, and the first error is raised (the reference's
+        OnceError). Each task inherits the calling thread's Spark
+        local properties, so its jobs stay in the task's job group
+        (cancelJobGroup) and carry its description. Records fold in
+        engine-id order."""
         engine_grain = plan.grain != "table"
-        total: Checksum | None = None
-        rows = 0
-        max_id: int | None = None
-        loaded = False
+        recs: dict[int, dict] = {}
+        pending = []
         for eid, chunks in enumerate(plan.engines):
-            self._gate()  # park between engines (cancellable)
             rec = self.cp.engine_state(name, eid) if engine_grain else None
             if rec is not None and all(
                 self.cp.chunk_status(name, p, off) >= Status.ALL_WRITTEN
@@ -866,66 +882,49 @@ class RestoreController:
                     "[table: %s] engine %d already delivered, skipping "
                     "%d chunk(s)", name, eid, len(chunks)
                 )
+                recs[eid] = rec
             else:
-                if plan.grain == "table":
-                    df = self.read_table(meta, schema)
-                elif plan.grain == "file":
-                    df = self.read_table(
-                        meta, schema, only={p for p, _, _ in chunks}
+                pending.append((eid, chunks))
+
+        failed = threading.Event()
+        errors: list[Exception] = []
+
+        def deliver(eid, chunks):
+            with self._engine_slots:
+                if failed.is_set():
+                    return None  # cancelled: a sibling engine failed
+                try:
+                    self._gate()  # park between engines (cancellable)
+                    return self._deliver_engine(
+                        name, meta, schema, cols, plan, eid, chunks
                     )
-                else:
-                    df = self._block_frame(
-                        meta, schema, chunks, plan.split_bytes
-                    )
-                if not loaded:
-                    self.cp.set_table_status(name, Status.LOADED)
-                    loaded = True
-                obs = None
-                if self.sink.observes_write_action:
-                    df, obs = self._observe_write(
-                        df, name, cols, schema, want_cs,
-                        tag=f":{plan.grain}{eid}" if engine_grain else "",
-                    )
-                else:
-                    m = self._eager_write_metrics(df, cols, schema, want_cs)
-                if engine_grain:
-                    res = self.sink.write_engine(df, name, eid)
-                else:
-                    res = self.sink.write(df, name)
-                if obs is not None:
-                    m = obs.get
-                rec = {
-                    "rows": (
-                        res.rows if res.rows >= 0 else m.get("total_kvs", -1)
-                    ),
-                    "max_id": m.get("max_id"),
-                    # engine -> chunk mapping for the /progress/table
-                    # marshal (the reference's TableCheckpoint.Engines)
-                    "chunks": [[p, off] for p, off, _ in chunks],
-                }
-                if want_cs:
-                    rec.update(
-                        crc_xor=m["crc_xor"] or 0,
-                        total_bytes=m["total_bytes"],
-                        total_kvs=m["total_kvs"] * self._kv_mult(schema),
-                    )
-                if engine_grain:
-                    # write THEN record, like the reference's deliver
-                    # loop (restore.go:1601-1634): a crash in between
-                    # re-runs the engine, whose directory-replace
-                    # delivery is idempotent
-                    self.cp.set_engine_state(name, eid, rec)
-                self.cp.mark_chunks(
-                    name,
-                    [(p, off) for p, off, _ in chunks],
-                    Status.ALL_WRITTEN,
-                )
-                nbytes = sum(ln for _, _, ln in chunks)
-                if self._ticker:
-                    self._ticker.add(nbytes)
-                if self.progress:
-                    self.progress.table_written(name, nbytes)
-            if want_cs and rec.get("crc_xor") is not None:
+                except Exception as e:
+                    errors.append(e)
+                    failed.set()
+                    raise
+
+        if pending:
+            self.cp.set_table_status(name, Status.LOADED)
+            workers = min(len(pending), self._table_workers)
+            with cf.ThreadPoolExecutor(max_workers=workers) as pool:
+                futs = [
+                    (eid, pool.submit(
+                        inheritable_thread_target(self.spark)(deliver),
+                        eid, chunks,
+                    ))
+                    for eid, chunks in pending
+                ]
+            if errors:
+                raise errors[0]
+            for eid, fut in futs:
+                if (rec := fut.result()) is not None:
+                    recs[eid] = rec
+        total: Checksum | None = None
+        rows = 0
+        max_id: int | None = None
+        for eid in sorted(recs):
+            rec = recs[eid]
+            if self.cfg.checksum and rec.get("crc_xor") is not None:
                 ck = Checksum(
                     rec["crc_xor"], rec["total_bytes"], rec["total_kvs"]
                 )
@@ -935,6 +934,68 @@ class RestoreController:
                 v = int(rec["max_id"])
                 max_id = v if max_id is None else max(max_id, v)
         return total, rows, max_id
+
+    def _deliver_engine(
+        self,
+        name: str,
+        meta: MDTableMeta,
+        schema: TableSchema,
+        cols: list[str],
+        plan: EnginePlan,
+        eid: int,
+        chunks: list[tuple[str, int, int]],
+    ) -> dict:
+        """One engine: read plan -> observe -> write -> engine record
+        -> chunk marks -> progress. Returns the engine record."""
+        want_cs = self.cfg.checksum
+        engine_grain = plan.grain != "table"
+        if plan.grain == "table":
+            df = self.read_table(meta, schema)
+        elif plan.grain == "file":
+            df = self.read_table(meta, schema, only={p for p, _, _ in chunks})
+        else:
+            df = self._block_frame(meta, schema, chunks, plan.split_bytes)
+        obs = None
+        if self.sink.observes_write_action:
+            df, obs = self._observe_write(
+                df, name, cols, schema, want_cs,
+                tag=f":{plan.grain}{eid}" if engine_grain else "",
+            )
+        else:
+            m = self._eager_write_metrics(df, cols, schema, want_cs)
+        if engine_grain:
+            res = self.sink.write_engine(df, name, eid)
+        else:
+            res = self.sink.write(df, name)
+        if obs is not None:
+            m = obs.get
+        rec = {
+            "rows": res.rows if res.rows >= 0 else m.get("total_kvs", -1),
+            "max_id": m.get("max_id"),
+            # engine -> chunk mapping for the /progress/table marshal
+            # (the reference's TableCheckpoint.Engines)
+            "chunks": [[p, off] for p, off, _ in chunks],
+        }
+        if want_cs:
+            rec.update(
+                crc_xor=m["crc_xor"] or 0,
+                total_bytes=m["total_bytes"],
+                total_kvs=m["total_kvs"] * self._kv_mult(schema),
+            )
+        if engine_grain:
+            # write THEN record, like the reference's deliver loop
+            # (restore.go:1601-1634): a crash in between re-runs the
+            # engine, whose directory-replace delivery is idempotent
+            self.cp.set_engine_state(name, eid, rec)
+        self.cp.mark_chunks(
+            name, [(p, off) for p, off, _ in chunks], Status.ALL_WRITTEN
+        )
+        nbytes = sum(ln for _, _, ln in chunks)
+        if self._ticker:
+            self._ticker.add(nbytes)
+        if self.progress:
+            self.progress.table_written(name, nbytes)
+        return rec
 
     def _jsonl_on_chain(self, meta: MDTableMeta) -> bool:
         """Whether the table's .jsonl parts take its byte-estimate
@@ -1478,18 +1539,43 @@ class RestoreController:
                         mysql_kinds[c.name] = ("json",)
                     elif c.mysql_type == "time":
                         mysql_kinds[c.name] = ("time",)
-            pair = kv_hash_columns(
-                df,
-                value_cols,
+            # the pair Column is plan-independent: build it once per
+            # table shape (session_plan_cache, as apply_permutation's
+            # projection) instead of once per engine and read-back;
+            # every input that shapes it is in the key
+            col_ids = [ddl_ids[c] for c in value_cols]
+            specs = self._kv_index_specs(schema)
+            types = dict(df.dtypes)
+            memo_key = (
+                "kv_pair",
+                tuple(value_cols),
                 handle,
-                col_ids=[ddl_ids[c] for c in value_cols],
-                table_id=tid,
-                row_format_version=2 if algo.endswith("v2") else 1,
-                default_null_ids=default_null_ids,
-                indexes=self._kv_index_specs(schema),
-                uint64_cols=uint64_cols,
-                mysql_kinds=mysql_kinds,
+                tuple(col_ids),
+                tid,
+                algo,
+                default_null_ids,
+                tuple((iid, tuple(ents), u) for iid, ents, u in specs),
+                uint64_cols,
+                tuple(sorted(mysql_kinds.items())),
+                tuple(types[c] for c in (handle, *value_cols)),
             )
+            cache = session_plan_cache(df.sparkSession)
+            pair = cache.get(memo_key) if cache is not None else None
+            if pair is None:
+                pair = kv_hash_columns(
+                    df,
+                    value_cols,
+                    handle,
+                    col_ids=col_ids,
+                    table_id=tid,
+                    row_format_version=2 if algo.endswith("v2") else 1,
+                    default_null_ids=default_null_ids,
+                    indexes=specs,
+                    uint64_cols=uint64_cols,
+                    mysql_kinds=mysql_kinds,
+                )
+                if cache is not None:
+                    cache[memo_key] = pair
             return (
                 df.withColumn("_kvp", pair)
                 .withColumn("_h", F.col("_kvp.h"))
@@ -1517,8 +1603,6 @@ class RestoreController:
         ``table_concurrency`` tables in flight (O1: the reference's
         table worker pool, config.go:373-386 — here Spark's scheduler
         multiplexes the concurrent jobs across executor cores)."""
-        import concurrent.futures as cf
-
         # [1] preflight requirement checks (O10, restore.go:1117-1134):
         # fail the whole task early if the sink is unreachable, instead
         # of recording one failure per table
@@ -1565,7 +1649,7 @@ class RestoreController:
                 sum(meta.total_size for _, (meta, _s) in ordered), interval
             ).start()
         try:
-            conc = max(int(self.cfg.table_concurrency), 1)
+            conc = self._table_workers
             if conc == 1 or len(ordered) <= 1:
                 for name, (meta, schema) in ordered:
                     summary.tables[name] = self.restore_table(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .base import Sink, SinkResult
@@ -12,6 +14,8 @@ class MemorySink(Sink):
         self.tables: dict[str, DataFrame] = {}
         self.on_duplicate = on_duplicate
         self.engines: dict[str, dict[int, DataFrame]] = {}
+        # a table's engines may deliver concurrently
+        self._lock = threading.Lock()
 
     def write(self, df: DataFrame, table: str) -> SinkResult:
         if "_row_id" in df.columns:
@@ -29,12 +33,14 @@ class MemorySink(Sink):
             df = df.drop("_row_id")
         df = df.cache()
         n = df.count()
-        self.engines.setdefault(table, {})[int(engine_id)] = df
-        parts = list(self.engines[table].values())
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        self.tables[table] = merged
+        with self._lock:
+            engines = self.engines.setdefault(table, {})
+            engines[int(engine_id)] = df
+            parts = [engines[e] for e in sorted(engines)]
+            merged = parts[0]
+            for p in parts[1:]:
+                merged = merged.unionByName(p)
+            self.tables[table] = merged
         return SinkResult(table=table, rows=n)
 
     def read_back(self, spark: SparkSession, table: str) -> DataFrame:

@@ -9,6 +9,7 @@ for `replace`/`ignore` using the table's key columns.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -701,7 +702,9 @@ class ParquetSink(Sink):
     ) -> None:
         sc = os.path.join(self._path(table), self._SIDECAR)
         if ck is None:
-            if os.path.exists(sc):
+            # concurrent engines of one table each drop the sidecar:
+            # a file another engine removed first is already dropped
+            with contextlib.suppress(FileNotFoundError):
                 os.remove(sc)
             return
         if not os.path.isdir(os.path.dirname(sc)):
